@@ -27,6 +27,9 @@ shard by the same hash, so N shards build and probe in parallel.
 Element extraction is Arrow-native: list columns are flattened via
 offset arithmetic (zero-copy), strings/binaries hashed through
 length-grouped fixed-width matrices. No per-row Python anywhere.
+Integer elements (``tokens``/``int32``) feeding HLL, CMS, Bloom or
+Top-K are reduced per batch to distinct (key, value) pairs with counts
+first, so hashing and folding cost O(distinct), not O(elements).
 """
 
 from __future__ import annotations
@@ -278,21 +281,29 @@ class _Spec:
     element: str = "string"  # set by _build_partials before use
 
     def update(self, acc, h1, h2, elems=None, weights=None):
+        """Fold one batch of elements. ``weights`` counts each element
+        that many times: a CMS ``weight_col``, or the per-value counts
+        of a distinct-first fold (HLL/CMS/Bloom/Top-K only)."""
         p = self.p
+        n = len(h1 if elems is None else elems) if weights is None \
+            else int(weights.sum())
         if self.kind == "hll":
-            hll.update_batch(acc[0], h1)
-            acc[1] += len(h1)
+            hll.update_batch(acc[0], h1)  # max: repeats change nothing
+            acc[1] += n
         elif self.kind == "cms":
             # weights = the reference's Update(data, count)
             # (count_min_sketch.go:60) vectorized; only cms is linear
             # in counts, so sketch_agg gates weight_col to this kind
             acc[1] += cms.update_batch(acc[0], h1, h2, weights)
         elif self.kind == "bloom":
-            bloom.insert_batch(acc[0], h1, h2, p["k"], p["m"])
-            acc[1] += len(h1)
+            bloom.insert_batch(acc[0], h1, h2, p["k"], p["m"])  # OR
+            acc[1] += n
         elif self.kind == "topk":
-            acc[0].update(elems)  # IntCounts (vectorized) or Counter
-            acc[1] += len(elems)
+            if weights is None:
+                acc[0].update(elems)  # IntCounts (vectorized) or Counter
+            else:
+                acc[0].update_counts(elems, weights)  # IntCounts / Capped
+            acc[1] += n
         elif self.kind == "tdigest":
             acc[0], acc[1] = tdigest.update_batch(acc[0], acc[1], elems,
                                                   self.p["delta"])
@@ -339,6 +350,14 @@ class _Spec:
 
     def needs_elements(self) -> bool:
         return self.kind in ("topk", "tdigest", "kll")
+
+    def folds_distinct(self) -> bool:
+        """Whether a batch may be folded as its distinct values with
+        counts: HLL and Bloom are idempotent (max, OR), CMS and Top-K
+        are linear in counts, so the state bytes are the same as for a
+        per-element fold. Only for elements hashed by value alone."""
+        return (self.element in ("tokens", "int32")
+                and self.kind in ("hll", "cms", "bloom", "topk"))
 
 
 def merge_sketch_states(blobs) -> bytes:
@@ -413,6 +432,153 @@ def _partial_schema(df: DataFrame, key_col: str | None) -> StructType:
     return StructType(fields)
 
 
+class _Batch:
+    """One Arrow batch plus the arrays derived from it. Each is computed
+    on first use and shared by every job that folds the batch, so a
+    column is flattened, hashed, grouped or reduced once per batch."""
+
+    def __init__(self, batch: pa.RecordBatch):
+        self.batch = batch
+        self.num_rows = batch.num_rows
+        self._memo: dict = {}
+
+    def _get(self, key, compute):
+        if key not in self._memo:
+            self._memo[key] = compute()
+        return self._memo[key]
+
+    def keys(self, kcol: str):
+        """(codes, uniques, rows per key); null keys get code -1."""
+        def compute():
+            codes, uniques = pd.factorize(self.batch.column(kcol).to_pandas(),
+                                          sort=False)
+            return codes, uniques, np.bincount(codes[codes >= 0],
+                                               minlength=len(uniques))
+        return self._get(("keys", kcol), compute)
+
+    def token_list(self, vcol: str):
+        return self._get(("list", vcol),
+                         lambda: _arrow_list_ints(self.batch.column(vcol)))
+
+    def rowmap(self, vcol: str) -> np.ndarray:
+        """Source row of each flattened token."""
+        return self._get(("rowmap", vcol), lambda: np.repeat(
+            np.arange(self.num_rows), np.diff(self.token_list(vcol)[1])))
+
+    def hashes(self, vcol: str, element: str, algo: str):
+        return self._get(("hashes", vcol, element, algo), lambda: extract_hashes(
+            self.batch.column(vcol), element, algo))
+
+    def elements(self, vcol: str, element: str):
+        return self._get(("elements", vcol, element), lambda: element_values(
+            self.batch.column(vcol), element))
+
+    def groups(self, kcol: str, vcol: str, rowmap: np.ndarray | None):
+        """(order, bounds): ``order[bounds[g]:bounds[g + 1]]`` selects
+        key g's elements. The cache key records whether the elements are
+        flattened tokens: a 'tokens' and a 'token_array' job over the
+        same columns group arrays of different lengths."""
+        def compute():
+            codes, uniques, _ = self.keys(kcol)
+            ecodes = codes if rowmap is None else codes[rowmap]
+            order = np.argsort(ecodes, kind="stable")
+            bounds = np.searchsorted(ecodes[order], np.arange(len(uniques)))
+            return order, np.append(bounds, len(ecodes))
+        return self._get(("groups", kcol, vcol, rowmap is not None), compute)
+
+    def distinct(self, kcol: str | None, vcol: str, element: str, algo: str):
+        """(bounds, values, counts, h1, h2) of the batch's distinct
+        (key, value) pairs, sorted by key then value; key g owns
+        ``[bounds[g], bounds[g + 1])`` and null keys are dropped. One
+        ``np.bincount`` over the dense (key, value) grid finds them and
+        only they are hashed. None when the batch is empty or the grid
+        exceeds ``topk.DENSE_SPAN`` cells (the ``IntCounts`` rule): the
+        caller then folds per element. Cached per key column too: the
+        same values under another key column pair up differently."""
+        def compute():
+            if element == "tokens":
+                values = self.token_list(vcol)[0].astype(np.int64)
+            else:
+                values = self.batch.column(vcol).to_numpy(
+                    zero_copy_only=False).astype(np.int64)
+            if len(values) == 0:
+                return None
+            n_keys = 1 if kcol is None else len(self.keys(kcol)[1])
+            vmin = int(values.min())
+            span = int(values.max()) - vmin + 1
+            if n_keys * span > topk.DENSE_SPAN:
+                return None
+            cells = values - vmin
+            if kcol is not None:
+                codes = self.keys(kcol)[0]
+                if element == "tokens":
+                    codes = codes[self.rowmap(vcol)]
+                cells = (codes * span + cells)[codes >= 0]
+            flat = np.bincount(cells)
+            nz = np.flatnonzero(flat)
+            vals = nz % span + vmin
+            h1, h2 = hashing.hash_tokens(vals, algo)
+            bounds = np.searchsorted(nz // span, np.arange(n_keys + 1))
+            return bounds, vals, flat[nz], h1, h2
+        return self._get(("distinct", kcol, vcol, element, algo), compute)
+
+
+def _take(arr, sel):
+    return arr if arr is None or sel is None else _select_elems(arr, sel)
+
+
+def _fold_batch(b: _Batch, spec: _Spec, vcol: str, kcol: str | None,
+                accs: dict, rows: dict, slot=lambda key: key,
+                weight_col: str | None = None) -> None:
+    """Fold one batch into one job's per-key accumulators
+    ``accs[slot(key)]`` and add each key's input rows to
+    ``rows[slot(key)]``. Rows with a null key are dropped.
+
+    Unweighted HLL/CMS/Bloom/Top-K jobs over ``tokens``/``int32`` fold
+    the batch's distinct values with their counts (see
+    :meth:`_Spec.folds_distinct`); every other job folds per element."""
+    if kcol is None:
+        keys, row_counts = [None], [b.num_rows]
+    else:
+        _, keys, row_counts = b.keys(kcol)
+    dist = None
+    if weight_col is None and spec.folds_distinct():
+        dist = b.distinct(kcol, vcol, spec.element, spec.algo)
+    if dist is not None:
+        bounds, vals, counts, h1, h2 = dist
+        for g, key in enumerate(keys):
+            s, k = slice(bounds[g], bounds[g + 1]), slot(key)
+            spec.update(accs.setdefault(k, spec.init()), h1[s], h2[s],
+                        vals[s], counts[s])
+            rows[k] = rows.get(k, 0) + int(row_counts[g])
+        return
+    if spec.needs_elements():
+        # Top-K counts exact values and t-digest/KLL take raw values:
+        # nothing is hashed here
+        h1 = h2 = None
+        elems = b.elements(vcol, spec.element)
+        rowmap = b.rowmap(vcol) if spec.element == "tokens" else None
+    else:
+        h1, h2, rowmap = b.hashes(vcol, spec.element, spec.algo)
+        elems = None
+    welems = None
+    if weight_col is not None:
+        wvals = b.batch.column(weight_col) \
+            .to_numpy(zero_copy_only=False).astype(np.float64)
+        # tokens explode per row: each token carries its row's weight
+        welems = wvals if rowmap is None else wvals[rowmap]
+    if kcol is None:
+        sels = [None]
+    else:
+        order, bounds = b.groups(kcol, vcol, rowmap)
+        sels = [order[bounds[g]:bounds[g + 1]] for g in range(len(keys))]
+    for key, sel, n_rows in zip(keys, sels, row_counts):
+        k = slot(key)
+        spec.update(accs.setdefault(k, spec.init()), _take(h1, sel),
+                    _take(h2, sel), _take(elems, sel), _take(welems, sel))
+        rows[k] = rows.get(k, 0) + int(n_rows)
+
+
 def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
                     key_col: str | None, element: str,
                     skip_partitions: frozenset[int] = frozenset(),
@@ -421,9 +587,7 @@ def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
     cols = ([key_col] if key_col else []) + [value_col]
     if weight_col:
         cols.append(weight_col)
-    algo = spec.algo
     spec.element = element
-    needs_elems = spec.needs_elements()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -441,67 +605,21 @@ def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            varr = batch.column(value_col)
-            if needs_elems:
-                # Top-K counts exact values; the CMS is built from the
-                # counter at finalize — no per-element hashing here
-                elems = element_values(varr, element)
-                if element == "tokens":
-                    _, offsets = _arrow_list_ints(varr)
-                    rowmap = np.repeat(np.arange(batch.num_rows),
-                                       np.diff(offsets))
-                else:
-                    rowmap = None
-                h1 = h2 = np.zeros(len(elems), dtype=np.uint64)
-            else:
-                h1, h2, rowmap = extract_hashes(varr, element, algo)
-                elems = None
-            if weight_col is not None:
-                wvals = batch.column(weight_col) \
-                    .to_numpy(zero_copy_only=False).astype(np.float64)
-                # tokens explode per row: each token carries its row's
-                # weight (rowmap gathers the per-row weight per element)
-                welems = wvals if rowmap is None else wvals[rowmap]
-            else:
-                welems = None
-            if key_col is None:
-                acc = accs.setdefault(None, spec.init())
-                spec.update(acc, h1, h2, elems, welems)
-                rows_by_key[None] = rows_by_key.get(None, 0) + batch.num_rows
-            elif keyed_hll is not None:
-                keys = batch.column(key_col).to_pandas()
-                codes, uniques = pd.factorize(keys, sort=False)
-                ecodes = codes if rowmap is None else codes[rowmap]
-                keep = ecodes >= 0  # null keys dropped (as in loop path)
-                keyed_hll.update(list(uniques), ecodes[keep], h1[keep])
-                rc = np.bincount(codes[codes >= 0], minlength=len(uniques))
-                for u in np.nonzero(rc)[0].tolist():
-                    k = uniques[u]
-                    rows_by_key[k] = rows_by_key.get(k, 0) + int(rc[u])
-            else:
-                keys = batch.column(key_col).to_pandas()
-                codes, uniques = pd.factorize(keys, sort=False)
-                ecodes = codes if rowmap is None else codes[rowmap]
-                order = np.argsort(ecodes, kind="stable")
-                bounds = np.searchsorted(ecodes[order], np.arange(len(uniques)))
-                bounds = np.append(bounds, len(ecodes))
-                # one O(rows) pass instead of an O(keys·rows) scan-per-key
-                row_counts = np.bincount(codes[codes >= 0],
-                                         minlength=len(uniques))
-                for g, key in enumerate(uniques):
-                    sel = order[bounds[g]:bounds[g + 1]]
-                    acc = accs.setdefault(key, spec.init())
-                    if needs_elems:
-                        grp = _select_elems(elems, sel)
-                    else:
-                        grp = None
-                    spec.update(acc, h1[sel], h2[sel], grp,
-                                None if welems is None else welems[sel])
-                    rows_by_key[key] = rows_by_key.get(key, 0) + int(
-                        row_counts[g])
+            b = _Batch(batch)
+            if keyed_hll is None:
+                _fold_batch(b, spec, value_col, key_col, accs, rows_by_key,
+                            weight_col=weight_col)
+                continue
+            h1, _, rowmap = b.hashes(value_col, element, spec.algo)
+            codes, uniques, rc = b.keys(key_col)
+            ecodes = codes if rowmap is None else codes[rowmap]
+            keep = ecodes >= 0  # null keys dropped (as in the fold path)
+            keyed_hll.update(list(uniques), ecodes[keep], h1[keep])
+            for u in np.nonzero(rc)[0].tolist():
+                k = uniques[u]
+                rows_by_key[k] = rows_by_key.get(k, 0) + int(rc[u])
         out_rows = []
         if keyed_hll is not None:
-            from gostatix_spark.state import HLLState
             for key, regs, n_items in keyed_hll.states():
                 out_rows.append({
                     key_col: key,
@@ -662,6 +780,8 @@ def multi_sketch_agg(df: DataFrame, jobs: list[dict],
     """Build MANY sketches in ONE scan — the 100 TB shape: the input is
     read once, each Arrow batch is hashed once per distinct
     (column, element, algo) and folded into every requested sketch.
+    HLL/CMS/Bloom/Top-K jobs over ``tokens``/``int32`` hash only the
+    batch's distinct (key, value) pairs and fold their counts.
 
     ``jobs``: list of dicts ``{name, kind, value_col, key_col?,
     element?, params?}``. Keys are stringified into a uniform ``key``
@@ -669,14 +789,13 @@ def multi_sketch_agg(df: DataFrame, jobs: list[dict],
     ``DataFrame[sketch_name, key, state, n_items, n_partials]``.
     """
     specs: dict[str, _Spec] = {}
-    meta: dict[str, tuple[str, str | None, str]] = {}
+    meta: dict[str, tuple[str, str | None]] = {}
     for j in jobs:
         name = j["name"]
-        element = infer_element(df, j["value_col"], j.get("element"))
         spec = _Spec.make(j["kind"], **j.get("params", {}))
-        spec.element = element
+        spec.element = infer_element(df, j["value_col"], j.get("element"))
         specs[name] = spec
-        meta[name] = (j["value_col"], j.get("key_col"), element)
+        meta[name] = (j["value_col"], j.get("key_col"))
 
     in_cols = sorted({m[0] for m in meta.values()}
                      | {m[1] for m in meta.values() if m[1]})
@@ -696,72 +815,12 @@ def multi_sketch_agg(df: DataFrame, jobs: list[dict],
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            hash_cache: dict = {}
-            elem_cache: dict = {}
-            key_cache: dict = {}
-            group_cache: dict = {}  # (kcol, vcol): per-key selection arrays
+            b = _Batch(batch)
             for name, spec in specs.items():
-                vcol, kcol, element = meta[name]
-                if spec.needs_elements():
-                    ck = (vcol, element, "vals")
-                    if ck not in elem_cache:
-                        varr = batch.column(vcol)
-                        elem_cache[ck] = element_values(varr, element)
-                    elems = elem_cache[ck]
-                    if element == "tokens":
-                        _, offs = _arrow_list_ints(batch.column(vcol))
-                        rowmap = np.repeat(np.arange(batch.num_rows),
-                                           np.diff(offs))
-                    else:
-                        rowmap = None
-                    h1 = h2 = np.zeros(len(elems), dtype=np.uint64)
-                else:
-                    ck = (vcol, element, spec.algo)
-                    if ck not in hash_cache:
-                        hash_cache[ck] = extract_hashes(
-                            batch.column(vcol), element, spec.algo)
-                    h1, h2, rowmap = hash_cache[ck]
-                    elems = None
-                if kcol is None:
-                    acc = accs.setdefault((name, None), spec.init())
-                    spec.update(acc, h1, h2, elems)
-                    rows_seen[(name, None)] = rows_seen.get((name, None), 0) \
-                        + batch.num_rows
-                else:
-                    if kcol not in key_cache:
-                        keys = batch.column(kcol).to_pandas()
-                        key_cache[kcol] = pd.factorize(keys, sort=False)
-                    codes, uniques = key_cache[kcol]
-                    # the group sort over element codes (12M-element
-                    # argsort for token columns) is shared by every job
-                    # on the same (key col, value col) — e.g. per-source
-                    # HLL and CMS over tokens sort once, not twice.
-                    # The cache key MUST include whether the job's element
-                    # kind flattens rows (rowmap is not None): a flattened
-                    # job (e.g. HLL over 'tokens') and a per-row job (e.g.
-                    # Bloom over 'token_array') on the SAME columns build
-                    # selection arrays of different lengths — sharing them
-                    # would misgroup sketches or raise IndexError.
-                    gk = (kcol, vcol, rowmap is not None)
-                    if gk not in group_cache:
-                        ecodes = codes if rowmap is None else codes[rowmap]
-                        order = np.argsort(ecodes, kind="stable")
-                        bounds = np.searchsorted(ecodes[order],
-                                                 np.arange(len(uniques)))
-                        bounds = np.append(bounds, len(ecodes))
-                        row_counts = np.bincount(codes[codes >= 0],
-                                                 minlength=len(uniques))
-                        group_cache[gk] = (order, bounds, row_counts)
-                    order, bounds, row_counts = group_cache[gk]
-                    for g, key in enumerate(uniques):
-                        sel = order[bounds[g]:bounds[g + 1]]
-                        acc = accs.setdefault((name, str(key)), spec.init())
-                        grp = None
-                        if elems is not None:
-                            grp = _select_elems(elems, sel)
-                        spec.update(acc, h1[sel], h2[sel], grp)
-                        rows_seen[(name, str(key))] = rows_seen.get(
-                            (name, str(key)), 0) + int(row_counts[g])
+                vcol, kcol = meta[name]
+                _fold_batch(b, spec, vcol, kcol, accs, rows_seen,
+                            slot=lambda key, name=name: (
+                                name, None if key is None else str(key)))
         if accs:
             out = []
             for (name, key), acc in accs.items():

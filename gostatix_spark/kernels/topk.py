@@ -66,6 +66,11 @@ class TopKStream:
 # ---------------------------------------------------------------------------
 
 
+# value span below which integers are counted by bincount, not sorted;
+# agg's distinct-first fold applies the same rule
+DENSE_SPAN = 1 << 22
+
+
 class IntCounts:
     """Vectorized exact counts for integer elements: sorted (uniq,
     counts) arrays merged with np.unique — no per-distinct Python."""
@@ -81,15 +86,22 @@ class IntCounts:
             return
         vmin = int(values.min())
         vmax = int(values.max())
-        if vmax - vmin < (1 << 22):
+        if vmax - vmin < DENSE_SPAN:
             # dense domain (e.g. token vocab): bincount beats sort ~10×
             counts = np.bincount(values - vmin)
             nz = np.nonzero(counts)[0]
             u2, c2 = nz + vmin, counts[nz]
         else:
             u2, c2 = np.unique(values, return_counts=True)
-        u = np.concatenate([self.uniq, u2])
-        c = np.concatenate([self.counts, c2])
+        self.update_counts(u2, c2)
+
+    def update_counts(self, uniq: np.ndarray, counts: np.ndarray) -> None:
+        """Add pre-counted values (``uniq`` distinct, ``counts`` > 0) —
+        the same state :meth:`update` reaches from the raw values."""
+        if len(uniq) == 0:
+            return
+        u = np.concatenate([self.uniq, uniq])
+        c = np.concatenate([self.counts, counts])
         uu, inv = np.unique(u, return_inverse=True)
         cc = np.zeros(len(uu), dtype=np.int64)
         np.add.at(cc, inv, c)
@@ -242,6 +254,11 @@ class CappedCounts:
 
     def update(self, values) -> None:
         self.inner.update(values)
+        if self._n_distinct() > self.cap:
+            self._compact()
+
+    def update_counts(self, uniq: np.ndarray, counts: np.ndarray) -> None:
+        self.inner.update_counts(uniq, counts)  # IntCounts inner only
         if self._n_distinct() > self.cap:
             self._compact()
 

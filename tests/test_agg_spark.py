@@ -566,3 +566,188 @@ class TestJoinProbes:
                                   element="string")
         assert got.where(~F.col("contained")).count() == 0
         assert got.count() == N_DOCS
+
+
+class TestDistinctFoldBytewise:
+    """Phase 1 folds HLL/CMS/Bloom/Top-K over tokens/int32 as each
+    batch's distinct (key, value) pairs with counts when the (key,
+    value) grid is dense, else per element (``big``, ``wide32``). The
+    merged states must equal a per-element numpy fold on the driver
+    byte for byte, for keyed and keyless jobs, empty token arrays and
+    null keys, and several jobs that share a value column under
+    different keys."""
+
+    N_ROWS = 1500
+    PARAMS = {"hll": {"m": 1024}, "cms": {"d": 4, "w": 512},
+              "bloom": {"m": 8192, "k": 5}, "topk": {"k": 5, "slack": 2}}
+
+    @pytest.fixture(scope="class")
+    def data(self, spark):
+        from pyspark.sql.types import (ArrayType, IntegerType, LongType,
+                                       StringType, StructField, StructType)
+        rng = np.random.default_rng(7)
+        n = self.N_ROWS
+        lens = rng.integers(0, 25, n)
+        lens[rng.random(n) < 0.1] = 0  # empty token arrays
+        srcs = np.array(["a", "b", "c", None], dtype=object)[
+            rng.integers(0, 4, n)]  # a quarter null keys
+        rows = [(
+            srcs[i], ["x", "y"][i % 2],
+            (rng.zipf(1.3, lens[i]) % 3000).tolist(),
+            (rng.integers(0, 2**40, lens[i] % 4)).tolist(),
+            int(rng.integers(0, 700)),
+            int(rng.integers(-2**31, 2**31)),
+        ) for i in range(n)]
+        schema = StructType([
+            StructField("src", StringType(), True),
+            StructField("lang", StringType(), False),
+            StructField("tokens", ArrayType(IntegerType(), False), False),
+            StructField("big", ArrayType(LongType(), False), False),
+            StructField("small32", IntegerType(), False),
+            StructField("wide32", IntegerType(), False)])
+        df = spark.createDataFrame(rows, schema).repartition(3).cache()
+        collected = [(r["pid"], r) for r in df.withColumn(
+            "pid", F.spark_partition_id()).collect()]
+        return df, collected
+
+    @staticmethod
+    def _canonical(blob: bytes) -> bytes:
+        """Top-K candidates serialize in merge order, which follows the
+        shuffle's partial order; compare them sorted."""
+        from gostatix_spark.state import TopKState
+        st = sketch_from_bytes(blob)
+        if isinstance(st, TopKState):
+            st.candidates = dict(sorted(st.candidates.items()))
+            return st.to_bytes()
+        return blob
+
+    def _reference(self, rows, kind, vcol, kcol, element):
+        """{key: (state bytes, n_items, n_partials, {pid: rows})} from a
+        per-element fold of every value of the key."""
+        from gostatix_spark import hashing
+        from gostatix_spark.agg import _Spec, encode_candidate
+        from gostatix_spark.kernels import bloom, cms, topk
+        from gostatix_spark.state import (BloomState, CMSState, HLLState,
+                                          TopKState)
+        spec = _Spec.make(kind, **self.PARAMS[kind])
+        p = spec.p
+        parts: dict = {}
+        for pid, r in rows:
+            key = r[kcol] if kcol else None
+            if kcol and key is None:
+                continue
+            vals = r[vcol] if element == "tokens" else [r[vcol]]
+            per_pid = parts.setdefault(key, {}).setdefault(pid, [[], 0])
+            per_pid[0].extend(vals)
+            per_pid[1] += 1
+        out = {}
+        for key, per_pid in parts.items():
+            by_pid = {pid: np.array(v, dtype=np.int64)
+                      for pid, (v, _) in per_pid.items()}
+            allv = np.concatenate(list(by_pid.values()))
+            n = len(allv)
+            h1, h2 = hashing.hash_tokens(allv, "metro")
+            if kind == "hll":
+                regs = hll_kernel.new_state(p["m"])
+                np.maximum.at(regs, *hll_kernel.index_and_rank(h1, p["m"]))
+                blob = HLLState(p["m"], regs, n).to_bytes()
+            elif kind == "bloom":
+                words = bloom.new_state(p["m"])
+                idx = bloom.indices(h1, h2, p["k"], p["m"])
+                np.bitwise_or.at(words, idx >> 6,
+                                 np.uint64(1) << (idx & 63).astype(np.uint64))
+                blob = BloomState(p["m"], p["k"], words, n).to_bytes()
+            else:
+                mat = cms.new_state(p["d"], p["w"])
+                pos = cms.positions(h1, h2, p["d"], p["w"])
+                for r in range(p["d"]):
+                    np.add.at(mat[r], pos[:, r], np.uint64(1))
+                cstate = CMSState(p["d"], p["w"], mat, n)
+                if kind == "cms":
+                    blob = cstate.to_bytes()
+                else:  # top k·slack exact local counts per partition
+                    cand: dict = {}
+                    for v in by_pid.values():
+                        ic = topk.IntCounts()
+                        ic.update(v)
+                        for e, c in ic.top(p["k"] * p["slack"]):
+                            e = encode_candidate(e, element)
+                            cand[e] = cand.get(e, 0) + c
+                    blob = TopKState(p["k"], p["eps"], p["fail_prob"],
+                                     cstate, cand).to_bytes()
+            out[key] = (self._canonical(blob), n, len(per_pid),
+                        {pid: c for pid, (_, c) in per_pid.items()})
+        return out
+
+    JOBS = [  # (name, kind, value col, key col, element)
+        ("hll_src", "hll", "tokens", "src", "tokens"),
+        ("hll_lang", "hll", "tokens", "lang", "tokens"),
+        ("hll_all", "hll", "tokens", None, "tokens"),
+        ("cms_src", "cms", "tokens", "src", "tokens"),
+        ("cms_lang", "cms", "tokens", "lang", "tokens"),
+        ("bloom_all", "bloom", "tokens", None, "tokens"),
+        ("bloom_src", "bloom", "tokens", "src", "tokens"),
+        ("topk_src", "topk", "tokens", "src", "tokens"),
+        ("topk_all", "topk", "tokens", None, "tokens"),
+        ("hll_big", "hll", "big", None, "tokens"),
+        ("cms_big", "cms", "big", "lang", "tokens"),
+        ("hll_small", "hll", "small32", "src", "int32"),
+        ("cms_small", "cms", "small32", None, "int32"),
+        ("topk_small", "topk", "small32", "lang", "int32"),
+        ("hll_wide", "hll", "wide32", "lang", "int32"),
+        ("bloom_wide", "bloom", "wide32", "src", "int32"),
+        ("topk_wide", "topk", "wide32", None, "int32"),
+    ]
+
+    @pytest.fixture
+    def small_batches(self, spark):
+        # several Arrow batches per partition
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "97")
+        yield
+        spark.conf.set(key, old)
+
+    def test_multi_sketch_agg_matches_per_element_reference(
+            self, spark, data, small_batches):
+        from gostatix_spark.agg import multi_sketch_agg
+        df, rows = data
+        got = {(r["sketch_name"], r["key"]): r for r in multi_sketch_agg(df, [
+            {"name": name, "kind": kind, "value_col": vcol,
+             "key_col": kcol, "element": element,
+             "params": self.PARAMS[kind]}
+            for name, kind, vcol, kcol, element in self.JOBS]).collect()}
+        for name, kind, vcol, kcol, element in self.JOBS:
+            ref = self._reference(rows, kind, vcol, kcol, element)
+            assert {k for n, k in got if n == name} == set(ref), name
+            for key, (blob, n_items, n_partials, _) in ref.items():
+                r = got[(name, key)]
+                assert self._canonical(bytes(r["state"])) == blob, (name, key)
+                assert (r["n_items"], r["n_partials"]) == (
+                    n_items, n_partials), (name, key)
+
+    @pytest.mark.parametrize("kind,vcol,kcol,element", [
+        ("cms", "tokens", "src", "tokens"),
+        ("topk", "tokens", "src", "tokens"),
+        ("hll", "tokens", None, "tokens"),
+        ("bloom", "wide32", "src", "int32"),
+    ])
+    def test_sketch_agg_partials_and_states(self, spark, data, small_batches,
+                                            kind, vcol, kcol, element):
+        df, rows = data
+        ref = self._reference(rows, kind, vcol, kcol, element)
+        kw = dict(key_col=kcol, element=element, **self.PARAMS[kind])
+        parts = sketch_agg(df, kind, vcol, _return_partials=True,
+                           **kw).collect()
+        # rows_consumed counts rows with empty arrays, not null keys
+        consumed = {(r[kcol] if kcol else None, r["partition_id"]):
+                    r["rows_consumed"] for r in parts}
+        want = {(key, pid): c for key, v in ref.items()
+                for pid, c in v[3].items()}
+        assert consumed == want
+        states = sketch_agg(df, kind, vcol, **kw).collect()
+        assert len(states) == len(ref)
+        for r in states:
+            blob, n_items, n_partials, _ = ref[r[kcol] if kcol else None]
+            assert self._canonical(bytes(r["state"])) == blob
+            assert (r["n_items"], r["n_partials"]) == (n_items, n_partials)

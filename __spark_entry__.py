@@ -91,12 +91,15 @@ def q_hll_intersect_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     states = sketch_agg(events, "hll", "user_id", key_col="event_type",
                         m=HLL_M)
     est = hll_intersect_pairs(states, "event_type")
-    ea = events.select(F.col("event_type").alias("key_a"), "user_id")
-    eb = events.select(F.col("event_type").alias("key_b"), "user_id")
+    # distinct (event_type, user_id) pairs first: repeat events by one
+    # user would otherwise multiply the self-join's rows
+    pairs = events.select("event_type", "user_id").distinct()
+    ea = pairs.withColumnRenamed("event_type", "key_a")
+    eb = pairs.withColumnRenamed("event_type", "key_b")
     exact = (ea.join(eb, "user_id")
              .where(F.col("key_a") < F.col("key_b"))
              .groupBy("key_a", "key_b")
-             .agg(F.countDistinct("user_id").alias("exact_intersect")))
+             .agg(F.count("*").alias("exact_intersect")))
     sigma = params.hll_accuracy(HLL_M) * F.sqrt(
         F.col("est_a") ** 2 + F.col("est_b") ** 2 + F.col("est_union") ** 2)
     return (est.join(exact, ["key_a", "key_b"])

@@ -1,21 +1,25 @@
 """Two-phase distributed sketch aggregation — the heart of the library.
 
-Topology (SURVEY.md §3, §4.2):
+Topology (SURVEY.md §3, §4.2). One engine serves :func:`sketch_agg`,
+:func:`multi_sketch_agg`, checkpointed builds and the streaming sink;
+every per-kind step is a lookup into the registry in ``sketches.py``.
 
 * **Phase 1 (partial)** — ``DataFrame.mapInArrow``: each input partition
-  streams through as Arrow record batches; a numpy kernel folds every
-  batch into a per-(partition, key) sketch state. Output: ONE tiny row
-  per partition per key ``(key, state binary, n_items, partition_id,
-  rows_consumed)``. This is map-side combine: whatever the row/key skew
-  of the input, the shuffle that follows carries only
+  streams through as Arrow record batches; each batch is folded into
+  every requested sketch's per-(partition, key) state. Output: ONE tiny
+  row per partition per sketch per key ``(key, state binary, n_items,
+  partition_id, rows_consumed)``. This is map-side combine: whatever
+  the row/key skew of the input, the shuffle that follows carries only
   ``O(num_partitions × num_keys)`` sketch-sized rows — skew-immune by
   construction.
-* **Phase 2 (merge)** — ``groupBy(key).applyInPandas``: decode partial
-  states, fold with the sketch's merge law (max for HLL, add for CMS,
-  OR for Bloom; proven associative/commutative in tests), emit one row
-  per key. For very wide fan-in an optional intermediate tree level
-  merges ``partition_id % tree_fanout`` groups first — merge
-  associativity makes the tree shape irrelevant to the result.
+* **Phase 2 (merge)** — ``groupBy(...).applyInArrow``: one function
+  sorts the rows it is handed by key and folds each key's run of
+  partial states with the sketch's merge law (max for HLL, add for
+  CMS, OR for Bloom; proven associative/commutative in tests). Only the
+  grouping changes: per key, per hash bucket of keys
+  (``merge_buckets``), or first per (key, ``partition_id %
+  tree_fanout``) for very wide fan-in — merge associativity makes the
+  tree shape irrelevant to the result.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`: phase 1 only
@@ -34,21 +38,22 @@ first, so hashing and folding cost O(distinct), not O(elements).
 
 from __future__ import annotations
 
-from collections import Counter
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
-from gostatix_spark import hashing, params
-from gostatix_spark.kernels import bloom, cms, cuckoo, hll, kll, tdigest, topk
-from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
-                                  TopKState, sketch_from_bytes)
+from gostatix_spark import hashing, params, sketches
+from gostatix_spark.kernels import bloom, cuckoo, hll, topk
+from gostatix_spark.sketches import Sketch as _Spec
+from gostatix_spark.sketches import merge as merge_sketch_states
+from gostatix_spark.state import BloomState, CuckooState, sketch_from_bytes
 
 __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
            "cuckoo_apply_removals", "bloom_build_sharded",
@@ -116,9 +121,10 @@ def extract_hashes(arr: pa.Array, element: str, algo: str):
 
 
 def element_values(arr: pa.Array, element: str):
-    """Raw element values for exact counting (Top-K candidates): a flat
-    int numpy array for int-like kinds (vectorized ``np.unique``
-    counting), else the canonical per-row byte encodings."""
+    """Raw element values for exact counting (Top-K candidates) and the
+    quantile sketches: a flat int numpy array for int-like kinds
+    (vectorized ``np.unique`` counting), float64 values, the Arrow array
+    for strings/binaries, else the canonical per-row byte encodings."""
     if element == "tokens":
         values, _ = _arrow_list_ints(arr)
         return values.astype(np.int64)
@@ -130,7 +136,11 @@ def element_values(arr: pa.Array, element: str):
         # returned as the Arrow array itself: BytesCounts counts it with
         # one C++ value_counts call per batch — no per-element Python
         return arr
-    return element_bytes(arr, element)
+    if element == "token_array":  # each row's array as big-endian u32s
+        values, offsets = _arrow_list_ints(arr)
+        b = values.astype(">u4").tobytes()
+        return [b[offsets[i] * 4:offsets[i + 1] * 4] for i in range(len(arr))]
+    raise ValueError(f"unknown element kind {element!r}")
 
 
 def encode_candidate(key, element: str) -> bytes:
@@ -143,32 +153,13 @@ def encode_candidate(key, element: str) -> bytes:
     return key  # already bytes
 
 
-def element_bytes(arr: pa.Array, element: str) -> list[bytes]:
-    """Canonical byte encoding of each row's element (row-level kinds
-    only) — used by Top-K candidates and driver-side probes."""
-    if element == "int64":
-        vals = arr.to_numpy(zero_copy_only=False).astype(">i8")
-        b = vals.tobytes()
-        return [b[i * 8:(i + 1) * 8] for i in range(len(vals))]
-    if element == "int32":
-        vals = arr.to_numpy(zero_copy_only=False).astype(">i4")
-        b = vals.tobytes()
-        return [b[i * 4:(i + 1) * 4] for i in range(len(vals))]
-    if element in ("string", "binary"):
-        values, offsets = _arrow_var_bytes(arr)
-        buf = values.tobytes()
-        return [buf[offsets[i]:offsets[i + 1]] for i in range(len(arr))]
-    if element == "token_array":
-        values, offsets = _arrow_list_ints(arr)
-        b = values.astype(">u4").tobytes()
-        return [b[offsets[i] * 4:offsets[i + 1] * 4] for i in range(len(arr))]
-    raise ValueError(f"element kind {element!r} has no row-level bytes")
-
-
-def _select_elems(elems, sel: np.ndarray):
-    """Group-select from whatever :func:`element_values` returned:
-    numpy fancy-index, Arrow take (string/binary — stays in C++), or a
-    Python-list gather (token_array rows)."""
+def _take(elems, sel: np.ndarray | None):
+    """Group-select from hashes or whatever :func:`element_values`
+    returned: numpy fancy-index, Arrow take (string/binary — stays in
+    C++), or a Python-list gather (token_array rows). ``None`` (nothing
+    to select from, or select everything) passes ``elems`` through."""
+    if elems is None or sel is None:
+        return elems
     if isinstance(elems, np.ndarray):
         return elems[sel]
     if isinstance(elems, (pa.Array, pa.ChunkedArray)):
@@ -196,240 +187,27 @@ def infer_element(df: DataFrame, value_col: str, element: str | None) -> str:
 
 
 # ---------------------------------------------------------------------------
-# sketch specs
+# phase 1: one mapInArrow pass for every sketch job
 # ---------------------------------------------------------------------------
 
 
-class _Spec:
-    """Per-kind plumbing: init/update/final for phase 1, merge for phase 2."""
+class _Job(NamedTuple):
+    """One sketch to build. ``name`` is None for :func:`sketch_agg`'s
+    single job, whose partials keep the typed key column."""
 
-    def __init__(self, kind: str, algo: str, p: dict):
-        self.kind = kind
-        self.algo = algo
-        self.p = p
-
-    @staticmethod
-    def make(kind: str, **p) -> "_Spec":
-        if kind == "hll":
-            m = p.get("m", 16384)
-            if not params.is_power_of_two(m):
-                raise ValueError("hll m must be a power of two")
-            return _Spec(kind, "metro", {"m": m})
-        if kind == "cms":
-            if "d" in p:
-                d, w = p["d"], p["w"]
-            elif "fail_prob" in p:
-                d, w = params.cms_dims_from_error_bounds(p.get("eps", 0.001),
-                                                         p["fail_prob"])
-            else:
-                d, w = params.cms_dims_from_estimates(p.get("eps", 0.001),
-                                                      p.get("delta", 0.999))
-            return _Spec(kind, "metro", {"d": d, "w": w})
-        if kind == "bloom":
-            if "m" in p:
-                m, k = p["m"], p["k"]
-            else:
-                m = params.bloom_filter_size(p["n"], p.get("eps", 0.01))
-                k = params.bloom_num_hashes(m, p["n"])
-            return _Spec(kind, "metro", {"m": m, "k": k})
-        if kind == "topk":
-            d, w = params.cms_dims_from_error_bounds(p.get("eps", 0.0001),
-                                                     p.get("fail_prob", 0.01))
-            return _Spec(kind, "metro", {"k": p.get("k", 10), "d": d, "w": w,
-                                         "slack": p.get("slack", 4),
-                                         "eps": p.get("eps", 0.0001),
-                                         "fail_prob": p.get("fail_prob", 0.01),
-                                         "max_distinct": p.get("max_distinct")})
-        if kind == "tdigest":
-            return _Spec(kind, "metro", {"delta": p.get("delta", 200.0)})
-        if kind == "kll":
-            return _Spec(kind, "metro", {"k": p.get("k", 200),
-                                         "seed": p.get("seed", 42)})
-        raise ValueError(f"sketch_agg does not handle kind {kind!r}"
-                         " (use cuckoo_build for cuckoo)")
-
-    # -- phase 1 ---------------------------------------------------------
-
-    def init(self):
-        p = self.p
-        if self.kind == "hll":
-            return [hll.new_state(p["m"]), 0]
-        if self.kind == "cms":
-            return [cms.new_state(p["d"], p["w"]), 0]
-        if self.kind == "bloom":
-            return [bloom.new_state(p["m"]), 0]
-        if self.kind == "topk":
-            if self.element in ("tokens", "int32", "int64"):
-                inner = topk.IntCounts()
-            elif self.element in ("string", "binary"):
-                inner = topk.BytesCounts()
-            else:
-                return [Counter(), 0]  # token_array rows (vocab-sized)
-            cap = p.get("max_distinct")
-            if cap:
-                # near-unique columns: bound phase-1 memory to O(cap)
-                # per partition — tail counts spill into the CMS
-                inner = topk.CappedCounts(inner, cap, self.element,
-                                          p["d"], p["w"])
-            return [inner, 0]
-        if self.kind == "tdigest":
-            m, w = tdigest.new_state()
-            return [m, w, 0]
-        if self.kind == "kll":
-            return [kll.KLL(p["k"], p["seed"]), 0]
-
-    element: str = "string"  # set by _build_partials before use
-
-    def update(self, acc, h1, h2, elems=None, weights=None):
-        """Fold one batch of elements. ``weights`` counts each element
-        that many times: a CMS ``weight_col``, or the per-value counts
-        of a distinct-first fold (HLL/CMS/Bloom/Top-K only)."""
-        p = self.p
-        n = len(h1 if elems is None else elems) if weights is None \
-            else int(weights.sum())
-        if self.kind == "hll":
-            hll.update_batch(acc[0], h1)  # max: repeats change nothing
-            acc[1] += n
-        elif self.kind == "cms":
-            # weights = the reference's Update(data, count)
-            # (count_min_sketch.go:60) vectorized; only cms is linear
-            # in counts, so sketch_agg gates weight_col to this kind
-            acc[1] += cms.update_batch(acc[0], h1, h2, weights)
-        elif self.kind == "bloom":
-            bloom.insert_batch(acc[0], h1, h2, p["k"], p["m"])  # OR
-            acc[1] += n
-        elif self.kind == "topk":
-            if weights is None:
-                acc[0].update(elems)  # IntCounts (vectorized) or Counter
-            else:
-                acc[0].update_counts(elems, weights)  # IntCounts / Capped
-            acc[1] += n
-        elif self.kind == "tdigest":
-            acc[0], acc[1] = tdigest.update_batch(acc[0], acc[1], elems,
-                                                  self.p["delta"])
-            acc[2] += len(elems)
-        elif self.kind == "kll":
-            acc[0].update_batch(elems)
-            acc[1] += len(elems)
-
-    def finalize(self, acc) -> tuple[bytes, int]:
-        p = self.p
-        if self.kind == "hll":
-            # finalize emits PHASE-1 PARTIALS: sparse encoding (state.py
-            # v2) shrinks mostly-empty register frames; phase 2 decodes
-            # transparently and re-emits dense
-            return (HLLState(p["m"], acc[0], acc[1]).to_bytes(sparse=True),
-                    acc[1])
-        if self.kind == "cms":
-            return CMSState(p["d"], p["w"], acc[0], acc[1]).to_bytes(), acc[1]
-        if self.kind == "bloom":
-            return BloomState(p["m"], p["k"], acc[0], acc[1]).to_bytes(), acc[1]
-        if self.kind == "topk":
-            capped = False
-            if isinstance(acc[0], topk.CappedCounts):
-                mat, total, cand = acc[0].finalize(
-                    p["k"], p["slack"], p["d"], p["w"])
-                # only a partial that actually compacted carries
-                # inexact candidate counts; a cap that never fired
-                # leaves the exact=True read path valid
-                capped = acc[0].compactions > 0
-            elif isinstance(acc[0], topk.IntCounts):
-                mat, total, cand = topk.partial_from_int_counts(
-                    acc[0], self.element, p["k"], p["slack"], p["d"], p["w"])
-            else:
-                mat, total, cand = topk.partial_from_counter(
-                    acc[0], p["k"], p["slack"], p["d"], p["w"])
-            st = TopKState(p["k"], p["eps"], p["fail_prob"],
-                           CMSState(p["d"], p["w"], mat, total), cand,
-                           capped=capped)
-            return st.to_bytes(), acc[1]
-        if self.kind == "tdigest":
-            return tdigest.to_bytes(acc[0], acc[1], acc[2], p["delta"]), acc[2]
-        if self.kind == "kll":
-            return acc[0].to_bytes(), acc[1]
-
-    def needs_elements(self) -> bool:
-        return self.kind in ("topk", "tdigest", "kll")
-
-    def folds_distinct(self) -> bool:
-        """Whether a batch may be folded as its distinct values with
-        counts: HLL and Bloom are idempotent (max, OR), CMS and Top-K
-        are linear in counts, so the state bytes are the same as for a
-        per-element fold. Only for elements hashed by value alone."""
-        return (self.element in ("tokens", "int32")
-                and self.kind in ("hll", "cms", "bloom", "topk"))
+    name: str | None
+    spec: _Spec
+    value_col: str
+    key_col: str | None
+    weight_col: str | None = None
 
 
-def merge_sketch_states(blobs) -> bytes:
-    """Fold a sequence of serialized sketch states with the kind's merge
-    law. Works for any mix produced by the same spec; used by phase 2
-    and by checkpoint resume."""
-    blobs = list(blobs)
-    if blobs[0][:4] == tdigest.MAGIC:
-        m, w, n, delta = tdigest.from_bytes(blobs[0])
-        for b in blobs[1:]:
-            m2, w2, n2, _ = tdigest.from_bytes(b)
-            m, w = tdigest.merge((m, w), (m2, w2), delta)
-            n += n2
-        return tdigest.to_bytes(m, w, n, delta)
-    if blobs[0][:4] == kll.KLL.MAGIC:
-        acc = kll.KLL.from_bytes(blobs[0])
-        for b in blobs[1:]:
-            acc = acc.merge(kll.KLL.from_bytes(b))
-        return acc.to_bytes()
-    states = [sketch_from_bytes(b) for b in blobs]
-    head = states[0]
-    if isinstance(head, HLLState):
-        reg = head.registers
-        n = head.n_items
-        for s in states[1:]:
-            reg = hll.merge(reg, s.registers)
-            n += s.n_items
-        return HLLState(head.m, reg, n).to_bytes()
-    if isinstance(head, CMSState):
-        mat = head.matrix
-        tot = head.all_sum
-        for s in states[1:]:
-            mat = cms.merge(mat, s.matrix)
-            tot += s.all_sum
-        return CMSState(head.d, head.w, mat, tot).to_bytes()
-    if isinstance(head, BloomState):
-        w = head.words
-        n = head.n_items
-        for s in states[1:]:
-            w = bloom.merge(w, s.words)
-            n += s.n_items
-        return BloomState(head.m, head.k, w, n).to_bytes()
-    if isinstance(head, TopKState):
-        mat = head.cms.matrix
-        tot = head.cms.all_sum
-        cand = dict(head.candidates)
-        capped = head.capped
-        for s in states[1:]:
-            mat = cms.merge(mat, s.cms.matrix)
-            tot += s.cms.all_sum
-            cand = topk.merge_candidates(cand, s.candidates)
-            capped = capped or s.capped
-        return TopKState(head.k, head.error_rate, head.accuracy,
-                         CMSState(head.cms.d, head.cms.w, mat, tot),
-                         cand, capped=capped).to_bytes()
-    raise TypeError(f"cannot merge {type(head).__name__}")
-
-
-# ---------------------------------------------------------------------------
-# phase 1: mapInArrow partial builder
-# ---------------------------------------------------------------------------
-
-
-def _partial_schema(df: DataFrame, key_col: str | None) -> StructType:
-    fields = []
-    if key_col:
-        fields.append(df.schema[key_col])
-    fields += [StructField("state", BinaryType(), False),
-               StructField("n_items", LongType(), False),
-               StructField("partition_id", IntegerType(), False),
-               StructField("rows_consumed", LongType(), False)]
-    return StructType(fields)
+def _sketch_job(df: DataFrame, kind: str, value_col: str, key_col: str | None,
+                element: str | None, params: dict, name: str | None = None,
+                weight_col: str | None = None) -> _Job:
+    spec = _Spec.make(kind, **params)
+    spec.element = infer_element(df, value_col, element)
+    return _Job(name, spec, value_col, key_col, weight_col)
 
 
 class _Batch:
@@ -448,10 +226,14 @@ class _Batch:
         return self._memo[key]
 
     def keys(self, kcol: str):
-        """(codes, uniques, rows per key); null keys get code -1."""
+        """(codes, uniques, rows per key); null keys get code -1. Arrow
+        factorizes the column, so int64 keys stay exact beside nulls
+        (a pandas column with nulls would turn them into floats)."""
         def compute():
-            codes, uniques = pd.factorize(self.batch.column(kcol).to_pandas(),
-                                          sort=False)
+            enc = self.batch.column(kcol).dictionary_encode()
+            codes = enc.indices.fill_null(-1).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            uniques = enc.dictionary.to_pylist()
             return codes, uniques, np.bincount(codes[codes >= 0],
                                                minlength=len(uniques))
         return self._get(("keys", kcol), compute)
@@ -493,7 +275,7 @@ class _Batch:
         ``np.bincount`` over the dense (key, value) grid finds them and
         only they are hashed. None when the batch is empty or the grid
         exceeds ``topk.DENSE_SPAN`` cells (the ``IntCounts`` rule): the
-        caller then folds per element. Cached per key column too: the
+        caller then folds another way. Cached per key column too: the
         same values under another key column pair up differently."""
         def compute():
             if element == "tokens":
@@ -523,36 +305,36 @@ class _Batch:
         return self._get(("distinct", kcol, vcol, element, algo), compute)
 
 
-def _take(arr, sel):
-    return arr if arr is None or sel is None else _select_elems(arr, sel)
+def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
+                keyed: hll.KeyedHLL | None) -> None:
+    """Fold one batch into job ``i``'s per-key accumulators
+    ``accs[(i, key)]`` and add each key's input rows to ``rows[(i,
+    key)]``; rows with a null key are dropped. The batch picks the path:
 
-
-def _fold_batch(b: _Batch, spec: _Spec, vcol: str, kcol: str | None,
-                accs: dict, rows: dict, slot=lambda key: key,
-                weight_col: str | None = None) -> None:
-    """Fold one batch into one job's per-key accumulators
-    ``accs[slot(key)]`` and add each key's input rows to
-    ``rows[slot(key)]``. Rows with a null key are dropped.
-
-    Unweighted HLL/CMS/Bloom/Top-K jobs over ``tokens``/``int32`` fold
-    the batch's distinct values with their counts (see
-    :meth:`_Spec.folds_distinct`); every other job folds per element."""
+    * the distinct-first fold, when the job folds counts (see
+      :meth:`Sketch.folds_distinct`) and the batch's (key, value) grid
+      is dense;
+    * else ``keyed``, the job's :class:`kernels.hll.KeyedHLL` when it is
+      a keyed HLL: one vectorized update for all keys;
+    * else per element, one update per key."""
+    spec, vcol, kcol = job.spec, job.value_col, job.key_col
     if kcol is None:
         keys, row_counts = [None], [b.num_rows]
     else:
         _, keys, row_counts = b.keys(kcol)
+    for key, n_rows in zip(keys, row_counts):
+        rows[(i, key)] = rows.get((i, key), 0) + int(n_rows)
     dist = None
-    if weight_col is None and spec.folds_distinct():
+    if job.weight_col is None and spec.folds_distinct():
         dist = b.distinct(kcol, vcol, spec.element, spec.algo)
     if dist is not None:
         bounds, vals, counts, h1, h2 = dist
         for g, key in enumerate(keys):
-            s, k = slice(bounds[g], bounds[g + 1]), slot(key)
-            spec.update(accs.setdefault(k, spec.init()), h1[s], h2[s],
+            s = slice(bounds[g], bounds[g + 1])
+            spec.update(accs.setdefault((i, key), spec.init()), h1[s], h2[s],
                         vals[s], counts[s])
-            rows[k] = rows.get(k, 0) + int(row_counts[g])
         return
-    if spec.needs_elements():
+    if spec.needs_elements:
         # Top-K counts exact values and t-digest/KLL take raw values:
         # nothing is hashed here
         h1 = h2 = None
@@ -561,9 +343,15 @@ def _fold_batch(b: _Batch, spec: _Spec, vcol: str, kcol: str | None,
     else:
         h1, h2, rowmap = b.hashes(vcol, spec.element, spec.algo)
         elems = None
+    if keyed is not None:
+        codes = b.keys(kcol)[0]
+        ecodes = codes if rowmap is None else codes[rowmap]
+        keep = ecodes >= 0
+        keyed.update(keys, ecodes[keep], h1[keep])
+        return
     welems = None
-    if weight_col is not None:
-        wvals = b.batch.column(weight_col) \
+    if job.weight_col is not None:
+        wvals = b.batch.column(job.weight_col) \
             .to_numpy(zero_copy_only=False).astype(np.float64)
         # tokens explode per row: each token carries its row's weight
         welems = wvals if rowmap is None else wvals[rowmap]
@@ -572,22 +360,38 @@ def _fold_batch(b: _Batch, spec: _Spec, vcol: str, kcol: str | None,
     else:
         order, bounds = b.groups(kcol, vcol, rowmap)
         sels = [order[bounds[g]:bounds[g + 1]] for g in range(len(keys))]
-    for key, sel, n_rows in zip(keys, sels, row_counts):
-        k = slot(key)
-        spec.update(accs.setdefault(k, spec.init()), _take(h1, sel),
+    for key, sel in zip(keys, sels):
+        spec.update(accs.setdefault((i, key), spec.init()), _take(h1, sel),
                     _take(h2, sel), _take(elems, sel), _take(welems, sel))
-        rows[k] = rows.get(k, 0) + int(n_rows)
 
 
-def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
-                    key_col: str | None, element: str,
-                    skip_partitions: frozenset[int] = frozenset(),
-                    weight_col: str | None = None) -> DataFrame:
-    out_schema = _partial_schema(df, key_col)
-    cols = ([key_col] if key_col else []) + [value_col]
-    if weight_col:
-        cols.append(weight_col)
-    spec.element = element
+def _partial_key(df: DataFrame, jobs: list[_Job]):
+    """The leading partial columns and a (job, key) → their values map:
+    :func:`sketch_agg`'s typed key column, or :func:`multi_sketch_agg`'s
+    ``sketch_name`` and stringified ``key``."""
+    kc = jobs[0].key_col
+    if jobs[0].name is None:
+        return ([df.schema[kc]] if kc else []), \
+            lambda job, key: {kc: key} if kc else {}
+    return ([StructField("sketch_name", StringType(), False),
+             StructField("key", StringType(), True)],
+            lambda job, key: {"sketch_name": job.name,
+                              "key": None if key is None else str(key)})
+
+
+def _build_partials(df: DataFrame, jobs: list[_Job],
+                    skip_partitions: frozenset[int] = frozenset()
+                    ) -> DataFrame:
+    """Phase 1: one scan folds every job; one partial row per (input
+    partition, job, key)."""
+    head, key_values = _partial_key(df, jobs)
+    out_schema = StructType(head + [
+        StructField("state", BinaryType(), False),
+        StructField("n_items", LongType(), False),
+        StructField("partition_id", IntegerType(), False),
+        StructField("rows_consumed", LongType(), False)])
+    cols = sorted({c for j in jobs
+                   for c in (j.value_col, j.key_col, j.weight_col) if c})
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -597,49 +401,29 @@ def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
             # (real deployments prune at the source/manifest level instead)
             return
         accs: dict = {}
-        rows_by_key: dict = {}
-        # fine-grained-key fast path: one vectorized update per batch
-        # instead of a python loop over keys (see kernels.hll.KeyedHLL)
-        keyed_hll = (hll.KeyedHLL(spec.p["m"])
-                     if key_col and spec.kind == "hll" else None)
+        rows: dict = {}
+        keyed = {i: hll.KeyedHLL(j.spec.p["m"]) for i, j in enumerate(jobs)
+                 if j.key_col and j.spec.kind == "hll"}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             b = _Batch(batch)
-            if keyed_hll is None:
-                _fold_batch(b, spec, value_col, key_col, accs, rows_by_key,
-                            weight_col=weight_col)
-                continue
-            h1, _, rowmap = b.hashes(value_col, element, spec.algo)
-            codes, uniques, rc = b.keys(key_col)
-            ecodes = codes if rowmap is None else codes[rowmap]
-            keep = ecodes >= 0  # null keys dropped (as in the fold path)
-            keyed_hll.update(list(uniques), ecodes[keep], h1[keep])
-            for u in np.nonzero(rc)[0].tolist():
-                k = uniques[u]
-                rows_by_key[k] = rows_by_key.get(k, 0) + int(rc[u])
-        out_rows = []
-        if keyed_hll is not None:
-            for key, regs, n_items in keyed_hll.states():
-                out_rows.append({
-                    key_col: key,
-                    # sparse partial frames (state.py v2): fine-grained
-                    # keys leave most of the m registers zero, and these
-                    # rows exist only to be shuffled into phase 2
-                    "state": HLLState(spec.p["m"], regs,
-                                      n_items).to_bytes(sparse=True),
-                    "n_items": n_items, "partition_id": pid,
-                    "rows_consumed": rows_by_key[key]})
-        for key, acc in accs.items():
-            blob, n_items = spec.finalize(acc)
-            row = {"state": blob, "n_items": n_items,
-                   "partition_id": pid, "rows_consumed": rows_by_key[key]}
-            if key_col:
-                row[key_col] = key
-            out_rows.append(row)
-        if out_rows:
+            for i, job in enumerate(jobs):
+                _fold_batch(b, i, job, accs, rows, keyed.get(i))
+        for i, kh in keyed.items():
+            for key, regs, n_items in kh.states():
+                acc = accs.setdefault((i, key), jobs[i].spec.init())
+                np.maximum(acc[0], regs, out=acc[0])  # HLL accumulator
+                acc[1] += n_items
+        out = []
+        for (i, key), acc in accs.items():
+            blob, n_items = jobs[i].spec.finalize(acc)
+            out.append({**key_values(jobs[i], key), "state": blob,
+                        "n_items": n_items, "partition_id": pid,
+                        "rows_consumed": rows[(i, key)]})
+        if out:
             yield from pa.Table.from_pylist(
-                out_rows, schema=_to_arrow_schema(out_schema)).to_batches()
+                out, schema=_to_arrow_schema(out_schema)).to_batches()
 
     return df.select(*cols).mapInArrow(fn, out_schema)
 
@@ -650,77 +434,71 @@ def _to_arrow_schema(st: StructType) -> pa.Schema:
 
 
 # ---------------------------------------------------------------------------
-# phase 2: tree merge
+# phase 2: one applyInArrow merge
 # ---------------------------------------------------------------------------
 
 
-def _merge_partials(partials: DataFrame, key_col: str | None,
-                    tree_fanout: int | None,
-                    merge_buckets: int | None = None) -> DataFrame:
-    key_cols = [key_col] if key_col else []
-    out_fields = ([partials.schema[key_col]] if key_col else []) + [
+def _run_starts(t: pa.Table, cols: list[str]) -> np.ndarray:
+    """First row of each run of equal ``cols`` values (null equals null)."""
+    new = np.zeros(t.num_rows, dtype=bool)
+    new[0] = True
+    for c in cols:
+        a, b = t.column(c).slice(1), t.column(c).slice(0, t.num_rows - 1)
+        diff = pc.or_kleene(pc.not_equal(a, b),
+                            pc.xor(pc.is_null(a), pc.is_null(b)))
+        new[1:] |= diff.fill_null(False).to_numpy(zero_copy_only=False)
+    return np.flatnonzero(new)
+
+
+def _merge_runs(partials: DataFrame, run_cols: list[str],
+                group_cols: list[str]) -> DataFrame:
+    """One merged row per run of equal ``run_cols`` within each group of
+    ``groupBy(group_cols)``: the group's rows are stable-sorted, so each
+    run keeps arrival order, and folded through the sketch registry.
+    ``n_items`` adds up; ``n_partials`` adds up the incoming
+    ``n_partials``, or counts rows when there are none."""
+    schema = StructType([partials.schema[c] for c in run_cols] + [
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ]
-    out_schema = StructType(out_fields)
+        StructField("n_partials", LongType(), False)])
+    arrow_schema = _to_arrow_schema(schema)
+    fan_in = "n_partials" if "n_partials" in partials.columns else None
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_sketch_states(pdf["state"].tolist())
-        row = {"state": blob, "n_items": int(pdf["n_items"].sum()),
-               "n_partials": int(pdf["n_partials"].sum()
-                                 if "n_partials" in pdf else len(pdf))}
-        for kc in key_cols:
-            row[kc] = pdf[kc].iloc[0]
-        return pd.DataFrame([row])
+    def merge(t: pa.Table) -> pa.Table:
+        if run_cols:
+            t = t.take(pc.sort_indices(t, [(c, "ascending") for c in run_cols]))
+        starts = _run_starts(t, run_cols)
+        ends = np.append(starts[1:], t.num_rows)
+        blobs = t.column("state").to_pylist()
+        states = [sketches.merge(blobs[s:e]) for s, e in zip(starts, ends)]
+        n_items = np.add.reduceat(t.column("n_items").to_numpy(), starts)
+        n_partials = (np.add.reduceat(t.column(fan_in).to_numpy(), starts)
+                      if fan_in else ends - starts)
+        return pa.Table.from_arrays(
+            [t.column(c).take(starts) for c in run_cols]
+            + [pa.array(states, pa.binary()), pa.array(n_items, pa.int64()),
+               pa.array(n_partials, pa.int64())], schema=arrow_schema)
 
+    return partials.groupBy(*group_cols).applyInArrow(merge, schema)
+
+
+def _merge_partials(partials: DataFrame, key_cols: list[str],
+                    tree_fanout: int | None = None,
+                    merge_buckets: int | None = None) -> DataFrame:
+    """Phase 2: one state per key. ``tree_fanout`` first merges within
+    (key, ``partition_id % tree_fanout``); ``merge_buckets`` hands each
+    call the keys of one hash bucket rather than one key, for many
+    fine-grained keys where a call per key costs more than its merge."""
     if tree_fanout:
-        # intermediate level: merge within (key, partition_id % fanout)
-        inter_schema = StructType(list(out_schema.fields)
-                                  + [StructField("_salt", IntegerType(), False)])
-
-        def inter_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_fn(pdf)
-            out["_salt"] = pdf["_salt"].iloc[0]
-            return out
-
         salted = partials.withColumn(
             "_salt", (F.col("partition_id") % tree_fanout).cast("int"))
-        level1 = salted.groupBy(*key_cols, "_salt").applyInPandas(
-            inter_fn, inter_schema)
-        partials = level1
-
+        partials = _merge_runs(salted, key_cols + ["_salt"],
+                               key_cols + ["_salt"])
     if key_cols and merge_buckets:
-        # many-fine-grained-keys path: one applyInPandas call per key
-        # costs ~ms of pandas overhead; bucket keys by hash so each
-        # call merges ~n_keys/merge_buckets keys in a tight loop
-        def bucket_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for key, g in pdf.groupby(key_cols[0], dropna=False, sort=False):
-                rows.append({
-                    key_cols[0]: key,
-                    "state": merge_sketch_states(g["state"].tolist()),
-                    "n_items": int(g["n_items"].sum()),
-                    "n_partials": len(g)})
-            return pd.DataFrame(rows)
-
-        return (partials
-                .withColumn("_kb", F.pmod(F.hash(*key_cols),
-                                          F.lit(merge_buckets)))
-                .groupBy("_kb")
-                .applyInPandas(lambda pdf: bucket_merge(pdf), out_schema))
-
-    if key_cols:
-        return partials.groupBy(*key_cols).applyInPandas(merge_fn, out_schema)
-
-    def merge_fn_g(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge_fn(pdf)
-        out["_g"] = 1
-        return out
-
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        merge_fn_g, StructType([StructField("_g", IntegerType(), False)]
-                               + list(out_schema.fields))).drop("_g")
+        bucketed = partials.withColumn(
+            "_kb", F.pmod(F.hash(*key_cols), F.lit(merge_buckets)))
+        return _merge_runs(bucketed, key_cols, ["_kb"])
+    return _merge_runs(partials, key_cols, key_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -740,7 +518,7 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
 
     kinds: ``hll`` (m), ``cms`` (d,w | eps,delta | eps,fail_prob),
     ``bloom`` (m,k | n,eps), ``topk`` (k, eps, fail_prob, slack,
-    max_distinct).
+    max_distinct), ``tdigest`` (delta), ``kll`` (k, seed).
     element kinds: ``tokens`` (flatten array<int>), ``token_array``
     (whole array per row), ``int32``/``int64``/``string``/``binary``
     (inferred from the column type when omitted).
@@ -761,112 +539,37 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     the same input is needed anyway. Only ``cms`` is count-linear, so
     other kinds reject ``weight_col``.
     """
-    element = infer_element(df, value_col, element)
-    spec = _Spec.make(kind, **sketch_params)
     if weight_col is not None and kind != "cms":
         raise ValueError(
             f"weight_col is only meaningful for kind='cms' (the"
             f" count-linear sketch; reference Update(data, count)) —"
             f" got kind={kind!r}")
-    partials = _build_partials(df, spec, value_col, key_col, element,
-                               weight_col=weight_col)
+    job = _sketch_job(df, kind, value_col, key_col, element, sketch_params,
+                      weight_col=weight_col)
+    partials = _build_partials(df, [job])
     if _return_partials:
         return partials
-    return _merge_partials(partials, key_col, tree_fanout, merge_buckets)
+    return _merge_partials(partials, [key_col] if key_col else [],
+                           tree_fanout, merge_buckets)
 
 
 def multi_sketch_agg(df: DataFrame, jobs: list[dict],
                      tree_fanout: int | None = None) -> DataFrame:
     """Build MANY sketches in ONE scan — the 100 TB shape: the input is
     read once, each Arrow batch is hashed once per distinct
-    (column, element, algo) and folded into every requested sketch.
-    HLL/CMS/Bloom/Top-K jobs over ``tokens``/``int32`` hash only the
-    batch's distinct (key, value) pairs and fold their counts.
+    (column, element, algo) and folded into every requested sketch,
+    through the same phase-1 fold as :func:`sketch_agg`.
 
     ``jobs``: list of dicts ``{name, kind, value_col, key_col?,
     element?, params?}``. Keys are stringified into a uniform ``key``
     column (null for global sketches). Returns
     ``DataFrame[sketch_name, key, state, n_items, n_partials]``.
     """
-    specs: dict[str, _Spec] = {}
-    meta: dict[str, tuple[str, str | None]] = {}
-    for j in jobs:
-        name = j["name"]
-        spec = _Spec.make(j["kind"], **j.get("params", {}))
-        spec.element = infer_element(df, j["value_col"], j.get("element"))
-        specs[name] = spec
-        meta[name] = (j["value_col"], j.get("key_col"))
-
-    in_cols = sorted({m[0] for m in meta.values()}
-                     | {m[1] for m in meta.values() if m[1]})
-    out_schema = StructType([
-        StructField("sketch_name", StringType(), False),
-        StructField("key", StringType(), True),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_consumed", LongType(), False)])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        accs: dict[tuple[str, str | None], list] = {}
-        rows_seen: dict[tuple[str, str | None], int] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            b = _Batch(batch)
-            for name, spec in specs.items():
-                vcol, kcol = meta[name]
-                _fold_batch(b, spec, vcol, kcol, accs, rows_seen,
-                            slot=lambda key, name=name: (
-                                name, None if key is None else str(key)))
-        if accs:
-            out = []
-            for (name, key), acc in accs.items():
-                blob, n_items = specs[name].finalize(acc)
-                out.append({"sketch_name": name, "key": key, "state": blob,
-                            "n_items": n_items, "partition_id": pid,
-                            "rows_consumed": rows_seen[(name, key)]})
-            yield from pa.Table.from_pylist(
-                out, schema=_to_arrow_schema(out_schema)).to_batches()
-
-    partials = df.select(*in_cols).mapInArrow(fn, out_schema)
-
-    merge_schema = StructType([
-        StructField("sketch_name", StringType(), False),
-        StructField("key", StringType(), True),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("n_partials", LongType(), False)])
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_sketch_states(pdf["state"].tolist())
-        return pd.DataFrame([{
-            "sketch_name": pdf["sketch_name"].iloc[0],
-            "key": pdf["key"].iloc[0],
-            "state": blob,
-            "n_items": int(pdf["n_items"].sum()),
-            "n_partials": int(pdf["n_partials"].sum()
-                              if "n_partials" in pdf else len(pdf))}])
-
-    if tree_fanout:
-        inter_schema = StructType(list(merge_schema.fields)
-                                  + [StructField("_salt", IntegerType(), False)])
-
-        def inter_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_fn(pdf)
-            out["_salt"] = int(pdf["_salt"].iloc[0])
-            return out
-
-        partials = (partials
-                    .withColumn("_salt", (F.col("partition_id") % tree_fanout)
-                                .cast("int"))
-                    .groupBy("sketch_name", "key", "_salt")
-                    .applyInPandas(inter_fn, inter_schema))
-
-    grouped = partials.groupBy("sketch_name", "key")
-    return grouped.applyInPandas(merge_fn, merge_schema)
+    partials = _build_partials(df, [
+        _sketch_job(df, j["kind"], j["value_col"], j.get("key_col"),
+                    j.get("element"), j.get("params", {}), name=j["name"])
+        for j in jobs])
+    return _merge_partials(partials, ["sketch_name", "key"], tree_fanout)
 
 
 def _element_hashes_df(df: DataFrame, value_col: str, key_col: str | None,
@@ -1117,4 +820,4 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
                 out, schema=_to_arrow_schema(out_schema)).to_batches()
 
     partials = df.select(value_col).mapInArrow(fn, out_schema)
-    return _merge_partials(partials, "shard", tree_fanout)
+    return _merge_partials(partials, ["shard"], tree_fanout)

@@ -29,9 +29,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gostatix_spark.agg import _merge_partials, _Spec, _build_partials, infer_element
+from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
 
-__all__ = ["checkpointed_sketch_agg", "write_partials", "resume_from_checkpoint"]
+__all__ = ["checkpointed_sketch_agg", "write_partials"]
 
 
 def write_partials(partials: DataFrame, path: str, kind: str,
@@ -78,12 +78,9 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     mid-build (FIXTURES.md F4 ``resume_sim``).
     """
     spark = df.sparkSession
-    element = infer_element(df, value_col, element)
-    spec = _Spec.make(kind, **sketch_params)
-
+    job = _sketch_job(df, kind, value_col, key_col, element, sketch_params)
     done = frozenset(completed_partitions(spark, checkpoint_path, kind))
-    partials = _build_partials(df, spec, value_col, key_col, element,
-                               skip_partitions=done)
+    partials = _build_partials(df, [job], skip_partitions=done)
     if fail_after_partition is not None:
         # test hook: pretend every partition after the limit was lost
         partials = partials.where(
@@ -97,4 +94,4 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     # one contribution per partition (idempotent re-runs may append dupes)
     keyc = [key_col] if key_col else []
     dedup = all_partials.dropDuplicates(keyc + ["partition_id"])
-    return _merge_partials(dedup, key_col, tree_fanout)
+    return _merge_partials(dedup, keyc, tree_fanout)

@@ -79,19 +79,3 @@ def is_power_of_two(x: int) -> bool:
 
 def next_power_of_two(x: int) -> int:
     return 1 if x <= 1 else 1 << (x - 1).bit_length()
-
-
-def sketch_memory_bytes(kind: str, **p) -> int:
-    """State size estimate used for executor-memory budgeting
-    (SURVEY.md §4.2.4)."""
-    if kind == "bloom":
-        return 8 * ((p["m"] + 63) // 64)
-    if kind == "hll":
-        return p["m"]
-    if kind == "cms":
-        return 8 * p["d"] * p["w"]
-    if kind == "cuckoo":
-        return 8 * p["size"] * p["bucket_size"]
-    if kind == "topk":
-        return 8 * p["d"] * p["w"] + 64 * p["k"]
-    raise ValueError(kind)

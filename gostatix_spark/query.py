@@ -16,17 +16,20 @@ Two flavors:
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from gostatix_spark import hashing
 from gostatix_spark.kernels import bloom, cms, cuckoo, hll, topk
-from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
-                                  TopKState, sketch_from_bytes)
+from gostatix_spark.sketches import lookup
+from gostatix_spark.state import (BloomState, CMSState, CuckooState, TopKState,
+                                  sketch_from_bytes)
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
            "topk_values", "bloom_contains", "bloom_cardinality",
@@ -68,6 +71,17 @@ hash_pandas = _hash_pd
 # ---------------------------------------------------------------------------
 # state-side queries
 # ---------------------------------------------------------------------------
+
+
+def _per_state(states: DataFrame, udf, fields: list[str],
+               explode: bool = True) -> DataFrame:
+    """``[key?, state, ...]`` → ``[key?, *fields]`` from a UDF over the
+    state column; ``explode`` gives one row per element it returns."""
+    key_cols = [c for c in states.columns
+                if c not in ("state", "n_items", "n_partials")]
+    col = udf(F.col("state"))
+    return (states.withColumn("_s", F.explode(col) if explode else col)
+            .select(*key_cols, *(f"_s.{f}" for f in fields)))
 
 
 def hll_estimate(states: DataFrame, out_col: str = "est_distinct",
@@ -209,11 +223,7 @@ def topk_values(states: DataFrame, out_elem: str = "element",
                         for i, (e, c) in enumerate(rows)])
         return pd.Series(out)
 
-    key_cols = [c for c in states.columns
-                if c not in ("state", "n_items", "n_partials")]
-    return (states
-            .withColumn("_tk", F.explode(vals(F.col("state"))))
-            .select(*key_cols, "_tk.rank", f"_tk.{out_elem}", f"_tk.{out_count}"))
+    return _per_state(states, vals, ["rank", out_elem, out_count])
 
 
 def cms_counts(states: DataFrame, items: list, element: str = "string",
@@ -240,10 +250,7 @@ def cms_counts(states: DataFrame, items: list, element: str = "string",
                         for i in range(len(items))])
         return pd.Series(out)
 
-    key_cols = [c for c in states.columns
-                if c not in ("state", "n_items", "n_partials")]
-    return (states.withColumn("_q", F.explode(q(F.col("state"))))
-            .select(*key_cols, "_q.item", f"_q.{out_col}"))
+    return _per_state(states, q, ["item", out_col])
 
 
 def cms_inner_product(states_a: DataFrame, states_b: DataFrame,
@@ -310,11 +317,6 @@ def sketch_info(states: DataFrame) -> DataFrame:
     ``bloom_filter.go:228-231``, ``Accuracy`` ``base_hyperloglog.go:66``,
     ``CuckooPositiveRate`` ``base_cuckoo_filter.go:73-75``, CMS dims,
     ``allSum``) as one DataFrame."""
-    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
-    from gostatix_spark.kernels import kll as kll_k
-    from gostatix_spark.kernels import tdigest as td_k
-    from gostatix_spark.kernels.cuckoo import CuckooFilter
-
     info_t = StructType([
         StructField("kind", StringType()),
         StructField("params", StringType()),       # json
@@ -324,98 +326,35 @@ def sketch_info(states: DataFrame) -> DataFrame:
 
     @F.pandas_udf(info_t)
     def info(blobs: pd.Series) -> pd.DataFrame:
-        import json
-        import math
         rows = []
-        for b in blobs:
-            b = bytes(b)
-            if b[:4] == td_k.MAGIC:
-                m, w, n, delta = td_k.from_bytes(b)
-                rows.append({"kind": "tdigest",
-                             "params": json.dumps({"delta": delta, "n": int(n)}),
-                             "fill_metric": float(len(m)),
-                             "accuracy": 1.0 / delta})
-                continue
-            if b[:4] == kll_k.KLL.MAGIC:
-                sk = kll_k.KLL.from_bytes(b)
-                rows.append({"kind": "kll",
-                             "params": json.dumps({"k": sk.k, "n": int(sk.n)}),
-                             "fill_metric": float(sum(len(lv) for lv in sk.levels)),
-                             "accuracy": 1.0 / sk.k})
-                continue
-            st = sketch_from_bytes(b)
-            if isinstance(st, BloomState):
-                rows.append({"kind": "bloom",
-                             "params": json.dumps({"m": st.m, "k": st.k,
-                                                   "n": st.n_items}),
-                             "fill_metric": bloom.positive_rate(st.words, st.k, st.m),
-                             "accuracy": float("nan")})
-            elif isinstance(st, HLLState):
-                rows.append({"kind": "hll",
-                             "params": json.dumps({"m": st.m, "n": st.n_items}),
-                             "fill_metric": float((st.registers > 0).mean()),
-                             "accuracy": 1.04 / math.sqrt(st.m)})
-            elif isinstance(st, CMSState):
-                rows.append({"kind": "cms",
-                             "params": json.dumps({"d": st.d, "w": st.w,
-                                                   "all_sum": st.all_sum}),
-                             "fill_metric": float((st.matrix > 0).mean()),
-                             "accuracy": math.e / st.w})
-            elif isinstance(st, TopKState):
-                rows.append({"kind": "topk",
-                             "params": json.dumps({"k": st.k,
-                                                   "candidates": len(st.candidates)}),
-                             "fill_metric": float(st.cms.all_sum),
-                             "accuracy": st.error_rate})
-            elif isinstance(st, CuckooState):
-                f = CuckooFilter(st.size, st.bucket_size, st.fp_len,
-                                 buckets=st.buckets, length=st.length)
-                occ = st.length / (st.size * st.bucket_size)
-                rows.append({"kind": "cuckoo",
-                             "params": json.dumps({"size": st.size,
-                                                   "bucket_size": st.bucket_size,
-                                                   "fp_len": st.fp_len,
-                                                   "length": st.length}),
-                             "fill_metric": occ,
-                             "accuracy": f.positive_rate()})
+        for b in map(bytes, blobs):
+            sk = lookup(b)
+            p, fill, accuracy = sk.info(sk.decode(b))
+            rows.append({"kind": sk.kind, "params": json.dumps(p),
+                         "fill_metric": fill, "accuracy": accuracy})
         return pd.DataFrame(rows)
 
-    key_cols = [c for c in states.columns
-                if c not in ("state", "n_items", "n_partials")]
-    return (states.withColumn("_i", info(F.col("state")))
-            .select(*key_cols, "_i.kind", "_i.params", "_i.fill_metric",
-                    "_i.accuracy"))
+    return _per_state(states, info, info_t.fieldNames(), explode=False)
 
 
 def quantiles(states: DataFrame, qs: list[float],
               out_col: str = "quantile_value") -> DataFrame:
     """[key?, state, ...] → exploded [key?, q, quantile_value] for
     t-digest (GSKQ) or KLL (GSKL) states."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-    from gostatix_spark.kernels import kll as kll_k
-    from gostatix_spark.kernels import tdigest as td_k
-
     result_t = ArrayType(StructType([
         StructField("q", DoubleType()), StructField(out_col, DoubleType())]))
 
     @F.pandas_udf(result_t)
     def qf(blobs: pd.Series) -> pd.Series:
         out = []
-        for b in blobs:
-            b = bytes(b)
-            if b[:4] == td_k.MAGIC:
-                m, w, _, _ = td_k.from_bytes(b)
-                vals = td_k.quantile(m, w, qs)
-            else:
-                vals = kll_k.KLL.from_bytes(b).quantile(qs)
+        for b in map(bytes, blobs):
+            sk = lookup(b)
+            vals = sk.quantile(sk.decode(b), qs)
             out.append([{"q": float(q), out_col: float(v)}
                         for q, v in zip(qs, vals)])
         return pd.Series(out)
 
-    key_cols = [c for c in states.columns
-                if c not in ("state", "n_items", "n_partials")]
-    return (states.withColumn("_q", F.explode(qf(F.col("state"))))
-            .select(*key_cols, "_q.q", f"_q.{out_col}"))
+    return _per_state(states, qf, ["q", out_col])
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,371 @@
+"""The sketch registry: one entry per kind, found from a state's frame.
+
+Each kind is one :class:`Sketch` subclass:
+
+* the constructor resolves the build parameters into ``.p``
+  (``Sketch.make(kind, **p)``);
+* ``init`` / ``update`` / ``finalize`` fold one partition's elements
+  into a serialized phase-1 partial;
+* ``decode`` reads a serialized state, ``merge`` folds decoded states
+  with the kind's merge law and serializes the result;
+* ``info`` reports a decoded state's parameters, fill and accuracy
+  (``query.sketch_info``).
+
+A state names its kind by its leading bytes: ``GSK1`` plus a kind byte
+(``state.py``), or the ``GSKQ``/``GSKL`` frames of t-digest and KLL.
+:func:`lookup` maps any state to its entry, so the build engine
+(``agg.py``), merges, checkpoints and queries hold no per-kind code.
+Adding a sketch kind is adding one subclass to :data:`REGISTRY`.
+"""
+
+from __future__ import annotations
+
+import math
+from collections import Counter
+from functools import reduce
+
+from gostatix_spark import params
+from gostatix_spark.kernels import bloom, cms, cuckoo, hll, kll, tdigest, topk
+from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
+                                  TopKState, frame_kind)
+
+
+def _count(vals, weights) -> int:
+    """Elements one update folds: ``weights`` counts each value that
+    many times (a distinct-first fold's counts)."""
+    return len(vals) if weights is None else int(weights.sum())
+
+
+class Sketch:
+    """One sketch kind; an instance is bound to its resolved parameters
+    ``p``. ``element`` (the element encoding) is set by the build before
+    the first ``init``."""
+
+    kind = ""
+    algo = "metro"
+    element = "string"
+    # folds raw values (Top-K counts, quantile sketches): nothing is hashed
+    needs_elements = False
+    # idempotent (max, OR) or linear in counts (add): a batch may fold as
+    # its distinct values with their counts, to the same bytes
+    counts_fold = False
+
+    @staticmethod
+    def make(kind: str, **p) -> "Sketch":
+        if kind not in REGISTRY:
+            raise ValueError(f"unknown sketch kind {kind!r}")
+        return REGISTRY[kind](**p)
+
+    def folds_distinct(self) -> bool:
+        """Whether a batch may fold as distinct values with counts: only
+        for elements hashed by value alone."""
+        return self.counts_fold and self.element in ("tokens", "int32")
+
+    @staticmethod
+    def merge(states) -> bytes:
+        raise TypeError(f"cannot merge {type(states[0]).__name__}")
+
+    @classmethod
+    def quantile(cls, st, qs):
+        raise TypeError(f"{cls.kind} states have no quantiles")
+
+
+class HLL(Sketch):
+    kind = "hll"
+    counts_fold = True
+    decode = staticmethod(HLLState.from_bytes)
+
+    def __init__(self, m=16384, **_):
+        if not params.is_power_of_two(m):
+            raise ValueError("hll m must be a power of two")
+        self.p = {"m": m}
+
+    def init(self):
+        return [hll.new_state(self.p["m"]), 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        hll.update_batch(acc[0], h1)  # max: repeats change nothing
+        acc[1] += _count(h1, weights)
+
+    def finalize(self, acc):
+        # phase-1 partials use the sparse frame (state.py v2); merges
+        # decode it transparently and re-emit dense
+        return HLLState(self.p["m"], acc[0], acc[1]).to_bytes(sparse=True), \
+            acc[1]
+
+    @staticmethod
+    def merge(states):
+        reg = reduce(hll.merge, (s.registers for s in states))
+        return HLLState(states[0].m, reg,
+                        sum(s.n_items for s in states)).to_bytes()
+
+    @staticmethod
+    def info(st):
+        return ({"m": st.m, "n": st.n_items},
+                float((st.registers > 0).mean()), 1.04 / math.sqrt(st.m))
+
+
+class CMS(Sketch):
+    kind = "cms"
+    counts_fold = True
+    decode = staticmethod(CMSState.from_bytes)
+
+    def __init__(self, **p):
+        if "d" in p:
+            d, w = p["d"], p["w"]
+        elif "fail_prob" in p:
+            d, w = params.cms_dims_from_error_bounds(p.get("eps", 0.001),
+                                                     p["fail_prob"])
+        else:
+            d, w = params.cms_dims_from_estimates(p.get("eps", 0.001),
+                                                  p.get("delta", 0.999))
+        self.p = {"d": d, "w": w}
+
+    def init(self):
+        return [cms.new_state(self.p["d"], self.p["w"]), 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        # weights = the reference's Update(data, count)
+        # (count_min_sketch.go:60) vectorized; only cms is linear in
+        # counts, so sketch_agg gates weight_col to this kind
+        acc[1] += cms.update_batch(acc[0], h1, h2, weights)
+
+    def finalize(self, acc):
+        p = self.p
+        return CMSState(p["d"], p["w"], acc[0], acc[1]).to_bytes(), acc[1]
+
+    @staticmethod
+    def merge(states):
+        mat = reduce(cms.merge, (s.matrix for s in states))
+        return CMSState(states[0].d, states[0].w, mat,
+                        sum(s.all_sum for s in states)).to_bytes()
+
+    @staticmethod
+    def info(st):
+        return ({"d": st.d, "w": st.w, "all_sum": st.all_sum},
+                float((st.matrix > 0).mean()), math.e / st.w)
+
+
+class Bloom(Sketch):
+    kind = "bloom"
+    counts_fold = True
+    decode = staticmethod(BloomState.from_bytes)
+
+    def __init__(self, **p):
+        if "m" in p:
+            self.p = {"m": p["m"], "k": p["k"]}
+        else:
+            m = params.bloom_filter_size(p["n"], p.get("eps", 0.01))
+            self.p = {"m": m, "k": params.bloom_num_hashes(m, p["n"])}
+
+    def init(self):
+        return [bloom.new_state(self.p["m"]), 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        bloom.insert_batch(acc[0], h1, h2, self.p["k"], self.p["m"])  # OR
+        acc[1] += _count(h1, weights)
+
+    def finalize(self, acc):
+        p = self.p
+        return BloomState(p["m"], p["k"], acc[0], acc[1]).to_bytes(), acc[1]
+
+    @staticmethod
+    def merge(states):
+        words = reduce(bloom.merge, (s.words for s in states))
+        return BloomState(states[0].m, states[0].k, words,
+                          sum(s.n_items for s in states)).to_bytes()
+
+    @staticmethod
+    def info(st):
+        return ({"m": st.m, "k": st.k, "n": st.n_items},
+                bloom.positive_rate(st.words, st.k, st.m), float("nan"))
+
+
+class TopK(Sketch):
+    kind = "topk"
+    counts_fold = True
+    needs_elements = True
+    decode = staticmethod(TopKState.from_bytes)
+
+    def __init__(self, k=10, eps=0.0001, fail_prob=0.01, slack=4,
+                 max_distinct=None, **_):
+        d, w = params.cms_dims_from_error_bounds(eps, fail_prob)
+        self.p = {"k": k, "d": d, "w": w, "slack": slack, "eps": eps,
+                  "fail_prob": fail_prob, "max_distinct": max_distinct}
+
+    def init(self):
+        p = self.p
+        if self.element in ("tokens", "int32", "int64"):
+            inner = topk.IntCounts()
+        elif self.element in ("string", "binary"):
+            inner = topk.BytesCounts()
+        else:
+            return [Counter(), 0]  # token_array rows (vocab-sized)
+        if p["max_distinct"]:
+            # near-unique columns: bound phase-1 memory to O(cap) per
+            # partition — tail counts spill into the CMS
+            inner = topk.CappedCounts(inner, p["max_distinct"],
+                                      self.element, p["d"], p["w"])
+        return [inner, 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        if weights is None:
+            acc[0].update(elems)  # IntCounts (vectorized) or Counter
+        else:
+            acc[0].update_counts(elems, weights)  # IntCounts / Capped
+        acc[1] += _count(elems, weights)
+
+    def finalize(self, acc):
+        p, counts = self.p, acc[0]
+        capped = False
+        if isinstance(counts, topk.CappedCounts):
+            mat, total, cand = counts.finalize(p["k"], p["slack"], p["d"],
+                                               p["w"])
+            # only a partial that actually compacted carries inexact
+            # candidate counts; a cap that never fired leaves the
+            # exact=True read path valid
+            capped = counts.compactions > 0
+        elif isinstance(counts, topk.IntCounts):
+            mat, total, cand = topk.partial_from_int_counts(
+                counts, self.element, p["k"], p["slack"], p["d"], p["w"])
+        else:
+            mat, total, cand = topk.partial_from_counter(
+                counts, p["k"], p["slack"], p["d"], p["w"])
+        st = TopKState(p["k"], p["eps"], p["fail_prob"],
+                       CMSState(p["d"], p["w"], mat, total), cand,
+                       capped=capped)
+        return st.to_bytes(), acc[1]
+
+    @staticmethod
+    def merge(states):
+        head = states[0]
+        mat = reduce(cms.merge, (s.cms.matrix for s in states))
+        tot = sum(s.cms.all_sum for s in states)
+        cand = reduce(topk.merge_candidates, (s.candidates for s in states))
+        return TopKState(head.k, head.error_rate, head.accuracy,
+                         CMSState(head.cms.d, head.cms.w, mat, tot), cand,
+                         capped=any(s.capped for s in states)).to_bytes()
+
+    @staticmethod
+    def info(st):
+        return ({"k": st.k, "candidates": len(st.candidates)},
+                float(st.cms.all_sum), st.error_rate)
+
+
+class TDigest(Sketch):
+    """State: ``(means, weights, n_items, delta)`` in a ``GSKQ`` frame."""
+
+    kind = "tdigest"
+    needs_elements = True
+    decode = staticmethod(tdigest.from_bytes)
+
+    def __init__(self, delta=200.0, **_):
+        self.p = {"delta": delta}
+
+    def init(self):
+        return [*tdigest.new_state(), 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        acc[0], acc[1] = tdigest.update_batch(acc[0], acc[1], elems,
+                                              self.p["delta"])
+        acc[2] += len(elems)
+
+    def finalize(self, acc):
+        return tdigest.to_bytes(acc[0], acc[1], acc[2], self.p["delta"]), \
+            acc[2]
+
+    @staticmethod
+    def merge(states):
+        delta = states[0][3]
+        m, w = reduce(lambda a, b: tdigest.merge(a, b, delta),
+                      (st[:2] for st in states))
+        return tdigest.to_bytes(m, w, sum(st[2] for st in states), delta)
+
+    @staticmethod
+    def info(st):
+        m, _, n, delta = st
+        return {"delta": delta, "n": int(n)}, float(len(m)), 1.0 / delta
+
+    @classmethod
+    def quantile(cls, st, qs):
+        return tdigest.quantile(st[0], st[1], qs)
+
+
+class KLL(Sketch):
+    """State: a :class:`kernels.kll.KLL` in a ``GSKL`` frame."""
+
+    kind = "kll"
+    needs_elements = True
+    decode = staticmethod(kll.KLL.from_bytes)
+
+    def __init__(self, k=200, seed=42, **_):
+        self.p = {"k": k, "seed": seed}
+
+    def init(self):
+        return [kll.KLL(self.p["k"], self.p["seed"]), 0]
+
+    def update(self, acc, h1, h2, elems, weights):
+        acc[0].update_batch(elems)
+        acc[1] += len(elems)
+
+    def finalize(self, acc):
+        return acc[0].to_bytes(), acc[1]
+
+    @staticmethod
+    def merge(states):
+        return reduce(kll.KLL.merge, states).to_bytes()
+
+    @staticmethod
+    def info(st):
+        return ({"k": st.k, "n": int(st.n)},
+                float(sum(len(lv) for lv in st.levels)), 1.0 / st.k)
+
+    @classmethod
+    def quantile(cls, st, qs):
+        return st.quantile(qs)
+
+
+class Cuckoo(Sketch):
+    """Decode and info only: the kick loop is order-dependent, so a
+    cuckoo filter is built per shard (``agg.cuckoo_build``), never
+    merged."""
+
+    kind = "cuckoo"
+    decode = staticmethod(CuckooState.from_bytes)
+
+    def __init__(self, **_):
+        raise ValueError("cuckoo filters are not mergeable: build them with"
+                         " cuckoo_build")
+
+    @staticmethod
+    def info(st):
+        f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
+                                buckets=st.buckets, length=st.length)
+        return ({"size": st.size, "bucket_size": st.bucket_size,
+                 "fp_len": st.fp_len, "length": st.length},
+                st.length / (st.size * st.bucket_size), f.positive_rate())
+
+
+REGISTRY: dict[str, type[Sketch]] = {
+    s.kind: s for s in (HLL, CMS, Bloom, TopK, TDigest, KLL, Cuckoo)}
+# kinds framed outside GSK1, by their 4-byte magic
+_OWN_FRAMES = {tdigest.MAGIC: TDigest, kll.KLL.MAGIC: KLL}
+
+
+def lookup(blob) -> type[Sketch]:
+    """The registry entry of a serialized state, from its leading bytes;
+    ``ValueError`` when they name no kind."""
+    own = _OWN_FRAMES.get(bytes(blob[:4]))
+    return own if own is not None else REGISTRY[frame_kind(blob)]
+
+
+def decode(blob):
+    return lookup(blob).decode(bytes(blob))
+
+
+def merge(blobs) -> bytes:
+    """Fold serialized states of one kind with its merge law, in order.
+    Used by every phase-2 merge and by checkpoint resume."""
+    blobs = [bytes(b) for b in blobs]
+    sk = lookup(blobs[0])
+    return sk.merge([sk.decode(b) for b in blobs])

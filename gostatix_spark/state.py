@@ -38,22 +38,33 @@ def _frame(kind: str, header: bytes, payload: bytes) -> bytes:
     return MAGIC + bytes([_KIND_IDS[kind]]) + struct.pack("<I", len(header)) + header + payload
 
 
-def _unframe(buf: bytes) -> tuple[str, bytes, bytes]:
-    if buf[:4] != MAGIC:
-        raise ValueError("bad sketch frame magic")
-    kind = _KINDS[buf[4]]
-    hlen = struct.unpack_from("<I", buf, 5)[0]
-    return kind, buf[9 : 9 + hlen], buf[9 + hlen :]
-
-
-def kind_of(buf: bytes) -> str:
+def frame_kind(buf: bytes) -> str:
+    """The kind a ``GSK1`` frame names; ``ValueError`` for anything else."""
+    if bytes(buf[:4]) != MAGIC or len(buf) < 9:
+        raise ValueError(f"not a GSK1 sketch frame (starts {bytes(buf[:4])!r})")
+    if buf[4] not in _KINDS:
+        raise ValueError(f"unknown sketch kind byte {buf[4]} in GSK1 frame")
     return _KINDS[buf[4]]
 
 
+def _unframe(buf: bytes, expected: str) -> tuple[bytes, bytes]:
+    """(header, payload) of a frame of kind ``expected``."""
+    found = frame_kind(buf)
+    if found != expected:
+        raise ValueError(f"expected a {expected} frame, found {found}")
+    hlen = struct.unpack_from("<I", buf, 5)[0]
+    return buf[9 : 9 + hlen], buf[9 + hlen :]
+
+
+def kind_of(buf: bytes) -> str:
+    from gostatix_spark.sketches import lookup
+    return lookup(buf).kind
+
+
 def sketch_from_bytes(buf: bytes):
-    kind = kind_of(buf)
-    return {"bloom": BloomState, "hll": HLLState, "cms": CMSState,
-            "topk": TopKState, "cuckoo": CuckooState}[kind].from_bytes(buf)
+    """Decode any serialized state through the sketch registry."""
+    from gostatix_spark.sketches import decode
+    return decode(buf)
 
 
 def bitset_marshal_json(words: np.ndarray, nbits: int) -> str:
@@ -85,8 +96,7 @@ class BloomState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "BloomState":
-        kind, header, payload = _unframe(buf)
-        assert kind == "bloom"
+        header, payload = _unframe(buf, "bloom")
         _, m, k, n = struct.unpack("<BQQQ", header)
         return cls(m, k, np.frombuffer(payload, dtype=np.uint64).copy(), n)
 
@@ -152,8 +162,7 @@ class HLLState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "HLLState":
-        kind, header, payload = _unframe(buf)
-        assert kind == "hll"
+        header, payload = _unframe(buf, "hll")
         ver, m, n = struct.unpack("<BQQ", header)
         if ver == 2:
             cnt = len(payload) // 5
@@ -211,8 +220,7 @@ class CMSState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "CMSState":
-        kind, header, payload = _unframe(buf)
-        assert kind == "cms"
+        header, payload = _unframe(buf, "cms")
         _, d, w, s = struct.unpack("<BQQQ", header)
         return cls(d, w, np.frombuffer(payload, dtype=np.uint64).reshape(d, w).copy(), s)
 
@@ -277,8 +285,7 @@ class TopKState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "TopKState":
-        kind, header, payload = _unframe(buf)
-        assert kind == "topk"
+        header, payload = _unframe(buf, "topk")
         version = header[0]
         if version >= 2:
             _, k, er, acc, cms_len, n_cand, capped_b = struct.unpack(
@@ -379,8 +386,7 @@ class CuckooState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "CuckooState":
-        kind, header, payload = _unframe(buf)
-        assert kind == "cuckoo"
+        header, payload = _unframe(buf, "cuckoo")
         _, size, bs, fpl, r, ln = struct.unpack("<BQQQQQ", header)
         return cls(size, bs, fpl, r, ln,
                    np.frombuffer(payload, dtype=np.uint64).reshape(size, bs).copy())

@@ -19,7 +19,7 @@ Execution shape (all distributed — nothing is collected to the driver):
   map-side combine, skew-immune);
 * the state table is KEY-BUCKET-PARTITIONED (``bucket =
   pmod(xxhash64(key), n_state_buckets)``); only the buckets touched by
-  the micro-batch are read, merged (``groupBy.applyInPandas``) and
+  the micro-batch are read, merged (``groupBy.applyInArrow``) and
   rewritten. Untouched buckets are carried forward by MANIFEST
   reference — no data is copied or rewritten for them, so steady-state
   commit cost is O(touched buckets), not O(total state) (the round-2
@@ -56,8 +56,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gostatix_spark.agg import _Spec, _build_partials, _merge_partials, \
-    infer_element
+from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
 
 __all__ = ["incremental_sketch_sink", "sketch_stream_query",
            "load_sketch_state", "PointerStore", "LocalPointerStore",
@@ -349,12 +348,11 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
                 " the query at a new state_path.")
         if not batch_df.head(1):
             return  # empty micro-batch: state unchanged
-        el = infer_element(batch_df, value_col, element)
-        spec = _Spec.make(kind, **sketch_params)
+        job = _sketch_job(batch_df, kind, value_col, key_col, element,
+                          sketch_params)
         key_cols = [key_col] if key_col else []
         cols = key_cols + ["state", "n_items"]
-        partials = _build_partials(batch_df, spec, value_col, key_col, el) \
-            .select(*cols)
+        partials = _build_partials(batch_df, [job]).select(*cols)
         kb = _bucket_col(key_col, n_state_buckets)
         if key_col:
             # the touched-bucket probe and the merge both consume the
@@ -375,8 +373,7 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
             # partition-pruned state read: ONLY the touched buckets
             current = spark.read.parquet(*cur_paths).select(*cols)
             inp = inp.unionByName(current)
-        merged = _merge_partials(inp, key_col, None, merge_buckets) \
-            .select(*key_cols, "state", "n_items", "n_partials") \
+        merged = _merge_partials(inp, key_cols, None, merge_buckets) \
             .withColumn("kb", kb if key_col else F.lit(0))
         new_version = (version or 0) + 1
         vdir = os.path.join(state_path, f"v={new_version}")

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gostatix_spark import params
+from gostatix_spark import params, sketches
 from gostatix_spark.agg import cuckoo_build, sketch_agg
 from gostatix_spark.corpus import corpus_df
 from gostatix_spark.kernels import hll as hll_kernel
@@ -405,6 +405,122 @@ class TestMultiSketchAgg:
             assert sketch_from_bytes(got[("bloom_arr", r["source"])]).equals(
                 sketch_from_bytes(bytes(r["state"])))
 
+    def test_keyed_hll_fine_keys_matches_sketch_agg(self, spark):
+        """A keyed HLL over fine-grained int64 keys takes the KeyedHLL
+        path in both builds: multi_sketch_agg's states equal
+        sketch_agg's per key byte for byte, and null keys are dropped
+        by both. Keys above 2**53 beside nulls stay distinct."""
+        from gostatix_spark.agg import multi_sketch_agg
+        df = spark.range(0, 30000).select(
+            F.when(F.col("id") % 17 == 0, None)
+            .otherwise(F.col("id") * 7 % 2500 + 2**60).alias("k"),
+            (F.col("id") * 7919 % 100003).alias("v")).repartition(4)
+        got = {r["key"]: r for r in multi_sketch_agg(df, [
+            {"name": "h", "kind": "hll", "value_col": "v", "key_col": "k",
+             "params": {"m": 256}}]).collect()}
+        want = {str(r["k"]): r for r in sketch_agg(
+            df, "hll", "v", key_col="k", m=256, merge_buckets=4).collect()}
+        assert None not in got and len(got) == 2500
+        assert set(got) == set(want)
+        for k, r in want.items():
+            assert bytes(got[k]["state"]) == bytes(r["state"]), k
+            assert (got[k]["n_items"], got[k]["n_partials"]) == (
+                r["n_items"], r["n_partials"]), k
+
+    def test_fold_path_per_batch(self):
+        """The batch picks the fold: a dense token grid takes the
+        distinct-first fold, wide int64 values take KeyedHLL for a keyed
+        HLL, and the per-element fold otherwise; the states agree."""
+        import pyarrow as pa
+        from gostatix_spark.agg import _Batch, _fold_batch, _Job, _Spec
+        from gostatix_spark.kernels import hll
+        batch = pa.record_batch({
+            "k": pa.array(["a", "b", None, "a"]),
+            "tok": pa.array([[1, 2], [2], [3], [1, 5]],
+                            pa.list_(pa.int32())),
+            "v": pa.array([7, 2**40, 9, 7], pa.int64())})
+
+        def fold(kind, vcol, element, keyed):
+            spec = _Spec.make(kind, m=64)
+            spec.element = element
+            accs, rows = {}, {}
+            kh = hll.KeyedHLL(64) if keyed else None
+            _fold_batch(_Batch(batch), 0, _Job("j", spec, vcol, "k"), accs,
+                        rows, kh)
+            return accs, rows, kh
+
+        accs, rows, kh = fold("hll", "tok", "tokens", True)
+        assert set(accs) == {(0, "a"), (0, "b")} and not kh.slots
+        assert rows == {(0, "a"): 2, (0, "b"): 1}
+        assert accs[(0, "a")][1] == 4  # n_items counts repeats
+        accs, rows, kh = fold("hll", "v", "int64", True)
+        assert not accs and list(kh.slots) == ["a", "b"]
+        assert kh.n_items == {"a": 2, "b": 1}
+        per_elem, _, _ = fold("hll", "v", "int64", False)
+        for key, regs, n in kh.states():
+            assert np.array_equal(per_elem[(0, key)][0], regs)
+            assert per_elem[(0, key)][1] == n
+
+
+class TestSketchRegistry:
+    """Every registered kind: a phase-1 partial decodes and re-encodes
+    stably, its merge is bytewise associative, and sketch_info names
+    its kind. t-digest and KLL stay below their compaction thresholds
+    here, where their merge is exact; past them only rank error is
+    gated (tests/test_quantiles.py)."""
+
+    ELEMENT = {"topk": "int64", "tdigest": "float64", "kll": "float64"}
+    PARAMS = {"hll": {"m": 64}, "cms": {"d": 2, "w": 16},
+              "bloom": {"m": 256, "k": 3}, "topk": {"k": 3}}
+
+    def _partial(self, kind, vals):
+        from gostatix_spark import hashing
+        from gostatix_spark.agg import _Spec
+        spec = _Spec.make(kind, **self.PARAMS.get(kind, {}))
+        spec.element = self.ELEMENT.get(kind, "int32")
+        acc = spec.init()
+        h1 = h2 = None
+        if not spec.needs_elements:
+            h1, h2 = hashing.hash_tokens(vals, "metro")
+        spec.update(acc, h1, h2, vals.astype(
+            np.float64 if kind in ("tdigest", "kll") else np.int64), None)
+        blob, n_items = spec.finalize(acc)
+        assert n_items == len(vals)
+        return blob
+
+    @staticmethod
+    def _cuckoo_blob():
+        from gostatix_spark.kernels.cuckoo import CuckooFilter
+        from gostatix_spark.state import CuckooState
+        f = CuckooFilter(size=16, bucket_size=2, fp_len=2, seed=5)
+        for w in (b"foo", b"bar"):
+            f.insert(w)
+        return CuckooState(16, 2, 2, 500, f.length, f.buckets).to_bytes()
+
+    @pytest.mark.parametrize("kind", sorted(sketches.REGISTRY))
+    def test_kind_roundtrip_merge_info(self, spark, kind):
+        from gostatix_spark.query import sketch_info
+        if kind == "cuckoo":
+            blobs = [self._cuckoo_blob()]
+            with pytest.raises(TypeError):
+                sketches.merge(blobs * 2)
+        else:
+            rng = np.random.default_rng(len(kind))
+            # 45 values in all keep t-digest's centroids apart
+            blobs = [self._partial(kind, rng.integers(0, 500, 15))
+                     for _ in range(3)]
+            a, b, c = blobs
+            merge = sketches.merge
+            assert merge([merge([a, b]), c]) == merge([a, merge([b, c])])
+            once = merge([a])
+            assert merge([once]) == once
+        for blob in blobs:
+            assert sketches.lookup(blob).kind == kind
+            assert sketches.decode(blob) is not None
+        row = sketch_info(spark.createDataFrame(
+            [(blobs[0],)], "state binary")).collect()[0]
+        assert row["kind"] == kind
+
 
 class TestElementKinds:
     def test_token_array_element_dedup_semantics(self, spark, corpus):
@@ -730,6 +846,7 @@ class TestDistinctFoldBytewise:
         ("cms", "tokens", "src", "tokens"),
         ("topk", "tokens", "src", "tokens"),
         ("hll", "tokens", None, "tokens"),
+        ("hll", "tokens", "src", "tokens"),
         ("bloom", "wide32", "src", "int32"),
     ])
     def test_sketch_agg_partials_and_states(self, spark, data, small_batches,

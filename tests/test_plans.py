@@ -29,7 +29,7 @@ def test_sketch_agg_single_exchange(spark):
     states = sketch_agg(events, "hll", "user_id", key_col="event_type", m=1024)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
     # column pruning: the scan reads only the two referenced columns
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
@@ -77,7 +77,7 @@ def test_bloom_sharded_single_exchange(spark):
                                  n_shards=8)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
         == {"doc_id"}

@@ -174,3 +174,33 @@ def test_cuckoo_roundtrip():
         assert s2.length == 3
         f2 = CuckooFilter(16, 2, 2, buckets=s2.buckets, length=s2.length)
         assert f2.lookup(b"foo") and f2.lookup(b"bar") and f2.lookup(b"baz")
+
+
+def test_frame_kind_validation():
+    """Decoding validates the frame's kind: an unknown kind byte or a
+    frame of another kind raises ValueError naming what was found,
+    also under ``python -O`` (no asserts involved)."""
+    import os
+    import subprocess
+    import sys
+
+    import pytest
+
+    cms_blob = state.CMSState(2, 8, cms.new_state(2, 8), 0).to_bytes()
+    with pytest.raises(ValueError, match="expected a hll frame, found cms"):
+        state.HLLState.from_bytes(cms_blob)
+    unknown = cms_blob[:4] + bytes([9]) + cms_blob[5:]
+    for decode in (state.sketch_from_bytes, state.kind_of,
+                   state.CMSState.from_bytes):
+        with pytest.raises(ValueError, match="unknown sketch kind byte 9"):
+            decode(unknown)
+    with pytest.raises(ValueError, match="not a GSK1 sketch frame"):
+        state.sketch_from_bytes(b"XXXX" + cms_blob[4:])
+    code = ("from gostatix_spark import state; from gostatix_spark.kernels"
+            " import cms\nb = state.CMSState(2, 8, cms.new_state(2, 8),"
+            " 0).to_bytes()\ntry:\n    state.HLLState.from_bytes(b)\n"
+            "except ValueError as e:\n    print(e)")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-O", "-c", code], check=True,
+                         capture_output=True, text=True, cwd=repo).stdout
+    assert out.strip() == "expected a hll frame, found cms"

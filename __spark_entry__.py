@@ -535,7 +535,7 @@ def q_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   F.date_format(F.date_trunc("hour", "ts"),
                                                 "yyyy-MM-dd HH")))
     states = sketch_agg(events, "hll", "user_id", key_col="etype_hour",
-                        m=4096, merge_buckets=32)
+                        m=4096)
     est = hll_estimate(states).select("etype_hour", "est_distinct")
     exact = events.groupBy("etype_hour").agg(
         F.countDistinct("user_id").alias("exact_distinct"))
@@ -581,7 +581,7 @@ def q_hll_window_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisting them was measured SLOWER, InMemoryRelation's default
     # stats turn the small-side joins into sort-merge.)
     states = sketch_agg(events, "hll", "user_id", key_col="etype_hour",
-                        m=m, merge_buckets=32).persist()
+                        m=m).persist()
     wins = events.select("event_type", "h").distinct()
     key = lambda side: F.concat_ws(  # noqa: E731
         "|", F.col(f"{side}.event_type"),

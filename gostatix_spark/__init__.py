@@ -4,7 +4,8 @@ Re-expresses the five probabilistic structures of kwertop/gostatix
 (Bloom filter, Cuckoo filter, HyperLogLog, Count-Min Sketch, Top-K) as
 mergeable two-phase Spark aggregations: vectorized Arrow/numpy kernels
 build per-partition partial states (``mapInArrow``), which are
-merged via ``groupBy().applyInArrow`` into one sketch per key. Each
+shuffled by key, sorted, and folded into one sketch per key by one
+``mapInArrow`` call per shuffle partition. Each
 sketch kind is one entry in the registry in ``sketches.py``.
 No per-row Python anywhere in the hot path.
 

@@ -12,14 +12,17 @@ every per-kind step is a lookup into the registry in ``sketches.py``.
   the row/key skew of the input, the shuffle that follows carries only
   ``O(num_partitions × num_keys)`` sketch-sized rows — skew-immune by
   construction.
-* **Phase 2 (merge)** — ``groupBy(...).applyInArrow``: one function
-  sorts the rows it is handed by key and folds each key's run of
-  partial states with the sketch's merge law (max for HLL, add for
-  CMS, OR for Bloom; proven associative/commutative in tests). Only the
-  grouping changes: per key, per hash bucket of keys
-  (``merge_buckets``), or first per (key, ``partition_id %
-  tree_fanout``) for very wide fan-in — merge associativity makes the
-  tree shape irrelevant to the result.
+* **Phase 2 (merge)** — a sorted stream: the partials are hash
+  partitioned by key, sorted within each shuffle partition by (key,
+  ``partition_id``), and one ``mapInArrow`` call per shuffle partition
+  folds each run of equal keys with the sketch's merge law (max for
+  HLL, add for CMS, OR for Bloom; proven associative/commutative in
+  tests). A run's merged state carries across Arrow batches until the
+  key changes, so a call costs one batch plus one open state whatever
+  its key count, and order-sensitive merges (t-digest, KLL, Top-K)
+  always fold in partition order. For very wide fan-in, ``tree_fanout``
+  first merges per (key, ``partition_id % tree_fanout``) — merge
+  associativity makes the tree shape irrelevant to the result.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`: phase 1 only
@@ -38,6 +41,7 @@ first, so hashing and folding cost O(distinct), not O(elements).
 
 from __future__ import annotations
 
+import warnings
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -434,12 +438,13 @@ def _to_arrow_schema(st: StructType) -> pa.Schema:
 
 
 # ---------------------------------------------------------------------------
-# phase 2: one applyInArrow merge
+# phase 2: one sorted-stream merge
 # ---------------------------------------------------------------------------
 
 
-def _run_starts(t: pa.Table, cols: list[str]) -> np.ndarray:
-    """First row of each run of equal ``cols`` values (null equals null)."""
+def _run_starts(t: pa.RecordBatch, cols: list[str]) -> np.ndarray:
+    """Whether each row starts a new run of equal ``cols`` values (null
+    equals null); row 0 always does."""
     new = np.zeros(t.num_rows, dtype=bool)
     new[0] = True
     for c in cols:
@@ -447,58 +452,116 @@ def _run_starts(t: pa.Table, cols: list[str]) -> np.ndarray:
         diff = pc.or_kleene(pc.not_equal(a, b),
                             pc.xor(pc.is_null(a), pc.is_null(b)))
         new[1:] |= diff.fill_null(False).to_numpy(zero_copy_only=False)
-    return np.flatnonzero(new)
+    return new
 
 
 def _merge_runs(partials: DataFrame, run_cols: list[str],
-                group_cols: list[str]) -> DataFrame:
-    """One merged row per run of equal ``run_cols`` within each group of
-    ``groupBy(group_cols)``: the group's rows are stable-sorted, so each
-    run keeps arrival order, and folded through the sketch registry.
-    ``n_items`` adds up; ``n_partials`` adds up the incoming
-    ``n_partials``, or counts rows when there are none."""
+                group_cols: list[str], dedup: bool = False) -> DataFrame:
+    """One merged row per run of equal ``run_cols``. The rows are hash
+    partitioned by ``group_cols``, sorted within each shuffle partition
+    by ``run_cols`` and then by ``partition_id`` (or ``_salt``) where
+    present, and streamed through one ``mapInArrow`` call per shuffle
+    partition: each run folds through the sketch registry in that
+    order, its open state carrying across Arrow batches until the key
+    changes. ``dedup`` drops a row whose run and ``partition_id`` equal
+    the previous row's. ``n_items`` adds up; ``n_partials`` adds up the
+    incoming ``n_partials``, or counts rows when there are none."""
     schema = StructType([partials.schema[c] for c in run_cols] + [
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
         StructField("n_partials", LongType(), False)])
     arrow_schema = _to_arrow_schema(schema)
     fan_in = "n_partials" if "n_partials" in partials.columns else None
+    # fold order within a run: phase-1 partition, else tree-level salt
+    order = [c for c in ("partition_id", "_salt")
+             if c in partials.columns and c not in run_cols][:1]
 
-    def merge(t: pa.Table) -> pa.Table:
-        if run_cols:
-            t = t.take(pc.sort_indices(t, [(c, "ascending") for c in run_cols]))
-        starts = _run_starts(t, run_cols)
-        ends = np.append(starts[1:], t.num_rows)
-        blobs = t.column("state").to_pylist()
-        states = [sketches.merge(blobs[s:e]) for s, e in zip(starts, ends)]
-        n_items = np.add.reduceat(t.column("n_items").to_numpy(), starts)
-        n_partials = (np.add.reduceat(t.column(fan_in).to_numpy(), starts)
-                      if fan_in else ends - starts)
-        return pa.Table.from_arrays(
-            [t.column(c).take(starts) for c in run_cols]
-            + [pa.array(states, pa.binary()), pa.array(n_items, pa.int64()),
-               pa.array(n_partials, pa.int64())], schema=arrow_schema)
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        run = None  # open run: [key, sketch entry, state, n_items, n_partials]
+        last_pid = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            new = _run_starts(batch, run_cols)
+            new[0] = run is None or run[0] != tuple(
+                batch.column(c)[0].as_py() for c in run_cols)
+            if dedup:
+                pid = batch.column("partition_id").to_numpy()
+                dup = ~new
+                dup[0] &= pid[0] == last_pid
+                dup[1:] &= pid[1:] == pid[:-1]
+                last_pid = pid[-1]
+                batch, new = batch.filter(pa.array(~dup)), new[~dup]
+                if batch.num_rows == 0:
+                    continue
+            # segments: row 0 and each run start open one
+            ends = np.append(np.flatnonzero(new[1:]) + 1, batch.num_rows)
+            starts = np.insert(ends[:-1], 0, 0)
+            keys = [batch.column(c).take(starts).to_pylist()
+                    for c in run_cols]
+            blobs = batch.column("state").to_pylist()
+            n_items = np.add.reduceat(batch.column("n_items").to_numpy(),
+                                      starts)
+            n_in = (np.add.reduceat(batch.column(fan_in).to_numpy(), starts)
+                    if fan_in else ends - starts)
+            out = []
+            for g, (s, e) in enumerate(zip(starts, ends)):
+                if new[s]:
+                    if run is not None:
+                        out.append(run)
+                    run = [tuple(k[g] for k in keys),
+                           sketches.lookup(blobs[s]), None, 0, 0]
+                sk = run[1]
+                states = [sk.decode(b) for b in blobs[s:e]]
+                run[2] = sk.merge(states if run[2] is None
+                                  else [run[2]] + states)
+                run[3] += int(n_items[g])
+                run[4] += int(n_in[g])
+            if out:
+                yield _runs_batch(out, arrow_schema)
+        if run is not None:
+            yield _runs_batch([run], arrow_schema)
 
-    return partials.groupBy(*group_cols).applyInArrow(merge, schema)
+    parts = (partials.repartition(*group_cols) if group_cols
+             else partials.repartition(1))
+    if run_cols + order:
+        parts = parts.sortWithinPartitions(*run_cols, *order)
+    return parts.mapInArrow(fold, schema)
+
+
+def _runs_batch(runs: list, schema: pa.Schema) -> pa.RecordBatch:
+    """Closed runs ``[key, sketch entry, state, n_items, n_partials]``
+    as one output batch."""
+    n_keys = len(schema) - 3
+    cols = [[r[0][j] for r in runs] for j in range(n_keys)]
+    cols += [[r[1].encode(r[2]) for r in runs], [r[3] for r in runs],
+             [r[4] for r in runs]]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
 
 
 def _merge_partials(partials: DataFrame, key_cols: list[str],
                     tree_fanout: int | None = None,
-                    merge_buckets: int | None = None) -> DataFrame:
+                    dedup: bool = False) -> DataFrame:
     """Phase 2: one state per key. ``tree_fanout`` first merges within
-    (key, ``partition_id % tree_fanout``); ``merge_buckets`` hands each
-    call the keys of one hash bucket rather than one key, for many
-    fine-grained keys where a call per key costs more than its merge."""
+    (key, ``partition_id % tree_fanout``). ``dedup`` keeps one partial
+    per (key, ``partition_id``), for checkpoints that hold a partition
+    twice."""
     if tree_fanout:
         salted = partials.withColumn(
             "_salt", (F.col("partition_id") % tree_fanout).cast("int"))
         partials = _merge_runs(salted, key_cols + ["_salt"],
-                               key_cols + ["_salt"])
-    if key_cols and merge_buckets:
-        bucketed = partials.withColumn(
-            "_kb", F.pmod(F.hash(*key_cols), F.lit(merge_buckets)))
-        return _merge_runs(bucketed, key_cols, ["_kb"])
-    return _merge_runs(partials, key_cols, key_cols)
+                               key_cols + ["_salt"], dedup)
+        dedup = False
+    return _merge_runs(partials, key_cols, key_cols, dedup)
+
+
+def _ignore_merge_buckets(merge_buckets: int | None) -> None:
+    if merge_buckets is not None:
+        warnings.warn("merge_buckets is ignored: phase 2 merges every key"
+                      " of a shuffle partition in one call",
+                      DeprecationWarning, stacklevel=3)
 
 
 # ---------------------------------------------------------------------------
@@ -538,7 +601,11 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     rows bit-for-bit — the one-scan path when an exact GROUP BY over
     the same input is needed anyway. Only ``cms`` is count-linear, so
     other kinds reject ``weight_col``.
+
+    ``merge_buckets`` is accepted for compatibility and ignored: phase 2
+    already merges every key of a shuffle partition in one call.
     """
+    _ignore_merge_buckets(merge_buckets)
     if weight_col is not None and kind != "cms":
         raise ValueError(
             f"weight_col is only meaningful for kind='cms' (the"
@@ -550,7 +617,7 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     if _return_partials:
         return partials
     return _merge_partials(partials, [key_col] if key_col else [],
-                           tree_fanout, merge_buckets)
+                           tree_fanout)
 
 
 def multi_sketch_agg(df: DataFrame, jobs: list[dict],

@@ -15,8 +15,9 @@ partitions already contributed (lineage = ``partition_id`` +
 (via ``rdd.mapPartitionsWithIndex`` partition pruning — no data shuffle,
 the surviving partials are never recomputed), then merges old + new
 partials. Merge associativity/commutativity (tested) makes the
-two-source fold equal to the uninterrupted build; for HLL/Bloom,
-idempotence additionally makes duplicated partials harmless.
+two-source fold equal to the uninterrupted build. A partition
+checkpointed twice is merged once: the merge sorts by (key,
+``partition_id``) and drops the repeat as it streams past.
 
 At 100 TB: partials are O(num_partitions × num_keys) sketch-sized rows
 (KB each), so checkpointing is a trivially small parquet write compared
@@ -52,11 +53,12 @@ def completed_partitions(spark: SparkSession, path: str,
     kind**. A checkpoint path may hold partials of several kinds (the
     persisted ``sketch_kind`` column exists exactly for that); counting
     another kind's partitions as done would silently skip phase 1 for
-    the new kind and return an empty build."""
-    try:
-        cp = spark.read.parquet(path)
-    except Exception:
+    the new kind and return an empty build. A missing path is the only
+    "no checkpoint": an unreadable one raises."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return []
+    cp = spark.read.parquet(path)
     if kind is not None:
         cp = cp.where(F.col("sketch_kind") == kind)
     return [r["partition_id"] for r in
@@ -91,7 +93,7 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     all_partials = (spark.read.parquet(checkpoint_path)
                     .where(F.col("sketch_kind") == kind)
                     .drop("sketch_kind", "snapshot_id"))
-    # one contribution per partition (idempotent re-runs may append dupes)
-    keyc = [key_col] if key_col else []
-    dedup = all_partials.dropDuplicates(keyc + ["partition_id"])
-    return _merge_partials(dedup, keyc, tree_fanout)
+    # one contribution per partition (idempotent re-runs may append
+    # dupes): the merge's sorted stream drops the repeats
+    return _merge_partials(all_partials, [key_col] if key_col else [],
+                           tree_fanout, dedup=True)

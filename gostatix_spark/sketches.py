@@ -7,7 +7,8 @@ Each kind is one :class:`Sketch` subclass:
 * ``init`` / ``update`` / ``finalize`` fold one partition's elements
   into a serialized phase-1 partial;
 * ``decode`` reads a serialized state, ``merge`` folds decoded states
-  with the kind's merge law and serializes the result;
+  left to right with the kind's merge law into a decoded state, and
+  ``encode`` serializes one;
 * ``info`` reports a decoded state's parameters, fill and accuracy
   (``query.sketch_info``).
 
@@ -62,8 +63,12 @@ class Sketch:
         return self.counts_fold and self.element in ("tokens", "int32")
 
     @staticmethod
-    def merge(states) -> bytes:
+    def merge(states):
         raise TypeError(f"cannot merge {type(states[0]).__name__}")
+
+    @staticmethod
+    def encode(st) -> bytes:
+        return st.to_bytes()
 
     @classmethod
     def quantile(cls, st, qs):
@@ -96,8 +101,7 @@ class HLL(Sketch):
     @staticmethod
     def merge(states):
         reg = reduce(hll.merge, (s.registers for s in states))
-        return HLLState(states[0].m, reg,
-                        sum(s.n_items for s in states)).to_bytes()
+        return HLLState(states[0].m, reg, sum(s.n_items for s in states))
 
     @staticmethod
     def info(st):
@@ -138,7 +142,7 @@ class CMS(Sketch):
     def merge(states):
         mat = reduce(cms.merge, (s.matrix for s in states))
         return CMSState(states[0].d, states[0].w, mat,
-                        sum(s.all_sum for s in states)).to_bytes()
+                        sum(s.all_sum for s in states))
 
     @staticmethod
     def info(st):
@@ -173,7 +177,7 @@ class Bloom(Sketch):
     def merge(states):
         words = reduce(bloom.merge, (s.words for s in states))
         return BloomState(states[0].m, states[0].k, words,
-                          sum(s.n_items for s in states)).to_bytes()
+                          sum(s.n_items for s in states))
 
     @staticmethod
     def info(st):
@@ -244,7 +248,7 @@ class TopK(Sketch):
         cand = reduce(topk.merge_candidates, (s.candidates for s in states))
         return TopKState(head.k, head.error_rate, head.accuracy,
                          CMSState(head.cms.d, head.cms.w, mat, tot), cand,
-                         capped=any(s.capped for s in states)).to_bytes()
+                         capped=any(s.capped for s in states))
 
     @staticmethod
     def info(st):
@@ -279,7 +283,11 @@ class TDigest(Sketch):
         delta = states[0][3]
         m, w = reduce(lambda a, b: tdigest.merge(a, b, delta),
                       (st[:2] for st in states))
-        return tdigest.to_bytes(m, w, sum(st[2] for st in states), delta)
+        return m, w, sum(st[2] for st in states), delta
+
+    @staticmethod
+    def encode(st):
+        return tdigest.to_bytes(*st)
 
     @staticmethod
     def info(st):
@@ -313,7 +321,7 @@ class KLL(Sketch):
 
     @staticmethod
     def merge(states):
-        return reduce(kll.KLL.merge, states).to_bytes()
+        return reduce(kll.KLL.merge, states)
 
     @staticmethod
     def info(st):
@@ -364,8 +372,7 @@ def decode(blob):
 
 
 def merge(blobs) -> bytes:
-    """Fold serialized states of one kind with its merge law, in order.
-    Used by every phase-2 merge and by checkpoint resume."""
+    """Fold serialized states of one kind with its merge law, in order."""
     blobs = [bytes(b) for b in blobs]
     sk = lookup(blobs[0])
-    return sk.merge([sk.decode(b) for b in blobs])
+    return sk.encode(sk.merge([sk.decode(b) for b in blobs]))

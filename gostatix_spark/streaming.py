@@ -19,7 +19,8 @@ Execution shape (all distributed — nothing is collected to the driver):
   map-side combine, skew-immune);
 * the state table is KEY-BUCKET-PARTITIONED (``bucket =
   pmod(xxhash64(key), n_state_buckets)``); only the buckets touched by
-  the micro-batch are read, merged (``groupBy.applyInArrow``) and
+  the micro-batch are read, merged (the sorted-stream merge of
+  ``agg.py``: one ``mapInArrow`` call per shuffle partition) and
   rewritten. Untouched buckets are carried forward by MANIFEST
   reference — no data is copied or rewritten for them, so steady-state
   commit cost is O(touched buckets), not O(total state) (the round-2
@@ -56,7 +57,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
+from gostatix_spark.agg import (_build_partials, _ignore_merge_buckets,
+                                _merge_partials, _sketch_job)
 
 __all__ = ["incremental_sketch_sink", "sketch_stream_query",
            "load_sketch_state", "PointerStore", "LocalPointerStore",
@@ -313,8 +315,10 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
     partials over the micro-batch; read ONLY the touched state buckets;
     distributed per-key merge; write the touched buckets under
     ``v=<n+1>``; flip the manifest pointer; prune version dirs that are
-    old AND no longer referenced.
+    old AND no longer referenced. ``merge_buckets`` is accepted for
+    compatibility and ignored.
     """
+    _ignore_merge_buckets(merge_buckets)
     store = pointer_store or pointer_store_for(state_path)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -373,7 +377,7 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
             # partition-pruned state read: ONLY the touched buckets
             current = spark.read.parquet(*cur_paths).select(*cols)
             inp = inp.unionByName(current)
-        merged = _merge_partials(inp, key_cols, None, merge_buckets) \
+        merged = _merge_partials(inp, key_cols) \
             .withColumn("kb", kb if key_col else F.lit(0))
         new_version = (version or 0) + 1
         vdir = os.path.join(state_path, f"v={new_version}")
@@ -420,12 +424,13 @@ def sketch_stream_query(stream_df: DataFrame, kind: str, value_col: str,
     query drains all available input and stops — the batch-equivalence
     test mode; without it, it runs continuously. The checkpoint
     location doubles as the replay scope recorded in the state pointer
-    (see module docstring)."""
+    (see module docstring). ``merge_buckets`` is accepted for
+    compatibility and ignored."""
+    _ignore_merge_buckets(merge_buckets)
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(state_path, "_stream_checkpoint")
     sink = incremental_sketch_sink(kind, value_col, state_path,
                                    key_col=key_col, element=element,
-                                   merge_buckets=merge_buckets,
                                    n_state_buckets=n_state_buckets,
                                    replay_scope=os.path.abspath(checkpoint_dir),
                                    pointer_store=pointer_store,

@@ -24,12 +24,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_stream_merge(plan: str) -> None:
+    """Phase 2 is a MapInArrow over a Sort (the sorted-stream merge),
+    with no grouped-map node left."""
+    assert re.search(r"MapInArrow fold\(.*\n\s*\+- Sort ", plan), plan
+    assert "FlatMapGroupsIn" not in plan, plan
+
+
 def test_sketch_agg_single_exchange(spark):
     events = spark.read.parquet(f"{SF}/events.parquet")
     states = sketch_agg(events, "hll", "user_id", key_col="event_type", m=1024)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
+    _assert_stream_merge(plan)
     # column pruning: the scan reads only the two referenced columns
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
@@ -77,7 +84,7 @@ def test_bloom_sharded_single_exchange(spark):
                                  n_shards=8)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
+    _assert_stream_merge(plan)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
         == {"doc_id"}

@@ -17,10 +17,14 @@ every per-kind step is a lookup into the registry in ``sketches.py``.
   ``partition_id``), and one ``mapInArrow`` call per shuffle partition
   folds each run of equal keys with the sketch's merge law (max for
   HLL, add for CMS, OR for Bloom; proven associative/commutative in
-  tests). A run's merged state carries across Arrow batches until the
-  key changes, so a call costs one batch plus one open state whatever
-  its key count, and order-sensitive merges (t-digest, KLL, Top-K)
-  always fold in partition order. For very wide fan-in, ``tree_fanout``
+  tests). HLL, CMS and Bloom runs merge a whole Arrow batch at a time,
+  straight from the serialized partials (``sketches.merge_runs``: no
+  per-partial decode, a few elementwise passes over the batch); Top-K,
+  t-digest and KLL runs decode and fold run by run. A run's merged
+  state carries across Arrow batches until the key changes, so a call
+  costs one batch plus one open state whatever its key count, and
+  order-sensitive merges (t-digest, KLL, Top-K) always fold in
+  partition order. For very wide fan-in, ``tree_fanout``
   first merges per (key, ``partition_id % tree_fanout``) — merge
   associativity makes the tree shape irrelevant to the result.
 
@@ -57,7 +61,8 @@ from gostatix_spark import hashing, params, sketches
 from gostatix_spark.kernels import bloom, cuckoo, hll, topk
 from gostatix_spark.sketches import Sketch as _Spec
 from gostatix_spark.sketches import merge as merge_sketch_states
-from gostatix_spark.state import BloomState, CuckooState, sketch_from_bytes
+from gostatix_spark.state import (BloomState, CuckooState, binary_buffers,
+                                  sketch_from_bytes)
 
 __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
            "cuckoo_apply_removals", "bloom_build_sharded",
@@ -67,21 +72,6 @@ __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
 # ---------------------------------------------------------------------------
 # Arrow extraction helpers
 # ---------------------------------------------------------------------------
-
-
-def _arrow_var_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat uint8 values, int64 offsets) for a string/binary Arrow array."""
-    if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type):
-        arr = arr.cast(pa.binary())
-    elif pa.types.is_string(arr.type):
-        arr = arr.cast(pa.binary())
-    # null-free assumption: sketch inputs are filtered upstream
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-    data_buf = arr.buffers()[2]
-    values = (np.frombuffer(data_buf, dtype=np.uint8)
-              if data_buf is not None else np.zeros(0, np.uint8))
-    return values, offsets
 
 
 def _arrow_list_ints(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -118,7 +108,7 @@ def extract_hashes(arr: pa.Array, element: str, algo: str):
         h1, h2 = hashing.hash_tokens(vals, algo)
         return h1, h2, ident
     if element in ("string", "binary"):
-        values, offsets = _arrow_var_bytes(arr)
+        values, offsets = binary_buffers(arr)
         h1, h2 = hashing.hash_var_bytes(values, offsets, algo)
         return h1, h2, ident
     raise ValueError(f"unknown element kind {element!r}")
@@ -461,8 +451,10 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
     partitioned by ``group_cols``, sorted within each shuffle partition
     by ``run_cols`` and then by ``partition_id`` (or ``_salt``) where
     present, and streamed through one ``mapInArrow`` call per shuffle
-    partition: each run folds through the sketch registry in that
-    order, its open state carrying across Arrow batches until the key
+    partition. The HLL, CMS and Bloom runs of a batch merge together,
+    straight from its state column (``sketches.merge_runs``); Top-K,
+    t-digest and KLL runs fold through the registry in that order. A
+    run's open state carries across Arrow batches until the key
     changes. ``dedup`` drops a row whose run and ``partition_id`` equal
     the previous row's. ``n_items`` adds up; ``n_partials`` adds up the
     incoming ``n_partials``, or counts rows when there are none."""
@@ -477,7 +469,9 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
              if c in partials.columns and c not in run_cols][:1]
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        run = None  # open run: [key, sketch entry, state, n_items, n_partials]
+        # open run: [key, sketch entry, state, n_items, n_partials]; an
+        # HLL/CMS/Bloom run has no entry and holds its merged frame
+        run = None
         last_pid = None
         for batch in batches:
             if batch.num_rows == 0:
@@ -494,33 +488,33 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
                 batch, new = batch.filter(pa.array(~dup)), new[~dup]
                 if batch.num_rows == 0:
                     continue
+            if new[0] and run is not None:
+                yield _runs_batch([[k] for k in run[0]], [_encoded(run)],
+                                  [run[3]], [run[4]], arrow_schema)
+                run = None
             # segments: row 0 and each run start open one
             ends = np.append(np.flatnonzero(new[1:]) + 1, batch.num_rows)
             starts = np.insert(ends[:-1], 0, 0)
-            keys = [batch.column(c).take(starts).to_pylist()
-                    for c in run_cols]
-            blobs = batch.column("state").to_pylist()
             n_items = np.add.reduceat(batch.column("n_items").to_numpy(),
                                       starts)
             n_in = (np.add.reduceat(batch.column(fan_in).to_numpy(), starts)
                     if fan_in else ends - starts)
-            out = []
-            for g, (s, e) in enumerate(zip(starts, ends)):
-                if new[s]:
-                    if run is not None:
-                        out.append(run)
-                    run = [tuple(k[g] for k in keys),
-                           sketches.lookup(blobs[s]), None, 0, 0]
-                sk = run[1]
-                states = [sk.decode(b) for b in blobs[s:e]]
-                run[2] = sk.merge(states if run[2] is None
-                                  else [run[2]] + states)
-                run[3] += int(n_items[g])
-                run[4] += int(n_in[g])
-            if out:
-                yield _runs_batch(out, arrow_schema)
+            if run is not None:  # segment 0 continues the open run
+                n_items[0] += run[3]
+                n_in[0] += run[4]
+            closed, tail = _merge_segments(batch.column("state"), starts,
+                                           ends, run and run[1:3])
+            if len(starts) > 1:
+                yield _runs_batch(
+                    [batch.column(c).take(pa.array(starts[:-1]))
+                     for c in run_cols],
+                    closed, n_items[:-1], n_in[:-1], arrow_schema)
+            run = [tuple(batch.column(c)[int(starts[-1])].as_py()
+                         for c in run_cols),
+                   *tail, int(n_items[-1]), int(n_in[-1])]
         if run is not None:
-            yield _runs_batch([run], arrow_schema)
+            yield _runs_batch([[k] for k in run[0]], [_encoded(run)],
+                              [run[3]], [run[4]], arrow_schema)
 
     parts = (partials.repartition(*group_cols) if group_cols
              else partials.repartition(1))
@@ -529,16 +523,55 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
     return parts.mapInArrow(fold, schema)
 
 
-def _runs_batch(runs: list, schema: pa.Schema) -> pa.RecordBatch:
-    """Closed runs ``[key, sketch entry, state, n_items, n_partials]``
-    as one output batch."""
-    n_keys = len(schema) - 3
-    cols = [[r[0][j] for r in runs] for j in range(n_keys)]
-    cols += [[r[1].encode(r[2]) for r in runs], [r[3] for r in runs],
-             [r[4] for r in runs]]
+def _merge_segments(col: pa.Array, starts: np.ndarray, ends: np.ndarray,
+                    carry: list | None) -> tuple[pa.Array, list]:
+    """Merge each segment ``[starts[i], ends[i])`` of a batch's state
+    column, segment 0 after ``carry`` (the open run's ``[sketch entry,
+    state]``) when given. HLL, CMS and Bloom segments merge at once
+    through ``sketches.merge_runs``; the others fold one by one through
+    the registry. Returns the frames of every segment but the last, in
+    order, and ``[sketch entry, state]`` of the last (no entry: a
+    frame)."""
+    frames, merged = sketches.merge_runs(col, starts)
+    if carry and merged.size and merged[0] == 0:
+        frames = pa.concat_arrays([pa.array([sketches.merge(
+            [carry[1], frames[0].as_py()])], pa.binary()), frames.slice(1)])
+    last = len(starts) - 1
+    pos = np.empty(len(starts), np.int64)
+    pos[merged] = np.arange(merged.size)
+    if merged.size and merged[-1] == last:
+        tail = [None, frames[int(pos[last])].as_py()]
+    encoded = []
+    for g in np.setdiff1d(np.arange(len(starts)), merged).tolist():
+        blobs = col.slice(starts[g], ends[g] - starts[g]).to_pylist()
+        sk = sketches.lookup(blobs[0])
+        states = [sk.decode(b) for b in blobs]
+        if g == 0 and carry:
+            states.insert(0, carry[1])
+        st = sk.merge(states)
+        if g == last:
+            tail = [sk, st]
+        else:
+            pos[g] = merged.size + len(encoded)
+            encoded.append(sk.encode(st))
+    if encoded:
+        frames = pa.concat_arrays([frames, pa.array(encoded, pa.binary())])
+    return frames.take(pa.array(pos[:-1])), tail
+
+
+def _encoded(run: list) -> bytes:
+    """An open run's merged state as a frame."""
+    return run[2] if run[1] is None else run[1].encode(run[2])
+
+
+def _runs_batch(keys: list, states, n_items, n_partials,
+                schema: pa.Schema) -> pa.RecordBatch:
+    """Closed runs as one output batch: a column of keys per run
+    column, then their states, ``n_items`` and ``n_partials``."""
+    cols = [*keys, states, n_items, n_partials]
     return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema)
+        [c if isinstance(c, pa.Array) else pa.array(c, type=f.type)
+         for c, f in zip(cols, schema)], schema=schema)
 
 
 def _merge_partials(partials: DataFrame, key_cols: list[str],

@@ -15,7 +15,9 @@ partitions already contributed (lineage = ``partition_id`` +
 (via ``rdd.mapPartitionsWithIndex`` partition pruning — no data shuffle,
 the surviving partials are never recomputed), then merges old + new
 partials. Merge associativity/commutativity (tested) makes the
-two-source fold equal to the uninterrupted build. A partition
+two-source fold equal to the uninterrupted build. The read-back names
+the schema it wrote (``snapshot_id`` is always bigint), so no job reads
+a parquet footer to infer it. A partition
 checkpointed twice is merged once: the merge sorts by (key,
 ``partition_id``) and drops the repeat as it streams past.
 
@@ -35,15 +37,22 @@ from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
 __all__ = ["checkpointed_sketch_agg", "write_partials"]
 
 
+def _with_lineage(partials: DataFrame, kind: str,
+                  snapshot_id: int) -> DataFrame:
+    """The rows a checkpoint holds: partials plus ``sketch_kind`` and a
+    bigint ``snapshot_id`` (small explicit ids and time-based ones share
+    one schema)."""
+    return (partials.withColumn("sketch_kind", F.lit(kind))
+            .withColumn("snapshot_id", F.lit(snapshot_id).cast("bigint")))
+
+
 def write_partials(partials: DataFrame, path: str, kind: str,
                    snapshot_id: int | None = None) -> int:
     """Persist phase-1 partials with lineage columns. Returns snapshot id."""
     if snapshot_id is None:
         snapshot_id = int(time.time() * 1000)
-    (partials
-     .withColumn("sketch_kind", F.lit(kind))
-     .withColumn("snapshot_id", F.lit(snapshot_id))
-     .write.mode("append").parquet(path))
+    _with_lineage(partials, kind, snapshot_id).write.mode("append").parquet(
+        path)
     return snapshot_id
 
 
@@ -88,9 +97,11 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
         partials = partials.where(
             F.col("partition_id") <= int(fail_after_partition))
 
-    snapshot = write_partials(partials, checkpoint_path, kind)
+    write_partials(partials, checkpoint_path, kind)
 
-    all_partials = (spark.read.parquet(checkpoint_path)
+    # the schema just written: no footer-reading job to infer it
+    all_partials = (spark.read.schema(_with_lineage(partials, kind, 0).schema)
+                    .parquet(checkpoint_path)
                     .where(F.col("sketch_kind") == kind)
                     .drop("sketch_kind", "snapshot_id"))
     # one contribution per partition (idempotent re-runs may append

@@ -124,45 +124,50 @@ def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.maximum(a, b)
 
 
+# registers per count_many block: bounds its temporaries
+COUNT_BLOCK = 1 << 18
+
+
 def count(registers: np.ndarray, with_correction: bool = True,
           with_rounding: bool = True, linear_counting: bool = True) -> int:
-    """Cardinality estimate — α·m²/Σ2^(−reg) with the reference's
-    large-range correction (``hyperloglog.go:67-76``,
-    ``base_hyperloglog.go:92-102``). ``linear_counting`` adds the
-    standard Flajolet small-range correction (absent in the reference —
-    documented extension, SURVEY.md §1.6.1): without it raw HLL
-    overestimates for n ≲ 2.5·m and the published 1.04/√m bound the
-    north rule gates on does not hold in that regime. Pass
-    ``linear_counting=False`` for reference-shell fidelity."""
-    m = len(registers)
-    harmonic = np.exp2(-registers.astype(np.float64)).sum()
-    est = hll_alpha(m) * m * m / harmonic
-    if linear_counting and est <= 2.5 * m:
-        zeros = int((registers == 0).sum())
-        if zeros != 0:
-            est = m * math.log(m / zeros)
-    if with_correction and est > TWO_POW_32 / 30:
-        est = -TWO_POW_32 * math.log(1 - est / TWO_POW_32)
-    if with_rounding:
-        est = round(est)
-    return int(est)
+    """Cardinality estimate of one register array: a one-row
+    :func:`count_many`."""
+    return int(count_many(registers[None, :], with_correction,
+                          with_rounding, linear_counting)[0])
 
 
-def count_many(regs: np.ndarray, linear_counting: bool = True) -> np.ndarray:
-    """Vectorized :func:`count` over a (n_sketches, m) register stack —
-    one numpy pass for n estimates instead of n Python-loop calls
-    (same corrections, same rounding). The batched set-algebra path
-    (``query.hll_intersect_pairs``) estimates 3 stacks per pair batch
-    with this."""
-    n, m = regs.shape
-    harmonic = np.exp2(-regs.astype(np.float64)).sum(axis=1)
+def count_many(regs: np.ndarray, with_correction: bool = True,
+               with_rounding: bool = True,
+               linear_counting: bool = True) -> np.ndarray:
+    """Cardinality estimates of a (n_sketches, m) register stack in one
+    numpy pass — α·m²/Σ2^(−reg) with the reference's large-range
+    correction (``hyperloglog.go:67-76``, ``base_hyperloglog.go:92-102``).
+    ``linear_counting`` adds the standard Flajolet small-range
+    correction (absent in the reference — documented extension,
+    SURVEY.md §1.6.1): without it raw HLL overestimates for n ≲ 2.5·m
+    and the published 1.04/√m bound the north rule gates on does not
+    hold in that regime. Pass ``linear_counting=False`` for
+    reference-shell fidelity. A sketch whose corrected estimate is
+    undefined (raw estimate ≥ 2³², the correction's log domain) is
+    saturated and reads −1, as ``query.bloom_cardinality`` does."""
+    m = regs.shape[1]
+    harmonic = np.empty(len(regs))
+    zeros = np.empty(len(regs), np.int64)
+    step = max(1, COUNT_BLOCK // m)
+    for s in range(0, len(regs), step):
+        block = regs[s:s + step]
+        harmonic[s:s + step] = np.ldexp(
+            1.0, np.negative(block, dtype=np.int32)).sum(axis=1)
+        zeros[s:s + step] = (block == 0).sum(axis=1)
     est = hll_alpha(m) * m * m / harmonic
     if linear_counting:
-        zeros = (regs == 0).sum(axis=1)
         small = (est <= 2.5 * m) & (zeros > 0)
         if small.any():
             est[small] = m * np.log(m / zeros[small])
-    large = est > TWO_POW_32 / 30
-    if large.any():
-        est[large] = -TWO_POW_32 * np.log1p(-est[large] / TWO_POW_32)
-    return np.rint(est).astype(np.int64)
+    if with_correction:
+        saturated = est >= TWO_POW_32
+        large = (est > TWO_POW_32 / 30) & ~saturated
+        if large.any():
+            est[large] = -TWO_POW_32 * np.log1p(-est[large] / TWO_POW_32)
+        est[saturated] = -1
+    return (np.rint(est) if with_rounding else np.trunc(est)).astype(np.int64)

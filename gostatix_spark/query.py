@@ -20,6 +20,7 @@ import json
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
@@ -27,9 +28,9 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
 
 from gostatix_spark import hashing
 from gostatix_spark.kernels import bloom, cms, cuckoo, hll, topk
-from gostatix_spark.sketches import lookup
+from gostatix_spark.sketches import HLL, lookup
 from gostatix_spark.state import (BloomState, CMSState, CuckooState, TopKState,
-                                  sketch_from_bytes)
+                                  binary_buffers, sketch_from_bytes)
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
            "topk_values", "bloom_contains", "bloom_cardinality",
@@ -50,11 +51,9 @@ def _hash_pd(s: pd.Series, element: str, algo: str):
         # hashes the flat buffer via length-grouped matrices — no
         # per-element Python (the old list-comprehension .encode()
         # dominated probe UDFs on multi-million-row gram columns)
-        import pyarrow as pa
-        from gostatix_spark.agg import _arrow_var_bytes
         arr = pa.Array.from_pandas(
             s, type=pa.string() if element == "string" else pa.binary())
-        values, offsets = _arrow_var_bytes(arr)
+        values, offsets = binary_buffers(arr)
         return hashing.hash_var_bytes(values, offsets, algo)
     if element == "token_array":
         lens = s.map(len).to_numpy(dtype=np.int64)
@@ -86,13 +85,12 @@ def _per_state(states: DataFrame, udf, fields: list[str],
 
 def hll_estimate(states: DataFrame, out_col: str = "est_distinct",
                  linear_counting: bool = True) -> DataFrame:
-    """[key?, state, ...] → [key?, est_distinct] (``hyperloglog.go:67-76``)."""
-    @F.pandas_udf(LongType())
-    def est(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            hll.count(sketch_from_bytes(bytes(b)).registers,
-                      linear_counting=linear_counting)
-            for b in blobs], dtype="int64")
+    """[key?, state, ...] → [key?, est_distinct] (``hyperloglog.go:67-76``):
+    an Arrow UDF that reads each batch's frames at once and estimates
+    them with one ``hll.count_many`` call; a saturated sketch reads −1."""
+    @F.arrow_udf(LongType())
+    def est(blobs: pa.Array) -> pa.Array:
+        return pa.array(HLL.count_frames(blobs, linear_counting))
     return states.withColumn(out_col, est(F.col("state")))
 
 

@@ -9,6 +9,16 @@ Each kind is one :class:`Sketch` subclass:
 * ``decode`` reads a serialized state, ``merge`` folds decoded states
   left to right with the kind's merge law into a decoded state, and
   ``encode`` serializes one;
+* HLL, CMS and Bloom (:class:`ArrayMerge`: one fixed-width array merged
+  elementwise by max, add or OR) merge serialized partials instead,
+  a whole Arrow batch at a time (:func:`merge_runs`): the frames are
+  read straight from the batch's binary buffers (``state.read_frames``,
+  which validates every one), sparse HLL frames scatter their (index,
+  value) pairs, dense frames are copied once as (rows × width) rows
+  and each run's rows fold in ⌈log₂ run length⌉ elementwise passes
+  (:func:`_fold_runs`). Top-K, t-digest and KLL keep the
+  decode-and-fold ``merge``; :func:`merge` serves both. The layout of
+  each kind's frame lives in one table, ``state.ARRAY_FRAMES``;
 * ``info`` reports a decoded state's parameters, fill and accuracy
   (``query.sketch_info``).
 
@@ -25,10 +35,16 @@ import math
 from collections import Counter
 from functools import reduce
 
+import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
+
 from gostatix_spark import params
 from gostatix_spark.kernels import bloom, cms, cuckoo, hll, kll, tdigest, topk
-from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
-                                  TopKState, frame_kind)
+from gostatix_spark.state import (ARRAY_FRAMES, KIND_IDS, BloomState,
+                                  CMSState, CuckooState, Frames, HLLState,
+                                  TopKState, binary_array, binary_buffers,
+                                  check_rows, frame_kind, kind_bytes,
+                                  read_frames, sparse_pairs, write_frames)
 
 
 def _count(vals, weights) -> int:
@@ -75,9 +91,90 @@ class Sketch:
         raise TypeError(f"{cls.kind} states have no quantiles")
 
 
-class HLL(Sketch):
+class ArrayMerge(Sketch):
+    """A kind whose state is one fixed-width array merged elementwise
+    by ``ufunc`` (HLL max, CMS add, Bloom OR); ``state.ARRAY_FRAMES``
+    holds its frame layout. Its runs of partials merge a whole batch at
+    a time (:meth:`reduce_runs`), straight from the serialized frames;
+    no state is decoded one by one."""
+
+    ufunc = None
+
+    @classmethod
+    def reduce_runs(cls, data, lo, hi, starts, rows, max_elems=None):
+        """Merge the runs ``[starts[i], starts[i+1])`` of the frames
+        ``data[lo[j]:hi[j]]``, which came from ``rows`` (named in
+        errors). Yields ``(runs, params, payload, count)`` per parameter
+        set, in pieces of at most ``max_elems`` payload elements (one
+        run at least): the runs' indices, their shared header
+        parameters, one merged payload row and summed count per run. A
+        frame whose parameters differ from its run's first frame's
+        raises ``ValueError``."""
+        if not len(lo):
+            return
+        fr = read_frames(data, lo, hi, cls.kind, rows)
+        run_of = np.repeat(np.arange(len(starts)),
+                           np.diff(np.append(starts, len(lo))))
+        check_rows((fr.params == fr.params[starts][run_of]).all(1), rows,
+                   f"{cls.kind} parameters differ within one run")
+        sets, set_of_run = np.unique(fr.params[starts], axis=0,
+                                     return_inverse=True)
+        set_of_run = set_of_run.ravel()
+        for g, p in enumerate(sets):
+            runs = np.flatnonzero(set_of_run == g)
+            sel = np.flatnonzero(set_of_run[run_of] == g)
+            local = np.searchsorted(runs, run_of[sel])  # run within the set
+            step = (max(1, max_elems // int(fr.width[sel[0]])) if max_elems
+                    else len(runs))
+            for s in range(0, len(runs), step):
+                a, b = np.searchsorted(local, [s, s + step])
+                part = local[a:b] - s
+                sub = Frames(*(x[sel[a:b]] for x in fr))
+                yield (runs[s:s + step], p, *cls._reduce(
+                    data, sub, np.flatnonzero(np.diff(part, prepend=-1)),
+                    part))
+
+    @classmethod
+    def _reduce(cls, data, fr: Frames, starts, run_of):
+        """(payload, count) per run of frames sharing parameters: the
+        dense frames folded by :func:`_fold_runs`, then the sparse HLL
+        (index, value) pairs scattered in."""
+        width, dtype = int(fr.width[0]), ARRAY_FRAMES[cls.kind].dtype
+        out = np.zeros((len(starts), width), dtype)
+        dense = np.flatnonzero(fr.version == 1)
+        if dense.size:
+            r = run_of[dense]
+            first = np.flatnonzero(np.diff(r, prepend=-1))
+            rows = sliding_window_view(data, width * dtype.itemsize)[
+                fr.lo[dense]]  # one copy of the dense payloads
+            out[r[first]] = _fold_runs(cls.ufunc, rows.view(dtype), first)
+        if dense.size < len(fr.lo):  # sparse HLL frames
+            owner, idx, val = sparse_pairs(data, fr)
+            cls.ufunc.at(out.reshape(-1), run_of[owner] * width + idx, val)
+        return out, np.add.reduceat(fr.count, starts)
+
+
+def _fold_runs(ufunc, a: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """``ufunc`` over the rows of each run ``[starts[i], starts[i+1])``
+    of ``a``, one row per run. Each pass folds every run's odd rows into
+    its even ones and keeps the even ones, so a run of L rows takes
+    ⌈log₂ L⌉ elementwise passes; ``ufunc.reduceat`` along axis 0 costs
+    10-100× more per element."""
+    lens = np.diff(np.append(starts, len(a)))
+    while len(a) > len(lens):
+        pos = np.arange(len(a)) - np.repeat(np.cumsum(lens) - lens, lens)
+        even = pos % 2 == 0
+        kept = a[even]
+        paired = (pos + 1 < np.repeat(lens, lens))[even]
+        kept[paired] = ufunc(kept[paired], a[~even])
+        a, lens = kept, (lens + 1) // 2
+    return a
+
+
+class HLL(ArrayMerge):
     kind = "hll"
     counts_fold = True
+    ufunc = np.maximum
     decode = staticmethod(HLLState.from_bytes)
 
     def __init__(self, m=16384, **_):
@@ -87,6 +184,20 @@ class HLL(Sketch):
 
     def init(self):
         return [hll.new_state(self.p["m"]), 0]
+
+    @classmethod
+    def count_frames(cls, states, linear_counting: bool = True) -> np.ndarray:
+        """The estimate of every HLL state in an Arrow binary array:
+        its frames read as one batch of one-row runs, then one
+        ``hll.count_many`` per block of register stacks (at most
+        ``hll.COUNT_BLOCK`` registers, so memory stays flat in m)."""
+        data, off = binary_buffers(states)
+        rows = np.arange(len(states))
+        out = np.empty(len(states), np.int64)
+        for runs, _, regs, _ in cls.reduce_runs(data, off[:-1], off[1:],
+                                                rows, rows, hll.COUNT_BLOCK):
+            out[runs] = hll.count_many(regs, linear_counting=linear_counting)
+        return out
 
     def update(self, acc, h1, h2, elems, weights):
         hll.update_batch(acc[0], h1)  # max: repeats change nothing
@@ -99,19 +210,15 @@ class HLL(Sketch):
             acc[1]
 
     @staticmethod
-    def merge(states):
-        reg = reduce(hll.merge, (s.registers for s in states))
-        return HLLState(states[0].m, reg, sum(s.n_items for s in states))
-
-    @staticmethod
     def info(st):
         return ({"m": st.m, "n": st.n_items},
                 float((st.registers > 0).mean()), 1.04 / math.sqrt(st.m))
 
 
-class CMS(Sketch):
+class CMS(ArrayMerge):
     kind = "cms"
     counts_fold = True
+    ufunc = np.add
     decode = staticmethod(CMSState.from_bytes)
 
     def __init__(self, **p):
@@ -139,20 +246,15 @@ class CMS(Sketch):
         return CMSState(p["d"], p["w"], acc[0], acc[1]).to_bytes(), acc[1]
 
     @staticmethod
-    def merge(states):
-        mat = reduce(cms.merge, (s.matrix for s in states))
-        return CMSState(states[0].d, states[0].w, mat,
-                        sum(s.all_sum for s in states))
-
-    @staticmethod
     def info(st):
         return ({"d": st.d, "w": st.w, "all_sum": st.all_sum},
                 float((st.matrix > 0).mean()), math.e / st.w)
 
 
-class Bloom(Sketch):
+class Bloom(ArrayMerge):
     kind = "bloom"
     counts_fold = True
+    ufunc = np.bitwise_or
     decode = staticmethod(BloomState.from_bytes)
 
     def __init__(self, **p):
@@ -172,12 +274,6 @@ class Bloom(Sketch):
     def finalize(self, acc):
         p = self.p
         return BloomState(p["m"], p["k"], acc[0], acc[1]).to_bytes(), acc[1]
-
-    @staticmethod
-    def merge(states):
-        words = reduce(bloom.merge, (s.words for s in states))
-        return BloomState(states[0].m, states[0].k, words,
-                          sum(s.n_items for s in states))
 
     @staticmethod
     def info(st):
@@ -371,8 +467,57 @@ def decode(blob):
     return lookup(blob).decode(bytes(blob))
 
 
+# array-merge kinds by their GSK1 kind byte
+_ARRAY_KINDS = {KIND_IDS[k]: REGISTRY[k] for k in ARRAY_FRAMES}
+
+
+def _merged_frames(sk: type[ArrayMerge], data, lo, hi, starts, rows):
+    """One dense merged frame per run, as ``(runs, bytes, offsets)`` per
+    parameter set of the runs."""
+    for runs, p, payload, count in sk.reduce_runs(data, lo, hi, starts, rows):
+        yield (runs, *write_frames(sk.kind, p, count, payload))
+
+
+def merge_runs(states, starts: np.ndarray):
+    """Merge every run of HLL, CMS or Bloom partials in a batch's state
+    column (an Arrow binary array; run i is rows ``[starts[i],
+    starts[i+1])``), a whole kind at a time. A run's kind is its first
+    frame's. Returns ``(frames, runs)``: one merged frame per such run
+    as an Arrow binary array, and those runs' indices, ascending. The
+    other runs (Top-K, t-digest, KLL) are left to a per-run fold."""
+    import pyarrow as pa
+    data, off = binary_buffers(states)
+    ends = np.append(starts[1:], len(states))
+    first = kind_bytes(data, off[starts], off[starts + 1])
+    parts = []
+    for kb, sk in _ARRAY_KINDS.items():
+        runs = np.flatnonzero(first == kb)
+        if not runs.size:
+            continue
+        lens = ends[runs] - starts[runs]
+        local = np.cumsum(lens) - lens
+        rows = np.arange(lens.sum()) + np.repeat(starts[runs] - local, lens)
+        for sub, buf, offs in _merged_frames(sk, data, off[rows],
+                                             off[rows + 1], local, rows):
+            parts.append((runs[sub], binary_array(buf, offs)))
+    if not parts:
+        return pa.array([], pa.binary()), np.zeros(0, np.int64)
+    runs = np.concatenate([r for r, _ in parts])
+    order = np.argsort(runs)
+    return (pa.concat_arrays([a for _, a in parts]).take(pa.array(order)),
+            runs[order])
+
+
 def merge(blobs) -> bytes:
     """Fold serialized states of one kind with its merge law, in order."""
     blobs = [bytes(b) for b in blobs]
     sk = lookup(blobs[0])
+    if issubclass(sk, ArrayMerge):
+        lens = np.array([len(b) for b in blobs], np.int64)
+        off = np.concatenate(([0], np.cumsum(lens)))
+        data = np.frombuffer(b"".join(blobs), np.uint8)
+        (_, buf, _), = _merged_frames(sk, data, off[:-1], off[1:],
+                                      np.zeros(1, np.int64),
+                                      np.arange(len(blobs)))
+        return buf.tobytes()
     return sk.encode(sk.merge([sk.decode(b) for b in blobs]))

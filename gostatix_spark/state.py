@@ -24,6 +24,7 @@ import base64
 import json
 import struct
 from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -31,11 +32,11 @@ from gostatix_spark.params import hll_alpha
 
 MAGIC = b"GSK1"
 _KINDS = {1: "bloom", 2: "hll", 3: "cms", 4: "topk", 5: "cuckoo"}
-_KIND_IDS = {v: k for k, v in _KINDS.items()}
+KIND_IDS = {v: k for k, v in _KINDS.items()}
 
 
 def _frame(kind: str, header: bytes, payload: bytes) -> bytes:
-    return MAGIC + bytes([_KIND_IDS[kind]]) + struct.pack("<I", len(header)) + header + payload
+    return MAGIC + bytes([KIND_IDS[kind]]) + struct.pack("<I", len(header)) + header + payload
 
 
 def frame_kind(buf: bytes) -> str:
@@ -54,6 +55,206 @@ def _unframe(buf: bytes, expected: str) -> tuple[bytes, bytes]:
         raise ValueError(f"expected a {expected} frame, found {found}")
     hlen = struct.unpack_from("<I", buf, 5)[0]
     return buf[9 : 9 + hlen], buf[9 + hlen :]
+
+
+class ArrayFrame(NamedTuple):
+    """Layout of a GSK1 kind whose payload is one fixed-width array.
+    Its header is the version byte, the parameters and one count, each
+    parameter and the count a little-endian u64."""
+
+    n_params: int
+    last_version: int  # 2 for HLL: sparse (u32 index, u8 value) pairs
+    dtype: np.dtype  # payload element
+    width: Callable  # (n, n_params) parameters → dense payload elements
+
+
+ARRAY_FRAMES = {
+    "hll": ArrayFrame(1, 2, np.dtype(np.uint8), lambda p: p[:, 0]),  # m
+    "cms": ArrayFrame(2, 1, np.dtype("<u8"),
+                      lambda p: p[:, 0] * p[:, 1]),  # d, w
+    "bloom": ArrayFrame(2, 1, np.dtype("<u8"),
+                        lambda p: (p[:, 0] + 63) // 64),  # m, k
+}
+
+
+class Frames(NamedTuple):
+    """Header fields and payload byte ranges of validated frames."""
+
+    rows: np.ndarray | None  # each frame's row for errors; None: a lone state
+    version: np.ndarray  # uint8
+    params: np.ndarray  # (n, n_params) int64: hll m; cms d, w; bloom m, k
+    count: np.ndarray  # uint64: n_items, or all_sum for cms
+    width: np.ndarray  # int64 dense payload elements
+    lo: np.ndarray  # int64 payload start in the buffer
+    hi: np.ndarray  # int64 payload end
+
+
+def check_rows(ok: np.ndarray, rows: np.ndarray | None, what: str) -> None:
+    """``ValueError`` naming the first row where ``ok`` is false (no row
+    for a lone state: ``rows`` None)."""
+    if not ok.all():
+        bad = int(np.argmin(ok))
+        raise ValueError(what if rows is None
+                         else f"sketch state row {int(rows[bad])}: {what}")
+
+
+def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(flat uint8 values, int64 offsets) for a string/binary Arrow array."""
+    import pyarrow as pa
+    if not pa.types.is_binary(arr.type):
+        arr = arr.cast(pa.binary())
+    # null-free assumption: sketch inputs are filtered upstream
+    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    data_buf = arr.buffers()[2]
+    values = (np.frombuffer(data_buf, dtype=np.uint8)
+              if data_buf is not None else np.zeros(0, np.uint8))
+    return values, offsets
+
+
+# bytes one Arrow binary array can hold: its offsets are int32
+_MAX_BINARY = (1 << 31) - 1
+
+
+def binary_array(data: np.ndarray, offsets: np.ndarray):
+    """The Arrow binary array over flat bytes and int64 offsets — the
+    inverse of :func:`binary_buffers`. ``ValueError`` when the bytes
+    exceed what int32 offsets address."""
+    import pyarrow as pa
+    if offsets[-1] > _MAX_BINARY:
+        raise ValueError(f"{int(offsets[-1])} bytes of sketch states exceed "
+                         f"one Arrow binary array ({_MAX_BINARY} bytes)")
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
+
+
+def gather(data: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """``data[lo[0]:hi[0]] ++ data[lo[1]:hi[1]] ++ …`` for ascending,
+    disjoint ranges, through one byte mask instead of a loop."""
+    if not len(lo):
+        return np.zeros(0, np.uint8)
+    spans = np.empty(2 * len(lo), np.int64)  # the gap before each range
+    spans[0::2] = lo - np.append(lo[0], hi[:-1])
+    spans[1::2] = hi - lo
+    keep = np.repeat(np.arange(len(spans)) % 2 == 1, spans)
+    return data[lo[0]:hi[-1]][keep]
+
+
+def _heads(data: np.ndarray, lo: np.ndarray, width: int) -> np.ndarray:
+    """The first ``width`` bytes of each frame, one row per frame."""
+    return data[lo[:, None] + np.arange(width)]
+
+
+_MAGIC = np.frombuffer(MAGIC, np.uint8)
+
+
+def kind_bytes(data: np.ndarray, lo: np.ndarray,
+               hi: np.ndarray) -> np.ndarray:
+    """The GSK1 kind byte of each frame ``data[lo[i]:hi[i]]``; 0 for a
+    frame of another format (t-digest, KLL) or too short for a header."""
+    out = np.zeros(len(lo), np.uint8)
+    at = np.flatnonzero(hi - lo >= 9)
+    head = _heads(data, lo[at], 5)
+    gsk1 = (head[:, :4] == _MAGIC).all(1)
+    out[at[gsk1]] = head[gsk1, 4]
+    return out
+
+
+# a frame's fixed part by its number of parameters: magic, kind byte,
+# header length, then the header (version, parameters, count)
+_HEADERS = {n: np.dtype([("magic", "S4"), ("kind", "u1"), ("hlen", "<u4"),
+                         ("version", "u1"), ("params", "<u8", (n,)),
+                         ("count", "<u8")]) for n in (1, 2)}
+_PREFIX = {k: np.frombuffer(MAGIC + struct.pack(
+    "<BI", KIND_IDS[k], _HEADERS[f.n_params].itemsize - 9), np.uint8)
+    for k, f in ARRAY_FRAMES.items()}
+
+
+def read_frames(data: np.ndarray, lo, hi, kind: str,
+                rows: np.ndarray | None = None) -> Frames:
+    """Parse the ``kind`` frames ``data[lo[i]:hi[i]]`` of a fixed-width
+    array kind (``ARRAY_FRAMES``) straight from a flat buffer. Every
+    frame is checked: magic, kind byte, header length, version, payload
+    length (the dense size for v1, whole (u32 index, u8 value) pairs for
+    sparse HLL v2). A failure raises ``ValueError`` naming ``rows[i]``."""
+    layout = ARRAY_FRAMES[kind]
+    dt = _HEADERS[layout.n_params]
+    lo, hi = np.asarray(lo, np.int64), np.asarray(hi, np.int64)
+    size = hi - lo
+    if not (size >= dt.itemsize).all():
+        check_rows(size >= 9, rows, "shorter than a GSK1 frame header")
+        _check_kind(_heads(data, lo, 9), kind, rows)
+        check_rows(size >= dt.itemsize, rows,
+                   f"shorter than a {kind} header")
+    head = _heads(data, lo, dt.itemsize)
+    h = head.view(dt)[:, 0]
+    params = h["params"].astype(np.int64)
+    width = layout.width(params)
+    version = h["version"]
+    plen = size - dt.itemsize
+    sized = (version == 1) & (plen == width * layout.dtype.itemsize)
+    if layout.last_version == 2:  # or whole sparse (index, value) pairs
+        sized |= (version == 2) & (plen % 5 == 0)
+    framed = (head[:, :9] == _PREFIX[kind]).all(1)  # magic, kind, hlen
+    if not (framed & sized).all():
+        _check_kind(head, kind, rows)
+        check_rows(framed, rows, f"bad {kind} header length")
+        check_rows(sized, rows, f"bad {kind} frame version or payload length")
+    return Frames(rows, version, params, h["count"], width,
+                  lo + dt.itemsize, hi)
+
+
+def _check_kind(head: np.ndarray, kind: str, rows) -> None:
+    """Raise for the first frame whose leading bytes are not a ``kind``
+    frame's, naming what it is instead."""
+    ok = (head[:, :4] == _MAGIC).all(1) & (head[:, 4] == KIND_IDS[kind])
+    if not ok.all():
+        try:
+            what = (f"expected a {kind} frame, found "
+                    f"{frame_kind(head[np.argmin(ok)])}")
+        except ValueError as e:
+            what = str(e)
+        check_rows(ok, rows, what)
+
+
+def sparse_pairs(data: np.ndarray, fr: Frames):
+    """(frame, index, value) of every pair in the sparse HLL frames of
+    ``fr``, indices checked against their frame's m."""
+    sp = np.flatnonzero(fr.version == 2)
+    cnt = (fr.hi[sp] - fr.lo[sp]) // 5
+    mid = fr.lo[sp] + 4 * cnt
+    idx = gather(data, fr.lo[sp], mid).view("<u4")
+    owner = np.repeat(sp, cnt)
+    ok = idx < fr.width[owner]
+    if not ok.all():
+        check_rows(ok, None if fr.rows is None else fr.rows[owner],
+                   "sparse hll index out of range")
+    return owner, idx, gather(data, mid, fr.hi[sp])
+
+
+def _read_one(buf: bytes, kind: str) -> tuple[np.ndarray, Frames]:
+    """One serialized state as a buffer and its validated frame."""
+    data = np.frombuffer(buf, np.uint8)
+    return data, read_frames(data, [0], [len(data)], kind)
+
+
+def write_frames(kind: str, params: np.ndarray, count: np.ndarray,
+                 payload: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Dense (version 1) frames of one parameter set ``params`` as (flat
+    bytes, int64 offsets): row i carries ``count[i]`` and ``payload[i]``
+    — the bytes ``to_bytes`` writes, for many states at once."""
+    hlen = 9 + 8 * ARRAY_FRAMES[kind].n_params
+    head = np.frombuffer(MAGIC + bytes([KIND_IDS[kind]])
+                         + struct.pack("<IB", hlen, 1)
+                         + np.asarray(params, "<u8").tobytes(), np.uint8)
+    body = payload.reshape(len(payload), -1).view(np.uint8)
+    out = np.empty((len(payload), 9 + hlen + body.shape[1]), np.uint8)
+    out[:, :len(head)] = head
+    out[:, len(head):9 + hlen] = (
+        np.asarray(count, "<u8").view(np.uint8).reshape(-1, 8))
+    out[:, 9 + hlen:] = body
+    return out.reshape(-1), np.arange(len(out) + 1) * out.shape[1]
 
 
 def kind_of(buf: bytes) -> str:
@@ -96,9 +297,10 @@ class BloomState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "BloomState":
-        header, payload = _unframe(buf, "bloom")
-        _, m, k, n = struct.unpack("<BQQQ", header)
-        return cls(m, k, np.frombuffer(payload, dtype=np.uint64).copy(), n)
+        data, fr = _read_one(buf, "bloom")
+        m, k = fr.params[0].tolist()
+        return cls(m, k, data[fr.lo[0]:].view("<u8").astype(np.uint64),
+                   int(fr.count[0]))
 
     def to_json(self) -> str:
         """Reference ``{m,k,b}`` with b = bitset MarshalJSON content
@@ -162,17 +364,15 @@ class HLLState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "HLLState":
-        header, payload = _unframe(buf, "hll")
-        ver, m, n = struct.unpack("<BQQ", header)
-        if ver == 2:
-            cnt = len(payload) // 5
-            idx = np.frombuffer(payload, dtype="<u4", count=cnt)
-            vals = np.frombuffer(payload, dtype=np.uint8,
-                                 count=cnt, offset=4 * cnt)
+        data, fr = _read_one(buf, "hll")
+        m = int(fr.params[0, 0])
+        if fr.version[0] == 2:
+            _, idx, vals = sparse_pairs(data, fr)
             regs = np.zeros(m, dtype=np.uint8)
             regs[idx] = vals
-            return cls(m, regs, n)
-        return cls(m, np.frombuffer(payload, dtype=np.uint8).copy(), n)
+        else:
+            regs = data[fr.lo[0]:].copy()
+        return cls(m, regs, int(fr.count[0]))
 
     def to_json(self) -> str:
         """Reference ``{nr,nbp,c,r,k}`` — ``base_hyperloglog.go:38-44``."""
@@ -220,9 +420,10 @@ class CMSState:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "CMSState":
-        header, payload = _unframe(buf, "cms")
-        _, d, w, s = struct.unpack("<BQQQ", header)
-        return cls(d, w, np.frombuffer(payload, dtype=np.uint64).reshape(d, w).copy(), s)
+        data, fr = _read_one(buf, "cms")
+        d, w = fr.params[0].tolist()
+        mat = data[fr.lo[0]:].view("<u8").astype(np.uint64).reshape(d, w)
+        return cls(d, w, mat, int(fr.count[0]))
 
     def to_json(self) -> str:
         """Reference ``{r,c,s,m,k}`` — ``count_min_sketch.go:95-100``."""

@@ -338,8 +338,9 @@ def q_cuckoo_membership_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same insert→remove→lookup semantics as q_cuckoo_membership but
     probing through the BROADCAST-FREE path (`cuckoo_contains_join`):
     probes shuffle to their owning shard's state row and the lookup
-    runs cogrouped — the plan that still works when total filter state
-    is tens of GB. Same oracle: no false negatives ⇒ all TRUE."""
+    runs next to it in a sorted stream — the plan that still works when
+    total filter state is tens of GB. Same oracle: no false negatives ⇒
+    all TRUE."""
     from gostatix_spark.query import cuckoo_contains_join
     supp = _read(spark, sf_dir, "supplier")
     n_shards = 4

@@ -29,11 +29,16 @@ every per-kind step is a lookup into the registry in ``sketches.py``.
   associativity makes the tree shape irrelevant to the result.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
-``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`: phase 1 only
-*hashes* elements (pure, parallel, vectorized), then elements shuffle to
-their (key, shard) and a single task per shard runs the sequential
-kernel. Sharding is the scale path: membership routes to the owning
-shard by the same hash, so N shards build and probe in parallel.
+``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`. It runs on the
+same sorted stream: phase 1 only *hashes* elements (pure, parallel,
+vectorized) and packs each partition's hashes per (key, shard) into one
+partial row, empty shards included; phase 2 sorts the partials by
+(key, shard, ``partition_id``) and builds each shard with one
+sequential-kernel call over its hashes in input order. Removals and the
+shard-routed probe joins stream one union of state rows and hash rows,
+sorted so each shard's state row comes first. Sharding is the scale
+path: membership routes to the owning shard by the same hash, so N
+shards build and probe in parallel.
 
 Element extraction is Arrow-native: list columns are flattened via
 offset arithmetic (zero-copy), strings/binaries hashed through
@@ -46,23 +51,22 @@ first, so hashing and folding cost O(distinct), not O(elements).
 from __future__ import annotations
 
 import warnings
-from typing import Iterator, NamedTuple
+from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, BooleanType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from gostatix_spark import hashing, params, sketches
 from gostatix_spark.kernels import bloom, cuckoo, hll, topk
 from gostatix_spark.sketches import Sketch as _Spec
 from gostatix_spark.sketches import merge as merge_sketch_states
-from gostatix_spark.state import (BloomState, CuckooState, binary_buffers,
-                                  sketch_from_bytes)
+from gostatix_spark.state import (BloomState, CuckooState, binary_array,
+                                  binary_buffers, sketch_from_bytes)
 
 __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
            "cuckoo_apply_removals", "bloom_build_sharded",
@@ -388,8 +392,7 @@ def _build_partials(df: DataFrame, jobs: list[_Job],
                    for c in (j.value_col, j.key_col, j.weight_col) if c})
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        pid = _partition_id()
         if pid in skip_partitions:
             # resume path: this partition's partial is already checkpointed
             # (real deployments prune at the source/manifest level instead)
@@ -420,6 +423,11 @@ def _build_partials(df: DataFrame, jobs: list[_Job],
                 out, schema=_to_arrow_schema(out_schema)).to_batches()
 
     return df.select(*cols).mapInArrow(fn, out_schema)
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+    return TaskContext.get().partitionId() if TaskContext.get() else -1
 
 
 def _to_arrow_schema(st: StructType) -> pa.Schema:
@@ -672,58 +680,166 @@ def multi_sketch_agg(df: DataFrame, jobs: list[dict],
     return _merge_partials(partials, ["sketch_name", "key"], tree_fanout)
 
 
-def _element_hashes_df(df: DataFrame, value_col: str, key_col: str | None,
-                       element: str, n_shards: int) -> DataFrame:
-    """Phase-1 hash extraction shared by the cuckoo build / remove / probe
-    paths: ``[key?, h1 long, shard int, _real bool]`` where ``shard =
-    shard_of(h1, n_shards)`` (splitmix-mixed — see
-    :func:`gostatix_spark.hashing.shard_of`; raw ``h1 % n_shards`` would
-    share low bits with the in-filter addressing ``i1 = h1 % size``,
-    leaving only 1/n_shards of each shard's buckets reachable).
-    ``_real`` is always TRUE here; sentinel rows union FALSE."""
-    key_cols = [key_col] if key_col else []
-    hash_schema = StructType(
-        ([df.schema[key_col]] if key_col else [])
-        + [StructField("h1", LongType(), False),
-           StructField("shard", IntegerType(), False),
-           StructField("_real", BooleanType(), False)])
+# ---------------------------------------------------------------------------
+# the cuckoo engine: packed hash partials, then sorted (key?, shard) runs
+# ---------------------------------------------------------------------------
 
-    def hash_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+# bytes of states or packed hashes per output Arrow batch
+_FLUSH_BYTES = 1 << 26
+
+
+def _hash_partials(df: DataFrame, value_col: str, key_col: str | None,
+                   element: str, n_shards: int,
+                   every_shard: bool) -> DataFrame:
+    """Phase 1 of the cuckoo paths: one ``mapInArrow`` that hashes each
+    batch and emits one packed partial per (partition, key?, shard):
+    ``[key?, shard int, h1 binary, n_items long, partition_id int]``.
+    ``h1`` holds the partial's murmur3 h1 values as little-endian
+    uint64s in row order; ``shard = shard_of(h1, n_shards)``
+    (splitmix-mixed — see :func:`gostatix_spark.hashing.shard_of`; raw
+    ``h1 % n_shards`` would share low bits with the in-filter addressing
+    ``i1 = h1 % size``, leaving only 1/n_shards of each shard's buckets
+    reachable). ``every_shard`` also emits the empty partials: every
+    shard of every key the partition saw, or of the build when it is
+    keyless, so that every (key?, shard) the input owns gets a state.
+    A null key is a key."""
+    schema = StructType(
+        ([df.schema[key_col]] if key_col else [])
+        + [StructField("shard", IntegerType(), False),
+           StructField("h1", BinaryType(), False),
+           StructField("n_items", LongType(), False),
+           StructField("partition_id", IntegerType(), False)])
+    arrow_schema = _to_arrow_schema(schema)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pid = _partition_id()
+        parts: dict = {}  # (key, shard) → h1 arrays in row order
+        keys: dict = {} if key_col else {None: None}  # an ordered set
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            h1, _, rowmap = extract_hashes(batch.column(value_col), element,
-                                           "murmur3")
-            cols = {"h1": pa.array(h1.astype(np.int64)),
-                    "shard": pa.array(
-                        hashing.shard_of(h1, n_shards).astype(np.int32)),
-                    "_real": pa.array(np.ones(len(h1), dtype=bool))}
+            b = _Batch(batch)
+            h1, _, rowmap = b.hashes(value_col, element, "murmur3")
+            codes, uniques = np.zeros(batch.num_rows, np.int64), [None]
             if key_col:
-                karr = batch.column(key_col)
-                if rowmap is not None:
-                    karr = karr.take(pa.array(rowmap))
-                cols[key_col] = karr
-            yield pa.RecordBatch.from_pydict(
-                {f.name: cols[f.name] for f in hash_schema.fields},
-                schema=_to_arrow_schema(hash_schema))
+                codes, uniques, _ = b.keys(key_col)
+                uniques = uniques + [None]  # code -1, the null key
+                keys.update(dict.fromkeys(
+                    uniques[c] for c in np.unique(codes).tolist()))
+            group = (codes if rowmap is None else codes[rowmap]) * n_shards \
+                + hashing.shard_of(h1, n_shards)
+            order = np.argsort(group, kind="stable")
+            ids, starts = np.unique(group[order], return_index=True)
+            ends = np.append(starts[1:], len(order))
+            for g, lo, hi in zip(ids.tolist(), starts, ends):
+                parts.setdefault((uniques[g // n_shards], g % n_shards),
+                                 []).append(h1[order[lo:hi]])
+        if every_shard:
+            for key in keys:
+                for shard in range(n_shards):
+                    parts.setdefault((key, shard), [])
+        rows = []
+        for (key, shard), arrays in parts.items():
+            h = np.concatenate(arrays or [np.zeros(0)]).astype(
+                "<u8", copy=False).view(np.uint8)
+            rows.append(((key,) if key_col else ())
+                        + (shard, h, len(h) // 8, pid))
+        yield from _row_batches(rows, arrow_schema, "h1")
 
-    return df.select(*key_cols, value_col).mapInArrow(hash_fn, hash_schema)
+    return df.select(*(c for c in dict.fromkeys((key_col, value_col)) if c)) \
+        .mapInArrow(fn, schema)
 
 
-def _shard_sentinels(df: DataFrame, key_col: str | None,
-                     n_shards: int) -> DataFrame:
-    """One ``_real=FALSE`` row per (key?, shard) so groupBy emits a state
-    row even for shards that received zero elements — probes route by
-    ``shard_of`` and a missing shard would misindex every lookup."""
-    spark = df.sparkSession
-    shards = spark.range(n_shards).select(
-        F.col("id").cast("int").alias("shard"))
-    base = (df.select(key_col).distinct().crossJoin(shards)
-            if key_col else shards)
-    return (base
-            .withColumn("h1", F.lit(0).cast("long"))
-            .withColumn("_real", F.lit(False))
-            .select(*([key_col] if key_col else []), "h1", "shard", "_real"))
+def _row_batches(rows: Iterable[tuple], schema: pa.Schema,
+                 blob: str) -> Iterator[pa.RecordBatch]:
+    """Rows (tuples in ``schema`` order) as Arrow batches holding about
+    ``_FLUSH_BYTES`` of the bytes-like column ``blob`` each. That column
+    is built by ``state.binary_array``, so a batch whose values pass
+    int32 offsets raises instead of wrapping."""
+    j = schema.get_field_index(blob)
+    pending, size = [], 0
+    for row in rows:
+        pending.append(row)
+        size += len(row[j])
+        if size >= _FLUSH_BYTES:
+            yield _rows_batch(pending, schema, j)
+            pending, size = [], 0
+    if pending:
+        yield _rows_batch(pending, schema, j)
+
+
+def _rows_batch(rows: list[tuple], schema: pa.Schema, j: int) -> pa.RecordBatch:
+    cols = list(zip(*rows))
+    lens = np.fromiter(map(len, cols[j]), np.int64, len(rows))
+    arrays = [pa.array(c, type=f.type) if i != j else binary_array(
+                  np.frombuffer(b"".join(c), np.uint8),
+                  np.concatenate(([0], np.cumsum(lens))))
+              for i, (c, f) in enumerate(zip(cols, schema))]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _run_pieces(batches: Iterator[pa.RecordBatch], cols: list[str]):
+    """Cut a stream sorted by ``cols`` at each run start. Yields
+    ``(piece, run key, new)`` where ``piece`` is a slice of one batch,
+    the run key is its ``cols`` values as a tuple, and ``new`` tells
+    whether the piece opens a run or continues the one before it, across
+    batches too."""
+    last = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        bounds = np.append(np.flatnonzero(_run_starts(batch, cols)),
+                           batch.num_rows).tolist()
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            key = tuple(batch.column(c)[lo].as_py() for c in cols)
+            yield batch.slice(lo, hi - lo), key, key != last
+            last = key
+
+
+def _runs(batches: Iterator[pa.RecordBatch], cols: list[str]):
+    """``(run key, pieces)`` of each run of a stream sorted by ``cols``."""
+    key, pieces = None, []
+    for piece, k, new in _run_pieces(batches, cols):
+        if new and pieces:
+            yield key, pieces
+            pieces = []
+        key = k
+        pieces.append(piece)
+    if pieces:
+        yield key, pieces
+
+
+def _packed_hashes(pieces: list[pa.RecordBatch]) -> np.ndarray:
+    """The uint64 hashes packed in the ``h1`` column of ``pieces``, in
+    row order."""
+    chunks = []
+    for p in pieces:
+        if p.num_rows:
+            values, offsets = binary_buffers(p.column("h1"))
+            chunks.append(values[offsets[0]:offsets[-1]])
+    return np.concatenate(chunks or [np.zeros(0, np.uint8)]).view("<u8")
+
+
+def _tagged_union(states: DataFrame, other: DataFrame,
+                  group_cols: list[str]) -> DataFrame:
+    """``states`` rows (``_side`` 0) and ``other`` rows (``_side`` 1) in
+    one frame, hash partitioned by ``group_cols`` and sorted so that each
+    run of equal ``group_cols`` starts with its state row, then the
+    other side in ``partition_id`` order where it has one. Each side
+    carries only its own columns; the other side's are null."""
+    cols = {c: states.schema[c].dataType for c in states.columns}
+    cols.update({c: other.schema[c].dataType for c in other.columns
+                 if c not in cols})
+
+    def side(df: DataFrame, tag: int) -> DataFrame:
+        return df.select(F.lit(tag).cast("int").alias("_side"), *(
+            (F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
+            for c, t in cols.items()))
+
+    order = ["partition_id"] if "partition_id" in cols else []
+    return (side(states, 0).unionByName(side(other, 1))
+            .repartition(*group_cols)
+            .sortWithinPartitions(*group_cols, "_side", *order))
 
 
 def cuckoo_shard_size(n_rows: int, n_shards: int, bucket_size: int = 4) -> int:
@@ -748,17 +864,25 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
                  seed: int = 42) -> DataFrame:
     """Distributed cuckoo-filter build (SURVEY.md §3.3).
 
-    Phase 1 (parallel, vectorized): hash every element. Phase 2: shuffle
-    the 8-byte hashes to their (key, shard) and run the sequential
-    insert kernel once per shard — the kernel itself is numpy-array
-    based. ``n_shards > 1`` splits each key's filter into independent
-    shards by ``shard_of(h1)``; lookups and removals route the same way
+    Phase 1 (parallel, vectorized): one ``mapInArrow`` hashes every
+    element and packs each partition's hashes per (key, shard) into one
+    partial row. Phase 2: the partials are hash partitioned by (key,
+    shard), sorted by (key, shard, ``partition_id``), and one
+    ``mapInArrow`` call per shuffle partition concatenates each run's
+    hashes and inserts them with one ``bulk_insert_hashes`` call. The
+    kick loop depends on insertion order, and that order is the input's:
+    partition order, then row order.
+
+    ``n_shards > 1`` splits each key's filter into independent shards
+    by ``shard_of(h1)``; lookups and removals route the same way
     (:func:`gostatix_spark.query.cuckoo_contains`,
     :func:`cuckoo_apply_removals`), so build, delete and probe
     parallelize across shards. Size is rounded to a power of two so the
     XOR partner map is involutive (policy SURVEY.md §1.6.5). Every
-    shard emits a row even when empty (zero-element shards are states,
-    not absent rows).
+    (key, shard) emits a row even when empty: each input partition
+    emits a partial for every shard of every key it holds (of the build,
+    when keyless). An input with no partitions at all (``range(0)``, or
+    a filter the optimizer proves empty) runs no task and emits nothing.
 
     ``size`` is the per-shard bucket count when given; else it is
     derived from the expected element count ``n`` (pass it when known —
@@ -778,29 +902,36 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
     if fp_len is None:
         fp_len = params.cuckoo_fingerprint_length(size, eps)
 
-    key_cols = [key_col] if key_col else []
-    hashes = _element_hashes_df(df, value_col, key_col, element, n_shards) \
-        .unionByName(_shard_sentinels(df, key_col, n_shards))
+    run_cols = ([key_col] if key_col else []) + ["shard"]
+    partials = _hash_partials(df, value_col, key_col, element, n_shards,
+                              every_shard=True)
+    schema = _cuckoo_schema(partials, key_col)
+    arrow_schema = _to_arrow_schema(schema)
 
-    out_schema = StructType(
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def states():
+            for key, pieces in _runs(batches, run_cols):
+                h1 = _packed_hashes(pieces)
+                f = cuckoo.CuckooFilter(size, bucket_size, fp_len, retries,
+                                        seed=seed)
+                f.bulk_insert_hashes(h1)
+                yield key + (CuckooState(size, bucket_size, fp_len, retries,
+                                         f.length, f.buckets).to_bytes(),
+                             len(h1))
+        yield from _row_batches(states(), arrow_schema, "state")
+
+    return (partials.repartition(*run_cols)
+            .sortWithinPartitions(*run_cols, "partition_id")
+            .mapInArrow(build, schema))
+
+
+def _cuckoo_schema(df: DataFrame, key_col: str | None) -> StructType:
+    """``[key?, shard, state, n_items]``: cuckoo build output."""
+    return StructType(
         ([df.schema[key_col]] if key_col else [])
         + [StructField("shard", IntegerType(), False),
            StructField("state", BinaryType(), False),
            StructField("n_items", LongType(), False)])
-
-    def build_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        real = pdf[pdf["_real"]]
-        h1 = real["h1"].to_numpy().astype(np.int64).view(np.uint64)
-        f = cuckoo.CuckooFilter(size, bucket_size, fp_len, retries, seed=seed)
-        f.bulk_insert_hashes(h1)
-        st = CuckooState(size, bucket_size, fp_len, retries, f.length, f.buckets)
-        row = {"shard": int(pdf["shard"].iloc[0]),
-               "state": st.to_bytes(), "n_items": len(h1)}
-        for kc in key_cols:
-            row[kc] = pdf[kc].iloc[0]
-        return pd.DataFrame([row])
-
-    return hashes.groupBy(*key_cols, "shard").applyInPandas(build_fn, out_schema)
 
 
 def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
@@ -808,53 +939,52 @@ def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
                           key_col: str | None = None,
                           element: str | None = None) -> DataFrame:
     """Distributed ``Remove`` (``cuckoo_filter.go:128-144``) over a
-    sharded build: hash the removal elements (vectorized, parallel),
-    route each to its owning shard by the build's ``shard_of`` rule,
-    and apply the vectorized batch-remove kernel inside a cogrouped
-    ``applyInPandas`` — one task per (key?, shard), no element ever
-    touches the driver.
+    sharded build: hash the removal elements into packed partials per
+    (partition, key?, shard), as :func:`cuckoo_build` does, and union
+    them with the state rows, tagged by side. The union is hash
+    partitioned by (key?, shard) and sorted so that each run opens with
+    its state row, followed by its hashes in partition order; one
+    ``mapInArrow`` call per shuffle partition applies the vectorized
+    batch-remove kernel to each run. No element ever touches the
+    driver.
 
     ``states`` is :func:`cuckoo_build` output; ``removals`` is any
     DataFrame with ``value_col`` (and ``key_col`` when the build was
     keyed). ``n_shards`` must equal the build's. Returns the same
     ``[key?, shard, state, n_items]`` shape with removals applied
     (``n_items`` decremented by the count actually removed — absent
-    elements are no-ops, as in the reference)."""
+    elements are no-ops, as in the reference). Removals routed to a
+    (key?, shard) with no state row change nothing and emit nothing."""
     element = infer_element(removals, value_col, element)
-    key_cols = [key_col] if key_col else []
-    hashes = _element_hashes_df(removals, value_col, key_col, element,
-                                n_shards)
-    out_schema = StructType(
-        ([states.schema[key_col]] if key_col else [])
-        + [StructField("shard", IntegerType(), False),
-           StructField("state", BinaryType(), False),
-           StructField("n_items", LongType(), False)])
-    out_cols = key_cols + ["shard", "state", "n_items"]
+    run_cols = ([key_col] if key_col else []) + ["shard"]
+    hashes = _hash_partials(removals, value_col, key_col, element, n_shards,
+                            every_shard=False)
+    schema = _cuckoo_schema(states, key_col)
+    arrow_schema = _to_arrow_schema(schema)
 
-    def apply_fn(spdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(spdf):
-            # removals routed to a (key, shard) with no built state:
-            # nothing to remove from
-            return pd.DataFrame(columns=out_cols)
-        st: CuckooState = sketch_from_bytes(bytes(spdf["state"].iloc[0]))
-        f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
-                                st.retries, buckets=st.buckets,
-                                length=st.length)
-        n_removed = 0
-        if len(rpdf):
-            h1 = rpdf["h1"].to_numpy().astype(np.int64).view(np.uint64)
-            n_removed = int(f.bulk_remove_hashes(h1).sum())
-        new = CuckooState(st.size, st.bucket_size, st.fp_len, st.retries,
-                          f.length, f.buckets)
-        row = {"shard": int(spdf["shard"].iloc[0]), "state": new.to_bytes(),
-               "n_items": int(spdf["n_items"].iloc[0]) - n_removed}
-        for kc in key_cols:
-            row[kc] = spdf[kc].iloc[0]
-        return pd.DataFrame([row])
+    def apply(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def states_out():
+            for key, pieces in _runs(batches, run_cols):
+                head = pieces[0]
+                if head.column("_side")[0].as_py() != 0:
+                    continue  # no state for this (key?, shard)
+                st = sketch_from_bytes(head.column("state")[0].as_py())
+                side = [p.filter(pc.equal(p.column("_side"), 1))
+                        for p in pieces]
+                h1 = _packed_hashes(side)
+                f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
+                                        st.retries, buckets=st.buckets,
+                                        length=st.length)
+                n_removed = int(f.bulk_remove_hashes(h1).sum())
+                new = CuckooState(st.size, st.bucket_size, st.fp_len,
+                                  st.retries, f.length, f.buckets)
+                yield key + (new.to_bytes(),
+                             head.column("n_items")[0].as_py() - n_removed)
+        yield from _row_batches(states_out(), arrow_schema, "state")
 
-    return (states.groupBy(*key_cols, "shard")
-            .cogroup(hashes.groupBy(*key_cols, "shard"))
-            .applyInPandas(apply_fn, out_schema))
+    return (_tagged_union(states.select(*run_cols, "state", "n_items"),
+                          hashes.drop("n_items"), run_cols)
+            .mapInArrow(apply, schema))
 
 
 def bloom_build_sharded(df: DataFrame, value_col: str, *,
@@ -888,8 +1018,7 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
         StructField("rows_consumed", LongType(), False)])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        pid = _partition_id()
         words = [bloom.new_state(m) for _ in range(n_shards)]
         items = np.zeros(n_shards, dtype=np.int64)
         rows = 0

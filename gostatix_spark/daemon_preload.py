@@ -21,8 +21,16 @@ at the start of every task, and on CPython 3.11 each of the ~16
 zipimporters over ``pyspark.zip`` then re-reads the archive's whole
 central directory (1,328 entries in pyspark 4.1.2).
 
-Both steps are best-effort: a missing optional module must never stop
-the daemon from coming up (worker creation would fail cluster-wide).
+Before any of that, the daemon sets ``OPENBLAS_NUM_THREADS=1`` unless
+the environment already has a value: a Spark task is one thread of an
+executor that runs a task per core, and numpy's BLAS would otherwise
+start a thread per host CPU in every worker. OpenBLAS reads the
+variable once, when numpy loads it, and only the daemon and the workers
+it forks see the change.
+
+The preload and the guard are best-effort: a missing optional module
+must never stop the daemon from coming up (worker creation would fail
+cluster-wide).
 Failures are written to stderr — stdout carries the daemon's port
 handshake — so a dead entry in the preload list is visible in the
 executor log rather than silently losing the optimization.
@@ -89,6 +97,7 @@ def install_zip_guard() -> None:
 
 
 def _preload() -> None:
+    os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
     for mod in PRELOAD:
         try:
             importlib.import_module(mod)

@@ -21,6 +21,7 @@ import json
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
@@ -499,34 +500,41 @@ def _probe_hashes_df(probes: DataFrame, value_col: str, element: str,
 def _contains_join(states: DataFrame, probes: DataFrame, value_col: str,
                    element: str, n_shards: int, algo: str,
                    lookup_fn, out_col: str) -> DataFrame:
-    """Shared shard-routed membership join: probes shuffle (by shard)
-    to wherever their owning shard's state row lands; a cogrouped
-    applyInPandas runs the vectorized lookup. This is the probe path
-    for filter sets too large to broadcast (e.g. 4096 cuckoo shards ×
-    GBs): each task holds ONE shard's state + its probes, nothing is
-    collected or broadcast. Returns ``[value_col, out_col]``."""
+    """Shared shard-routed membership join, the probe path for filter
+    sets too large to broadcast (e.g. 4096 cuckoo shards × GBs): the
+    state rows and the probe hashes go into one union, tagged by side,
+    hash partitioned by shard and sorted so that each shard's state row
+    comes first; one ``mapInArrow`` call per shuffle partition looks up
+    each shard's probes, batch by batch, against that state. Nothing is
+    collected or broadcast. A probe whose shard has no state row (the
+    states frame was filtered) reads ``false``: nothing was inserted
+    there. Returns ``[value_col, out_col]``, one row per probe."""
+    from gostatix_spark.agg import _run_pieces, _tagged_union, _to_arrow_schema
+
     out_schema = StructType([probes.schema[value_col],
                              StructField(out_col, BooleanType(), False)])
+    arrow_schema = _to_arrow_schema(out_schema)
     hashes = _probe_hashes_df(probes, value_col, element, n_shards, algo)
 
-    def apply_fn(spdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(ppdf):
-            return pd.DataFrame(columns=[value_col, out_col])
-        if not len(spdf):
-            # no state row for this shard: builds emit every shard, so
-            # this means the states side was filtered — treat as empty
-            # filter (nothing was inserted there)
-            return pd.DataFrame({value_col: ppdf[value_col],
-                                 out_col: np.zeros(len(ppdf), dtype=bool)})
-        st = sketch_from_bytes(bytes(spdf["state"].iloc[0]))
-        h1 = ppdf["h1"].to_numpy().astype(np.int64).view(np.uint64)
-        h2 = ppdf["h2"].to_numpy().astype(np.int64).view(np.uint64)
-        return pd.DataFrame({value_col: ppdf[value_col],
-                             out_col: lookup_fn(st, h1, h2)})
+    def probe(batches):
+        st = None
+        for piece, _, new in _run_pieces(batches, ["shard"]):
+            side = piece.column("_side")
+            if new:
+                st = (sketch_from_bytes(piece.column("state")[0].as_py())
+                      if side[0].as_py() == 0 else None)
+            rows = piece.filter(pc.equal(side, 1))
+            if not rows.num_rows:
+                continue
+            h1, h2 = (rows.column(c).to_numpy(zero_copy_only=False)
+                      .astype(np.int64).view(np.uint64) for c in ("h1", "h2"))
+            hit = (lookup_fn(st, h1, h2) if st is not None
+                   else np.zeros(rows.num_rows, dtype=bool))
+            yield pa.RecordBatch.from_arrays(
+                [rows.column(value_col), pa.array(hit)], schema=arrow_schema)
 
-    return (states.groupBy("shard")
-            .cogroup(hashes.groupBy("shard"))
-            .applyInPandas(apply_fn, out_schema))
+    return (_tagged_union(states.select("shard", "state"), hashes, ["shard"])
+            .mapInArrow(probe, out_schema))
 
 
 def cuckoo_contains_join(states: DataFrame, probes: DataFrame,
@@ -534,7 +542,7 @@ def cuckoo_contains_join(states: DataFrame, probes: DataFrame,
                          element: str | None = None,
                          out_col: str = "contained") -> DataFrame:
     """Broadcast-free cuckoo membership: route probes to shards by the
-    build's rule and look up inside a cogrouped task — the scale path
+    build's rule and look up next to the shard's state — the scale path
     past ~10 GB of total filter state where :func:`cuckoo_contains`'s
     broadcast stops being viable. ``states`` is raw
     :func:`gostatix_spark.agg.cuckoo_build` (or

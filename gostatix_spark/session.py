@@ -19,6 +19,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# glibc's mmap and trim thresholds for the JVM and the Python workers.
+# Arrow/netty direct buffers and numpy batch arrays above the default
+# ~128 KB threshold otherwise go through mmap/munmap on EVERY alloc/free
+# cycle; with 32 task threads that serializes on the kernel's mmap_lock
+# — measured as 50+ s of system time on a single keyed-sketch query,
+# plus hypervisor steal from the TLB-shootdown storm (guide §5: memory
+# behavior is part of the operator's cost). Serving those from the arena
+# instead cut the suite's sys time 5-8× on the heavy queries. Trade-off:
+# freed arena memory is retained up to the trim threshold (RSS grows
+# toward the high-water mark) — right for a dedicated executor host. A
+# value already in the environment wins.
+_MALLOC_ENV = {"MALLOC_MMAP_THRESHOLD_": str(512 * 1024 * 1024),
+               "MALLOC_TRIM_THRESHOLD_": str(512 * 1024 * 1024)}
+
 
 def get_spark(app: str = "gostatix-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -36,22 +50,20 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
     mechanism container runtimes use for a real N-core executor.
     ``local[N]`` alone caps only task slots; the JVM's service threads
     otherwise assume all 32 host CPUs. Only honored at JVM launch (the
-    first session in a process)."""
-    # Pin glibc's mmap threshold before the JVM (and, transitively, the
-    # python worker daemon) is launched. Arrow/netty direct buffers and
-    # numpy batch arrays above the default ~128 KB threshold otherwise
-    # go through mmap/munmap on EVERY alloc/free cycle; with 32 task
-    # threads that serializes on the kernel's mmap_lock — measured here
-    # as 50+ s of system time on a single keyed-sketch query, plus
-    # hypervisor steal from the TLB-shootdown storm (guide §5: memory
-    # behavior is part of the operator's cost). Serving those from the
-    # arena instead cut the suite's sys time 5-8× on the heavy queries.
-    # Trade-off: freed arena memory is retained up to the trim
-    # threshold (RSS grows toward the high-water mark) — right for a
-    # dedicated executor host, overridable via the environment.
-    for _var, _val in (("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024)),
-                       ("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))):
-        os.environ.setdefault(_var, _val)
+    first session in a process).
+
+    Python workers talk to the JVM over a Unix domain socket
+    (``spark.python.unix.domain.socket.enabled``), not loopback TCP.
+    The socket files live in the JVM's ``java.io.tmpdir``, or in
+    ``spark.python.unix.domain.socket.dir`` when that is set. A socket
+    path is that directory plus a 43-byte file name, and Linux caps it
+    at 107 bytes: with a directory longer than 64 bytes the session
+    fails to start (``OSError: AF_UNIX path too long``). Point
+    ``java.io.tmpdir`` or the socket directory somewhere shorter.
+
+    The glibc malloc thresholds in ``_MALLOC_ENV`` are set only while
+    the JVM launches, so the JVM and the worker daemon inherit them;
+    the caller's ``os.environ`` is left as it was."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -92,9 +104,26 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
                     + ([os.environ["PYTHONPATH"]]
                        if os.environ.get("PYTHONPATH") else [])))
         .config("spark.ui.enabled", "false")
+        # Python workers talk to the JVM over a Unix domain socket: over
+        # loopback TCP each task waited ~40 ms (Linux's delayed-ACK
+        # timer) for its first Arrow batch; over the socket, ~1 ms
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     if active_processors is not None:
         builder = builder.config(
             "spark.driver.extraJavaOptions",
             f"-XX:ActiveProcessorCount={int(active_processors)}")
-    return builder.getOrCreate()
+    # The JVM and the Python worker daemon copy their environment when
+    # they start, so the malloc settings are set only around the launch
+    # and the caller's values are put back after it.
+    saved = {var: os.environ.get(var) for var in _MALLOC_ENV}
+    for var, val in _MALLOC_ENV.items():
+        os.environ.setdefault(var, val)
+    try:
+        return builder.getOrCreate()
+    finally:
+        for var, val in saved.items():
+            if val is None:
+                os.environ.pop(var, None)
+            else:
+                os.environ[var] = val

@@ -90,19 +90,21 @@ def test_bloom_sharded_single_exchange(spark):
         == {"doc_id"}
 
 
-def test_cuckoo_removals_cogroup_no_extra_exchange(spark):
-    """Build + removals: each side shuffles once to its (shard) group;
-    the cogrouped apply adds no further Exchange, and no element-sized
-    collect appears (everything stays as DataFrame ops)."""
+def test_cuckoo_removals_sorted_stream_no_extra_exchange(spark):
+    """Build + removals: the build shuffles its hash partials once to
+    (shard); the removals shuffle the union of the states and their own
+    hash partials once more; both run as sorted-stream MapInArrow calls,
+    with no grouped-map node, and no element-sized collect appears
+    (everything stays as DataFrame ops)."""
     from gostatix_spark.agg import cuckoo_apply_removals, cuckoo_build
     supp = spark.read.parquet(f"{SF}/supplier.parquet")
     states = cuckoo_build(supp, "s_suppkey", n_shards=4, eps=0.01)
     removals = supp.where("s_suppkey % 2 = 0").select("s_suppkey")
     after = cuckoo_apply_removals(states, removals, "s_suppkey", n_shards=4)
     plan = _plan(after)
-    # one Exchange per cogroup side for the states (build: hashes →
-    # shard groups) and one for the removal hashes
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "MapInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
     assert plan.count("Exchange") <= 3, plan
 
 

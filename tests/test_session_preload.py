@@ -5,6 +5,7 @@ the daemon, so a UDF observes them in sys.modules before importing
 anything itself."""
 from __future__ import annotations
 
+import pytest
 import pyspark.sql.functions as F
 
 
@@ -133,3 +134,67 @@ def test_preload_failures_go_to_stderr(monkeypatch, capsys):
     out, err = capsys.readouterr()
     assert out == ""
     assert "cannot preload gostatix_spark.no_such_mod" in err
+
+
+def _start_env() -> dict:
+    """The environment this process was started with."""
+    with open("/proc/self/environ", "rb") as f:
+        return dict(kv.decode(errors="replace").split("=", 1)
+                    for kv in f.read().split(b"\0") if b"=" in kv)
+
+
+def _worker_env(spark, names: list[str]) -> dict:
+    """``names`` as a ``mapInArrow`` worker sees them ('' when unset)."""
+    import pyarrow as pa
+
+    def fn(batches):
+        import os
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"name": names, "value": [os.environ.get(n, "") for n in names]})
+
+    return {r["name"]: r["value"] for r in spark.range(1, numPartitions=1)
+            .mapInArrow(fn, "name string, value string").collect()}
+
+
+def test_malloc_env_reaches_workers_not_driver(spark):
+    import os
+
+    from gostatix_spark.session import _MALLOC_ENV, get_spark
+    start = _start_env()
+    before = dict(os.environ)
+    assert get_spark("gostatix-tests", cores=4, shuffle_partitions=8) is spark
+    assert dict(os.environ) == before
+    seen = _worker_env(spark, list(_MALLOC_ENV))
+    for var, val in _MALLOC_ENV.items():
+        # the session's launch left the driver's value as it started
+        assert os.environ.get(var) == start.get(var), var
+        assert seen[var] == start.get(var, val), var
+
+
+def test_workers_run_one_openblas_thread(spark):
+    start = _start_env()
+    got = _worker_env(spark, ["OPENBLAS_NUM_THREADS"])
+    assert got["OPENBLAS_NUM_THREADS"] == start.get("OPENBLAS_NUM_THREADS",
+                                                    "1")
+
+
+@pytest.mark.parametrize("user, want", [(None, "1"), ("3", "3")])
+def test_daemon_keeps_a_user_openblas_setting(user, want):
+    import os
+    import subprocess
+    import sys
+
+    import gostatix_spark
+    env = {k: v for k, v in os.environ.items()
+           if k != "OPENBLAS_NUM_THREADS"}
+    if user is not None:
+        env["OPENBLAS_NUM_THREADS"] = user
+    env["PYTHONPATH"] = os.path.dirname(os.path.dirname(
+        os.path.abspath(gostatix_spark.__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", "import os, gostatix_spark.daemon_preload;"
+         " print(os.environ['OPENBLAS_NUM_THREADS'])"],
+        env=env, capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == want

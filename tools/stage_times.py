@@ -10,7 +10,17 @@ by one row per stage that job ran: wall seconds, task count, summed task
 seconds, the Python workers' run and init seconds (init = "time to
 start" + "time to initialize Python workers"), and the plan node names
 of the stage. With JOB_DESC_PREFIX, only jobs whose description
-(``SparkContext.setJobDescription``) starts with it are printed.
+(``SparkContext.setJobDescription``, else its call site) starts with
+it are printed.
+
+It then prints the driver split of each SQL execution (the
+``SQLExecutionStart``/``End`` events, and each job's
+``spark.sql.execution.id``): its wall seconds and job count; planning,
+from the execution's start to its first job; the gaps between its
+jobs, where adaptive execution re-plans; the tail, from its last job's
+end to the execution's end; and the Python-side time before it, since
+the previous execution ended. The prefix filters executions by their
+description too.
 """
 from __future__ import annotations
 
@@ -20,6 +30,7 @@ import sys
 
 INIT = ("time to start Python workers", "time to initialize Python workers")
 RUN = "time to run Python workers"
+SQL = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecution"
 
 
 def read_events(log_dir: str) -> list[dict]:
@@ -57,17 +68,10 @@ def stage_table(events: list[dict], prefix: str = "") -> list[dict]:
     """Rows ``{job, stage, desc, wall_s, tasks, task_s, py_run_s,
     py_init_s, nodes}``; a job row has ``stage`` None and sums its
     stages' task columns."""
-    jobs, stages = {}, {}
+    jobs, stages = _jobs(events), {}
     for e in events:
         ev = e["Event"]
-        if ev == "SparkListenerJobStart":
-            desc = (e.get("Properties") or {}).get("spark.job.description")
-            jobs[e["Job ID"]] = {"start": e["Submission Time"] / 1e3,
-                                 "end": None, "desc": desc or "",
-                                 "stages": e["Stage IDs"]}
-        elif ev == "SparkListenerJobEnd" and e["Job ID"] in jobs:
-            jobs[e["Job ID"]]["end"] = e["Completion Time"] / 1e3
-        elif ev == "SparkListenerStageCompleted":
+        if ev == "SparkListenerStageCompleted":
             si = e["Stage Info"]
             st = stages.setdefault(si["Stage ID"], _stage())
             st["nodes"] = _node_names(si)
@@ -107,6 +111,72 @@ def stage_table(events: list[dict], prefix: str = "") -> list[dict]:
     return rows
 
 
+def _jobs(events: list[dict]) -> dict[int, dict]:
+    """Job id → ``{start, end, desc, stages, execution}``; ``desc`` is
+    the job description, else its call site; ``end`` is
+    None for a job that never ended and ``execution`` is the job's SQL
+    execution id, or None."""
+    jobs = {}
+    for e in events:
+        ev = e["Event"]
+        if ev == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            execution = props.get("spark.sql.execution.id")
+            jobs[e["Job ID"]] = {
+                "start": e["Submission Time"] / 1e3, "end": None,
+                "desc": (props.get("spark.job.description")
+                         or props.get("callSite.short") or ""),
+                "stages": e["Stage IDs"],
+                "execution": None if execution is None else int(execution)}
+        elif ev == "SparkListenerJobEnd" and e["Job ID"] in jobs:
+            jobs[e["Job ID"]]["end"] = e["Completion Time"] / 1e3
+    return jobs
+
+
+def execution_table(events: list[dict], prefix: str = "") -> list[dict]:
+    """Rows ``{execution, desc, wall_s, jobs, planning_s, gaps_s,
+    tail_s, py_before_s}``, one per finished SQL execution in start
+    order. ``gaps_s`` lists the idle time between consecutive jobs of
+    the execution; ``planning_s`` and ``tail_s`` are None, and
+    ``gaps_s`` empty, for an execution that ran no job;
+    ``py_before_s`` is None for the first execution."""
+    execs = {}
+    for e in events:
+        if e["Event"] == SQL + "Start":
+            execs[e["executionId"]] = {"start": e["time"] / 1e3, "end": None,
+                                       "desc": e.get("description") or ""}
+        elif e["Event"] == SQL + "End" and e["executionId"] in execs:
+            execs[e["executionId"]]["end"] = e["time"] / 1e3
+    spans: dict = {}
+    for job in _jobs(events).values():
+        if job["execution"] in execs and job["end"] is not None:
+            spans.setdefault(job["execution"], []).append(
+                (job["start"], job["end"]))
+    rows, prev_end = [], None
+    for eid, ex in sorted(execs.items(), key=lambda kv: kv[1]["start"]):
+        if ex["end"] is None:
+            continue
+        span = sorted(spans.get(eid, []))
+        gaps, busy_until = [], None
+        for start, end in span:
+            if busy_until is not None:
+                gaps.append(max(0.0, start - busy_until))
+            busy_until = end if busy_until is None else max(busy_until, end)
+        if ex["desc"].startswith(prefix):
+            rows.append({
+                "execution": eid, "desc": ex["desc"],
+                "wall_s": ex["end"] - ex["start"], "jobs": len(span),
+                "planning_s": span[0][0] - ex["start"] if span else None,
+                "gaps_s": gaps,
+                "tail_s": ex["end"] - busy_until if span else None,
+                "py_before_s": (None if prev_end is None
+                                else ex["start"] - prev_end)})
+        # nested executions (a subquery, a cached relation) end inside
+        # their parent's span: keep the latest end seen
+        prev_end = ex["end"] if prev_end is None else max(prev_end, ex["end"])
+    return rows
+
+
 def _stage() -> dict:
     return {"wall_s": float("nan"), "tasks": 0, "task_s": 0.0,
             "py_run_s": 0.0, "py_init_s": 0.0, "nodes": []}
@@ -116,8 +186,9 @@ def main() -> int:
     if len(sys.argv) not in (2, 3):
         print(__doc__.split("\n\n")[1], file=sys.stderr)
         return 2
-    rows = stage_table(read_events(sys.argv[1]),
-                       sys.argv[2] if len(sys.argv) == 3 else "")
+    events = read_events(sys.argv[1])
+    prefix = sys.argv[2] if len(sys.argv) == 3 else ""
+    rows = stage_table(events, prefix)
     print(f"{'job':>4} {'stage':>5} {'wall_s':>7} {'tasks':>5} "
           f"{'task_s':>7} {'py_run':>7} {'py_init':>7}  nodes / description")
     for r in rows:
@@ -126,7 +197,19 @@ def main() -> int:
         print(f"{r['job']:>4} {stage:>5} {r['wall_s']:7.3f} {r['tasks']:>5} "
               f"{r['task_s']:7.3f} {r['py_run_s']:7.3f} "
               f"{r['py_init_s']:7.3f}  {label}")
+    print()
+    print(f"{'exec':>4} {'wall_s':>7} {'jobs':>4} {'plan_s':>7} "
+          f"{'tail_s':>7} {'py_pre':>7}  AQE gaps between jobs / description")
+    for r in execution_table(events, prefix):
+        gaps = " ".join(f"{g:.3f}" for g in r["gaps_s"]) or "-"
+        print(f"{r['execution']:>4} {r['wall_s']:7.3f} {r['jobs']:>4} "
+              f"{_fmt(r['planning_s'])} {_fmt(r['tail_s'])} "
+              f"{_fmt(r['py_before_s'])}  [{gaps}] {r['desc'][:60]}")
     return 0
+
+
+def _fmt(v: float | None) -> str:
+    return f"{'-':>7}" if v is None else f"{v:7.3f}"
 
 
 if __name__ == "__main__":

@@ -799,22 +799,14 @@ def q_embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary columns under the hard gate: every document's
-    text is encoded into a REAL media payload — RIFF/WAVE PCM, zlib
-    'zraw', binary netpbm P5, baseline grayscale JPEG (pure-python
-    codec, kernels/jpeg.py — constant-block transport, bit-exact),
-    FLAC (pure-python subset codec, kernels/flac.py — CRC-8/CRC-16 +
-    STREAMINFO-MD5 verified, VERBATIM subframes, lossless), MJPEG
-    video in an AVI RIFF container (kernels/avi.py — playable
-    single-stream AVI, one constant-block JPEG per frame), or a real
-    H.264/AVC Annex-B stream (kernels/h264.py — SPS/PPS/IDR NALs,
-    emulation prevention, every macroblock I_PCM: the spec's
-    raw-sample mode, lossless), routed doc_id mod 7
-    (multimodal.py:text_assets) — decoded back through the validating
-    decode paths (each parses its actual container format and raises
-    on corrupt payloads), and pooled features are extracted
+    text is encoded into a REAL media payload — RIFF/WAVE PCM (stdlib
+    ``wave``), zlib 'zraw' or a binary netpbm P5 image, routed doc_id
+    mod 3 (multimodal.py:text_assets) — decoded back through the
+    validating decode paths (each parses its actual container format
+    and raises on corrupt payloads), and pooled features are extracted
     (decode_features). The oracle compares the DECODED text
     byte-for-byte against the source column, so a decode that
-    fabricates or truncates a single byte in ANY of the seven codecs
+    fabricates or truncates a single byte in ANY of the three codecs
     hash-mismatches."""
     from gostatix_spark import multimodal
     docs = _read(spark, sf_dir, "documents").repartition(32)

@@ -4,8 +4,8 @@ columns with typed metadata.
 The Spark-side plumbing (schema, batching, partition sizing, UDF
 signatures) is real and tested. Decoding has two tiers:
 
-* REAL decode paths — genuinely encoded, round-trippable bytes in
-  standard container formats, using only what this container ships:
+* REAL decode paths — genuinely encoded, round-trippable bytes, using
+  only the Python standard library and numpy:
 
   - ``wav`` — RIFF/WAVE PCM (8- or 16-bit mono) via the stdlib
     ``wave`` module: a real audio file any player/tool can open.
@@ -14,35 +14,12 @@ signatures) is real and tested. Decoding has two tiers:
   - ``zraw`` — zlib-compressed raw sample array (uint8 pixels / PCM
     bytes) whose shape lives in ``meta``; the minimal real codec used
     where no stdlib container exists (video sample streams).
-  - ``jpeg`` — baseline grayscale JFIF/JPEG via the pure-python
-    codec in :mod:`gostatix_spark.kernels.jpeg` (real markers,
-    Huffman entropy coding, DCT): lossy for general images, but the
-    constant-block transport (``jpeg.bytes_to_image``) is bit-exact,
-    which puts this leg under the byte-for-byte roundtrip oracle too.
 
-  - ``flac`` — real FLAC (fLaC magic, STREAMINFO with unencoded-MD5,
-    CRC-8/CRC-16-protected frames) via the pure-python subset codec
-    in :mod:`gostatix_spark.kernels.flac`: CONSTANT/VERBATIM
-    subframes, mono 8-bit — lossless by construction, so this leg
-    sits under the byte-for-byte roundtrip oracle too.
-  - ``mjpeg`` — real MJPEG video in a real AVI RIFF container
-    (:mod:`gostatix_spark.kernels.avi`: avih/strh/strf headers,
-    ``00dc`` frame chunks, idx1 index — plays in ffmpeg/VLC), one
-    baseline JPEG per frame via :mod:`gostatix_spark.kernels.jpeg`;
-    the constant-block frame transport is bit-exact, so this leg is
-    byte-oracled too.
-  - ``h264`` — real H.264/AVC Annex-B elementary stream
-    (:mod:`gostatix_spark.kernels.h264`: SPS/PPS/IDR NALs, Exp-Golomb
-    headers, emulation prevention) carrying every macroblock as
-    I_PCM — the spec's mandatory raw-sample mode, lossless by
-    construction, so this leg is byte-oracled too.
-
-* codec ``fake`` — a STUB for the lossy/predicted side of these
-  formats, which needs external libs (predicted/transform-coded
-  H.264, FLAC-with-prediction, color+progressive JPEG):
-  deterministic fake keyed on the payload bytes, clearly marked.
-  Swapping in torchaudio / pyav changes one entry in
-  :data:`DECODERS`, not the pipeline.
+* codec ``fake`` — a STUB for lossy and predicted image, audio and
+  video codecs, which need external libraries: deterministic fake
+  keyed on the payload bytes, clearly marked. Swapping in
+  torchaudio / pyav changes one entry in :data:`DECODERS`, not the
+  pipeline.
 
 Pattern: ``mapInPandas`` so one Python worker sees an iterator of
 row-batches and can bound its own memory (media rows are big — pair
@@ -81,9 +58,8 @@ def make_assets(spark, n: int, seed: int = 42, payload_bytes: int = 256,
     sample arrays — images are (h, w) uint8 pixel grids, audio/video
     are 1-D uint8 sample streams — with the shape recorded in ``meta``.
     ``codec='real'``: per-kind STANDARD container formats — images are
-    binary netpbm ``P5`` files, audio is RIFF/WAVE 16-bit PCM, video
-    is MJPEG in an AVI RIFF container (playable; H.264 remains the
-    declared stub).
+    binary netpbm ``P5`` files, audio is RIFF/WAVE 16-bit PCM, and
+    video (no stdlib container) stays ``zraw``.
     ``codec='fake'``: opaque pseudo-bytes for the stubbed decoders.
     """
     import zlib
@@ -120,10 +96,6 @@ def make_assets(spark, n: int, seed: int = 42, payload_bytes: int = 256,
                         meta = {"codec": "wav", "kind": kind,
                                 "n_samples": str(len(pcm))}
                         media = _wav_bytes(pcm)
-                    elif kind == "video" and codec == "real":
-                        meta = {"codec": "mjpeg", "kind": kind,
-                                "n_samples": str(payload_bytes)}
-                        media = _mjpeg_bytes(raw.tobytes())
                     else:
                         meta = {"codec": "zraw", "kind": kind,
                                 "n_samples": str(payload_bytes)}
@@ -143,36 +115,23 @@ def make_assets(spark, n: int, seed: int = 42, payload_bytes: int = 256,
 
 def text_assets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Encode REAL table content into the asset model: each row's text
-    bytes become the samples of a real media payload — ids ≡ 0 (mod 4)
+    bytes become the samples of a real media payload — ids ≡ 0 (mod 3)
     a RIFF/WAVE 8-bit PCM file (stdlib ``wave``; opens in any audio
     tool), ids ≡ 1 a zlib ``zraw`` stream, ids ≡ 2 a binary netpbm
-    ``P5`` image (1×len pixel row; opens in ImageMagick/GIMP), ids ≡ 3
-    a baseline grayscale JPEG (pure-python codec; bytes spread over
-    constant 8×8 blocks, the losslessly-codable representation — the
-    file opens in any image viewer), ids ≡ 4 a real FLAC file
-    (pure-python subset codec, VERBATIM subframes — lossless), ids ≡ 5
-    a real MJPEG AVI video (bytes chunked into constant-block JPEG
-    frames muxed into a RIFF AVI — the file plays in ffmpeg/VLC),
-    ids ≡ 6 a real H.264 Annex-B stream (bytes as I_PCM macroblock
-    luma — the spec's raw-sample mode; plays in any AVC decoder) —
-    with the sample count/shape in ``meta``. This is the encode half
-    of a genuinely round-trippable pipeline: decoding the assets must
-    reproduce the source column byte-for-byte, which puts ALL SEVEN
-    real codec paths (WAV container parse, zlib inflate, PGM header
-    parse, JPEG Huffman+IDCT, FLAC frame/CRC/MD5 verify, AVI
-    demux+per-frame JPEG decode, H.264 NAL/SPS/slice parse) under a
+    ``P5`` image (1×len pixel row; opens in ImageMagick/GIMP) — with
+    the sample count/shape in ``meta``. Empty text goes to ``zraw``
+    (P5/WAV need ≥1 sample). This is the encode half of a genuinely
+    round-trippable pipeline: decoding the assets must reproduce the
+    source column byte-for-byte, which puts all three real codec paths
+    (WAV container parse, zlib inflate, PGM header parse) under a
     DuckDB oracle (``__spark_entry__.q_multimodal_roundtrip``)."""
     def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
-
-        from gostatix_spark.kernels import flac as flac_kernel
-        from gostatix_spark.kernels import h264 as h264_kernel
-        from gostatix_spark.kernels import jpeg as jpeg_kernel
         for pdf in pdfs:
             rows = []
             for aid, t in zip(pdf[id_col], pdf[text_col]):
                 b = t.encode("utf-8")
-                route = int(aid) % 7 if b else 1  # P5/WAV need ≥1 sample
+                route = int(aid) % 3 if b else 1  # P5/WAV need ≥1 sample
                 meta = {"n_samples": str(len(b))}
                 if route == 0:
                     kind, codec = "audio", "wav"
@@ -182,22 +141,6 @@ def text_assets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                     media = _pgm_bytes(
                         np.frombuffer(b, dtype=np.uint8).reshape(1, len(b)))
                     meta = {"height": "1", "width": str(len(b))}
-                elif route == 3:
-                    kind, codec = "image", "jpeg"
-                    img, n = jpeg_kernel.bytes_to_image(b)
-                    media = jpeg_kernel.encode_gray(img)
-                    meta = {"n_samples": str(n), "transport": "blocks"}
-                elif route == 4:
-                    kind, codec = "audio", "flac"
-                    media = flac_kernel.encode_u8(
-                        np.frombuffer(b, dtype=np.uint8))
-                elif route == 5:
-                    kind, codec = "video", "mjpeg"
-                    media = _mjpeg_bytes(b)
-                elif route == 6:
-                    kind, codec = "video", "h264"
-                    media = h264_kernel.encode_ipcm(
-                        np.frombuffer(b, dtype=np.uint8))
                 else:
                     kind, codec = "video", "zraw"
                     media = zlib.compress(b)
@@ -339,122 +282,9 @@ def _zraw_raw(media: bytes, meta: dict) -> np.ndarray:
     return raw
 
 
-def _jpeg_raw(media: bytes, meta: dict) -> np.ndarray:
-    """REAL image decode: full baseline-JPEG parse (markers, Huffman,
-    dequantize, IDCT — :mod:`gostatix_spark.kernels.jpeg`), validated
-    against the typed metadata. ``transport='blocks'`` assets carry
-    one byte per constant 8×8 block (the lossless representation) and
-    decode back to the byte stream; plain jpeg assets return the
-    (h, w) pixel grid."""
-    from gostatix_spark.kernels import jpeg as jpeg_kernel
-    img = jpeg_kernel.decode_gray(bytes(media))
-    if meta.get("transport") == "blocks":
-        n = int(meta["n_samples"])
-        return np.frombuffer(jpeg_kernel.image_to_bytes(img, n),
-                             dtype=np.uint8)
-    h, w = img.shape
-    if "height" in meta and (int(meta["height"]), int(meta["width"])) != (h, w):
-        raise ValueError(f"JPEG frame {w}x{h} contradicts meta"
-                         f" {meta['width']}x{meta['height']}")
-    return img
-
-
-# bytes per MJPEG video frame: 192 → 14×14 constant 8×8 blocks →
-# 112×112-pixel frames, and typical document payloads span several
-# frames (a real multi-frame video, not a single-frame degenerate)
-_MJPEG_CHUNK = 192
-
-
-def _mjpeg_bytes(b: bytes, fps: int = 25) -> bytes:
-    """Encode a byte payload as a REAL playable MJPEG AVI: the bytes
-    are split into fixed ``_MJPEG_CHUNK``-byte frames (last frame
-    zero-padded; the true length travels in ``meta['n_samples']``),
-    each frame becomes a constant-block baseline JPEG (bit-exact
-    transport, :mod:`kernels.jpeg`), and the frames are muxed into a
-    single-stream AVI RIFF container (:mod:`kernels.avi`)."""
-    from gostatix_spark.kernels import avi as avi_kernel
-    from gostatix_spark.kernels import jpeg as jpeg_kernel
-    n = len(b)
-    pad = (-n) % _MJPEG_CHUNK if n else _MJPEG_CHUNK
-    padded = b + b"\x00" * pad
-    frames = []
-    dims = None
-    for i in range(0, len(padded), _MJPEG_CHUNK):
-        img, _ = jpeg_kernel.bytes_to_image(padded[i:i + _MJPEG_CHUNK])
-        dims = img.shape
-        frames.append(jpeg_kernel.encode_gray(img))
-    h, w = dims
-    return avi_kernel.encode_avi_mjpeg(frames, w, h, fps=fps)
-
-
-def _mjpeg_raw(media: bytes, meta: dict) -> np.ndarray:
-    """REAL video decode: demux the AVI RIFF container (validating
-    headers, frame counts and the idx1 index), JPEG-decode every
-    ``00dc`` frame, reassemble the constant-block byte transport, and
-    truncate to the recorded sample count. Fails loudly on corrupt
-    containers, non-MJPEG streams, or frame dims that contradict the
-    avih header."""
-    from gostatix_spark.kernels import avi as avi_kernel
-    from gostatix_spark.kernels import jpeg as jpeg_kernel
-    frames, w, h = avi_kernel.decode_avi_mjpeg(bytes(media))
-    parts = []
-    for i, f in enumerate(frames):
-        img = jpeg_kernel.decode_gray(f)
-        if img.shape != (h, w):
-            raise ValueError(f"frame {i} is {img.shape[1]}x{img.shape[0]},"
-                             f" avih says {w}x{h}")
-        parts.append(jpeg_kernel.image_to_bytes(img, _MJPEG_CHUNK))
-    raw = np.frombuffer(b"".join(parts), dtype=np.uint8)
-    if "n_samples" in meta:
-        n = int(meta["n_samples"])
-        if not (len(raw) - _MJPEG_CHUNK <= n <= len(raw)) and n != 0:
-            raise ValueError(f"MJPEG decodes {len(raw)} padded samples,"
-                             f" meta says {n}")
-        raw = raw[:n]
-    return raw
-
-
-def _h264_raw(media: bytes, meta: dict) -> np.ndarray:
-    """REAL video decode: parse the H.264 Annex-B stream (NAL split,
-    emulation-prevention removal, SPS/PPS/IDR slice headers —
-    :mod:`gostatix_spark.kernels.h264`), extract the I_PCM macroblock
-    luma, truncate to the recorded sample count. Fails loudly on
-    corrupt streams or anything outside the declared I_PCM subset
-    (predicted macroblocks, CABAC, non-IDR slices)."""
-    from gostatix_spark.kernels import h264 as h264_kernel
-    raw = h264_kernel.decode_ipcm(bytes(media))
-    if "n_samples" in meta:
-        n = int(meta["n_samples"])
-        # grid padding: < 1 macroblock within the last data MB plus
-        # < 1 macroblock row (≤ 8 MBs) squaring up the frame
-        pad = 9 * h264_kernel.MB * h264_kernel.MB
-        if not (len(raw) - pad < max(n, 1) <= len(raw)):
-            raise ValueError(f"H.264 stream carries {len(raw)} padded "
-                             f"samples, meta says {n}")
-        raw = raw[:n]
-    return raw
-
-
-def _flac_raw(media: bytes, meta: dict) -> np.ndarray:
-    """REAL audio decode: parse the FLAC container (fLaC magic,
-    STREAMINFO, CRC-8/CRC-16-protected frames — subset codec in
-    :mod:`gostatix_spark.kernels.flac`), verify the STREAMINFO MD5 of
-    the decoded samples, validate against the typed metadata, return
-    the uint8 sample array. Fails loudly on corruption or on streams
-    outside the declared subset (prediction subframes etc.)."""
-    from gostatix_spark.kernels import flac as flac_kernel
-    raw = flac_kernel.decode_u8(bytes(media))
-    if "n_samples" in meta and len(raw) != int(meta["n_samples"]):
-        raise ValueError(f"FLAC has {len(raw)} samples, meta says"
-                         f" {meta['n_samples']}")
-    return raw
-
-
 # codec → raw-sample decoder (REAL paths only — each parses its actual
 # container format, validates, and fails loudly; no fallback to a fake)
-RAW_DECODERS = {"zraw": _zraw_raw, "wav": _wav_raw, "pgm": _pgm_raw,
-                "jpeg": _jpeg_raw, "flac": _flac_raw, "mjpeg": _mjpeg_raw,
-                "h264": _h264_raw}
+RAW_DECODERS = {"zraw": _zraw_raw, "wav": _wav_raw, "pgm": _pgm_raw}
 
 
 def _raw_decode(media: bytes, meta: dict) -> np.ndarray:
@@ -473,26 +303,20 @@ def _real_decode(media: bytes, meta: dict, out_dim: int) -> np.ndarray:
 
 
 def _fake_decode(media: bytes, meta: dict, out_dim: int) -> np.ndarray:
-    """STUB — deterministic fake 'decoder' for the predicted/lossy
-    side of the media formats, which still needs external libraries
-    (predicted/transform-coded H.264, FLAC-with-prediction, color+
-    progressive JPEG): folds the payload bytes into a feature vector.
+    """STUB — deterministic fake 'decoder' for lossy and predicted
+    media codecs, which need external libraries: folds the payload
+    bytes into a feature vector.
     A real deployment replaces this with torchaudio/pyav decoding;
     everything around it stays."""
     return _pool_features(np.frombuffer(media, dtype=np.uint8), out_dim)
 
 
 # codec → feature decoder. 'wav' (RIFF/WAVE PCM via stdlib wave),
-# 'pgm' (binary netpbm P5), 'jpeg' (pure-python baseline decoder),
-# 'flac' (pure-python subset codec, CRC/MD5-verified), 'mjpeg'
-# (AVI demux + per-frame JPEG decode), 'h264' (Annex-B NAL parse,
-# I_PCM extraction) and 'zraw' (zlib raw samples) are real decodes;
-# 'fake' is the declared stub for the predicted/lossy side of these
-# formats, which needs external media libraries.
+# 'pgm' (binary netpbm P5) and 'zraw' (zlib raw samples) are real
+# decodes; 'fake' is the declared stub for lossy and predicted media
+# codecs, which need external media libraries.
 DECODERS = {"zraw": _real_decode, "wav": _real_decode,
-            "pgm": _real_decode, "jpeg": _real_decode,
-            "flac": _real_decode, "mjpeg": _real_decode,
-            "h264": _real_decode, "fake": _fake_decode}
+            "pgm": _real_decode, "fake": _fake_decode}
 
 
 def decode_features(df: DataFrame, out_dim: int = 16) -> DataFrame:

@@ -497,11 +497,20 @@ class TopKState:
         cms_state = CMSState.from_bytes(payload[:cms_len])
         cands: dict[bytes, int] = {}
         off = cms_len
-        for _ in range(n_cand):
-            elen, c = struct.unpack_from("<IQ", payload, off)
-            off += 12
+        for i in range(n_cand):
+            fits = off + 12 <= len(payload)
+            if fits:
+                elen, c = struct.unpack_from("<IQ", payload, off)
+                off += 12
+                fits = off + elen <= len(payload)
+            if not fits:
+                raise ValueError(f"Top-K candidate {i} of {n_cand} runs "
+                                 f"past the {len(payload)}-byte payload")
             cands[payload[off : off + elen]] = c
             off += elen
+        if off != len(payload):
+            raise ValueError(f"{len(payload) - off} bytes left over after "
+                             f"{n_cand} Top-K candidates")
         return cls(k, er, acc, cms_state, cands, capped=bool(capped_b))
 
     def to_json(self) -> str:

@@ -495,329 +495,3 @@ class TestCappedTopK:
         for e in want:
             assert e in got, e
             assert abs(got[e] - dict(top_p)[e]) <= 2 * eps_n, e
-
-
-class TestJPEG:
-    """Pure-python baseline JPEG codec (kernels/jpeg.py, ITU-T T.81).
-    The multimodal 'jpeg' leg depends on the constant-block transport
-    being BIT-exact; the general decoder is exercised separately."""
-
-    def test_constant_block_transport_bit_exact(self):
-        from gostatix_spark.kernels import jpeg
-        rng = np.random.default_rng(3)
-        for n in (1, 7, 63, 64, 300, 1000):
-            payload = bytes(rng.integers(0, 256, n, dtype=np.uint8))
-            img, n_bytes = jpeg.bytes_to_image(payload)
-            back = jpeg.decode_gray(jpeg.encode_gray(img))
-            assert np.array_equal(back, img), n
-            assert jpeg.image_to_bytes(back, n_bytes) == payload
-        # extreme DC swings: alternating 0/255 drives diffs of ±2040
-        # (category 11, the largest a baseline DC table carries)
-        payload = bytes([0, 255] * 50)
-        img, n_bytes = jpeg.bytes_to_image(payload)
-        back = jpeg.decode_gray(jpeg.encode_gray(img))
-        assert jpeg.image_to_bytes(back, n_bytes) == payload
-        # empty payload → one zero block, 0 bytes back
-        img0, n0 = jpeg.bytes_to_image(b"")
-        assert jpeg.image_to_bytes(
-            jpeg.decode_gray(jpeg.encode_gray(img0)), n0) == b""
-
-    def test_general_image_near_lossless_with_unit_quant(self):
-        from gostatix_spark.kernels import jpeg
-        rng = np.random.default_rng(9)
-        for shape in ((8, 8), (24, 24), (61, 45)):  # incl. non-×8 dims
-            g = rng.integers(0, 256, shape, dtype=np.uint8)
-            dec = jpeg.decode_gray(jpeg.encode_gray(g))
-            assert dec.shape == g.shape
-            # unit quant: only DCT float rounding — within ±3 greylevels
-            assert np.abs(dec.astype(int) - g.astype(int)).max() <= 3
-
-    def test_zero_runs_and_zrl(self):
-        """Sparse blocks drive EOB and ZRL (16-zero run) paths."""
-        from gostatix_spark.kernels import jpeg
-        g = np.zeros((16, 16), dtype=np.uint8)
-        g[3, 9] = 255   # one spike per block region
-        g[12, 2] = 7
-        dec = jpeg.decode_gray(jpeg.encode_gray(g))
-        assert np.abs(dec.astype(int) - g.astype(int)).max() <= 3
-
-    def test_quantized_encode_decodes(self):
-        from gostatix_spark.kernels import jpeg
-        rng = np.random.default_rng(4)
-        g = rng.integers(0, 256, (32, 32), dtype=np.uint8)
-        q = np.clip(np.arange(1, 65) // 2 + 1, 1, 24).astype(np.uint8)
-        dec = jpeg.decode_gray(jpeg.encode_gray(g, quant=q))
-        # lossy, but bounded: worst-case error ≤ Σ q/2 per pixel bound
-        # is loose; assert something meaningful for this table
-        assert np.abs(dec.astype(int) - g.astype(int)).mean() < 16
-
-    def test_rejects_unsupported_streams(self):
-        from gostatix_spark.kernels import jpeg
-        img, _ = jpeg.bytes_to_image(b"ok")
-        enc = bytearray(jpeg.encode_gray(img))
-        # not a JPEG
-        with pytest.raises(ValueError, match="SOI"):
-            jpeg.decode_gray(b"\x00\x01")
-        # progressive (SOF2 instead of SOF0)
-        sof = bytes(enc).find(b"\xff\xc0")
-        prog = bytes(enc[:sof + 1]) + b"\xc2" + bytes(enc[sof + 2:])
-        with pytest.raises(ValueError, match="baseline"):
-            jpeg.decode_gray(prog)
-        # color (3 components claimed in SOF0)
-        bad = bytearray(enc)
-        bad[sof + 9] = 3  # ncomp byte: len(2)+prec(1)+h(2)+w(2) after marker
-        with pytest.raises(ValueError, match="component"):
-            jpeg.decode_gray(bytes(bad))
-        # truncated entropy stream (EOI gone)
-        with pytest.raises(ValueError, match="EOI"):
-            jpeg.decode_gray(bytes(enc[:-2]))
-
-
-class TestFLAC:
-    """Pure-python FLAC subset codec (kernels/flac.py, RFC 9639).
-    The multimodal 'flac' leg depends on the VERBATIM transport being
-    lossless and on corruption failing loudly (CRC-8/CRC-16/MD5)."""
-
-    def test_crc_check_values(self):
-        """External attestation: published check values for the two
-        CRC variants FLAC uses — CRC-8 (poly 0x07, init 0, unreflected)
-        over '123456789' is 0xF4; CRC-16/BUYPASS (poly 0x8005, init 0,
-        unreflected) over the same input is 0xFEE8."""
-        from gostatix_spark.kernels import flac
-        assert flac.crc8(b"123456789") == 0xF4
-        assert flac.crc16(b"123456789") == 0xFEE8
-
-    def test_roundtrip_bit_exact(self):
-        from gostatix_spark.kernels import flac
-        rng = np.random.default_rng(11)
-        # spans: sub-block, exact block, multi-frame (> BLOCK=4096)
-        for n in (1, 2, 100, flac.BLOCK - 1, flac.BLOCK,
-                  flac.BLOCK + 1, 3 * flac.BLOCK + 17):
-            payload = rng.integers(0, 256, n, dtype=np.uint8)
-            enc = flac.encode_u8(payload)
-            assert enc[:4] == b"fLaC"
-            assert np.array_equal(flac.decode_u8(enc), payload), n
-        # empty stream
-        assert len(flac.decode_u8(flac.encode_u8(
-            np.empty(0, dtype=np.uint8)))) == 0
-
-    def test_constant_blocks_compress(self):
-        """All-equal blocks take the CONSTANT subframe: the file is
-        dramatically smaller than VERBATIM yet still decodes exactly."""
-        from gostatix_spark.kernels import flac
-        payload = np.full(2 * flac.BLOCK, 77, dtype=np.uint8)
-        enc = flac.encode_u8(payload)
-        assert len(enc) < len(payload) // 8
-        assert np.array_equal(flac.decode_u8(enc), payload)
-        # mixed: one constant frame, one verbatim frame
-        mixed = np.concatenate([payload[:flac.BLOCK],
-                                np.arange(256, dtype=np.uint8)])
-        assert np.array_equal(flac.decode_u8(flac.encode_u8(mixed)), mixed)
-
-    def test_corruption_fails_loudly(self):
-        from gostatix_spark.kernels import flac
-        rng = np.random.default_rng(12)
-        payload = rng.integers(0, 256, 600, dtype=np.uint8)
-        enc = bytearray(flac.encode_u8(payload))
-        # not a FLAC stream at all
-        with pytest.raises(ValueError, match="fLaC"):
-            flac.decode_u8(b"RIFF....WAVE")
-        # flip a byte inside the frame payload → CRC-16 catches it
-        bad = bytearray(enc)
-        bad[-10] ^= 0xFF
-        with pytest.raises(ValueError, match="CRC"):
-            flac.decode_u8(bytes(bad))
-        # flip a frame-header byte → CRC-8 catches it (byte 42 is the
-        # first frame byte: magic 4 + block header 4 + STREAMINFO 34)
-        bad = bytearray(enc)
-        bad[44] ^= 0x01
-        with pytest.raises(ValueError, match="CRC|sync|blocksize"):
-            flac.decode_u8(bytes(bad))
-        # flip a bit in the stored MD5 → final content check catches it
-        bad = bytearray(enc)
-        bad[41] ^= 0x01  # last STREAMINFO byte = last md5 byte
-        with pytest.raises(ValueError, match="MD5"):
-            flac.decode_u8(bytes(bad))
-        # truncated file
-        with pytest.raises(ValueError, match="truncated"):
-            flac.decode_u8(bytes(enc[:60]))
-
-    def test_rejects_out_of_subset_streams(self):
-        """Streams outside the declared subset (prediction subframes,
-        stereo, 16-bit) must raise, not silently mis-decode."""
-        from gostatix_spark.kernels import flac
-        enc = bytearray(flac.encode_u8(np.arange(64, dtype=np.uint8)))
-        # STREAMINFO byte 12 (offset 4+4+12=20) packs sample_rate[4]|
-        # channels(3)|bps_hi(1); set channels=1 (stereo) → 0b001 ≪ 1
-        stereo = bytearray(enc)
-        stereo[20] = (stereo[20] & 0xF1) | (1 << 1)
-        with pytest.raises(ValueError, match="mono"):
-            flac.decode_u8(bytes(stereo))
-        # subframe header lives right after the frame header; force a
-        # FIXED-order-0 type (0b001000) and fix up both CRCs so the
-        # subset check itself fires, not the CRC
-        raw = bytes(enc)
-        fstart = 42
-        hdr_len = 4 + 1 + 2 + 1  # 32-bit head + utf8 idx + blocksize16 + crc8
-        sub_off = fstart + hdr_len
-        body = bytearray(raw[fstart:-2])
-        body[hdr_len - 1 + 1] = 0b0_001000_0  # pad|type|wasted byte
-        # re-CRC the header (unchanged) and the frame body
-        import struct as _struct
-        fixed = bytes(body) + _struct.pack(
-            ">H", flac.crc16(bytes(body)))
-        with pytest.raises(ValueError, match="FIXED|LPC|not supported"):
-            flac.decode_u8(raw[:fstart] + fixed)
-
-
-class TestAVI:
-    """AVI RIFF container (kernels/avi.py, MS AVI RIFF File Reference).
-    The multimodal 'mjpeg' leg depends on mux→demux returning the
-    exact frame payloads and on structural corruption failing loudly."""
-
-    def _frames(self, n, seed=5):
-        from gostatix_spark.kernels import jpeg
-        rng = np.random.default_rng(seed)
-        out = []
-        for _ in range(n):
-            img, _ = jpeg.bytes_to_image(
-                bytes(rng.integers(0, 256, 192, dtype=np.uint8)))
-            out.append(jpeg.encode_gray(img))
-        return out
-
-    def test_mux_demux_roundtrip(self):
-        from gostatix_spark.kernels import avi
-        for n in (1, 2, 7):
-            frames = self._frames(n)
-            data = avi.encode_avi_mjpeg(frames, 112, 112, fps=25)
-            assert data[:4] == b"RIFF" and data[8:12] == b"AVI "
-            back, w, h = avi.decode_avi_mjpeg(data)
-            assert (w, h) == (112, 112)
-            assert back == frames, n
-
-    def test_riff_sizes_internally_consistent(self):
-        """The RIFF size must cover the file exactly and every chunk
-        parse must land on declared boundaries (walk raises otherwise);
-        trailing garbage past the RIFF extent is ignored per spec."""
-        import struct
-        from gostatix_spark.kernels import avi
-        data = avi.encode_avi_mjpeg(self._frames(3), 112, 112)
-        assert struct.unpack_from("<I", data, 4)[0] + 8 == len(data)
-        frames, _, _ = avi.decode_avi_mjpeg(data + b"JUNK")
-        assert len(frames) == 3
-
-    def test_corruption_fails_loudly(self):
-        import struct
-        from gostatix_spark.kernels import avi
-        frames = self._frames(2)
-        data = avi.encode_avi_mjpeg(frames, 112, 112)
-        with pytest.raises(ValueError, match="RIFF"):
-            avi.decode_avi_mjpeg(b"fLaC" + data[4:])
-        # frame-count lie in avih (dwTotalFrames at avih body +16)
-        avih_at = data.find(b"avih") + 8
-        bad = bytearray(data)
-        struct.pack_into("<I", bad, avih_at + 16, 99)
-        with pytest.raises(ValueError, match="declares"):
-            avi.decode_avi_mjpeg(bytes(bad))
-        # idx1 offset lie
-        idx_at = data.find(b"idx1") + 8
-        bad = bytearray(data)
-        struct.pack_into("<I", bad, idx_at + 8, 12345)
-        with pytest.raises(ValueError, match="idx1"):
-            avi.decode_avi_mjpeg(bytes(bad))
-        # wrong handler
-        bad = bytearray(data)
-        h_at = data.find(b"strh") + 8 + 4
-        bad[h_at:h_at + 4] = b"H264"
-        with pytest.raises(ValueError, match="MJPG"):
-            avi.decode_avi_mjpeg(bytes(bad))
-        # truncation mid-movi
-        with pytest.raises(ValueError, match="truncated|overruns"):
-            avi.decode_avi_mjpeg(data[:len(data) // 2])
-
-    def test_rejects_non_jpeg_frames_at_mux(self):
-        from gostatix_spark.kernels import avi
-        with pytest.raises(ValueError, match="JPEG"):
-            avi.encode_avi_mjpeg([b"not a jpeg"], 8, 8)
-
-
-class TestH264:
-    """H.264/AVC I_PCM subset (kernels/h264.py, ITU-T H.264 §7.3.5).
-    The multimodal 'h264' leg depends on the I_PCM raw-sample
-    transport being lossless and on out-of-subset streams raising."""
-
-    def test_roundtrip_padded(self):
-        from gostatix_spark.kernels import h264
-        rng = np.random.default_rng(21)
-        # spans: sub-MB, exact MB, multi-MB, multi-MB-row (>8 MBs)
-        for n in (1, 255, 256, 257, 2048, 2304, 5000):
-            p = rng.integers(0, 256, n, dtype=np.uint8)
-            dec = h264.decode_ipcm(h264.encode_ipcm(p))
-            assert np.array_equal(dec[:n], p), n
-            assert (dec[n:] == 0).all(), n
-
-    def test_structure_is_real_annexb(self):
-        from gostatix_spark.kernels import h264
-        enc = h264.encode_ipcm(np.arange(256, dtype=np.uint8))
-        # SPS nal_ref_idc=3 type=7 → 0x67; profile 66 (Baseline)
-        assert enc[:6] == b"\x00\x00\x00\x01\x67\x42"
-        assert b"\x00\x00\x00\x01\x68" in enc     # PPS
-        assert b"\x00\x00\x00\x01\x65" in enc     # IDR slice
-
-    def test_emulation_prevention(self):
-        """PCM bytes full of 00 00 0x patterns must be escaped in the
-        NAL and restored exactly on decode — the classic H.264
-        transport trap."""
-        from gostatix_spark.kernels import h264
-        tricky = np.tile(np.array([0, 0, 0, 0, 0, 1, 0, 0, 2, 0, 0, 3],
-                                  dtype=np.uint8), 40)
-        enc = h264.encode_ipcm(tricky)
-        assert b"\x00\x00\x03" in enc
-        assert np.array_equal(h264.decode_ipcm(enc)[:len(tricky)], tricky)
-
-    def test_rejects_out_of_subset_and_corrupt(self):
-        from gostatix_spark.kernels import h264
-        enc = bytearray(h264.encode_ipcm(np.arange(300, dtype=np.uint8)))
-        with pytest.raises(ValueError, match="start code"):
-            h264.decode_ipcm(b"RIFF not h264")
-        # CABAC flag in PPS: first PPS rbsp byte packs ue(0),ue(0),
-        # then entropy_coding_mode_flag — flip it
-        pps_at = bytes(enc).find(b"\x00\x00\x00\x01\x68") + 5
-        bad = bytearray(enc)
-        bad[pps_at] |= 0x20   # bits: 1(ue0) 1(ue0) then flag bit
-        with pytest.raises(ValueError, match="CABAC"):
-            h264.decode_ipcm(bytes(bad))
-        # non-I_PCM macroblock: slice data starts with ue(25); force
-        # a tiny mb_type by rewriting the first slice-data byte
-        idr_at = bytes(enc).find(b"\x00\x00\x00\x01\x65") + 5
-        # slice header for this stream is fixed-width: find where the
-        # decoder starts reading mb_type by corrupting successive
-        # bytes until the error changes class — simplest determinate
-        # probe: truncate mid-slice instead
-        with pytest.raises(ValueError, match="truncated|stop"):
-            h264.decode_ipcm(bytes(enc[:idr_at + 4]))
-        # IDR slice before SPS
-        idr_nal = bytes(enc)[idr_at - 5:]
-        with pytest.raises(ValueError, match="before SPS"):
-            h264.decode_ipcm(idr_nal)
-
-    def test_non_ipcm_mb_type_rejected(self):
-        """Hand-build a slice whose first macroblock claims I_4x4
-        (mb_type 0) — the decoder must refuse, not guess."""
-        from gostatix_spark.kernels import h264
-        from gostatix_spark.kernels.flac import _BitWriter
-        bw = _BitWriter()
-        # ue(0) first_mb, ue(7) slice_type, ue(0) pps_id
-        for v, nb in ((1, 1), (0, 3), (0b1000, 4), (1, 1)):
-            bw.write(v, nb)
-        bw.write(0, 4)            # frame_num
-        bw.write(1, 1)            # ue(0) idr_pic_id
-        bw.write(0, 2)            # marking flags
-        bw.write(1, 1)            # se(0) qp_delta
-        bw.write(1, 1)            # ue(0) = mb_type I_4x4 ← out of subset
-        bw.align()
-        sps = h264.encode_ipcm(np.zeros(1, dtype=np.uint8))
-        sps_pps = sps[:sps.find(b"\x00\x00\x00\x01\x65")]
-        bad = sps_pps + b"\x00\x00\x00\x01\x65" + bw.bytes()
-        with pytest.raises(ValueError, match="mb_type"):
-            h264.decode_ipcm(bad)

@@ -46,6 +46,17 @@ def test_daemon_preload_module_importable_standalone(monkeypatch):
     assert hasattr(mod, "manager")
 
 
+def test_every_preload_entry_imports(monkeypatch):
+    """A deleted or renamed module in ``PRELOAD`` only writes a line to
+    executor stderr, and the daemon quietly stops preloading it: every
+    entry must import in the driver."""
+    import importlib
+    _restore_invalidate_caches_after(monkeypatch)  # the body installs it
+    preload = importlib.import_module("gostatix_spark.daemon_preload")
+    for name in preload.PRELOAD:
+        importlib.import_module(name)
+
+
 def _write_zip(path, modules: dict) -> None:
     import zipfile
     with zipfile.ZipFile(path, "w") as z:

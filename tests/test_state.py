@@ -97,6 +97,23 @@ def test_topk_roundtrip():
         assert not s2.capped
 
 
+def test_topk_truncated_or_padded_frame_raises():
+    """A Top-K frame cut inside its last candidate's bytes (1 byte) or
+    inside its (length, count) header (9 bytes), or one with a byte
+    appended, fails with ValueError instead of decoding a shortened
+    candidate or raising struct.error."""
+    import pytest
+
+    mat = cms.new_state(2, 100)
+    blob = state.TopKState(5, 0.001, 0.999, state.CMSState(2, 100, mat, 7),
+                           {b"apple": 6, b"fig": 3}).to_bytes()
+    for bad in (blob[:-1], blob[:-9]):
+        with pytest.raises(ValueError, match="runs past"):
+            state.TopKState.from_bytes(bad)
+    with pytest.raises(ValueError, match="1 bytes left over"):
+        state.TopKState.from_bytes(blob + b"\x00")
+
+
 def test_topk_capped_flag_roundtrip():
     """The capped marker (max_distinct compaction happened) must
     survive both codecs; an uncapped state keeps the version-1 frame

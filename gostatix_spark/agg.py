@@ -66,7 +66,7 @@ from gostatix_spark.kernels import bloom, cuckoo, hll, topk
 from gostatix_spark.sketches import Sketch as _Spec
 from gostatix_spark.sketches import merge as merge_sketch_states
 from gostatix_spark.state import (BloomState, CuckooState, binary_array,
-                                  binary_buffers, sketch_from_bytes)
+                                  binary_buffers)
 
 __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
            "cuckoo_apply_removals", "bloom_build_sharded",
@@ -915,9 +915,7 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
                 f = cuckoo.CuckooFilter(size, bucket_size, fp_len, retries,
                                         seed=seed)
                 f.bulk_insert_hashes(h1)
-                yield key + (CuckooState(size, bucket_size, fp_len, retries,
-                                         f.length, f.buckets).to_bytes(),
-                             len(h1))
+                yield key + (CuckooState.of(f).to_bytes(), len(h1))
         yield from _row_batches(states(), arrow_schema, "state")
 
     return (partials.repartition(*run_cols)
@@ -968,17 +966,13 @@ def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
                 head = pieces[0]
                 if head.column("_side")[0].as_py() != 0:
                     continue  # no state for this (key?, shard)
-                st = sketch_from_bytes(head.column("state")[0].as_py())
+                f = CuckooState.from_bytes(
+                    head.column("state")[0].as_py()).filter()
                 side = [p.filter(pc.equal(p.column("_side"), 1))
                         for p in pieces]
-                h1 = _packed_hashes(side)
-                f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
-                                        st.retries, buckets=st.buckets,
-                                        length=st.length)
-                n_removed = int(f.bulk_remove_hashes(h1).sum())
-                new = CuckooState(st.size, st.bucket_size, st.fp_len,
-                                  st.retries, f.length, f.buckets)
-                yield key + (new.to_bytes(),
+                n_removed = int(f.bulk_remove_hashes(_packed_hashes(side))
+                                .sum())
+                yield key + (CuckooState.of(f).to_bytes(),
                              head.column("n_items")[0].as_py() - n_removed)
         yield from _row_batches(states_out(), arrow_schema, "state")
 

@@ -22,6 +22,9 @@ import struct
 
 import numpy as np
 
+from gostatix_spark.state import frame, read_frame
+
+_LEVEL = struct.Struct("<I")  # a level's item count in the GSKL frame
 K_DEFAULT = 200
 C = 2.0 / 3.0
 
@@ -106,31 +109,20 @@ class KLL:
             below += wgt * int((lv <= value).sum())
         return below / total if total else float("nan")
 
-    # -- codec --------------------------------------------------------------
-
-    MAGIC = b"GSKL"
+    # -- codec: the GSKL frame that state.FRAMES describes -----------------
 
     def to_bytes(self) -> bytes:
-        parts = [self.MAGIC,
-                 struct.pack("<BIQqI", 1, self.k, self.n, self.seed,
-                             len(self.levels))]
+        out = [frame("kll", 1, self.k, self.n, self.seed, len(self.levels))]
         for lv in self.levels:
-            parts.append(struct.pack("<I", len(lv)))
-            parts.append(lv.tobytes())
-        return b"".join(parts)
+            out += (_LEVEL.pack(len(lv)), lv.tobytes())
+        return b"".join(out)
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "KLL":
-        if buf[:4] != cls.MAGIC:
-            raise ValueError("bad kll frame")
-        _, k, n, seed, n_levels = struct.unpack_from("<BIQqI", buf, 4)
-        off = 4 + struct.calcsize("<BIQqI")
-        out = cls(k, seed)
-        out.n = n
-        out.levels = []
-        for _ in range(n_levels):
-            (ln,) = struct.unpack_from("<I", buf, off)
-            off += 4
-            out.levels.append(np.frombuffer(buf, np.float64, ln, off).copy())
-            off += 8 * ln
+        h, body = read_frame(buf, "kll")
+        out = cls(h.k, h.seed)
+        out.n = h.n
+        out.levels = [body.array("<f8", *body.unpack(_LEVEL, "level"), "level")
+                      for _ in range(h.n_levels)]
+        body.end(f"{h.n_levels} levels")
         return out

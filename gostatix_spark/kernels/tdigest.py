@@ -15,15 +15,15 @@ its accuracy guarantee; tests gate quantile error vs exact, not byte
 equality, since t-digest is NOT byte-deterministic under re-ordering —
 documented divergence from the byte-invariant sketches).
 
-State: float64 arrays (means, weights) + (min, max, total) — codec in
-``state.py``-style framing kept local here for compactness.
+State: float64 arrays (means, weights), the item count and δ,
+serialized as the ``GSKQ`` frame that ``state.FRAMES`` describes.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from gostatix_spark.state import frame, read_frame
 
 DELTA_DEFAULT = 200.0
 
@@ -99,22 +99,15 @@ def quantile(means: np.ndarray, weights: np.ndarray, q) -> np.ndarray:
     return out
 
 
-# --- binary codec (GSKQ frame, little-endian) -------------------------------
-
-MAGIC = b"GSKQ"
-
-
 def to_bytes(means: np.ndarray, weights: np.ndarray, n_items: int,
              delta: float = DELTA_DEFAULT) -> bytes:
-    header = struct.pack("<BdQI", 1, delta, n_items, len(means))
-    return MAGIC + header + means.tobytes() + weights.tobytes()
+    """The ``GSKQ`` frame of a digest (``state.FRAMES``)."""
+    return (frame("tdigest", 1, delta, n_items, len(means))
+            + means.tobytes() + weights.tobytes())
 
 
 def from_bytes(buf: bytes):
-    if buf[:4] != MAGIC:
-        raise ValueError("bad tdigest frame")
-    _, delta, n_items, n = struct.unpack_from("<BdQI", buf, 4)
-    off = 4 + struct.calcsize("<BdQI")
-    means = np.frombuffer(buf, np.float64, n, off).copy()
-    weights = np.frombuffer(buf, np.float64, n, off + 8 * n).copy()
-    return means, weights, n_items, delta
+    """``(means, weights, n_items, delta)`` of a ``GSKQ`` frame."""
+    h, body = read_frame(buf, "tdigest")
+    means, weights = body.dense(h).reshape(2, -1)
+    return means, weights, h.n_items, h.delta

@@ -287,8 +287,16 @@ def _zraw_raw(media: bytes, meta: dict) -> np.ndarray:
 RAW_DECODERS = {"zraw": _zraw_raw, "wav": _wav_raw, "pgm": _pgm_raw}
 
 
+def _codec(meta: dict) -> str:
+    """A row's ``meta['codec']``; ``ValueError`` when it has none, since
+    no codec is assumed for it."""
+    if "codec" not in meta:
+        raise ValueError(f"asset meta names no codec: {dict(meta)!r}")
+    return meta["codec"]
+
+
 def _raw_decode(media: bytes, meta: dict) -> np.ndarray:
-    codec = meta.get("codec", "zraw")
+    codec = _codec(meta)
     if codec not in RAW_DECODERS:
         raise ValueError(
             f"decode_payloads handles real codecs {sorted(RAW_DECODERS)},"
@@ -332,7 +340,7 @@ def decode_features(df: DataFrame, out_dim: int = 16) -> DataFrame:
     def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
             feats = [
-                DECODERS[meta.get("codec", "fake")](m, meta, out_dim).tolist()
+                DECODERS[_codec(meta)](m, meta, out_dim).tolist()
                 for meta, m in zip(pdf["meta"], pdf["media"])]
             yield pd.DataFrame({"asset_id": pdf["asset_id"],
                                 "kind": pdf["kind"], "features": feats})
@@ -358,7 +366,7 @@ def frame_sample(df: DataFrame, every_n: int = 4, frame_bytes: int = 32) -> Data
             rows = []
             for aid, media, meta in zip(pdf["asset_id"], pdf["media"],
                                         pdf["meta"]):
-                if meta.get("codec", "fake") in RAW_DECODERS:
+                if _codec(meta) in RAW_DECODERS:
                     stream = _raw_decode(media, meta).ravel().tobytes()
                 else:
                     stream = bytes(media)

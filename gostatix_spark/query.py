@@ -24,14 +24,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
+                               LongType, StringType, StructField, StructType)
 
 from gostatix_spark import hashing
-from gostatix_spark.kernels import bloom, cms, cuckoo, hll, topk
+from gostatix_spark.kernels import bloom, cms, hll, topk
 from gostatix_spark.sketches import HLL, lookup
-from gostatix_spark.state import (BloomState, CMSState, CuckooState, TopKState,
-                                  binary_buffers, sketch_from_bytes)
+from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
+                                  TopKState, binary_buffers)
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
            "topk_values", "bloom_contains", "bloom_cardinality",
@@ -149,10 +149,10 @@ def hll_intersect_pairs(states: DataFrame, key_col: str,
         out = pd.DataFrame(index=range(len(sa)), columns=cols,
                            dtype="Int64")
         if valid.any():
-            ra = np.stack([sketch_from_bytes(bytes(x))
-                           .registers for x in sa[valid]])
-            rb = np.stack([sketch_from_bytes(bytes(y))
-                           .registers for y in sb[valid]])
+            ra = np.stack([HLLState.from_bytes(x).registers
+                           for x in sa[valid]])
+            rb = np.stack([HLLState.from_bytes(y).registers
+                           for y in sb[valid]])
             na = hll.count_many(ra, linear_counting=linear_counting)
             nb = hll.count_many(rb, linear_counting=linear_counting)
             nu = hll.count_many(np.maximum(ra, rb),
@@ -190,15 +190,11 @@ def topk_values(states: DataFrame, out_elem: str = "element",
     def dec(e: bytes):
         if decode == "string":
             return e.decode("utf-8", "replace")
-        if decode == "int64":
-            return int.from_bytes(e, "big", signed=True)
-        if decode == "int32":
+        if decode in ("int64", "int32"):
             return int.from_bytes(e, "big", signed=True)
         return e
-    elem_type = {"string": StringType(), "binary": None}.get(decode, LongType())
-    if decode == "binary":
-        from pyspark.sql.types import BinaryType
-        elem_type = BinaryType()
+    elem_type = {"string": StringType(),
+                 "binary": BinaryType()}.get(decode, LongType())
 
     result_t = ArrayType(StructType([
         StructField("rank", LongType()), StructField(out_elem, elem_type),
@@ -208,8 +204,8 @@ def topk_values(states: DataFrame, out_elem: str = "element",
     def vals(blobs: pd.Series) -> pd.Series:
         out = []
         for b in blobs:
-            st: TopKState = sketch_from_bytes(bytes(b))
-            if exact and getattr(st, "capped", False):
+            st = TopKState.from_bytes(b)
+            if exact and st.capped:
                 raise ValueError(
                     "topk_values(exact=True) on a capped (max_distinct) "
                     "build: compaction flushed count tails into the CMS, "
@@ -231,7 +227,6 @@ def cms_counts(states: DataFrame, items: list, element: str = "string",
     returns exploded [key?, item, est_count]."""
     h1, h2 = _hash_pd(pd.Series(items), element, "metro")
     h1l, h2l = h1.tolist(), h2.tolist()
-    from pyspark.sql.types import BinaryType
     item_type = {"string": StringType(), "int64": LongType(),
                  "int32": LongType(), "binary": BinaryType()}[element]
     result_t = ArrayType(StructType([
@@ -243,8 +238,7 @@ def cms_counts(states: DataFrame, items: list, element: str = "string",
         hb = np.array(h2l, dtype=np.uint64)
         out = []
         for b in blobs:
-            st: CMSState = sketch_from_bytes(bytes(b))
-            est = cms.query_batch(st.matrix, ha, hb)
+            est = cms.query_batch(CMSState.from_bytes(b).matrix, ha, hb)
             out.append([{"item": items[i], out_col: int(est[i])}
                         for i in range(len(items))])
         return pd.Series(out)
@@ -271,8 +265,7 @@ def cms_inner_product(states_a: DataFrame, states_b: DataFrame,
     def est(sa: pd.Series, sb: pd.Series) -> pd.Series:
         vals = []
         for x, y in zip(sa, sb):
-            ma = sketch_from_bytes(bytes(x))
-            mb = sketch_from_bytes(bytes(y))
+            ma, mb = CMSState.from_bytes(x), CMSState.from_bytes(y)
             if (ma.d, ma.w) != (mb.d, mb.w):
                 raise ValueError(
                     f"CMS dims differ: {(ma.d, ma.w)} vs {(mb.d, mb.w)}")
@@ -296,7 +289,7 @@ def bloom_cardinality(states: DataFrame,
     def est(blobs: pd.Series) -> pd.Series:
         vals = []
         for b in blobs:
-            st = sketch_from_bytes(bytes(b))
+            st = BloomState.from_bytes(b)
             # bits ≥ m are never set (positions are mod m), so a full
             # popcount of the backing words IS the fill count X
             x = int(np.unpackbits(st.words.view(np.uint8)).sum())
@@ -370,7 +363,7 @@ def bloom_contains(spark: SparkSession, state_blob: bytes, col: Column,
 
     @F.pandas_udf(BooleanType())
     def probe(s: pd.Series) -> pd.Series:
-        st: BloomState = sketch_from_bytes(bc.value)
+        st = BloomState.from_bytes(bc.value)
         h1, h2 = _hash_pd(s, element, "metro")
         return pd.Series(bloom.lookup_batch(st.words, h1, h2, st.k, st.m))
 
@@ -416,12 +409,7 @@ def cuckoo_contains(spark: SparkSession, shard_states, col: Column,
     @F.pandas_udf(BooleanType())
     def probe(s: pd.Series) -> pd.Series:
         blobs = bc.value
-        filters = []
-        for b in blobs:
-            st: CuckooState = sketch_from_bytes(b)
-            filters.append(cuckoo.CuckooFilter(
-                st.size, st.bucket_size, st.fp_len, st.retries,
-                buckets=st.buckets, length=st.length))
+        filters = [CuckooState.from_bytes(b).filter() for b in blobs]
         h1, _ = _hash_pd(s, element, "murmur3")
         shard = hashing.shard_of(h1, len(blobs))
         out = np.zeros(len(s), dtype=bool)
@@ -449,7 +437,7 @@ def bloom_contains_sharded(spark: SparkSession, shard_states, col: Column,
 
     @F.pandas_udf(BooleanType())
     def probe(s: pd.Series) -> pd.Series:
-        states = [sketch_from_bytes(b) for b in bc.value]
+        states = [BloomState.from_bytes(b) for b in bc.value]
         h1, h2 = _hash_pd(s, element, "metro")
         shard = hashing.shard_of(h1, len(states))
         out = np.zeros(len(s), dtype=bool)
@@ -498,7 +486,7 @@ def _probe_hashes_df(probes: DataFrame, value_col: str, element: str,
 
 
 def _contains_join(states: DataFrame, probes: DataFrame, value_col: str,
-                   element: str, n_shards: int, algo: str,
+                   element: str, n_shards: int, algo: str, decode,
                    lookup_fn, out_col: str) -> DataFrame:
     """Shared shard-routed membership join, the probe path for filter
     sets too large to broadcast (e.g. 4096 cuckoo shards × GBs): the
@@ -508,7 +496,8 @@ def _contains_join(states: DataFrame, probes: DataFrame, value_col: str,
     each shard's probes, batch by batch, against that state. Nothing is
     collected or broadcast. A probe whose shard has no state row (the
     states frame was filtered) reads ``false``: nothing was inserted
-    there. Returns ``[value_col, out_col]``, one row per probe."""
+    there. ``decode`` reads a shard's state, ``lookup_fn`` probes it.
+    Returns ``[value_col, out_col]``, one row per probe."""
     from gostatix_spark.agg import _run_pieces, _tagged_union, _to_arrow_schema
 
     out_schema = StructType([probes.schema[value_col],
@@ -521,7 +510,7 @@ def _contains_join(states: DataFrame, probes: DataFrame, value_col: str,
         for piece, _, new in _run_pieces(batches, ["shard"]):
             side = piece.column("_side")
             if new:
-                st = (sketch_from_bytes(piece.column("state")[0].as_py())
+                st = (decode(piece.column("state")[0].as_py())
                       if side[0].as_py() == 0 else None)
             rows = piece.filter(pc.equal(side, 1))
             if not rows.num_rows:
@@ -552,13 +541,10 @@ def cuckoo_contains_join(states: DataFrame, probes: DataFrame,
     element = infer_element(probes, value_col, element)
 
     def lookup(st: CuckooState, h1, h2):
-        f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
-                                st.retries, buckets=st.buckets,
-                                length=st.length)
-        return f.lookup_hashes(h1)
+        return st.filter().lookup_hashes(h1)
 
     return _contains_join(states, probes, value_col, element, n_shards,
-                          "murmur3", lookup, out_col)
+                          "murmur3", CuckooState.from_bytes, lookup, out_col)
 
 
 def bloom_contains_join(states: DataFrame, probes: DataFrame,
@@ -576,7 +562,7 @@ def bloom_contains_join(states: DataFrame, probes: DataFrame,
         return bloom.lookup_batch(st.words, h1, h2, st.k, st.m)
 
     return _contains_join(states, probes, value_col, element, n_shards,
-                          "metro", lookup, out_col)
+                          "metro", BloomState.from_bytes, lookup, out_col)
 
 
 def cms_count_col(spark: SparkSession, state_blob: bytes, col: Column,
@@ -587,7 +573,7 @@ def cms_count_col(spark: SparkSession, state_blob: bytes, col: Column,
 
     @F.pandas_udf(LongType())
     def probe(s: pd.Series) -> pd.Series:
-        st: CMSState = sketch_from_bytes(bc.value)
+        st = CMSState.from_bytes(bc.value)
         h1, h2 = _hash_pd(s, element, "metro")
         return pd.Series(cms.query_batch(st.matrix, h1, h2).astype(np.int64))
 

@@ -17,13 +17,13 @@ Each kind is one :class:`Sketch` subclass:
   value) pairs, dense frames are copied once as (rows × width) rows
   and each run's rows fold in ⌈log₂ run length⌉ elementwise passes
   (:func:`_fold_runs`). Top-K, t-digest and KLL keep the
-  decode-and-fold ``merge``; :func:`merge` serves both. The layout of
-  each kind's frame lives in one table, ``state.ARRAY_FRAMES``;
+  decode-and-fold ``merge``; :func:`merge` serves both;
 * ``info`` reports a decoded state's parameters, fill and accuracy
   (``query.sketch_info``).
 
-A state names its kind by its leading bytes: ``GSK1`` plus a kind byte
-(``state.py``), or the ``GSKQ``/``GSKL`` frames of t-digest and KLL.
+A state names its kind by its leading bytes, as the one frame table
+``state.FRAMES`` lists them for all seven kinds: ``GSK1`` plus a kind
+byte, or the ``GSKQ``/``GSKL`` magic of t-digest and KLL.
 :func:`lookup` maps any state to its entry, so the build engine
 (``agg.py``), merges, checkpoints and queries hold no per-kind code.
 Adding a sketch kind is adding one subclass to :data:`REGISTRY`.
@@ -39,12 +39,12 @@ import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
 from gostatix_spark import params
-from gostatix_spark.kernels import bloom, cms, cuckoo, hll, kll, tdigest, topk
-from gostatix_spark.state import (ARRAY_FRAMES, KIND_IDS, BloomState,
-                                  CMSState, CuckooState, Frames, HLLState,
-                                  TopKState, binary_array, binary_buffers,
-                                  check_rows, frame_kind, kind_bytes,
-                                  read_frames, sparse_pairs, write_frames)
+from gostatix_spark.kernels import bloom, cms, hll, kll, tdigest, topk
+from gostatix_spark.state import (FRAMES, BloomState, CMSState, CuckooState,
+                                  Frames, HLLState, TopKState, binary_array,
+                                  binary_buffers, check_rows, kind_of,
+                                  lead_kinds, read_frames, sparse_pairs,
+                                  write_frames)
 
 
 def _count(vals, weights) -> int:
@@ -93,8 +93,8 @@ class Sketch:
 
 class ArrayMerge(Sketch):
     """A kind whose state is one fixed-width array merged elementwise
-    by ``ufunc`` (HLL max, CMS add, Bloom OR); ``state.ARRAY_FRAMES``
-    holds its frame layout. Its runs of partials merge a whole batch at
+    by ``ufunc`` (HLL max, CMS add, Bloom OR); ``state.FRAMES`` holds
+    its frame layout. Its runs of partials merge a whole batch at
     a time (:meth:`reduce_runs`), straight from the serialized frames;
     no state is decoded one by one."""
 
@@ -139,7 +139,7 @@ class ArrayMerge(Sketch):
         """(payload, count) per run of frames sharing parameters: the
         dense frames folded by :func:`_fold_runs`, then the sparse HLL
         (index, value) pairs scattered in."""
-        width, dtype = int(fr.width[0]), ARRAY_FRAMES[cls.kind].dtype
+        width, dtype = int(fr.width[0]), FRAMES[cls.kind].dtype
         out = np.zeros((len(starts), width), dtype)
         dense = np.flatnonzero(fr.version == 1)
         if dense.size:
@@ -443,32 +443,27 @@ class Cuckoo(Sketch):
 
     @staticmethod
     def info(st):
-        f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
-                                buckets=st.buckets, length=st.length)
         return ({"size": st.size, "bucket_size": st.bucket_size,
                  "fp_len": st.fp_len, "length": st.length},
-                st.length / (st.size * st.bucket_size), f.positive_rate())
+                st.length / (st.size * st.bucket_size),
+                st.filter().positive_rate())
 
 
 REGISTRY: dict[str, type[Sketch]] = {
     s.kind: s for s in (HLL, CMS, Bloom, TopK, TDigest, KLL, Cuckoo)}
-# kinds framed outside GSK1, by their 4-byte magic
-_OWN_FRAMES = {tdigest.MAGIC: TDigest, kll.KLL.MAGIC: KLL}
 
 
 def lookup(blob) -> type[Sketch]:
     """The registry entry of a serialized state, from its leading bytes;
-    ``ValueError`` when they name no kind."""
-    own = _OWN_FRAMES.get(bytes(blob[:4]))
-    return own if own is not None else REGISTRY[frame_kind(blob)]
+    ``state.SketchFormatError`` when they name no kind."""
+    return REGISTRY[kind_of(blob)]
 
 
 def decode(blob):
     return lookup(blob).decode(bytes(blob))
 
 
-# array-merge kinds by their GSK1 kind byte
-_ARRAY_KINDS = {KIND_IDS[k]: REGISTRY[k] for k in ARRAY_FRAMES}
+_ARRAY_KINDS = [s for s in REGISTRY.values() if issubclass(s, ArrayMerge)]
 
 
 def _merged_frames(sk: type[ArrayMerge], data, lo, hi, starts, rows):
@@ -488,10 +483,10 @@ def merge_runs(states, starts: np.ndarray):
     import pyarrow as pa
     data, off = binary_buffers(states)
     ends = np.append(starts[1:], len(states))
-    first = kind_bytes(data, off[starts], off[starts + 1])
+    first = lead_kinds(data, off[starts], off[starts + 1])
     parts = []
-    for kb, sk in _ARRAY_KINDS.items():
-        runs = np.flatnonzero(first == kb)
+    for sk in _ARRAY_KINDS:
+        runs = np.flatnonzero(first == sk.kind)
         if not runs.size:
             continue
         lens = ends[runs] - starts[runs]

@@ -1,15 +1,35 @@
-"""Sketch state containers + codecs.
+"""Sketch state containers and their frames.
 
 Each sketch's state is a small numpy buffer plus parameters
-(SURVEY.md §1.2). Two codecs per sketch:
+(SURVEY.md §1.2), with two codecs:
 
-* **binary** (`to_bytes`/`from_bytes`) — the Spark wire format: one
-  versioned little-endian frame stored in ``BinaryType`` columns and in
-  parquet checkpoints. Layout: magic ``GSK1``, kind byte, little-endian
-  header struct, raw numpy payload. This is *our* format (the
-  reference's big-endian ``WriteTo``/``ReadFrom`` streams,
-  ``bloom_filter.go:279-320`` etc., are a wire format of its own
-  backend, not semantics).
+* **binary** (``to_bytes``/``from_bytes``) — the Spark wire format,
+  stored in ``BinaryType`` columns and in parquet checkpoints. One
+  table, :data:`FRAMES`, describes the frame of all seven kinds:
+
+  - its leading bytes: ``GSK1`` and a kind byte, then the u32 length of
+    the header (HLL, CMS, Bloom, Top-K, cuckoo), or a magic of the
+    kind's own (``GSKQ`` t-digest, ``GSKL`` KLL);
+  - its little-endian header struct per version, whose first field is
+    the version byte;
+  - the payload: for a kind whose payload is one array, its dtype and
+    its length from the header; the others read theirs in sections
+    sized from the header (Top-K, KLL) or from the payload length
+    (sparse HLL).
+
+  :func:`frame` writes a frame's leading bytes and header. One reader,
+  :func:`read_frame`, finds the kind, checks the header and hands back
+  a bounded :class:`Payload` cursor that rejects reads past the end and
+  bytes left over. Every ``from_bytes`` reads through it, and every
+  fault raises :class:`SketchFormatError`, as does a value no state
+  holds (an HLL rank past 65 − log₂ m, a cuckoo item count that is not
+  its number of set slots). :func:`read_frames` is the
+  vectorized form of the same table for HLL, CMS and Bloom: it checks
+  the frames of a whole Arrow batch at once (its errors name the row,
+  as plain ``ValueError``), and :func:`lead_kinds` finds their kinds.
+  This is *our* format: the reference's big-endian ``WriteTo``/
+  ``ReadFrom`` streams (``bloom_filter.go:279-320`` etc.) are a wire
+  format of its own backend, not semantics.
 
 * **reference JSON** (`to_json`/`from_json`) — field-name compatible
   with the reference's ``Export()/Import()`` structs
@@ -22,65 +42,163 @@ from __future__ import annotations
 
 import base64
 import json
+import math
 import struct
+from collections import namedtuple
 from dataclasses import dataclass, field
+from functools import cache
 from typing import Callable, NamedTuple
 
 import numpy as np
 
+from gostatix_spark.kernels import cuckoo, topk
 from gostatix_spark.params import hll_alpha
 
 MAGIC = b"GSK1"
-_KINDS = {1: "bloom", 2: "hll", 3: "cms", 4: "topk", 5: "cuckoo"}
-KIND_IDS = {v: k for k, v in _KINDS.items()}
 
 
-def _frame(kind: str, header: bytes, payload: bytes) -> bytes:
-    return MAGIC + bytes([KIND_IDS[kind]]) + struct.pack("<I", len(header)) + header + payload
+class SketchFormatError(ValueError):
+    """A serialized sketch state that is not a well-formed frame."""
 
 
-def frame_kind(buf: bytes) -> str:
-    """The kind a ``GSK1`` frame names; ``ValueError`` for anything else."""
-    if bytes(buf[:4]) != MAGIC or len(buf) < 9:
-        raise ValueError(f"not a GSK1 sketch frame (starts {bytes(buf[:4])!r})")
-    if buf[4] not in _KINDS:
-        raise ValueError(f"unknown sketch kind byte {buf[4]} in GSK1 frame")
-    return _KINDS[buf[4]]
+class Layout(NamedTuple):
+    """One kind's frame: ``lead``, then the u32 header length (GSK1
+    kinds only), the header, and the payload."""
+
+    lead: bytes  # GSK1 and the kind byte, or the kind's own magic
+    header: type  # the header fields as a namedtuple, version first
+    structs: dict  # version byte → header struct
+    dtype: np.dtype | None = None  # a one-array payload: its elements,
+    width: Callable | None = None  # and their number, from the header
 
 
-def _unframe(buf: bytes, expected: str) -> tuple[bytes, bytes]:
-    """(header, payload) of a frame of kind ``expected``."""
-    found = frame_kind(buf)
-    if found != expected:
-        raise ValueError(f"expected a {expected} frame, found {found}")
-    hlen = struct.unpack_from("<I", buf, 5)[0]
-    return buf[9 : 9 + hlen], buf[9 + hlen :]
+def _layout(lead: bytes, fields: str, *formats: str, dtype=None,
+            width=None) -> Layout:
+    """Versions 1, 2, … with the header fields ``formats`` after the
+    version byte; a field that a version lacks reads 0."""
+    names = ["version", *fields.split()]
+    header = namedtuple("Header", names,
+                        defaults=[0] * (len(names) - 1 - len(formats[0])))
+    return Layout(lead, header, {v: struct.Struct("<B" + f)
+                                 for v, f in enumerate(formats, 1)},
+                  dtype and np.dtype(dtype), width)
 
 
-class ArrayFrame(NamedTuple):
-    """Layout of a GSK1 kind whose payload is one fixed-width array.
-    Its header is the version byte, the parameters and one count, each
-    parameter and the count a little-endian u64."""
-
-    n_params: int
-    last_version: int  # 2 for HLL: sparse (u32 index, u8 value) pairs
-    dtype: np.dtype  # payload element
-    width: Callable  # (n, n_params) parameters → dense payload elements
-
-
-ARRAY_FRAMES = {
-    "hll": ArrayFrame(1, 2, np.dtype(np.uint8), lambda p: p[:, 0]),  # m
-    "cms": ArrayFrame(2, 1, np.dtype("<u8"),
-                      lambda p: p[:, 0] * p[:, 1]),  # d, w
-    "bloom": ArrayFrame(2, 1, np.dtype("<u8"),
-                        lambda p: (p[:, 0] + 63) // 64),  # m, k
+FRAMES = {
+    "bloom": _layout(MAGIC + b"\x01", "m k n_items", "QQQ", dtype="<u8",
+                     width=lambda h: (h.m + 63) // 64),
+    # version 2 (sparse): u32 indices, then u8 values, of the non-zero
+    # registers, in ascending index order
+    "hll": _layout(MAGIC + b"\x02", "m n_items", "QQ", "QQ", dtype="u1",
+                   width=lambda h: h.m),
+    "cms": _layout(MAGIC + b"\x03", "d w all_sum", "QQQ", dtype="<u8",
+                   width=lambda h: h.d * h.w),
+    # a CMS frame of cms_len bytes, then n_cand × (_CANDIDATE, element)
+    "topk": _layout(MAGIC + b"\x04",
+                    "k error_rate accuracy cms_len n_cand capped",
+                    "QddII", "QddIIB"),
+    "cuckoo": _layout(MAGIC + b"\x05",
+                      "size bucket_size fp_len retries length", "QQQQQ",
+                      dtype="<u8", width=lambda h: h.size * h.bucket_size),
+    # n means, then n weights
+    "tdigest": _layout(b"GSKQ", "delta n_items n", "dQI", dtype="<f8",
+                       width=lambda h: 2 * h.n),
+    # n_levels × (u32 length, that many f64 items)
+    "kll": _layout(b"GSKL", "k n seed n_levels", "IQqI"),
 }
+_CANDIDATE = struct.Struct("<IQ")  # a Top-K element's length and count
+_BE_U64 = struct.Struct(">Q")  # the reference streams' length and count
+_BY_LEAD = {f.lead: k for k, f in FRAMES.items()}
+
+
+def frame(kind: str, version: int, *fields) -> bytes:
+    """The leading bytes and header of a ``kind`` frame; its payload
+    follows."""
+    lay = FRAMES[kind]
+    head = lay.structs[version].pack(version, *fields)
+    if lay.lead.startswith(MAGIC):
+        return lay.lead + struct.pack("<I", len(head)) + head
+    return lay.lead + head
+
+
+def kind_of(buf) -> str:
+    """The kind a frame names by its leading bytes;
+    ``SketchFormatError`` when they name none."""
+    lead = bytes(buf[:5])
+    kind = _BY_LEAD.get(lead[:4]) or _BY_LEAD.get(lead)
+    if kind is None:
+        raise SketchFormatError(
+            f"not a GSK1 sketch frame (starts {lead!r})"
+            if lead[:4] != MAGIC or len(lead) < 5
+            else f"unknown sketch kind byte {lead[4]} in GSK1 frame")
+    return kind
+
+
+class Payload:
+    """A frame's payload, read front to back: a read past the frame's
+    end, or bytes left unread at :meth:`end`, raise
+    :class:`SketchFormatError`."""
+
+    def __init__(self, buf, pos: int, kind: str):
+        self.buf, self.pos, self.kind = memoryview(buf), pos, kind
+
+    def take(self, n: int, what: str = "payload") -> memoryview:
+        if self.pos + n > len(self.buf):
+            raise SketchFormatError(f"{self.kind} {what} runs past the end "
+                                    f"of the {len(self.buf)}-byte frame")
+        self.pos += n
+        return self.buf[self.pos - n:self.pos]
+
+    def unpack(self, st: struct.Struct, what: str = "payload") -> tuple:
+        return st.unpack(self.take(st.size, what))
+
+    def array(self, dtype, n: int, what: str = "payload") -> np.ndarray:
+        """The next ``n`` elements of ``dtype``, copied in native order."""
+        dt = np.dtype(dtype)
+        return np.frombuffer(self.take(n * dt.itemsize, what),
+                             dt).astype(dt.newbyteorder("="))
+
+    def end(self, what: str = "payload") -> None:
+        if self.pos < len(self.buf):
+            raise SketchFormatError(f"{len(self.buf) - self.pos} bytes left"
+                                    f" over after the {self.kind} {what}")
+
+    def dense(self, h) -> np.ndarray:
+        """The one-array payload :data:`FRAMES` gives the kind, sized
+        from its header ``h``; it must end the frame."""
+        lay = FRAMES[self.kind]
+        out = self.array(lay.dtype, lay.width(h))
+        self.end()
+        return out
+
+
+def read_frame(buf, kind: str | None = None) -> tuple[tuple, Payload]:
+    """The header and payload cursor of one serialized state. The
+    frame's leading bytes name its kind (when ``kind`` is given, any
+    other raises); its version, header length and header size are
+    checked against :data:`FRAMES`."""
+    found = kind_of(buf)
+    if kind is not None and found != kind:
+        raise SketchFormatError(f"expected a {kind} frame, found {found}")
+    lay = FRAMES[found]
+    sized = lay.lead.startswith(MAGIC)  # GSK1: the header length follows
+    pos = len(lay.lead) + 4 * sized
+    # a frame that ends before its version byte is short of version 1's
+    st = lay.structs.get(buf[pos] if len(buf) > pos else 1)
+    if st is None:
+        raise SketchFormatError(f"unknown {found} frame version {buf[pos]}")
+    if len(buf) < pos + st.size:
+        raise SketchFormatError(f"shorter than a {found} header")
+    if sized and int.from_bytes(buf[5:9], "little") != st.size:
+        raise SketchFormatError(f"bad {found} header length")
+    return (lay.header(*st.unpack_from(buf, pos)),
+            Payload(buf, pos + st.size, found))
 
 
 class Frames(NamedTuple):
     """Header fields and payload byte ranges of validated frames."""
 
-    rows: np.ndarray | None  # each frame's row for errors; None: a lone state
+    rows: np.ndarray  # each frame's row, named in errors
     version: np.ndarray  # uint8
     params: np.ndarray  # (n, n_params) int64: hll m; cms d, w; bloom m, k
     count: np.ndarray  # uint64: n_items, or all_sum for cms
@@ -89,13 +207,11 @@ class Frames(NamedTuple):
     hi: np.ndarray  # int64 payload end
 
 
-def check_rows(ok: np.ndarray, rows: np.ndarray | None, what: str) -> None:
-    """``ValueError`` naming the first row where ``ok`` is false (no row
-    for a lone state: ``rows`` None)."""
+def check_rows(ok: np.ndarray, rows: np.ndarray, what: str) -> None:
+    """``ValueError`` naming the first row where ``ok`` is false."""
     if not ok.all():
-        bad = int(np.argmin(ok))
-        raise ValueError(what if rows is None
-                         else f"sketch state row {int(rows[bad])}: {what}")
+        raise ValueError(f"sketch state row {int(rows[np.argmin(ok)])}: "
+                         f"{what}")
 
 
 def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -146,97 +262,94 @@ def _heads(data: np.ndarray, lo: np.ndarray, width: int) -> np.ndarray:
     return data[lo[:, None] + np.arange(width)]
 
 
-_MAGIC = np.frombuffer(MAGIC, np.uint8)
-
-
-def kind_bytes(data: np.ndarray, lo: np.ndarray,
+def lead_kinds(data: np.ndarray, lo: np.ndarray,
                hi: np.ndarray) -> np.ndarray:
-    """The GSK1 kind byte of each frame ``data[lo[i]:hi[i]]``; 0 for a
-    frame of another format (t-digest, KLL) or too short for a header."""
-    out = np.zeros(len(lo), np.uint8)
-    at = np.flatnonzero(hi - lo >= 9)
-    head = _heads(data, lo[at], 5)
-    gsk1 = (head[:, :4] == _MAGIC).all(1)
-    out[at[gsk1]] = head[gsk1, 4]
+    """The kind each frame ``data[lo[i]:hi[i]]`` names by the leading
+    bytes of :data:`FRAMES`; "" where they name none."""
+    out = np.full(len(lo), "", "U8")
+    at = np.flatnonzero(hi - lo >= 5)
+    head = np.zeros((len(at), 8), np.uint8)  # the first 5 bytes as a u64
+    head[:, :5] = _heads(data, lo[at], 5)
+    code = head.view("<u8")[:, 0]
+    for kind, lay in FRAMES.items():
+        lead = int.from_bytes(lay.lead, "little")
+        out[at[code & np.uint64((1 << 8 * len(lay.lead)) - 1) == lead]] = kind
     return out
 
 
-# a frame's fixed part by its number of parameters: magic, kind byte,
-# header length, then the header (version, parameters, count)
-_HEADERS = {n: np.dtype([("magic", "S4"), ("kind", "u1"), ("hlen", "<u4"),
-                         ("version", "u1"), ("params", "<u8", (n,)),
-                         ("count", "<u8")]) for n in (1, 2)}
-_PREFIX = {k: np.frombuffer(MAGIC + struct.pack(
-    "<BI", KIND_IDS[k], _HEADERS[f.n_params].itemsize - 9), np.uint8)
-    for k, f in ARRAY_FRAMES.items()}
+@cache
+def _batch_layout(kind: str) -> tuple[np.dtype, np.ndarray]:
+    """The numpy form of the fixed part of a ``kind`` frame whose header
+    fields after the version are all u64 (HLL, CMS, Bloom): its leading
+    bytes and header length, the version, the parameters and the count
+    (the last field); and the 9 bytes every such frame starts with."""
+    n = len(FRAMES[kind].header._fields) - 2
+    dt = np.dtype([("lead", "u1", (9,)), ("version", "u1"),
+                   ("params", "<u8", (n,)), ("count", "<u8")])
+    return dt, np.frombuffer(frame(kind, 1, *[0] * (n + 1))[:9], np.uint8)
 
 
 def read_frames(data: np.ndarray, lo, hi, kind: str,
-                rows: np.ndarray | None = None) -> Frames:
-    """Parse the ``kind`` frames ``data[lo[i]:hi[i]]`` of a fixed-width
-    array kind (``ARRAY_FRAMES``) straight from a flat buffer. Every
-    frame is checked: magic, kind byte, header length, version, payload
-    length (the dense size for v1, whole (u32 index, u8 value) pairs for
-    sparse HLL v2). A failure raises ``ValueError`` naming ``rows[i]``."""
-    layout = ARRAY_FRAMES[kind]
-    dt = _HEADERS[layout.n_params]
+                rows: np.ndarray) -> Frames:
+    """Parse the ``kind`` frames ``data[lo[i]:hi[i]]`` of HLL, CMS or
+    Bloom straight from a flat buffer, checking every frame against
+    :data:`FRAMES` at once: leading bytes, header length, version,
+    payload length (the dense size for v1, whole (u32 index, u8 value)
+    pairs for sparse HLL v2). A failure raises ``ValueError`` naming the
+    frame's row (:func:`_explain`)."""
+    lay = FRAMES[kind]
+    dt, prefix = _batch_layout(kind)
     lo, hi = np.asarray(lo, np.int64), np.asarray(hi, np.int64)
     size = hi - lo
-    if not (size >= dt.itemsize).all():
-        check_rows(size >= 9, rows, "shorter than a GSK1 frame header")
-        _check_kind(_heads(data, lo, 9), kind, rows)
-        check_rows(size >= dt.itemsize, rows,
-                   f"shorter than a {kind} header")
+    _explain(size >= dt.itemsize, data, lo, hi, kind, rows)
     head = _heads(data, lo, dt.itemsize)
     h = head.view(dt)[:, 0]
-    params = h["params"].astype(np.int64)
-    width = layout.width(params)
-    version = h["version"]
+    params, version = h["params"].astype(np.int64), h["version"]
+    width = lay.width(lay.header(version, *params.T, h["count"]))
     plen = size - dt.itemsize
-    sized = (version == 1) & (plen == width * layout.dtype.itemsize)
-    if layout.last_version == 2:  # or whole sparse (index, value) pairs
-        sized |= (version == 2) & (plen % 5 == 0)
-    framed = (head[:, :9] == _PREFIX[kind]).all(1)  # magic, kind, hlen
-    if not (framed & sized).all():
-        _check_kind(head, kind, rows)
-        check_rows(framed, rows, f"bad {kind} header length")
-        check_rows(sized, rows, f"bad {kind} frame version or payload length")
+    ok = (version == 1) & (plen == width * lay.dtype.itemsize)
+    if kind == "hll":  # or whole sparse (index, value) pairs
+        ok |= (version == 2) & (plen % 5 == 0)
+    _explain(ok & (head[:, :9] == prefix).all(1), data, lo, hi, kind, rows)
     return Frames(rows, version, params, h["count"], width,
                   lo + dt.itemsize, hi)
 
 
-def _check_kind(head: np.ndarray, kind: str, rows) -> None:
-    """Raise for the first frame whose leading bytes are not a ``kind``
-    frame's, naming what it is instead."""
-    ok = (head[:, :4] == _MAGIC).all(1) & (head[:, 4] == KIND_IDS[kind])
+def _explain(ok: np.ndarray, data, lo, hi, kind: str, rows) -> None:
+    """``ValueError`` for the first frame that is not ``ok``, naming its
+    row and what the one-state reader finds wrong with it."""
     if not ok.all():
+        bad = int(np.argmin(ok))
+        what = f"bad {kind} frame"
         try:
-            what = (f"expected a {kind} frame, found "
-                    f"{frame_kind(head[np.argmin(ok)])}")
-        except ValueError as e:
+            _ARRAY_STATES[kind].from_bytes(data[lo[bad]:hi[bad]].tobytes())
+        except SketchFormatError as e:
             what = str(e)
-        check_rows(ok, rows, what)
+        raise ValueError(f"sketch state row {int(rows[bad])}: {what}")
 
 
 def sparse_pairs(data: np.ndarray, fr: Frames):
     """(frame, index, value) of every pair in the sparse HLL frames of
-    ``fr``, indices checked against their frame's m."""
+    ``fr``, indices checked against their frame's m and values against
+    the ranks a set register holds (1 to :func:`hll_top`)."""
     sp = np.flatnonzero(fr.version == 2)
     cnt = (fr.hi[sp] - fr.lo[sp]) // 5
     mid = fr.lo[sp] + 4 * cnt
     idx = gather(data, fr.lo[sp], mid).view("<u4")
     owner = np.repeat(sp, cnt)
-    ok = idx < fr.width[owner]
-    if not ok.all():
-        check_rows(ok, None if fr.rows is None else fr.rows[owner],
-                   "sparse hll index out of range")
-    return owner, idx, gather(data, mid, fr.hi[sp])
+    val = gather(data, mid, fr.hi[sp])
+    top = np.repeat(hll_top(fr.width[sp]), cnt)
+    for ok, what in ((idx < fr.width[owner], "sparse hll index out of range"),
+                     ((val >= 1) & (val <= top),
+                      "sparse hll register out of range")):
+        if not ok.all():
+            check_rows(ok, fr.rows[owner], what)
+    return owner, idx, val
 
 
-def _read_one(buf: bytes, kind: str) -> tuple[np.ndarray, Frames]:
-    """One serialized state as a buffer and its validated frame."""
-    data = np.frombuffer(buf, np.uint8)
-    return data, read_frames(data, [0], [len(data)], kind)
+def hll_top(m):
+    """The largest rank an HLL of ``m`` registers stores: 65 − log₂ m."""
+    return 66 - np.frexp(np.asarray(m, np.float64))[1]
 
 
 def write_frames(kind: str, params: np.ndarray, count: np.ndarray,
@@ -244,22 +357,15 @@ def write_frames(kind: str, params: np.ndarray, count: np.ndarray,
     """Dense (version 1) frames of one parameter set ``params`` as (flat
     bytes, int64 offsets): row i carries ``count[i]`` and ``payload[i]``
     — the bytes ``to_bytes`` writes, for many states at once."""
-    hlen = 9 + 8 * ARRAY_FRAMES[kind].n_params
-    head = np.frombuffer(MAGIC + bytes([KIND_IDS[kind]])
-                         + struct.pack("<IB", hlen, 1)
-                         + np.asarray(params, "<u8").tobytes(), np.uint8)
+    head = np.frombuffer(frame(kind, 1, *np.asarray(params).tolist(), 0),
+                         np.uint8)
     body = payload.reshape(len(payload), -1).view(np.uint8)
-    out = np.empty((len(payload), 9 + hlen + body.shape[1]), np.uint8)
+    out = np.empty((len(payload), len(head) + body.shape[1]), np.uint8)
     out[:, :len(head)] = head
-    out[:, len(head):9 + hlen] = (
+    out[:, len(head) - 8:len(head)] = (  # the count ends the header
         np.asarray(count, "<u8").view(np.uint8).reshape(-1, 8))
-    out[:, 9 + hlen:] = body
+    out[:, len(head):] = body
     return out.reshape(-1), np.arange(len(out) + 1) * out.shape[1]
-
-
-def kind_of(buf: bytes) -> str:
-    from gostatix_spark.sketches import lookup
-    return lookup(buf).kind
 
 
 def sketch_from_bytes(buf: bytes):
@@ -292,15 +398,13 @@ class BloomState:
     n_items: int = 0
 
     def to_bytes(self) -> bytes:
-        header = struct.pack("<BQQQ", 1, self.m, self.k, self.n_items)
-        return _frame("bloom", header, self.words.tobytes())
+        return (frame("bloom", 1, self.m, self.k, self.n_items)
+                + self.words.tobytes())
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "BloomState":
-        data, fr = _read_one(buf, "bloom")
-        m, k = fr.params[0].tolist()
-        return cls(m, k, data[fr.lo[0]:].view("<u8").astype(np.uint64),
-                   int(fr.count[0]))
+        h, body = read_frame(buf, "bloom")
+        return cls(h.m, h.k, body.dense(h), h.n_items)
 
     def to_json(self) -> str:
         """Reference ``{m,k,b}`` with b = bitset MarshalJSON content
@@ -355,28 +459,32 @@ class HLLState:
         if sparse:
             idx = np.nonzero(self.registers)[0]
             if 5 * len(idx) < self.m:
-                header = struct.pack("<BQQ", 2, self.m, self.n_items)
-                payload = (idx.astype("<u4").tobytes()
-                           + self.registers[idx].tobytes())
-                return _frame("hll", header, payload)
-        header = struct.pack("<BQQ", 1, self.m, self.n_items)
-        return _frame("hll", header, self.registers.tobytes())
+                return (frame("hll", 2, self.m, self.n_items)
+                        + idx.astype("<u4").tobytes()
+                        + self.registers[idx].tobytes())
+        return frame("hll", 1, self.m, self.n_items) + self.registers.tobytes()
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "HLLState":
-        data, fr = _read_one(buf, "hll")
-        m = int(fr.params[0, 0])
-        if fr.version[0] == 2:
-            _, idx, vals = sparse_pairs(data, fr)
-            regs = np.zeros(m, dtype=np.uint8)
-            regs[idx] = vals
+        h, body = read_frame(buf, "hll")
+        if h.version == 1:
+            regs = body.dense(h)
         else:
-            regs = data[fr.lo[0]:].copy()
-        return cls(m, regs, int(fr.count[0]))
+            n = (len(body.buf) - body.pos) // 5
+            idx = body.array("<u4", n, "sparse indices")
+            vals = body.array("u1", n, "sparse values")
+            body.end("sparse pairs")
+            if (idx >= h.m).any() or not vals.all():
+                raise SketchFormatError(
+                    "sparse hll index or register out of range")
+            regs = np.zeros(h.m, dtype=np.uint8)
+            regs[idx] = vals
+        if regs.max(initial=0) > hll_top(h.m):
+            raise SketchFormatError("hll register out of range")
+        return cls(h.m, regs, h.n_items)
 
     def to_json(self) -> str:
         """Reference ``{nr,nbp,c,r,k}`` — ``base_hyperloglog.go:38-44``."""
-        import math
         return json.dumps({"nr": self.m, "nbp": int(math.log2(self.m)),
                            "c": hll_alpha(self.m),
                            "r": self.registers.tolist(), "k": ""})
@@ -395,7 +503,6 @@ class HLLState:
         """``hyperloglog.go:124-142`` WriteTo: uint64-BE numRegisters,
         uint64-BE numBytesPerHash, float64-BE correctionBias, raw
         register bytes."""
-        import math
         return (struct.pack(">QQd", self.m, int(math.log2(self.m)),
                             hll_alpha(self.m))
                 + self.registers.tobytes())
@@ -415,15 +522,13 @@ class CMSState:
     all_sum: int = 0
 
     def to_bytes(self) -> bytes:
-        header = struct.pack("<BQQQ", 1, self.d, self.w, self.all_sum)
-        return _frame("cms", header, self.matrix.tobytes())
+        return (frame("cms", 1, self.d, self.w, self.all_sum)
+                + self.matrix.tobytes())
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "CMSState":
-        data, fr = _read_one(buf, "cms")
-        d, w = fr.params[0].tolist()
-        mat = data[fr.lo[0]:].view("<u8").astype(np.uint64).reshape(d, w)
-        return cls(d, w, mat, int(fr.count[0]))
+        h, body = read_frame(buf, "cms")
+        return cls(h.d, h.w, body.dense(h).reshape(h.d, h.w), h.all_sum)
 
     def to_json(self) -> str:
         """Reference ``{r,c,s,m,k}`` — ``count_min_sketch.go:95-100``."""
@@ -468,50 +573,28 @@ class TopKState:
 
     def to_bytes(self) -> bytes:
         cms_bytes = self.cms.to_bytes()
-        cand_blob = bytearray()
-        for e, c in self.candidates.items():
-            cand_blob += struct.pack("<IQ", len(e), c) + e
+        head = (self.k, self.error_rate, self.accuracy, len(cms_bytes),
+                len(self.candidates))
         # version 2 appends the capped flag byte; uncapped states keep
         # writing version 1 so existing serialized states round-trip
         # bit-identically
-        if self.capped:
-            header = struct.pack("<BQddIIB", 2, self.k, self.error_rate,
-                                 self.accuracy, len(cms_bytes),
-                                 len(self.candidates), 1)
-        else:
-            header = struct.pack("<BQddII", 1, self.k, self.error_rate,
-                                 self.accuracy, len(cms_bytes),
-                                 len(self.candidates))
-        return _frame("topk", header, cms_bytes + bytes(cand_blob))
+        out = [frame("topk", 2, *head, 1) if self.capped
+               else frame("topk", 1, *head), cms_bytes]
+        for e, c in self.candidates.items():
+            out += (_CANDIDATE.pack(len(e), c), e)
+        return b"".join(out)
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "TopKState":
-        header, payload = _unframe(buf, "topk")
-        version = header[0]
-        if version >= 2:
-            _, k, er, acc, cms_len, n_cand, capped_b = struct.unpack(
-                "<BQddIIB", header)
-        else:
-            _, k, er, acc, cms_len, n_cand = struct.unpack("<BQddII", header)
-            capped_b = 0
-        cms_state = CMSState.from_bytes(payload[:cms_len])
+        h, body = read_frame(buf, "topk")
+        cms_state = CMSState.from_bytes(body.take(h.cms_len, "CMS frame"))
         cands: dict[bytes, int] = {}
-        off = cms_len
-        for i in range(n_cand):
-            fits = off + 12 <= len(payload)
-            if fits:
-                elen, c = struct.unpack_from("<IQ", payload, off)
-                off += 12
-                fits = off + elen <= len(payload)
-            if not fits:
-                raise ValueError(f"Top-K candidate {i} of {n_cand} runs "
-                                 f"past the {len(payload)}-byte payload")
-            cands[payload[off : off + elen]] = c
-            off += elen
-        if off != len(payload):
-            raise ValueError(f"{len(payload) - off} bytes left over after "
-                             f"{n_cand} Top-K candidates")
-        return cls(k, er, acc, cms_state, cands, capped=bool(capped_b))
+        for _ in range(h.n_cand):
+            n, c = body.unpack(_CANDIDATE, "candidate")
+            cands[bytes(body.take(n, "candidate"))] = c
+        body.end(f"{h.n_cand} candidates")
+        return cls(h.k, h.error_rate, h.accuracy, cms_state, cands,
+                   capped=bool(h.capped))
 
     def to_json(self) -> str:
         """Reference ``{k,er,a,s,h,hk}`` — ``top_k.go:144-149``; heap
@@ -545,12 +628,11 @@ class TopKState:
         errorRate, float64-BE accuracy, CMS stream, then exactly k heap
         entries (uint64-BE strlen, bytes, uint64-BE frequency). Our top
         k candidates (count desc, element asc) fill the heap slots."""
-        from gostatix_spark.kernels import topk as topk_kernel
         out = [struct.pack(">Qdd", self.k, self.error_rate, self.accuracy),
                self.cms.to_reference_binary()]
         # capped builds must re-estimate through the CMS — the exact
         # candidate sums undercount flushed-then-reappearing elements
-        top = topk_kernel.final_values(self.cms.matrix, self.candidates,
+        top = topk.final_values(self.cms.matrix, self.candidates,
                                        self.k, exact=not self.capped)
         for e, c in top:
             out.append(struct.pack(">Q", len(e)) + e + struct.pack(">Q", c))
@@ -561,21 +643,15 @@ class TopKState:
 
     @classmethod
     def from_reference_binary(cls, buf: bytes) -> "TopKState":
-        k, er, acc = struct.unpack_from(">Qdd", buf)
-        off = struct.calcsize(">Qdd")
-        d, w, _ = struct.unpack_from(">QQQ", buf, off)
-        cms_len = 24 + d * w * 8
-        cms_state = CMSState.from_reference_binary(buf[off:off + cms_len])
-        off += cms_len
+        cur = Payload(buf, 0, "reference topk")
+        k, er, acc = cur.unpack(struct.Struct(">Qdd"))
+        d, w = struct.unpack_from(">QQ", buf, cur.pos)
+        cms_state = CMSState.from_reference_binary(cur.take(24 + 8 * d * w))
         cands: dict[bytes, int] = {}
         for _ in range(k):
-            (ln,) = struct.unpack_from(">Q", buf, off)
-            off += 8
-            e = buf[off:off + ln]
-            off += ln
-            (c,) = struct.unpack_from(">Q", buf, off)
-            off += 8
-            if ln:
+            e = bytes(cur.take(*cur.unpack(_BE_U64)))
+            (c,) = cur.unpack(_BE_U64)
+            if e:
                 cands[e] = c
         return cls(k, er, acc, cms_state, cands)
 
@@ -590,16 +666,29 @@ class CuckooState:
     buckets: np.ndarray  # uint64[size, bucket_size]
 
     def to_bytes(self) -> bytes:
-        header = struct.pack("<BQQQQQ", 1, self.size, self.bucket_size,
-                             self.fp_len, self.retries, self.length)
-        return _frame("cuckoo", header, self.buckets.tobytes())
+        return (frame("cuckoo", 1, self.size, self.bucket_size, self.fp_len,
+                      self.retries, self.length) + self.buckets.tobytes())
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "CuckooState":
-        header, payload = _unframe(buf, "cuckoo")
-        _, size, bs, fpl, r, ln = struct.unpack("<BQQQQQ", header)
-        return cls(size, bs, fpl, r, ln,
-                   np.frombuffer(payload, dtype=np.uint64).reshape(size, bs).copy())
+        h, body = read_frame(buf, "cuckoo")
+        buckets = body.dense(h).reshape(h.size, h.bucket_size)
+        if (n := np.count_nonzero(buckets)) != h.length:
+            raise SketchFormatError(f"cuckoo frame holds {h.length} items"
+                                    f" but {n} set slots")
+        return cls(*h[1:], buckets)
+
+    def filter(self) -> cuckoo.CuckooFilter:
+        """The kernel filter over these buckets (shared, not copied)."""
+        return cuckoo.CuckooFilter(self.size, self.bucket_size, self.fp_len,
+                                   self.retries, buckets=self.buckets,
+                                   length=self.length)
+
+    @classmethod
+    def of(cls, f: cuckoo.CuckooFilter) -> "CuckooState":
+        """The state of a kernel filter."""
+        return cls(f.size, f.bucket_size, f.fp_len, f.retries, f.length,
+                   f.buckets)
 
     def to_json(self) -> str:
         """Reference ``{s,bs,fpl,l,r,b}`` — ``cuckoo_filter.go:169-174``;
@@ -647,15 +736,14 @@ class CuckooState:
 
     @classmethod
     def from_reference_binary(cls, buf: bytes) -> "CuckooState":
-        size, bs, fpl, ln, r = struct.unpack_from(">QQQQQ", buf)
-        off = 40
+        cur = Payload(buf, 0, "reference cuckoo")
+        size, bs, fpl, ln, r = cur.unpack(struct.Struct(">5Q"))
         buckets = np.zeros((size, bs), dtype=np.uint64)
         for i in range(size):
-            _, blen = struct.unpack_from(">QQ", buf, off)
-            off += 16
-            for j in range(blen):
-                (sl,) = struct.unpack_from(">Q", buf, off)
-                off += 8
-                buckets[i, j] = int(buf[off:off + sl]) + 1
-                off += sl
+            for j in range(cur.unpack(struct.Struct(">QQ"))[1]):
+                fp = cur.take(*cur.unpack(_BE_U64))
+                buckets[i, j] = int(bytes(fp)) + 1
         return cls(size, bs, fpl, r, ln, buckets)
+
+
+_ARRAY_STATES = {"hll": HLLState, "cms": CMSState, "bloom": BloomState}

@@ -612,6 +612,21 @@ class TestMultimodal:
         with _pt.raises(Exception):
             multimodal.decode_features(bad, out_dim=4).collect()
 
+    def test_meta_without_codec_raises_on_every_surface(self, spark):
+        """A row whose meta names no codec fails on all three decode
+        surfaces, instead of one reading it as zraw and another as the
+        fake stub."""
+        import zlib
+        from pyspark.sql import Row
+        bad = spark.createDataFrame(
+            [Row(asset_id=1, kind="video",
+                 media=zlib.compress(bytes(range(16))), meta={})],
+            multimodal.ASSET_SCHEMA)
+        for run in (multimodal.decode_payloads, multimodal.frame_sample,
+                    lambda df: multimodal.decode_features(df, out_dim=4)):
+            with pytest.raises(Exception, match="names no codec"):
+                run(bad).collect()
+
     def test_frame_sample_decodes_real_codec_first(self, spark):
         """Frames from zraw videos must come from the DECODED sample
         stream (verified against an independent zlib.decompress), not

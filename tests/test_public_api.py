@@ -37,15 +37,58 @@ def _perfbench_imports():
                     yield path.name, node.module, alias.name
 
 
+def _imported(module: str, attr: str):
+    """``from module import attr``: the attribute, or the submodule."""
+    mod = importlib.import_module(module)
+    if hasattr(mod, attr):
+        return getattr(mod, attr)
+    return importlib.import_module(f"{module}.{attr}")
+
+
 def test_perfbench_imports_resolve():
     found = list(_perfbench_imports())
     assert found, "perfbench imports nothing from gostatix_spark"
     missing = []
     for fname, module, attr in found:
-        mod = importlib.import_module(module)
-        if not hasattr(mod, attr):
-            try:  # a submodule imported by name
-                importlib.import_module(f"{module}.{attr}")
-            except ImportError:
-                missing.append(f"{fname}: from {module} import {attr}")
+        try:
+            _imported(module, attr)
+        except ImportError:
+            missing.append(f"{fname}: from {module} import {attr}")
     assert not missing, missing
+
+
+def _chain(node: ast.Attribute) -> list[str] | None:
+    """``['a', 'b', 'c']`` for the expression ``a.b.c``; None when the
+    chain does not start at a plain name."""
+    names = []
+    while isinstance(node, ast.Attribute):
+        names.append(node.attr)
+        node = node.value
+    return [node.id, *reversed(names)] if isinstance(node, ast.Name) \
+        else None
+
+
+def test_perfbench_attribute_chains_resolve():
+    """Every attribute chain ``perfbench/`` reads off a name it imported
+    from the library (``tdigest.from_bytes``, ``kll.KLL.from_bytes``,
+    ``hll.count`` …) exists, so moving one fails here rather than in a
+    benchmark run."""
+    bound = {}  # the names each file imports from gostatix_spark
+    for fname, module, attr in _perfbench_imports():
+        bound.setdefault(fname, {})[attr] = (module, attr)
+    missing, checked = [], 0
+    for path in sorted((REPO / "perfbench").glob("*.py")):
+        names = bound.get(path.name, {})
+        for node in ast.walk(ast.parse(path.read_text())):
+            chain = isinstance(node, ast.Attribute) and _chain(node)
+            if not chain or chain[0] not in names:
+                continue
+            obj = _imported(*names[chain[0]])
+            for i, attr in enumerate(chain[1:], 1):
+                if not hasattr(obj, attr):
+                    missing.append(f"{path.name}: {'.'.join(chain[:i + 1])}")
+                    break
+                obj = getattr(obj, attr)
+            checked += 1
+    assert checked, "perfbench reads no attribute of a library name"
+    assert not missing, sorted(set(missing))

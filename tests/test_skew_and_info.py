@@ -60,6 +60,23 @@ def test_sketch_info_accessors(spark):
     assert row["kind"] == "cuckoo" and 0 < row["fill_metric"] <= 1
 
 
+def test_query_on_wrong_kind_names_the_kinds(spark):
+    """A query decodes with its own kind's reader: a CMS state fed to a
+    Bloom or HLL query fails naming both kinds, not with an
+    AttributeError on a missing field."""
+    from gostatix_spark.kernels import cms
+    from gostatix_spark.query import bloom_cardinality, hll_intersect_pairs
+    from gostatix_spark.state import CMSState
+
+    blob = CMSState(2, 8, cms.new_state(2, 8), 0).to_bytes()
+    states = spark.createDataFrame([("a", blob), ("b", blob)],
+                                   "key string, state binary")
+    with pytest.raises(Exception, match="expected a bloom frame, found cms"):
+        bloom_cardinality(states).collect()
+    with pytest.raises(Exception, match="expected a hll frame, found cms"):
+        hll_intersect_pairs(states, "key").collect()
+
+
 def test_read_table_fallback_and_snapshot(spark, tmp_path):
     p = str(tmp_path / "t")
     corpus_df(spark, 100, seed=1, partitions=2).write.parquet(p)

@@ -1,8 +1,11 @@
 """Benchmark harness.
 
-Prints ONE JSON line:
+Prints the suite JSON line
 ``{"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., ...extras}``
+   "queries": {name: sec, ...}, "sf": ...}`` as soon as the queries are
+timed, then a compact headline with the scaling figures as the final
+line; the full result goes to ``$SPARK_GRAFT_BENCH_DETAIL`` (default
+BENCH/bench_detail_latest.json).
 
 Two workloads:
 
@@ -10,18 +13,29 @@ Two workloads:
    /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` — per-query
    wall seconds.
 2. **sketch-build throughput** (the BASELINE.json metric): one pass
-   over the deterministic synthetic tokenized corpus building all five
-   sketches, measured at N=8 and 4N=32 local cores on the SAME input
-   and partitioning → tokens/sec at both + scaling efficiency
-   (sandbox stand-in for N vs 4N executors per the driver protocol;
-   see BENCH/BASELINE.md). Run with SPARK_GRAFT_SCALING=0 to skip.
+   over the deterministic synthetic tokenized corpus building all six
+   mergeable sketches and the sharded cuckoo, at N and 4N local cores
+   (``$SPARK_GRAFT_SCALING_PAIR``, default 1,4) on the same input →
+   tokens/sec at both, the wall-clock scaling efficiency, and beside
+   it the work accounting read from each session's Spark event log
+   (sandbox stand-in for N vs 4N executors; see BENCH/BASELINE.md).
+   Run with SPARK_GRAFT_SCALING=0 to skip.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import pathlib
+import shlex
+import shutil
+import signal
+import subprocess
+import sys
+import tempfile
 import time
+
+SESSIONS, PASSES = 3, 2  # per level; timed passes per session
 
 
 def _run_driver_queries(sf_dir: str, cores: int) -> tuple[dict, float]:
@@ -50,9 +64,9 @@ def _run_driver_queries(sf_dir: str, cores: int) -> tuple[dict, float]:
     return timings, total
 
 
-def _sketch_build_job(spark, corpus, n_docs: int) -> dict:
+def _sketch_build_job(spark, corpus, n_docs: int) -> None:
     """The measured job (BENCH/BASELINE.md protocol): ONE scan building
-    the four mergeable sketches together (multi_sketch_agg) + the
+    the six mergeable sketches together (multi_sketch_agg) + the
     cuckoo shard build (its own scan — it shuffles element hashes).
 
     Serial-fraction control (Amdahl dominates the N→4N ratio):
@@ -69,7 +83,6 @@ def _sketch_build_job(spark, corpus, n_docs: int) -> dict:
     corpus = corpus.withColumn("n_tok_d", F.col("n_tok").cast("double"))
     n_shards = 32
     per_shard = cuckoo_shard_size(n_docs, n_shards)
-    t0 = time.perf_counter()
     states = multi_sketch_agg(corpus, [
         {"name": "hll", "kind": "hll", "value_col": "tokens",
          "key_col": "source", "params": {"m": 16384}},
@@ -92,122 +105,129 @@ def _sketch_build_job(spark, corpus, n_docs: int) -> dict:
     # leaves cores idle; sequential actions would add the tails up
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(2) as pool:
-        f1 = pool.submit(states.count)
-        f2 = pool.submit(cuckoo_states.count)
-        n_states = f1.result() + f2.result()
-    return {"wall_sec": time.perf_counter() - t0, "n_states": n_states}
+        list(pool.map(lambda df: df.count(), (states, cuckoo_states)))
+
+
+def _session(cores: int, corpus_path: str, input_bytes: int,
+             n_docs: int) -> list[tuple[float, float]]:
+    """One measurement session, run inside the fresh subprocess that
+    :func:`_scaling_rep_subprocess` starts: one discarded warm-up pass
+    (JIT, worker start), then ``PASSES`` timed passes. Returns each
+    timed pass's (start, end) in epoch seconds, the start cut to the
+    event log's milliseconds."""
+    from gostatix_spark.session import get_spark
+
+    mpb = max(16, int(input_bytes / (4 * cores) / (1 << 20)))
+    spark = get_spark(f"bench-scaling-{cores}", cores=cores,
+                      shuffle_partitions=32, max_partition_bytes=f"{mpb}m",
+                      active_processors=cores)
+    corpus = spark.read.parquet(corpus_path)
+    corpus.count()
+    windows = []
+    for _ in range(1 + PASSES):
+        t0 = int(time.time() * 1e3) / 1e3
+        _sketch_build_job(spark, corpus, n_docs)
+        windows.append((t0, time.time()))
+    spark.stop()
+    return windows[1:]
 
 
 def _scaling_rep_subprocess(cores: int, corpus_path: str, input_bytes: int,
-                            n_docs: int, max_passes: int = 3,
-                            abort_above: float | None = None) -> list[float]:
-    """One measurement session in a FRESH subprocess with an N-core JVM.
+                            n_docs: int, events: str) -> list[tuple]:
+    """:func:`_session` in a fresh subprocess with an N-core JVM and its
+    event log in ``events``; returns :func:`_pass_work` of its passes.
 
-    ``local[N]`` only caps *task slots* — the JVM's GC/JIT/netty
-    service pools otherwise size themselves for all 32 host CPUs, so a
-    "2-core" session draws extra host time and flatters the small
-    level. ``-XX:ActiveProcessorCount=N`` makes the JVM provision for
-    exactly N cores — the same mechanism container runtimes use for a
-    real N-core executor. Rejected alternatives, both measured: hard
-    ``sched_setaffinity`` pinning (fights co-tenant load on specific
-    vCPU ids of this virtualized host; 3× slower), and a persistent
-    per-level worker JVM running many passes (degrades 3-8× over
-    passes — the processor-capped GC on an aging heap; fresh subprocess
-    per session keeps every sample clean). The driver heap is capped at
-    8g so GC stays proportionate to the capped processor count.
+    ``local[N]`` caps only task slots; ``-XX:ActiveProcessorCount=N``
+    also sizes the JVM's GC/JIT/netty pools for N cores, as a container
+    runtime does for a real N-core executor, and the 8g driver heap
+    keeps GC proportionate. A fresh JVM per session keeps the passes
+    clean: one JVM running many passes degraded 3-8× (BASELINE.md)."""
+    from tools.stage_times import read_events
 
-    The session warms (scan + small build) then runs up to 3 full
-    passes, stopping early once a pass fails to improve on the session
-    best by >5% (the first pass carries the JIT tail; a noise burst
-    mid-session stops wasting budget). Returns all pass walls.
-
-    ``abort_above`` (protocol v6): when set (ledger capability floor
-    × 1.12), loud windows stop the session early so the budget buys
-    sessions in NEW windows — the only thing that can deepen a
-    per-level min. Adaptive, two tiers: a CATASTROPHIC pass
-    (> 2.5 × abort_above ≈ 2.8× the floor — r5 run 7 drew 8-17×)
-    aborts immediately; a MARGINAL session (every pass above
-    abort_above) gets exactly one more pass before aborting, because
-    the burst-clears-mid-session pattern is real (r2 recorded
-    37.0/28.6/25.8 s — an immediate 1.12× abort would have lost the
-    best pass) while persistently-marginal windows (r5 run 6: twelve
-    c1 sessions at 1.15-1.49× the floor, ~60 min measuring the
-    co-tenant) get capped at two passes. Unbiased by construction:
-    aborting only truncates sampling of windows whose samples were
-    never going to be the min; every recorded wall is a complete
-    honest pass."""
-    import json as _json
-    import subprocess
-    import sys
-
-    runner = (
-        "import json, os, sys\n"
-        "cores, corpus_path, input_bytes, n_docs = (int(sys.argv[1]),"
-        " sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))\n"
-        "sys.path.insert(0, os.path.dirname(os.path.abspath(sys.argv[5])))\n"
-        "from gostatix_spark.session import get_spark\n"
-        "from bench import _sketch_build_job\n"
-        "mpb = max(16, int(input_bytes / (4 * cores) / (1 << 20)))\n"
-        "spark = get_spark(f'bench-scaling-{cores}', cores=cores,"
-        " shuffle_partitions=32, max_partition_bytes=f'{mpb}m',"
-        " active_processors=cores)\n"
-        "corpus = spark.read.parquet(corpus_path)\n"
-        "corpus.count()\n"
-        "_sketch_build_job(spark, corpus.limit(20000), 20000)\n"
-        "walls = []\n"
-        f"abort_above = {abort_above!r}\n"
-        f"for i in range({max_passes}):\n"
-        "    walls.append(_sketch_build_job(spark, corpus, n_docs)"
-        "['wall_sec'])\n"
-        "    if abort_above and walls[-1] > 2.5 * abort_above:\n"
-        "        break\n"  # catastrophic window (2.8x floor+): hopeless
-        "    if abort_above and len(walls) >= 2 and"
-        " min(walls) > abort_above:\n"
-        "        break\n"  # marginally loud after a 2nd look: move on
-        "    if i >= 1 and min(walls[:-1]) <= walls[-1] * 1.05:\n"
-        "        break\n"
-        "spark.stop()\n"
-        "print('SCALING_REP_RESULT ' + json.dumps(walls))\n"
-    )
-    env = dict(os.environ)
-    env["SPARK_DRIVER_MEM"] = "8g"
+    os.makedirs(events)
+    conf = ("spark.eventLog.enabled=true", "spark.eventLog.compress=false",
+            f"spark.eventLog.dir=file://{events}",
+            "spark.eventLog.rolling.enabled=false")
+    args = [a for kv in conf for a in ("--conf", kv)] + ["pyspark-shell"]
+    env = dict(os.environ, SPARK_DRIVER_MEM="8g",
+               PYSPARK_SUBMIT_ARGS=shlex.join(args))
+    runner = ("import json, sys\nsys.path.insert(0, sys.argv[5])\n"
+              "from bench import _session\nc, p, b, n = sys.argv[1:5]\n"
+              "w = _session(int(c), p, int(b), int(n))\n"
+              "print('SCALING_SESSION ' + json.dumps(w))\n")
     proc = subprocess.run(
         [sys.executable, "-c", runner, str(cores), corpus_path,
-         str(input_bytes), str(n_docs), os.path.abspath(__file__)],
+         str(input_bytes), str(n_docs),
+         os.path.dirname(os.path.abspath(__file__))],
         capture_output=True, text=True, timeout=2400, env=env)
     for line in proc.stdout.splitlines():
-        if line.startswith("SCALING_REP_RESULT "):
-            return [float(x) for x in _json.loads(line.split(" ", 1)[1])]
+        if line.startswith("SCALING_SESSION "):
+            windows = json.loads(line.split(" ", 1)[1])
+            return _pass_work(read_events(events), windows)
     raise RuntimeError(
-        f"scaling rep subprocess failed (rc={proc.returncode}):\n"
+        f"scaling session subprocess failed (rc={proc.returncode}):\n"
         f"{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}")
 
 
-def _run_scaling(n_docs: int, partitions: int, seed: int = 42,
-                 reps: int | None = None) -> dict:
-    """N vs 4N measurement (sandbox stand-in for two cluster sizes).
+def _pass_work(events: list[dict], windows) -> list[tuple]:
+    """(wall, Σ task-s, serial residue) of each pass (start, end): the
+    jobs submitted inside the window, the summed task time of their
+    stages, and the serial residue — the wall no job span covers
+    (driver time) plus the run time of every single-task stage's task
+    (the task's own run, not the stage's wait for a free slot)."""
+    from tools.stage_times import stage_table
 
-    Protocol v2 (full rationale + probe data in BENCH/BASELINE.md):
-    identical materialized input files and identical configs at both
-    levels (only cores and input-split packing differ); fresh
-    ``-XX:ActiveProcessorCount=N`` subprocess sessions in ALTERNATING
-    same-window pairs (hi, lo, hi, lo, … — hi first so a budget stop
-    mid-pair loses the cheap sample) so co-tenant load bursts hit both
-    levels equally; stop on convergence (both levels' two best
-    sessions within 3%) or budget, then spend any leftover budget on
-    gap-filling sessions for the unconverged level (the per-level min
-    is unbiased without pairing). Statistic: per-level MIN — interference on
-    this shared VM is strictly additive and bursts 2-3×, so the min is
-    the unbiased estimator of unloaded capability (cf. timeit). Default
-    pair (1, 4): the serial baseline repeats within ±4% while (2, 8)
-    saturates at ~0.6 against the shared memory-bandwidth wall.
-    Override with SPARK_GRAFT_SCALING_PAIR / _REPS (min pass-pairs) /
-    _MAX_PAIRS / _BUDGET_SEC.
-    """
-    import shutil
-    import statistics
-    import tempfile
+    rows, out = stage_table(events), []
+    for t0, t1 in windows:
+        jobs = {r["job"]: (r["start_s"], r["start_s"] + r["wall_s"])
+                for r in rows
+                if r["stage"] is None and t0 <= r["start_s"] <= t1}
+        stages = [r for r in rows
+                  if r["stage"] is not None and r["job"] in jobs]
+        covered, busy_until = 0.0, t0
+        for a, b in sorted(jobs.values()):
+            covered += max(0.0, b - max(a, busy_until))
+            busy_until = max(busy_until, b)
+        out.append((t1 - t0, sum(s["task_s"] for s in stages),
+                    t1 - t0 - covered
+                    + sum(s["task_s"] for s in stages if s["tasks"] == 1)))
+    return out
 
+
+def _scaling_summary(passes: dict, n_tokens: int) -> dict:
+    """Scaling figures from ``{cores: [[(wall, Σ task-s, serial), …]
+    per session]}`` of two levels lo < hi, r = hi/lo. Each level is its
+    fastest timed pass. ``scaling_efficiency_{lo}_to_{hi}`` is the wall
+    ratio over r; ``work_efficiency`` is Σ task-s(lo)/Σ task-s(hi), how
+    much the work itself grows at hi; ``amdahl_ceiling`` is
+    1/(1 + (r−1)·f), f the lo pass's serial residue over its wall."""
+    (lo, hi), out, best = sorted(passes), {}, {}
+    for c, sessions in passes.items():
+        best[c] = wall, task_s, serial = min(p for s in sessions for p in s)
+        out.update({f"wall_sec_c{c}": round(wall, 2),
+                    f"tput_tokens_per_sec_c{c}": round(n_tokens / wall),
+                    f"task_s_c{c}": round(task_s, 2),
+                    f"serial_s_c{c}": round(serial, 2),
+                    f"passes_c{c}": [[[round(x, 2) for x in p] for p in s]
+                                     for s in sessions]})
+    r = hi / lo
+    out[f"scaling_efficiency_{lo}_to_{hi}"] = round(
+        best[lo][0] / best[hi][0] / r, 3)
+    out["work_efficiency"] = round(best[lo][1] / best[hi][1], 3)
+    out["amdahl_ceiling"] = round(
+        1 / (1 + (r - 1) * best[lo][2] / best[lo][0]), 3)
+    out["n_sessions"] = {str(c): len(s) for c, s in passes.items()}
+    return out
+
+
+def _run_scaling(n_docs: int, partitions: int, seed: int = 42) -> dict:
+    """N vs 4N measurement (sandbox stand-in for two cluster sizes),
+    protocol v7 in BENCH/BASELINE.md: the corpus materialized once, then
+    ``SESSIONS`` fresh sessions per level, alternating hi then lo so
+    co-tenant load falls on both levels. Every session runs, none is
+    retried or cut short, and the figures are :func:`_scaling_summary`
+    of every timed pass. ``$SPARK_GRAFT_SCALING_PAIR`` sets the pair
+    (default 1,4: the serial level is this host's most stable one)."""
     from pyspark.sql import functions as F
 
     from gostatix_spark.corpus import corpus_df
@@ -215,407 +235,40 @@ def _run_scaling(n_docs: int, partitions: int, seed: int = 42,
 
     pair = [int(x) for x in os.environ.get(
         "SPARK_GRAFT_SCALING_PAIR", "1,4").split(",")]
-    if reps is None:
-        reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
-    out = {}
-    n_tokens = None
     tmp = tempfile.mkdtemp(prefix="gostatix_bench_")
     corpus_path = f"{tmp}/corpus"
-    walls: dict[int, list[float]] = {c: [] for c in pair}
-    raw_walls: dict[int, list] = {c: [] for c in pair}
-    # EXPLICIT same-window pairs: (lo_wall, hi_wall) appended only when
-    # BOTH sessions of an alternating pair completed back-to-back. A
-    # mid-pair budget stop or gap-fill session contributes to the
-    # per-level min but NOT to the pairwise fallback statistic — index-
-    # zipping the per-level lists would pair a session with a wall
-    # measured in a much later noise window, losing the shared-noise
-    # property the pair median's conservativeness argument relies on.
-    pair_walls: list[tuple[float, float]] = []
     try:
-        # materialize the deterministic corpus ONCE (the north rule's
-        # input is a stored table; generation must not be measured).
-        # Training-sequence length shape (mean ≈ 1.5k tokens, clip 8k)
-        # — the realistic unit for "pre-tokenized training sequences";
-        # the original 244-token document shape spent a large, badly-
-        # scaling fraction of the job on per-row JVM↔Arrow conversion
-        # rather than on sketch kernels.
-        spark = get_spark("bench-gen", cores=32)
+        # training-sequence shape (mean ≈ 1.5k tokens, clip 8k), stored
+        # once: the input is a table, and generating it is not measured.
+        # One generating task per CPU: each holds ~0.5 GB of arrays
+        spark = get_spark("bench-gen", cores=os.cpu_count())
         corpus_df(spark, n_docs, seed=seed, partitions=partitions,
                   mu=7.0, sigma=0.75, max_len=8192) \
             .write.mode("overwrite").parquet(corpus_path)
-        n_tokens = spark.read.parquet(corpus_path) \
-            .select(F.sum("n_tok")).collect()[0][0]
-        input_bytes = sum(f.stat().st_size
-                          for f in __import__("pathlib").Path(corpus_path)
-                          .glob("*.parquet"))
+        n_tokens = int(spark.read.parquet(corpus_path)
+                       .select(F.sum("n_tok")).collect()[0][0])
         spark.stop()
-
-        # Alternating fresh sessions (lo, hi, lo, hi …): adjacent
-        # sessions share their noise window, every session is a clean
-        # JVM, and each contributes its best in-session pass as one
-        # capability sample. Stop on convergence (both levels' two best
-        # samples within 3% — under strictly-additive noise the
-        # per-level min only moves DOWN toward true capability, so
-        # extra sessions refine the estimate and cannot inflate it),
-        # budget, or session cap.
-        # sized for ~6-8 pairs at the 100k corpus: the lo level's min
-        # converges from above as sessions land in quiet windows (its
-        # walls only descend under additive noise), so extra pairs buy
-        # convergence, never inflation
-        # 3000 s: the r3 converged execution needed 2565 s of sessions;
-        # the r4 run-1 at 2400 s ended ONE lo gap-fill session short of
-        # convergence (c4 closed to 0.8 % via gap-fill, c1 stuck at
-        # 4.4 % with no budget left). Suite + corpus gen + 3000 s still
-        # fits the hour.
-        budget = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_SEC",
-                                      "3000"))
-        min_pairs = max(2, reps)
-        max_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_PAIRS", "8"))
-        lo_, hi_ = pair
-
-        def gap(cs: int) -> float:
-            ws = sorted(walls[cs])
-            return float("inf") if len(ws) < 2 else ws[1] / ws[0] - 1.0
-
-        def ledger_floors() -> dict[int, float]:
-            """Historical per-level capability walls for this corpus size
-            from BENCH/scaling_ledger.json — printed as the retry target
-            so the operator can see how far the current mins sit from
-            reproduced capability. The STOP rule never uses them (it is
-            the ratio + two-best gap), so a stale floor cannot bias the
-            estimate; extra sessions only ever move a min down."""
-            try:
-                with open(os.path.join(os.path.dirname(
-                        os.path.abspath(__file__)),
-                        "BENCH", "scaling_ledger.json")) as f:
-                    led = json.load(f)
-                floors: dict[int, float] = {}
-                for ex in led.get("executions", []):
-                    # entries carrying their own "corpus" note measured a
-                    # non-default corpus size — their walls don't compare
-                    if "corpus" in ex:
-                        continue
-                    ws = ex.get("floors") or ex.get("capability_walls") or {}
-                    for k, v in ws.items():
-                        c = int(k.lstrip("c"))
-                        if c in pair and isinstance(v, (int, float)):
-                            floors[c] = min(floors.get(c, float("inf")), v)
-                return floors
-            except (OSError, ValueError, KeyError):
-                return {}
-
-        floors_hist = ledger_floors()
-
-        def level_ok(cs: int) -> bool:
-            """A level's capability counts as REPRODUCED when either
-            (a) its two best in-run samples agree within 3%, or
-            (b) this run's min lands within 3% of the ledger's
-            historical capability floor — corroboration by an
-            independent prior execution, which is at least as strong
-            as two samples from the same run (the r4 driver run showed
-            two same-window samples can both be inflated and still
-            pass the in-run check). Using the ledger this way cannot
-            bias the estimate: the reported wall is still this run's
-            own min, and the ledger only CONFIRMS it, never replaces
-            it.
-
-            For the HI level only, (c) three best samples within 5%
-            also counts (protocol v5): under the additive-noise model
-            a too-slow hi min can only UNDER-report efficiency
-            (eff = lo_min/hi_min/ratio), so widening the hi
-            reproduction evidence can never inflate the headline —
-            the direction plateau clustering could fool is the lo
-            level, which keeps the strict 3% band plus the >1.05
-            plateau detector. Motivated by r5 run 5: hi drew
-            23.16/24.05/24.24 s across three separate quiet windows
-            (4.7% span — plainly the same capability) yet read
-            'open' under the 2-best-3% rule, leaving a
-            0.876-efficiency run unconverged."""
-            if gap(cs) <= 0.03:
-                return True
-            if cs == hi_ and len(walls[cs]) >= 3:
-                w3 = sorted(walls[cs])[:3]
-                if w3[2] / w3[0] - 1.0 <= 0.05:
-                    return True
-            f = floors_hist.get(cs)
-            return (f is not None and walls[cs]
-                    and min(walls[cs]) <= f * 1.03)
-
-        def wait_for_quiet(max_wait: float = 300.0,
-                           threshold: float = 2.5) -> None:
-            """Hold off starting a session pair while the host is
-            visibly loaded by co-tenants (nothing of ours runs between
-            sessions, so 1-min load ≈ their footprint). Sustained load
-            makes BOTH levels' walls plateau 2× high — two equally
-            inflated samples would then pass the convergence check, so
-            the only honest move is to not measure until the instrument
-            is usable (bounded: after ``max_wait`` we proceed anyway
-            and let the min statistic do what it can)."""
-            waited = 0.0
-            while waited < max_wait:
-                with open("/proc/loadavg") as f:
-                    load1 = float(f.read().split()[0])
-                if load1 <= threshold:
-                    return
-                print(f"#   scaling: host load {load1:.1f} > {threshold}, "
-                      f"waiting for a quiet window", flush=True)
-                time.sleep(30)
-                waited += 30
-
-        t_sched = time.perf_counter()
-        pairs_done = 0
-        over_budget = False
-        out["converged"] = False
-        # observed wall cost of a full session per level (EMA) — used
-        # to not START a session the budget can't finish
-        sess_cost: dict[int, float] = {}
-
-
-        def run_session(cores: int, label: str) -> None:
-            t0 = time.perf_counter()
-            # the hi level's passes are ~(hi/lo)× cheaper, so buy
-            # extra in-session samples there (its min has the
-            # higher variance; see BENCH/BASELINE.md)
-            floor = floors_hist.get(cores)
-            abort_above = round(floor * 1.12, 2) if floor else None
-            passes = _scaling_rep_subprocess(
-                cores, corpus_path, input_bytes, n_docs,
-                max_passes=3 if cores == lo_ else 5,
-                abort_above=abort_above)
-            w = min(passes)
-            walls[cores].append(w)
-            raw_walls[cores].append([round(x, 1) for x in passes])
-            cost = time.perf_counter() - t0
-            # budget-guard EMA over ACTUAL session costs. (A v6 interim
-            # variant extrapolated aborted sessions to full-session cost
-            # at the LOUD window's pass speed — r5 run 7 showed that
-            # forecast is catastrophically wrong: one 367 s pass priced
-            # the "next session" at ~1900 s and the guard froze the
-            # remaining half of the budget that cheap aborted probes
-            # could have spent sampling new windows. Actual cost is the
-            # right scale for both futures: a loud next window aborts at
-            # ~1 pass again, a quiet one runs full passes at floor speed
-            # — both within ~2× of the last actual cost, and the retry
-            # loop's 20-35% overshoot allowances absorb that error.)
-            sess_cost[cores] = (cost if cores not in sess_cost
-                                else 0.5 * sess_cost[cores] + 0.5 * cost)
-            loud = (abort_above is not None and w > abort_above
-                    and len(passes) < (3 if cores == lo_ else 5))
-            print(f"#   scaling session {label} cores={cores}: "
-                  f"passes {passes} → {w:.1f}s "
-                  f"({n_tokens/w:.0f} tok/s)"
-                  + (" [loud window — aborted early]" if loud else ""),
-                  flush=True)
-
-        def eff_now() -> float:
-            return (min(walls[lo_]) / min(walls[hi_])) / (hi_ / lo_)
-
-        while pairs_done < max_pairs and not over_budget:
-            wait_for_quiet()
-            # HI FIRST within each pair: the hi session costs ~(lo/hi)×
-            # less, so when the budget dies mid-pair we lose the cheap
-            # sample, never a ~5-minute lo session already paid for
-            # (the round-3 driver run spent its last 300 s on a lo
-            # session whose hi partner never ran)
-            ran_this_pair: set[int] = set()
-            for cores in (hi_, lo_):
-                # once the hi floor is REPRODUCED (two best ≤ 3%),
-                # further hi sessions cannot move the headline — spend
-                # those windows on the decisive lo draws instead. The
-                # r4 driver run bought 8 hi sessions (floor reproduced
-                # by #3) while the lo level never escaped interference.
-                if (cores == hi_ and pairs_done >= min_pairs
-                        and level_ok(hi_)):
-                    continue
-                elapsed = time.perf_counter() - t_sched
-                need = sess_cost.get(cores, 0.0)
-                if pairs_done >= 1 and elapsed + need > budget:
-                    over_budget = True
-                    break
-                run_session(cores, str(pairs_done + 1))
-                ran_this_pair.add(cores)
-            if over_budget:
-                print(f"#   scaling stop mid-pair (budget)", flush=True)
-                break
-            # the same-window pair statistic only accepts TRUE pairs —
-            # both sessions run back-to-back in this iteration; a lo
-            # session whose hi partner was skipped (hi already
-            # converged) contributes to the per-level min only
-            if ran_this_pair == {hi_, lo_}:
-                pair_walls.append((walls[lo_][-1], walls[hi_][-1]))
-            pairs_done += 1
-            elapsed = time.perf_counter() - t_sched
-            # min-ratio > 1 means SOME distortion: either the lo level
-            # never escaped an interference window (plateau days inflate
-            # it 15-40% ⇒ ratio ≥ ~1.15 — never accepted), or the real,
-            # measured structural artifact of the (1,4) stand-in: with
-            # ActiveProcessorCount=1 the JVM's stop-the-world GC is
-            # single-threaded, so identical GC work costs ~4× more wall
-            # at the lo level (measured floors 93.8 s vs 4×23.0 = 92.0 s
-            # ⇒ ratio 1.02). Convergence = both floors REPRODUCED
-            # (two best in-level samples within 3%) and the ratio inside
-            # the structural band (≤ 1.05); the headline for ratios in
-            # (1, 1.05] still falls back to the conservative same-window
-            # pair median below — converged refers to the instrument,
-            # never to accepting a >1 number.
-            converged = (pairs_done >= min_pairs
-                         and level_ok(lo_) and level_ok(hi_)
-                         and eff_now() <= 1.05)
-            # the lo-plateau signature: both floors "reproduced" but
-            # the ratio sits above the structural band — every lo
-            # sample landed in the same interference plateau (two
-            # equally-inflated samples pass the 3% check while the hi
-            # floor proves quiet windows exist). Full pairs can't fix
-            # that; hand the remaining budget to the targeted retry
-            # loop below.
-            plateau = (pairs_done >= min_pairs
-                       and level_ok(lo_) and level_ok(hi_)
-                       and eff_now() > 1.05)
-            if converged or plateau or elapsed > budget:
-                out["converged"] = bool(converged)
-                reason = ("converged" if converged
-                          else "lo-plateau → targeted retry" if plateau
-                          else "budget")
-                print(f"#   scaling stop after {pairs_done} session pairs "
-                      f"({reason}, {elapsed:.0f}s)", flush=True)
-                break
-        # TARGETED RETRY (gap-fill + plateau rescue, unified): the
-        # per-level MIN doesn't require paired sessions (pairing only
-        # serves the same-window fallback), so leftover budget buys
-        # sessions for whichever level BLOCKS convergence:
-        #   (a) a level whose two-best gap is still > 3% (usually hi —
-        #       its short exposure needs luck to land a quiet window);
-        #   (b) when both gaps are closed but eff > 1.05, the lo level
-        #       — under additive noise a too-high ratio can ONLY mean
-        #       the lo min never escaped interference (the hi level
-        #       cannot be "too fast"), so only deeper lo draws can pull
-        #       the ratio back into the structural band. The r4 driver
-        #       run ended exactly here (raw 1.108, c4 at a record
-        #       20.68 s floor, c1 stuck at 91.6 vs its reproduced
-        #       82-84 s band) with its old gap-fill loop refusing to
-        #       run BECAUSE eff > 1.05 — backwards, fixed here.
-        # Every retry session can only move a per-level min DOWN, so
-        # marginal time buys convergence, never bias.
-        if not out["converged"] and pairs_done >= min_pairs:
-            floors = ledger_floors()
-            if floors:
-                print(f"#   scaling retry: historical capability floors "
-                      f"{ {f'c{c}': v for c, v in sorted(floors.items())} } "
-                      f"(corroboration band: a level min within 3% counts as reproduced)",
-                      flush=True)
-            # 14 iterations (was 8): loud-window sessions now abort
-            # after one pass (~1/3 cost), so the same overshoot budget
-            # affords more draws at fresh windows — which is the only
-            # mechanism that rescues a plateau
-            for _ in range(14):
-                stale = [c for c in (hi_, lo_) if not level_ok(c)]
-                plateau_now = not stale and eff_now() > 1.05
-                if not stale and not plateau_now:
-                    break
-                cores = lo_ if plateau_now else stale[0]
-                elapsed = time.perf_counter() - t_sched
-                # overshoot allowance: 20% for ordinary gap-fill; 35%
-                # when the lo plateau is the blocker — those sessions
-                # are the expensive ones but also the only ones that
-                # can converge the artifact (one quiet ~90 s lo window
-                # is all the r4 run needed)
-                allow = 1.35 if plateau_now else 1.20
-                if elapsed + sess_cost.get(cores, budget) > budget * allow:
-                    break
-                # a plateau retry is pointless on a loud host — wait
-                # harder (and for a quieter bar) than the pair loop does
-                wait_for_quiet(max_wait=240.0 if plateau_now else 60.0,
-                               threshold=2.0 if plateau_now else 2.5)
-                run_session(cores, "retry")
-            converged = (level_ok(lo_) and level_ok(hi_)
-                         and eff_now() <= 1.05)
-            if converged:
-                out["converged"] = True
-                print(f"#   scaling converged after targeted retry "
-                      f"({time.perf_counter() - t_sched:.0f}s)", flush=True)
-        # record HOW each level's floor was reproduced (in-run two-best
-        # agreement vs corroboration by the ledger's historical floor)
-        def _repro_label(c: int) -> str:
-            if gap(c) <= 0.03:
-                return "in-run"
-            if (c == hi_ and len(walls[c]) >= 3
-                    and sorted(walls[c])[2] / min(walls[c]) - 1.0 <= 0.05):
-                return "in-run-3best5pct"
-            return "ledger" if level_ok(c) else "open"
-
-        out["floor_reproduction"] = {f"c{c}": _repro_label(c) for c in pair}
+        input_bytes = sum(f.stat().st_size for f in
+                          pathlib.Path(corpus_path).glob("*.parquet"))
+        passes = {c: [] for c in pair}
+        for i in range(SESSIONS):
+            for c in sorted(pair, reverse=True):
+                work = _scaling_rep_subprocess(c, corpus_path, input_bytes,
+                                               n_docs, f"{tmp}/events-{c}-{i}")
+                passes[c].append(work)
+                print(f"#   scaling session {i + 1} cores={c}: " + ", ".join(
+                    f"{w:.1f}s ({t:.1f} task-s, {s:.2f}s serial)"
+                    for w, t, s in work), flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    # Statistic: co-tenant interference on this shared VM is strictly
-    # ADDITIVE (it can only slow a run down, never speed it up) and
-    # arrives in multi-minute bursts that have been observed to inflate
-    # identical reps 2-3×. The per-level MIN across interleaved reps is
-    # therefore the unbiased estimator of each level's unloaded
-    # capability (the same reasoning as python's timeit using min), and
-    # the headline efficiency is the ratio of those capabilities. The
-    # noise-sensitive alternatives are published alongside, with every
-    # raw wall, so nothing is hidden.
-    for cores in pair:
-        best = min(walls[cores])
-        out[f"tput_tokens_per_sec_c{cores}"] = round(n_tokens / best)
-        out[f"wall_sec_c{cores}"] = round(best, 2)
-        out[f"wall_median_c{cores}"] = round(statistics.median(walls[cores]), 2)
-        out[f"wall_runs_c{cores}"] = [round(w, 1) for w in walls[cores]]
-        out[f"wall_passes_c{cores}"] = raw_walls[cores]
-    lo, hi = pair
-    out["n_tokens"] = int(n_tokens)
-    out["n_docs"] = n_docs
-    out["input_partitions"] = partitions
-    out["pair"] = pair
-    out["reps"] = reps
-    out["protocol"] = ("interleaved per-rep sessions; discarded full warm "
-                       "pass; min across reps per level (additive-noise "
-                       "capability estimate); hi sessions skipped once hi "
-                       "floor reproduced; targeted retry for the blocking "
-                       "level (incl. lo-plateau rescue when eff > 1.05); "
-                       "floor reproduction = two-best in-run <=3% OR min "
-                       "within 3% of ledger's cross-run capability floor; "
-                       "v6: loud-window sessions abort early (catastrophic "
-                       "pass >2.8x ledger floor: immediately; marginal "
-                       ">1.12x: after a 2nd pass) so the budget samples "
-                       "more independent windows")
-    per_rep_eff = [round((lo_w / hi_w) / (hi / lo), 3)
-                   for lo_w, hi_w in pair_walls]
-    out["per_rep_efficiency"] = per_rep_eff
-    # accepted set: efficiency > 1 is physically impossible here, so
-    # such a pair PROVES its lo wall was interference-inflated — it is
-    # excluded from the pairwise statistics (and visibly reported)
-    accepted = [e for e in per_rep_eff if e <= 1.0]
-    out["per_rep_efficiency_accepted"] = accepted
-    eff_raw = (min(walls[lo]) / min(walls[hi])) / (hi / lo)
-    out["scaling_efficiency_median_pairs"] = round(
-        statistics.median(accepted or per_rep_eff or [min(eff_raw, 1.0)]), 3)
-    out["scaling_efficiency_raw"] = round(eff_raw, 3)
-    if eff_raw > 1.0:
-        # ratio > 1 → either the lo min never escaped an interference
-        # window (its ~2-min exposure needs a quiet stretch the hi
-        # level's ~30s exposure doesn't; typical plateau ratios ≥1.15),
-        # or — when both floors reproduced and the ratio is ≤ ~1.05 —
-        # the measured structural artifact of the (1,4) stand-in (the
-        # lo JVM's single-threaded stop-the-world GC; see convergence
-        # comment above). Either way a >1 number is never reported:
-        # the headline falls back to the median of the ACCEPTED
-        # same-window pairs — adjacent sessions share their noise, and
-        # shared additive noise inflates the SHORT hi wall relatively
-        # more, so an accepted per-pair ratio is a CONSERVATIVE LOWER
-        # BOUND on the true efficiency (a 1.0 clamp would overstate).
-        out["lo_walls_inflated"] = bool(eff_raw > 1.05)
-        out["structural_superlinearity"] = bool(eff_raw <= 1.05)
-        eff_raw = (statistics.median(accepted) if accepted else 1.0)
-        out["headline_statistic"] = "median of accepted same-window pairs" \
-            if accepted else "clamped (no accepted pair)"
-    else:
-        out["headline_statistic"] = "capability-min ratio"
-    out[f"scaling_efficiency_{lo}_to_{hi}"] = round(eff_raw, 3)
-    return out
+    return {**_scaling_summary(passes, n_tokens), "n_tokens": n_tokens,
+            "n_docs": n_docs, "input_partitions": partitions, "pair": pair}
 
 
 def main() -> None:
+    # a SIGTERM unwinds: the running session subprocess is killed and
+    # the materialized corpus deleted
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -629,25 +282,21 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
+    # the suite line first: a scaling phase cut short cannot lose it
+    print(json.dumps(result), flush=True)
 
     if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        # 165k training-sequence docs (~238M tokens). A 100k corpus was
-        # tried (cheaper pairs → more samples per budget) and REJECTED:
-        # at that size the (1,4) pair is structurally superlinear
-        # (c1 floor 60.0s vs c4 floor 14.3s across 7 sessions ⇒ raw
-        # eff ≈ 1.05 — fixed per-pass costs and single-thread GC wall
-        # weigh on the 1-core level relatively more as the job shrinks),
-        # which the eff ≤ 1.02 convergence guard rightly never accepts.
-        # At 165k the per-core rates balance (round-2: 0.947, converged
-        # in 2 pairs); the 1800s budget buys 4-5 pairs at this size.
+        # 165k training-sequence docs (~238M tokens). At 100k the (1, 4)
+        # pair read superlinear (c1 60.0 s vs c4 14.3 s): fixed per-pass
+        # costs and single-thread GC weigh on the 1-core level more as
+        # the job shrinks (BENCH/BASELINE.md).
         n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "165000"))
         parts = int(os.environ.get("SPARK_GRAFT_BENCH_PARTS", "128"))
         result["scaling"] = _run_scaling(n_docs, parts)
 
-    # The FULL result (per-pass wall arrays, every raw sample) goes to a
-    # file; the final stdout line is a COMPACT headline the driver's
-    # bounded tail capture can always parse (round 3's single giant line
-    # outran it → BENCH_r03.json "parsed": null).
+    # The FULL result (every pass of every session) goes to a file; the
+    # final stdout line is a COMPACT headline that a bounded tail
+    # capture can always parse (one giant line once outran it).
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL",
                                  "BENCH/bench_detail_latest.json")
     try:
@@ -655,24 +304,19 @@ def main() -> None:
         with open(detail_path, "w") as f:
             json.dump(result, f, indent=1)
     except OSError as e:
-        print(f"# bench detail write failed ({e}); printing full result",
-              flush=True)
+        print(f"# bench detail write failed ({e})", flush=True)
         detail_path = None
     compact = {k: v for k, v in result.items() if k != "scaling"}
     if detail_path:
         compact["detail_file"] = detail_path
     sc = result.get("scaling")
     if sc is not None:
-        lo, hi = sc["pair"]
-        keep = ["converged", f"scaling_efficiency_{lo}_to_{hi}",
-                "scaling_efficiency_raw", "scaling_efficiency_median_pairs",
-                "headline_statistic", f"wall_sec_c{lo}", f"wall_sec_c{hi}",
-                f"tput_tokens_per_sec_c{lo}", f"tput_tokens_per_sec_c{hi}",
-                "n_tokens", "n_docs", "pair", "lo_walls_inflated",
-                "structural_superlinearity", "floor_reproduction"]
-        compact["scaling"] = {k: sc[k] for k in keep if k in sc}
-        compact["scaling"]["n_sessions"] = {
-            str(c): len(sc[f"wall_runs_c{c}"]) for c in sc["pair"]}
+        lo, hi = sorted(sc["pair"])
+        keep = [f"scaling_efficiency_{lo}_to_{hi}", "work_efficiency",
+                "amdahl_ceiling", "n_tokens", "n_docs", "pair", "n_sessions"]
+        keep += [f"{k}_c{c}" for c in (lo, hi) for k in (
+            "wall_sec", "tput_tokens_per_sec", "task_s", "serial_s")]
+        compact["scaling"] = {k: sc[k] for k in keep}
     print(json.dumps(compact), flush=True)
 
 

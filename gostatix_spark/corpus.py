@@ -80,10 +80,6 @@ def doc_tokens_flat(idx: np.ndarray, lengths: np.ndarray, seed: int) -> np.ndarr
     return toks.astype(np.int32)
 
 
-def generate_chunk(start: int, count: int, seed: int = 42) -> pa.Table:
-    return generate_table(np.arange(start, start + count, dtype=np.int64), seed)
-
-
 def generate_table(idx: np.ndarray, seed: int = 42, mu: float = 5.0,
                    sigma: float = 1.0, max_len: int = 2048) -> pa.Table:
     lengths = doc_lengths(idx, seed, mu, sigma, max_len)

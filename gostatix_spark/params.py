@@ -1,7 +1,7 @@
 """Sizing formulas — bit-for-bit compatible with the reference.
 
 Reference: ``internal/util/base.go:19-30``, ``count_min_sketch.go:48-52``,
-``cuckoo_filter.go:59-63``, ``base_hyperloglog.go:46-82``.
+``base_hyperloglog.go:46-82``.
 """
 
 from __future__ import annotations
@@ -30,11 +30,6 @@ def cuckoo_fingerprint_length(size: int, error_rate: float) -> int:
     ``internal/util/base.go:27-30``: ceil(ceil(log2(1/ε)+log2(2·size))/8)."""
     v = math.ceil(math.log2(1 / error_rate) + math.log2(2 * size))
     return int(math.ceil(v / 8))
-
-
-def cuckoo_capacity(size: int, bucket_size: int) -> int:
-    """capacity = ceil(size·0.955/bucketSize) — ``cuckoo_filter.go:59-63``."""
-    return int(math.ceil(size * 0.955 / bucket_size))
 
 
 def cms_dims_from_estimates(error_rate: float, delta: float) -> tuple[int, int]:

@@ -42,9 +42,9 @@ from gostatix_spark import params
 from gostatix_spark.kernels import bloom, cms, hll, kll, tdigest, topk
 from gostatix_spark.state import (FRAMES, BloomState, CMSState, CuckooState,
                                   Frames, HLLState, TopKState, binary_array,
-                                  binary_buffers, check_rows, kind_of,
-                                  lead_kinds, read_frames, sparse_pairs,
-                                  write_frames)
+                                  binary_buffers, check_rows, hll_top,
+                                  kind_of, lead_kinds, read_frames,
+                                  sparse_pairs, write_frames)
 
 
 def _count(vals, weights) -> int:
@@ -137,8 +137,9 @@ class ArrayMerge(Sketch):
     @classmethod
     def _reduce(cls, data, fr: Frames, starts, run_of):
         """(payload, count) per run of frames sharing parameters: the
-        dense frames folded by :func:`_fold_runs`, then the sparse HLL
-        (index, value) pairs scattered in."""
+        dense frames folded by :func:`_fold_runs` (an HLL register
+        checked against :func:`state.hll_top` first), then the sparse
+        HLL (index, value) pairs scattered in."""
         width, dtype = int(fr.width[0]), FRAMES[cls.kind].dtype
         out = np.zeros((len(starts), width), dtype)
         dense = np.flatnonzero(fr.version == 1)
@@ -147,6 +148,9 @@ class ArrayMerge(Sketch):
             first = np.flatnonzero(np.diff(r, prepend=-1))
             rows = sliding_window_view(data, width * dtype.itemsize)[
                 fr.lo[dense]]  # one copy of the dense payloads
+            if cls.kind == "hll":  # the ranks a register holds, as sparse
+                check_rows(rows.max(1) <= hll_top(width), fr.rows[dense],
+                           "hll register out of range")
             out[r[first]] = _fold_runs(cls.ufunc, rows.view(dtype), first)
         if dense.size < len(fr.lo):  # sparse HLL frames
             owner, idx, val = sparse_pairs(data, fr)

@@ -21,7 +21,8 @@ from gostatix_spark.agg import (_build_partials, _merge_partials, _sketch_job,
 from gostatix_spark.checkpoint import checkpointed_sketch_agg, write_partials
 from gostatix_spark.kernels import bloom, cms, hll, kll, tdigest
 from gostatix_spark.query import hll_estimate
-from gostatix_spark.state import BloomState, CMSState, HLLState, TopKState
+from gostatix_spark.state import (BloomState, CMSState, HLLState, TopKState,
+                                  hll_top)
 
 BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 KERNEL_MERGE = {"hll": hll.merge, "cms": cms.merge, "bloom": bloom.merge}
@@ -186,23 +187,36 @@ def _corrupt_runs():
     good = [_hll(rng, 256, 20).to_bytes(sparse=True) for _ in range(3)]
     out_of_range = bytearray(good[1])
     out_of_range[26:30] = (256).to_bytes(4, "little")  # first sparse index
+    high = np.zeros(256, np.uint8)
+    high[7] = 200  # past the top rank of m=256 (58)
     return {
         "truncated": ([good[0], good[1][:-3], good[2]], "row 1"),
         "index": ([good[0], good[2], bytes(out_of_range)],
                   "row 2: sparse hll index out of range"),
         "two_m": ([good[0], _hll(rng, 512, 20).to_bytes(sparse=True)],
                   "row 1: hll parameters differ within one run"),
+        "dense_register": ([good[0], HLLState(256, high, 3).to_bytes(),
+                            good[2]], "row 1: hll register out of range"),
     }
 
 
-@pytest.mark.parametrize("case", ["truncated", "index", "two_m"])
+@pytest.mark.parametrize("case", ["truncated", "index", "two_m",
+                                  "dense_register"])
 def test_corrupt_frames_raise_through_merge(case):
     blobs, msg = _corrupt_runs()[case]
     with pytest.raises(ValueError, match=msg):
         sketches.merge(blobs)
 
 
-@pytest.mark.parametrize("case", ["truncated", "index", "two_m"])
+def test_dense_register_out_of_range_raises_in_the_estimate():
+    """``hll_estimate``'s batch reader checks dense registers too."""
+    blobs, msg = _corrupt_runs()["dense_register"]
+    with pytest.raises(ValueError, match=msg):
+        sketches.HLL.count_frames(pa.array(blobs, pa.binary()))
+
+
+@pytest.mark.parametrize("case", ["truncated", "index", "two_m",
+                                  "dense_register"])
 def test_corrupt_frames_raise_through_the_build_merge(spark, case):
     """The same frames as phase-1 partials of one key: the merge that
     ``sketch_agg`` runs raises the same ``ValueError``."""
@@ -354,7 +368,7 @@ def test_hll_estimate_equals_count_per_state(spark):
         m = (64, 1024)[i % 2]
         st = _hll(rng, m, int(rng.integers(0, m)))
         if i % 997 == 0:
-            st.registers[:] = 60  # saturated
+            st.registers[:] = hll_top(m)  # saturated: every rank at the top
         rows.append((i, st.to_bytes(sparse=bool(i % 3))))
         want.append(hll.count(st.registers))
     assert -1 in want

@@ -1,6 +1,7 @@
 """Public-API guard: every ``__all__`` name resolves, and every name the
-benchmark harness (``perfbench/``) imports from the library exists, so a
-refactor cannot silently break either."""
+benchmark harnesses (``perfbench/``, ``bench.py``, ``bench_extra.py``)
+import from the library exists, so a refactor cannot silently break
+either."""
 
 import ast
 import importlib
@@ -15,6 +16,8 @@ import gostatix_spark
 REPO = pathlib.Path(__file__).resolve().parents[1]
 MODULES = sorted(m.name for m in pkgutil.walk_packages(
     gostatix_spark.__path__, "gostatix_spark."))
+BENCH_FILES = [*sorted((REPO / "perfbench").glob("*.py")),
+               REPO / "bench.py", REPO / "bench_extra.py"]
 
 
 @pytest.mark.parametrize("name", MODULES)
@@ -29,7 +32,7 @@ def test_all_names_resolve(name, monkeypatch):
 
 
 def _perfbench_imports():
-    for path in sorted((REPO / "perfbench").glob("*.py")):
+    for path in BENCH_FILES:
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.ImportFrom) and node.module and \
                     node.module.split(".")[0] == "gostatix_spark":
@@ -69,15 +72,15 @@ def _chain(node: ast.Attribute) -> list[str] | None:
 
 
 def test_perfbench_attribute_chains_resolve():
-    """Every attribute chain ``perfbench/`` reads off a name it imported
-    from the library (``tdigest.from_bytes``, ``kll.KLL.from_bytes``,
+    """Every attribute chain the benchmark harnesses read off a name they
+    imported from the library (``tdigest.from_bytes``, ``kll.KLL.from_bytes``,
     ``hll.count`` …) exists, so moving one fails here rather than in a
     benchmark run."""
     bound = {}  # the names each file imports from gostatix_spark
     for fname, module, attr in _perfbench_imports():
         bound.setdefault(fname, {})[attr] = (module, attr)
     missing, checked = [], 0
-    for path in sorted((REPO / "perfbench").glob("*.py")):
+    for path in BENCH_FILES:
         names = bound.get(path.name, {})
         for node in ast.walk(ast.parse(path.read_text())):
             chain = isinstance(node, ast.Attribute) and _chain(node)

@@ -21,12 +21,20 @@ def _exec(kind: str, eid: int, t_ms: int, desc: str = "") -> dict:
     return e
 
 
-def _job(jid: int, eid: int | None, start_ms: int, end_ms: int) -> list:
+def _job(jid: int, eid: int | None, start_ms: int, end_ms: int,
+         stages: tuple = ()) -> list:
     props = {} if eid is None else {"spark.sql.execution.id": str(eid)}
     return [{"Event": "SparkListenerJobStart", "Job ID": jid,
-             "Submission Time": start_ms, "Stage IDs": [], "Properties": props},
+             "Submission Time": start_ms, "Stage IDs": list(stages),
+             "Properties": props},
             {"Event": "SparkListenerJobEnd", "Job ID": jid,
              "Completion Time": end_ms}]
+
+
+def _task(stage: int, launch_ms: int, finish_ms: int) -> dict:
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+            "Task Info": {"Launch Time": launch_ms, "Finish Time": finish_ms,
+                          "Accumulables": []}}
 
 
 def test_execution_split():

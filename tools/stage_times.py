@@ -66,8 +66,9 @@ def _node_names(stage_info: dict) -> list[str]:
 
 def stage_table(events: list[dict], prefix: str = "") -> list[dict]:
     """Rows ``{job, stage, desc, wall_s, tasks, task_s, py_run_s,
-    py_init_s, nodes}``; a job row has ``stage`` None and sums its
-    stages' task columns."""
+    py_init_s, nodes}``; a job row has ``stage`` None, sums its
+    stages' task columns and adds ``start_s``, its submission time in
+    epoch seconds."""
     jobs, stages = _jobs(events), {}
     for e in events:
         ev = e["Event"]
@@ -105,7 +106,8 @@ def stage_table(events: list[dict], prefix: str = "") -> list[dict]:
                 for k in ("tasks", "task_s", "py_run_s", "py_init_s")}
         wall = job["end"] - job["start"] if job["end"] else float("nan")
         rows.append({"job": jid, "stage": None, "desc": job["desc"],
-                     "wall_s": wall, **sums, "nodes": []})
+                     "start_s": job["start"], "wall_s": wall, **sums,
+                     "nodes": []})
         rows += [{"job": jid, "stage": s, "desc": "", **stages[s]}
                  for s in ran]
     return rows

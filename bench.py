@@ -64,6 +64,21 @@ def _run_driver_queries(sf_dir: str, cores: int) -> tuple[dict, float]:
     return timings, total
 
 
+def _stop_jvm(spark) -> None:
+    """Stop ``spark`` and end its JVM: ``spark.stop()`` leaves the
+    gateway JVM up (idle at ~4 GB RSS after the query suite), where it
+    would sit beside every scaling session's JVM."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is not None:
+        gateway.shutdown()
+        gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+        gateway.proc.wait(timeout=120)
+        SparkContext._gateway = SparkContext._jvm = None
+
+
 def _sketch_build_job(spark, corpus, n_docs: int) -> None:
     """The measured job (BENCH/BASELINE.md protocol): ONE scan building
     the six mergeable sketches together (multi_sketch_agg) + the
@@ -247,7 +262,7 @@ def _run_scaling(n_docs: int, partitions: int, seed: int = 42) -> dict:
             .write.mode("overwrite").parquet(corpus_path)
         n_tokens = int(spark.read.parquet(corpus_path)
                        .select(F.sum("n_tok")).collect()[0][0])
-        spark.stop()
+        _stop_jvm(spark)  # the sessions run in JVMs of their own
         input_bytes = sum(f.stat().st_size for f in
                           pathlib.Path(corpus_path).glob("*.parquet"))
         passes = {c: [] for c in pair}

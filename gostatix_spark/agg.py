@@ -223,6 +223,12 @@ class _Batch:
             self._memo[key] = compute()
         return self._memo[key]
 
+    def valid(self, vcol: str) -> "_Batch":
+        """The rows whose ``vcol`` is not null, as a batch of their own:
+        a null element is never folded."""
+        return self._get(("valid", vcol), lambda: _Batch(
+            self.batch.filter(self.batch.column(vcol).is_valid())))
+
     def keys(self, kcol: str):
         """(codes, uniques, rows per key); null keys get code -1. Arrow
         factorizes the column, so int64 keys stay exact beside nulls
@@ -314,7 +320,10 @@ def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
       is dense;
     * else ``keyed``, the job's :class:`kernels.hll.KeyedHLL` when it is
       a keyed HLL: one vectorized update for all keys;
-    * else per element, one update per key."""
+    * else per element, one update per key.
+
+    Null elements are skipped after their rows are counted; a key whose
+    elements are all null still gets a state, an empty one."""
     spec, vcol, kcol = job.spec, job.value_col, job.key_col
     if kcol is None:
         keys, row_counts = [None], [b.num_rows]
@@ -322,6 +331,13 @@ def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
         _, keys, row_counts = b.keys(kcol)
     for key, n_rows in zip(keys, row_counts):
         rows[(i, key)] = rows.get((i, key), 0) + int(n_rows)
+    if b.batch.column(vcol).null_count:
+        for key in keys:
+            accs.setdefault((i, key), spec.init())
+        b = b.valid(vcol)
+        if not b.num_rows:
+            return
+        keys = [None] if kcol is None else b.keys(kcol)[1]
     dist = None
     if job.weight_col is None and spec.folds_distinct():
         dist = b.distinct(kcol, vcol, spec.element, spec.algo)
@@ -719,13 +735,19 @@ def _hash_partials(df: DataFrame, value_col: str, key_col: str | None,
             if batch.num_rows == 0:
                 continue
             b = _Batch(batch)
-            h1, _, rowmap = b.hashes(value_col, element, "murmur3")
-            codes, uniques = np.zeros(batch.num_rows, np.int64), [None]
+            if key_col:  # every key seen, its elements null or not
+                codes, uniques, _ = b.keys(key_col)
+                keys.update(dict.fromkeys(uniques[c] if c >= 0 else None
+                                          for c in np.unique(codes).tolist()))
+            if batch.column(value_col).null_count:
+                b = b.valid(value_col)  # a null element is never inserted
+                if not b.num_rows:
+                    continue
+            h1, _, rowmap = b.hashes(value_col, element, sketches.Cuckoo.algo)
+            codes, uniques = np.zeros(b.num_rows, np.int64), [None]
             if key_col:
                 codes, uniques, _ = b.keys(key_col)
                 uniques = uniques + [None]  # code -1, the null key
-                keys.update(dict.fromkeys(
-                    uniques[c] for c in np.unique(codes).tolist()))
             group = (codes if rowmap is None else codes[rowmap]) * n_shards \
                 + hashing.shard_of(h1, n_shards)
             order = np.argsort(group, kind="stable")
@@ -1019,8 +1041,11 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            h1, h2, _ = extract_hashes(batch.column(value_col), element,
-                                       "metro")
+            rows += batch.num_rows
+            col = batch.column(value_col)
+            if col.null_count:  # a null element is never inserted
+                col = col.filter(col.is_valid())
+            h1, h2, _ = extract_hashes(col, element, sketches.Bloom.algo)
             shard = hashing.shard_of(h1, n_shards)
             order = np.argsort(shard, kind="stable")
             counts = np.bincount(shard, minlength=n_shards)
@@ -1032,7 +1057,6 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
                     bloom.insert_batch(words[s], h1[sel], h2[sel], k, m)
                     items[s] += c
                 off += c
-            rows += batch.num_rows
         out = [{"shard": s,
                 "state": BloomState(m, k, words[s], int(items[s])).to_bytes(),
                 "n_items": int(items[s]), "partition_id": pid,

@@ -224,9 +224,9 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str, id_col: str,
     # prefilter — persist so the UDF runs once per row
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k,
                               seed).persist()
-    # Band join carries ONLY (id, band, bucket); candidate pairs are
-    # DEDUPED FIRST, then the signatures re-attach for the agreement
-    # prefilter. On low-entropy corpora the raw band-collision output
+    # The band join (lsh_candidate_pairs) carries ONLY (id, band,
+    # bucket); candidate pairs are DEDUPED FIRST, then the signatures
+    # re-attach for the agreement prefilter. On low-entropy corpora the raw band-collision output
     # is near-quadratic (≈1M rows from 5k docs here) while the distinct
     # pair set is ~20× smaller — and the prefilter's zip_with/aggregate
     # runs INTERPRETED per pair, so evaluating it on the raw join
@@ -238,17 +238,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str, id_col: str,
     # estimator runs once per DISTINCT pair. Estimator semantics are
     # unchanged — est is a pure function of the pair, so filtering
     # before or after the dedup selects the same pairs.
-    banded = sigs.select(
-        "id",
-        F.posexplode(F.array(*_band_bucket_cols(num_perm, bands)))
-        .alias("band", "bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
-    pair_ids = (a.join(b, [F.col("a.band") == F.col("b.band"),
-                           F.col("a.bucket") == F.col("b.bucket"),
-                           F.col("a.id") < F.col("b.id")])
-                .select(F.col("a.id").alias("id_a"),
-                        F.col("b.id").alias("id_b"))
-                .distinct())
+    pair_ids = lsh_candidate_pairs(sigs, bands, num_perm)
     # JVM prefilter: fraction of agreeing permutations estimates Jaccard;
     # exact-verify only pairs estimated ≥ ~threshold (small slack for
     # estimator variance ≈ sqrt(t(1-t)/num_perm))

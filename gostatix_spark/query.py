@@ -4,14 +4,15 @@ Two flavors:
 
 * **state-side** — turn a states DataFrame ``[key?, state, ...]`` into
   answers (``hll_estimate``, ``cms_counts``, ``topk_values``) with a
-  pandas UDF over the tiny state rows; stays distributed, never
-  collects raw data.
-* **probe-side** — broadcast a (small) final sketch state and test a
-  big DataFrame column against it (``bloom_contains``,
-  ``cuckoo_contains``, ``cms_count_col``) with Arrow-vectorized pandas
-  UDFs: the reference's ``Lookup``/``Count`` (``bloom_filter.go:188-215``,
-  ``cuckoo_filter.go:118-125``, ``count_min_sketch.go:76-92``) applied
-  per-batch instead of per-call.
+  UDF over the tiny state rows; stays distributed, never collects raw
+  data.
+* **probe-side** — test a big column against broadcast Bloom, cuckoo or
+  CMS states (``bloom_contains``, ``cuckoo_contains``, ``cms_count_col``)
+  or join it to them by shard (``*_contains_join``): the reference's
+  ``Lookup``/``Count`` (``bloom_filter.go:188-215``,
+  ``cuckoo_filter.go:118-125``, ``count_min_sketch.go:76-92``) per Arrow
+  batch. Each hashes the batch with ``agg.extract_hashes`` and looks up
+  with the sketch registry's ``probe``; a null is never found.
 """
 
 from __future__ import annotations
@@ -24,48 +25,24 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
-                               LongType, StringType, StructField, StructType)
+                               IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 from gostatix_spark import hashing
-from gostatix_spark.kernels import bloom, cms, hll, topk
-from gostatix_spark.sketches import HLL, lookup
-from gostatix_spark.state import (BloomState, CMSState, CuckooState, HLLState,
-                                  TopKState, binary_buffers)
+from gostatix_spark.agg import (_run_pieces, _tagged_union, _to_arrow_schema,
+                                extract_hashes, infer_element)
+from gostatix_spark.kernels import hll, topk
+from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup
+from gostatix_spark.state import BloomState, CMSState, HLLState, TopKState
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
            "topk_values", "bloom_contains", "bloom_cardinality",
            "cms_inner_product",
            "bloom_contains_sharded", "bloom_contains_join",
            "cuckoo_contains", "cuckoo_contains_join", "cms_count_col",
-           "quantiles", "sketch_info", "hash_pandas"]
-
-
-def _hash_pd(s: pd.Series, element: str, algo: str):
-    """(h1, h2) for a pandas Series under the canonical encodings."""
-    if element == "int64":
-        return hashing.hash_int64s(s.to_numpy(dtype=np.int64), algo)
-    if element == "int32":
-        return hashing.hash_tokens(s.to_numpy(dtype=np.int64), algo)
-    if element in ("string", "binary"):
-        # Arrow does the utf-8 encode / buffer concat in C; the kernel
-        # hashes the flat buffer via length-grouped matrices — no
-        # per-element Python (the old list-comprehension .encode()
-        # dominated probe UDFs on multi-million-row gram columns)
-        arr = pa.Array.from_pandas(
-            s, type=pa.string() if element == "string" else pa.binary())
-        values, offsets = binary_buffers(arr)
-        return hashing.hash_var_bytes(values, offsets, algo)
-    if element == "token_array":
-        lens = s.map(len).to_numpy(dtype=np.int64)
-        offsets = np.concatenate(([0], np.cumsum(lens)))
-        values = (np.concatenate([np.asarray(x, dtype=np.int64) for x in s])
-                  if lens.sum() else np.zeros(0, np.int64))
-        return hashing.hash_token_arrays(values, offsets, algo)
-    raise ValueError(element)
-
-
-hash_pandas = _hash_pd
+           "quantiles", "sketch_info"]
 
 
 # ---------------------------------------------------------------------------
@@ -224,24 +201,22 @@ def topk_values(states: DataFrame, out_elem: str = "element",
 def cms_counts(states: DataFrame, items: list, element: str = "string",
                out_col: str = "est_count") -> DataFrame:
     """Point-query a fixed item list against every key's CMS state —
-    returns exploded [key?, item, est_count]."""
-    h1, h2 = _hash_pd(pd.Series(items), element, "metro")
-    h1l, h2l = h1.tolist(), h2.tolist()
+    returns exploded [key?, item, est_count]; a null item reads 0."""
     item_type = {"string": StringType(), "int64": LongType(),
                  "int32": LongType(), "binary": BinaryType()}[element]
     result_t = ArrayType(StructType([
         StructField("item", item_type), StructField(out_col, LongType())]))
+    h1, h2, shard = _probe_hashes(pa.array(items, to_arrow_type(item_type)),
+                                  element, CMS.algo, 1)
 
-    @F.pandas_udf(result_t)
-    def q(blobs: pd.Series) -> pd.Series:
-        ha = np.array(h1l, dtype=np.uint64)
-        hb = np.array(h2l, dtype=np.uint64)
+    @F.arrow_udf(result_t)
+    def q(blobs: pa.Array) -> pa.Array:
         out = []
-        for b in blobs:
-            est = cms.query_batch(CMSState.from_bytes(b).matrix, ha, hb)
-            out.append([{"item": items[i], out_col: int(est[i])}
-                        for i in range(len(items))])
-        return pd.Series(out)
+        for b in blobs.to_pylist():
+            est = np.where(shard < 0, 0, CMS.probe(CMS.decode(b), h1, h2))
+            out.append([{"item": it, out_col: c}
+                        for it, c in zip(items, est.tolist())])
+        return pa.array(out, to_arrow_type(result_t))
 
     return _per_state(states, q, ["item", out_col])
 
@@ -350,8 +325,50 @@ def quantiles(states: DataFrame, qs: list[float],
 
 
 # ---------------------------------------------------------------------------
-# probe-side: broadcast state, test a big column
+# probe-side: test a big column against broadcast or joined states
 # ---------------------------------------------------------------------------
+
+
+def _probe_hashes(arr: pa.Array, element: str, algo: str, n_shards: int):
+    """(h1, h2, shard) of each row of an Arrow probe column, the shard by
+    ``shard_of(h1, n_shards)``, the sharded builds' routing rule. A null
+    row is not hashed: its hashes are 0 and its shard is -1, which holds
+    no state, so a null is never found."""
+    valid = arr.is_valid() if arr.null_count else None
+    h1, h2, rowmap = extract_hashes(
+        arr if valid is None else arr.filter(valid), element, algo)
+    if rowmap is not None:
+        raise ValueError("probes need row-level element kinds")
+    if valid is None:
+        return h1, h2, hashing.shard_of(h1, n_shards)
+    rows = valid.to_numpy(zero_copy_only=False)
+    h, shard = np.zeros((2, len(arr)), np.uint64), np.full(len(arr), -1)
+    h[:, rows], shard[rows] = (h1, h2), hashing.shard_of(h1, n_shards)
+    return h[0], h[1], shard
+
+
+def _broadcast_probe(spark: SparkSession, kind: str, blobs: list[bytes],
+                     col: Column, element: str, out_type) -> Column:
+    """``col`` probed against broadcast states of ``kind``, one per shard
+    (``blobs[i]`` is shard i; one blob is the unsharded case). Per Arrow
+    batch: hash the column under the kind's algorithm, route each row to
+    its shard and look it up with the kind's ``probe`` in each shard the
+    batch touches. A null reads ``False``, or a count of 0."""
+    sk = REGISTRY[kind]
+    bc = spark.sparkContext.broadcast(blobs)
+    dtype = bool if isinstance(out_type, BooleanType) else np.int64
+
+    @F.arrow_udf(out_type)
+    def probe(arr: pa.Array) -> pa.Array:
+        blobs = bc.value
+        h1, h2, shard = _probe_hashes(arr, element, sk.algo, len(blobs))
+        hit = np.zeros(len(arr), dtype)
+        for s in np.unique(shard[shard >= 0]).tolist():
+            rows = np.flatnonzero(shard == s)  # one mask scan, three gathers
+            hit[rows] = sk.probe(sk.decode(blobs[s]), h1[rows], h2[rows])
+        return pa.array(hit)
+
+    return probe(col)
 
 
 def bloom_contains(spark: SparkSession, state_blob: bytes, col: Column,
@@ -359,15 +376,8 @@ def bloom_contains(spark: SparkSession, state_blob: bytes, col: Column,
     """Vectorized membership predicate column against a broadcast Bloom
     state — the distributed analog of ``Lookup`` (``bloom_filter.go:188``).
     Use it to prefilter semi/anti joins; no false negatives."""
-    bc = spark.sparkContext.broadcast(bytes(state_blob))
-
-    @F.pandas_udf(BooleanType())
-    def probe(s: pd.Series) -> pd.Series:
-        st = BloomState.from_bytes(bc.value)
-        h1, h2 = _hash_pd(s, element, "metro")
-        return pd.Series(bloom.lookup_batch(st.words, h1, h2, st.k, st.m))
-
-    return probe(col)
+    return _broadcast_probe(spark, "bloom", [bytes(state_blob)], col,
+                            element, BooleanType())
 
 
 def _shard_mapping(shard_states, n_shards: int | None) -> list[bytes]:
@@ -379,12 +389,10 @@ def _shard_mapping(shard_states, n_shards: int | None) -> list[bytes]:
     so a gap means the caller dropped one — routing against a
     misaligned list would turn every probe into a silent false
     negative."""
-    if isinstance(shard_states, dict):
-        mapping = {int(k): bytes(v) for k, v in shard_states.items()}
-    else:
-        mapping = {i: bytes(b) for i, b in enumerate(shard_states)}
-    if n_shards is None:
-        n_shards = len(mapping)
+    mapping = {int(k): bytes(v) for k, v in (
+        shard_states.items() if isinstance(shard_states, dict)
+        else enumerate(shard_states))}
+    n_shards = len(mapping) if n_shards is None else n_shards
     missing = sorted(set(range(n_shards)) - set(mapping))
     extra = sorted(set(mapping) - set(range(n_shards)))
     if missing or extra:
@@ -403,23 +411,9 @@ def cuckoo_contains(spark: SparkSession, shard_states, col: Column,
     by shard id; pass ``n_shards`` explicitly to validate against the
     build (``cuckoo_filter.go:118-125`` lookup semantics, no false
     negatives)."""
-    blobs = _shard_mapping(shard_states, n_shards)
-    bc = spark.sparkContext.broadcast(blobs)
-
-    @F.pandas_udf(BooleanType())
-    def probe(s: pd.Series) -> pd.Series:
-        blobs = bc.value
-        filters = [CuckooState.from_bytes(b).filter() for b in blobs]
-        h1, _ = _hash_pd(s, element, "murmur3")
-        shard = hashing.shard_of(h1, len(blobs))
-        out = np.zeros(len(s), dtype=bool)
-        for i, f in enumerate(filters):
-            sel = shard == i
-            if sel.any():
-                out[sel] = f.lookup_hashes(h1[sel])
-        return pd.Series(out)
-
-    return probe(col)
+    return _broadcast_probe(spark, "cuckoo",
+                            _shard_mapping(shard_states, n_shards), col,
+                            element, BooleanType())
 
 
 def bloom_contains_sharded(spark: SparkSession, shard_states, col: Column,
@@ -432,97 +426,72 @@ def bloom_contains_sharded(spark: SparkSession, shard_states, col: Column,
     broadcast blob is 1/n_shards the size (on a real cluster the shard
     states can also stay as a small joined table instead of a
     broadcast)."""
-    blobs = _shard_mapping(shard_states, n_shards)
-    bc = spark.sparkContext.broadcast(blobs)
-
-    @F.pandas_udf(BooleanType())
-    def probe(s: pd.Series) -> pd.Series:
-        states = [BloomState.from_bytes(b) for b in bc.value]
-        h1, h2 = _hash_pd(s, element, "metro")
-        shard = hashing.shard_of(h1, len(states))
-        out = np.zeros(len(s), dtype=bool)
-        for i, st in enumerate(states):
-            sel = shard == i
-            if sel.any():
-                out[sel] = bloom.lookup_batch(st.words, h1[sel], h2[sel],
-                                              st.k, st.m)
-        return pd.Series(out)
-
-    return probe(col)
+    return _broadcast_probe(spark, "bloom",
+                            _shard_mapping(shard_states, n_shards), col,
+                            element, BooleanType())
 
 
-def _probe_hashes_df(probes: DataFrame, value_col: str, element: str,
-                     n_shards: int, algo: str) -> DataFrame:
-    """[value_col, h1, shard] for a probe DataFrame (row-level element
-    kinds only — each row is one probe)."""
-    import pyarrow as pa
-    from pyspark.sql.types import IntegerType
-
-    from gostatix_spark.agg import _to_arrow_schema, extract_hashes
-
-    schema = StructType([probes.schema[value_col],
-                         StructField("h1", LongType(), False),
-                         StructField("h2", LongType(), False),
-                         StructField("shard", IntegerType(), False)])
-
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h1, h2, rowmap = extract_hashes(batch.column(value_col),
-                                            element, algo)
-            if rowmap is not None:
-                raise ValueError(
-                    "probe joins need row-level element kinds")
-            yield pa.RecordBatch.from_pydict(
-                {value_col: batch.column(value_col),
-                 "h1": pa.array(h1.astype(np.int64)),
-                 "h2": pa.array(h2.astype(np.int64)),
-                 "shard": pa.array(
-                     hashing.shard_of(h1, n_shards).astype(np.int32))},
-                schema=_to_arrow_schema(schema))
-
-    return probes.select(value_col).mapInArrow(fn, schema)
+def cms_count_col(spark: SparkSession, state_blob: bytes, col: Column,
+                  element: str) -> Column:
+    """Per-row CMS frequency estimate column against a broadcast state
+    (``count_min_sketch.go:76-92`` vectorized)."""
+    return _broadcast_probe(spark, "cms", [bytes(state_blob)], col, element,
+                            LongType())
 
 
 def _contains_join(states: DataFrame, probes: DataFrame, value_col: str,
-                   element: str, n_shards: int, algo: str, decode,
-                   lookup_fn, out_col: str) -> DataFrame:
+                   element: str | None, n_shards: int, kind: str,
+                   out_col: str) -> DataFrame:
     """Shared shard-routed membership join, the probe path for filter
     sets too large to broadcast (e.g. 4096 cuckoo shards × GBs): the
     state rows and the probe hashes go into one union, tagged by side,
     hash partitioned by shard and sorted so that each shard's state row
     comes first; one ``mapInArrow`` call per shuffle partition looks up
-    each shard's probes, batch by batch, against that state. Nothing is
-    collected or broadcast. A probe whose shard has no state row (the
-    states frame was filtered) reads ``false``: nothing was inserted
-    there. ``decode`` reads a shard's state, ``lookup_fn`` probes it.
+    each shard's probes, batch by batch, against that state with the
+    ``kind``'s registry ``probe``. Nothing is collected or broadcast. A
+    probe whose shard has no state row (the states frame was filtered,
+    or the probe is null) reads ``false``: nothing was inserted there.
     Returns ``[value_col, out_col]``, one row per probe."""
-    from gostatix_spark.agg import _run_pieces, _tagged_union, _to_arrow_schema
-
+    sk = REGISTRY[kind]
+    element = infer_element(probes, value_col, element)
+    hash_schema = StructType([probes.schema[value_col],
+                              StructField("h1", LongType(), False),
+                              StructField("h2", LongType(), False),
+                              StructField("shard", IntegerType(), False)])
     out_schema = StructType([probes.schema[value_col],
                              StructField(out_col, BooleanType(), False)])
     arrow_schema = _to_arrow_schema(out_schema)
-    hashes = _probe_hashes_df(probes, value_col, element, n_shards, algo)
+
+    def hashes(batches):
+        for batch in batches:
+            arr = batch.column(value_col)
+            h1, h2, shard = _probe_hashes(arr, element, sk.algo, n_shards)
+            yield pa.RecordBatch.from_arrays(
+                [arr, pa.array(h1.view(np.int64)), pa.array(h2.view(np.int64)),
+                 pa.array(shard.astype(np.int32))],
+                schema=_to_arrow_schema(hash_schema))
 
     def probe(batches):
         st = None
         for piece, _, new in _run_pieces(batches, ["shard"]):
             side = piece.column("_side")
             if new:
-                st = (decode(piece.column("state")[0].as_py())
+                st = (sk.decode(piece.column("state")[0].as_py())
                       if side[0].as_py() == 0 else None)
             rows = piece.filter(pc.equal(side, 1))
             if not rows.num_rows:
                 continue
             h1, h2 = (rows.column(c).to_numpy(zero_copy_only=False)
                       .astype(np.int64).view(np.uint64) for c in ("h1", "h2"))
-            hit = (lookup_fn(st, h1, h2) if st is not None
+            hit = (sk.probe(st, h1, h2) if st is not None
                    else np.zeros(rows.num_rows, dtype=bool))
             yield pa.RecordBatch.from_arrays(
                 [rows.column(value_col), pa.array(hit)], schema=arrow_schema)
 
-    return (_tagged_union(states.select("shard", "state"), hashes, ["shard"])
+    return (_tagged_union(states.select("shard", "state"),
+                          probes.select(value_col).mapInArrow(hashes,
+                                                              hash_schema),
+                          ["shard"])
             .mapInArrow(probe, out_schema))
 
 
@@ -536,15 +505,8 @@ def cuckoo_contains_join(states: DataFrame, probes: DataFrame,
     broadcast stops being viable. ``states`` is raw
     :func:`gostatix_spark.agg.cuckoo_build` (or
     ``cuckoo_apply_removals``) output — never collected."""
-    from gostatix_spark.agg import infer_element
-
-    element = infer_element(probes, value_col, element)
-
-    def lookup(st: CuckooState, h1, h2):
-        return st.filter().lookup_hashes(h1)
-
     return _contains_join(states, probes, value_col, element, n_shards,
-                          "murmur3", CuckooState.from_bytes, lookup, out_col)
+                          "cuckoo", out_col)
 
 
 def bloom_contains_join(states: DataFrame, probes: DataFrame,
@@ -554,27 +516,5 @@ def bloom_contains_join(states: DataFrame, probes: DataFrame,
     """Broadcast-free sharded-bloom membership (see
     :func:`cuckoo_contains_join`); ``states`` is raw
     :func:`gostatix_spark.agg.bloom_build_sharded` output."""
-    from gostatix_spark.agg import infer_element
-
-    element = infer_element(probes, value_col, element)
-
-    def lookup(st: BloomState, h1, h2):
-        return bloom.lookup_batch(st.words, h1, h2, st.k, st.m)
-
     return _contains_join(states, probes, value_col, element, n_shards,
-                          "metro", BloomState.from_bytes, lookup, out_col)
-
-
-def cms_count_col(spark: SparkSession, state_blob: bytes, col: Column,
-                  element: str) -> Column:
-    """Per-row CMS frequency estimate column against a broadcast state
-    (``count_min_sketch.go:76-92`` vectorized)."""
-    bc = spark.sparkContext.broadcast(bytes(state_blob))
-
-    @F.pandas_udf(LongType())
-    def probe(s: pd.Series) -> pd.Series:
-        st = CMSState.from_bytes(bc.value)
-        h1, h2 = _hash_pd(s, element, "metro")
-        return pd.Series(cms.query_batch(st.matrix, h1, h2).astype(np.int64))
-
-    return probe(col)
+                          "bloom", out_col)

@@ -19,7 +19,10 @@ Each kind is one :class:`Sketch` subclass:
   (:func:`_fold_runs`). Top-K, t-digest and KLL keep the
   decode-and-fold ``merge``; :func:`merge` serves both;
 * ``info`` reports a decoded state's parameters, fill and accuracy
-  (``query.sketch_info``).
+  (``query.sketch_info``);
+* ``algo`` names the hash an element is folded or probed under, and
+  Bloom, CMS and Cuckoo ``probe`` a decoded state with a batch of
+  element hashes (the membership and count probes of ``query.py``).
 
 A state names its kind by its leading bytes, as the one frame table
 ``state.FRAMES`` lists them for all seven kinds: ``GSK1`` plus a kind
@@ -245,6 +248,10 @@ class CMS(ArrayMerge):
         # counts, so sketch_agg gates weight_col to this kind
         acc[1] += cms.update_batch(acc[0], h1, h2, weights)
 
+    @staticmethod
+    def probe(st, h1, h2):
+        return cms.query_batch(st.matrix, h1, h2)
+
     def finalize(self, acc):
         p = self.p
         return CMSState(p["d"], p["w"], acc[0], acc[1]).to_bytes(), acc[1]
@@ -274,6 +281,10 @@ class Bloom(ArrayMerge):
     def update(self, acc, h1, h2, elems, weights):
         bloom.insert_batch(acc[0], h1, h2, self.p["k"], self.p["m"])  # OR
         acc[1] += _count(h1, weights)
+
+    @staticmethod
+    def probe(st, h1, h2):
+        return bloom.lookup_batch(st.words, h1, h2, st.k, st.m)
 
     def finalize(self, acc):
         p = self.p
@@ -439,11 +450,16 @@ class Cuckoo(Sketch):
     merged."""
 
     kind = "cuckoo"
+    algo = "murmur3"
     decode = staticmethod(CuckooState.from_bytes)
 
     def __init__(self, **_):
         raise ValueError("cuckoo filters are not mergeable: build them with"
                          " cuckoo_build")
+
+    @staticmethod
+    def probe(st, h1, h2):
+        return st.filter().lookup_hashes(h1)
 
     @staticmethod
     def info(st):

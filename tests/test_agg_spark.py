@@ -684,6 +684,232 @@ class TestJoinProbes:
         assert got.count() == N_DOCS
 
 
+def _probe_cases(spark, states_df, build, probes, element, n_shards):
+    """``probes`` (a one-column ``v`` frame) against the states of a
+    ``build`` (bloom, cms, bloom_sharded or cuckoo): the broadcast
+    answers and, for the membership builds, the join answers (an
+    unsharded Bloom joins as shard 0 of 1), each as {value: answer}."""
+    from gostatix_spark.query import (bloom_contains_join,
+                                      bloom_contains_sharded,
+                                      cuckoo_contains_join)
+    rows = states_df.collect()
+    key = (lambda v: tuple(v)) if element == "token_array" else (
+        lambda v: v)
+
+    def answers(df, col):
+        return {key(r["v"]): r[col] for r in df.collect()}
+
+    if build == "cms":
+        return [answers(probes.withColumn("a", cms_count_col(
+            spark, bytes(rows[0]["state"]), F.col("v"), element)), "a")]
+    if build == "bloom":
+        return [answers(probes.withColumn("a", bloom_contains(
+                    spark, bytes(rows[0]["state"]), F.col("v"), element)),
+                    "a"),
+                answers(bloom_contains_join(
+                    states_df.withColumn("shard", F.lit(0)), probes, "v",
+                    n_shards=1, element=element), "contained")]
+    shard_map = {r["shard"]: bytes(r["state"]) for r in rows}
+    bc, join = ((cuckoo_contains, cuckoo_contains_join) if build == "cuckoo"
+                else (bloom_contains_sharded, bloom_contains_join))
+    return [answers(probes.withColumn("a", bc(
+                spark, shard_map, F.col("v"), element, n_shards=n_shards)),
+                "a"),
+            answers(join(states_df, probes, "v", n_shards=n_shards,
+                         element=element), "contained")]
+
+
+class TestProbeParity:
+    """Every probe path agrees with a direct kernel lookup on the driver,
+    for every row-level element kind: the broadcast probe, the
+    shard-routed join probe (sharded Bloom, cuckoo) and the kernels fed
+    by the hash functions under each kind's hash (metro, murmur3 for
+    cuckoo)."""
+
+    N, SHARDS = 200, 4
+    TYPES = {"string": "string", "binary": "binary", "int32": "int",
+             "int64": "bigint", "token_array": "array<int>"}
+
+    @staticmethod
+    def _value(element, i):
+        return {"string": f"s{i}", "binary": f"b{i}".encode(),
+                "int32": i - 150, "int64": i * 1_000_003 - 7,
+                "token_array": [i, i + 1, i % 7]}[element]
+
+    @staticmethod
+    def _hashes(element, vals, algo):
+        from gostatix_spark import hashing as H
+        if element in ("string", "binary"):
+            return H.hash_bytes_batch(
+                [v.encode() if isinstance(v, str) else v for v in vals], algo)
+        if element == "int32":
+            return H.hash_tokens(np.array(vals, np.int64), algo)
+        if element == "int64":
+            return H.hash_int64s(np.array(vals, np.int64), algo)
+        lens = np.array([len(v) for v in vals])
+        return H.hash_token_arrays(
+            np.concatenate([np.array(v, np.int64) for v in vals]),
+            np.concatenate(([0], np.cumsum(lens))), algo)
+
+    @pytest.mark.parametrize("element", list(TYPES))
+    def test_broadcast_join_and_kernel_agree(self, spark, element):
+        from gostatix_spark import hashing as H
+        from gostatix_spark.agg import bloom_build_sharded
+        from gostatix_spark.kernels import bloom, cms
+        schema = f"v {self.TYPES[element]}"
+        built = spark.createDataFrame(
+            [(self._value(element, i),) for i in range(self.N)], schema
+        ).repartition(2)
+        vals = [self._value(element, i) for i in range(self.N // 2,
+                                                       2 * self.N)]
+        probes = spark.createDataFrame([(v,) for v in vals], schema) \
+            .repartition(3)
+        keys = [tuple(v) if element == "token_array" else v for v in vals]
+        h1, h2 = self._hashes(element, vals, "metro")
+        c1, _ = self._hashes(element, vals, "murmur3")
+        shard = H.shard_of(h1, self.SHARDS)
+        cshard = H.shard_of(c1, self.SHARDS)
+        cases = {
+            "bloom": (sketch_agg(built, "bloom", "v", element=element,
+                                 m=512, k=3), 1),
+            "cms": (sketch_agg(built, "cms", "v", element=element,
+                               d=3, w=64), 1),
+            "bloom_sharded": (bloom_build_sharded(
+                built, "v", n=self.N, eps=0.05, element=element,
+                n_shards=self.SHARDS), self.SHARDS),
+            "cuckoo": (cuckoo_build(built, "v", element=element,
+                                    n_shards=self.SHARDS, eps=0.01),
+                       self.SHARDS),
+        }
+        for name, (states_df, n_shards) in cases.items():
+            rows = states_df.collect()
+            want = np.zeros(len(vals), np.int64)
+            for r in rows:
+                st = sketch_from_bytes(bytes(r["state"]))
+                if name == "cuckoo":
+                    sel = cshard == r["shard"]
+                    want[sel] = st.filter().lookup_hashes(c1[sel])
+                elif name == "bloom_sharded":
+                    sel = shard == r["shard"]
+                    want[sel] = bloom.lookup_batch(st.words, h1[sel],
+                                                   h2[sel], st.k, st.m)
+                elif name == "bloom":
+                    want = bloom.lookup_batch(st.words, h1, h2, st.k, st.m)
+                else:
+                    want = cms.query_batch(st.matrix, h1, h2)
+            want = {k: (int(w) if name == "cms" else bool(w))
+                    for k, w in zip(keys, want)}
+            assert len(set(want.values())) > 1, name  # hits and misses
+            for got in _probe_cases(spark, states_df, name, probes, element,
+                                    n_shards):
+                assert got == want, (name, element)
+
+
+class TestNullElements:
+    """A null is never an element: a null probe is never found (False,
+    count 0) on the broadcast and join paths, and builds skip null
+    elements while still counting their rows."""
+
+    # a null was read as "" or, for int64, as what NaN casts to
+    @pytest.mark.parametrize("element,present", [("string", ""),
+                                                 ("int64", -2 ** 63)])
+    @pytest.mark.parametrize("kind", ["bloom", "bloom_sharded", "cuckoo",
+                                      "cms"])
+    def test_null_probe_reads_absent(self, spark, kind, element, present):
+        from gostatix_spark.agg import bloom_build_sharded
+        if kind == "cuckoo" and present == "":
+            present = "x"  # murmur3("") is 0: no fingerprint to insert
+        schema = f"v {'string' if element == 'string' else 'bigint'}"
+        other = "a" if element == "string" else 7
+        built = spark.createDataFrame([(present,), (other,)], schema)
+        probes = spark.createDataFrame([(None,), (present,), (None,)],
+                                       schema)
+        n_shards = 1 if kind in ("bloom", "cms") else 4
+        states = {
+            "bloom": lambda: sketch_agg(built, "bloom", "v", element=element,
+                                        m=512, k=3),
+            "cms": lambda: sketch_agg(built, "cms", "v", element=element,
+                                      d=3, w=64),
+            "bloom_sharded": lambda: bloom_build_sharded(
+                built, "v", n=2, element=element, n_shards=n_shards),
+            "cuckoo": lambda: cuckoo_build(built, "v", element=element,
+                                           n_shards=n_shards, size=64),
+        }[kind]()
+        absent, found = (0, 1) if kind == "cms" else (False, True)
+        for got in _probe_cases(spark, states, kind, probes, element,
+                                n_shards):
+            assert got == {None: absent, present: found}
+        if kind == "cms":
+            rows = cms_counts(states, [present, None],
+                              element=element).collect()
+            assert {r["item"]: r["est_count"] for r in rows} == {
+                present: 1, None: 0}
+
+    @pytest.mark.parametrize("kind,element,vals,params", [
+        ("hll", "string", ["a", "b"], {"m": 64}),
+        ("hll", "int64", [3, 5], {"m": 64}),
+        ("cms", "string", ["a", "b"], {"d": 3, "w": 64}),
+        ("cms", "int64", [3, 5], {"d": 3, "w": 64}),
+        ("bloom", "string", ["a", "b"], {"m": 512, "k": 3}),
+        ("bloom", "int64", [3, 5], {"m": 512, "k": 3}),
+        ("topk", "int64", [3, 5], {"k": 2}),
+        ("tdigest", "float64", [1.5, 2.5], {}),
+        ("kll", "float64", [1.5, 2.5], {}),
+    ])
+    def test_build_skips_null_elements(self, spark, kind, element, vals,
+                                       params):
+        """A build over [v0, null, v1, null] in one partition gives the
+        bytes of the build over [v0, v1], and consumes four rows."""
+        t = {"string": "string", "int64": "bigint",
+             "float64": "double"}[element]
+        with_nulls = spark.createDataFrame(
+            [(vals[0],), (None,), (vals[1],), (None,)], f"v {t}").coalesce(1)
+        without = spark.createDataFrame([(v,) for v in vals],
+                                        f"v {t}").coalesce(1)
+        parts = sketch_agg(with_nulls, kind, "v", element=element,
+                           _return_partials=True, **params).collect()
+        assert [r["rows_consumed"] for r in parts] == [4]
+        got = sketch_agg(with_nulls, kind, "v", element=element,
+                         **params).collect()
+        want = sketch_agg(without, kind, "v", element=element,
+                          **params).collect()
+        assert [(bytes(r["state"]), r["n_items"]) for r in got] == [
+            (bytes(r["state"]), r["n_items"]) for r in want]
+        assert got[0]["n_items"] == 2
+
+    def test_keyed_build_all_null_key_gets_empty_state(self, spark):
+        df = spark.createDataFrame(
+            [("x", "a"), ("x", None), ("y", None)], "k string, v string") \
+            .coalesce(1)
+        parts = sketch_agg(df, "hll", "v", key_col="k", m=64,
+                           _return_partials=True).collect()
+        assert {r["k"]: (r["n_items"], r["rows_consumed"])
+                for r in parts} == {"x": (1, 2), "y": (0, 1)}
+        est = {r["k"]: r["est_distinct"] for r in hll_estimate(
+            sketch_agg(df, "hll", "v", key_col="k", m=64)).collect()}
+        assert est == {"x": 1, "y": 0}
+
+    @pytest.mark.parametrize("sharded_kind", ["cuckoo", "bloom"])
+    def test_sharded_builds_skip_null_elements(self, spark, sharded_kind):
+        from gostatix_spark.agg import bloom_build_sharded
+        with_nulls = spark.createDataFrame(
+            [("a",), (None,), ("b",)], "v string").coalesce(1)
+        without = spark.createDataFrame([("a",), ("b",)],
+                                        "v string").coalesce(1)
+
+        def build(df):
+            if sharded_kind == "cuckoo":
+                out = cuckoo_build(df, "v", n_shards=2, size=64)
+            else:
+                out = bloom_build_sharded(df, "v", n=2, n_shards=2)
+            return sorted((r["shard"], bytes(r["state"]), r["n_items"])
+                          for r in out.collect())
+
+        got = build(with_nulls)
+        assert got == build(without)
+        assert sum(n for _, _, n in got) == 2
+
+
 class TestDistinctFoldBytewise:
     """Phase 1 folds HLL/CMS/Bloom/Top-K over tokens/int32 as each
     batch's distinct (key, value) pairs with counts when the (key,

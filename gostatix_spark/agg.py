@@ -51,7 +51,7 @@ first, so hashing and folding cost O(distinct), not O(elements).
 from __future__ import annotations
 
 import warnings
-from typing import Iterable, Iterator, NamedTuple
+from typing import Container, Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -79,12 +79,20 @@ __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
 
 
 def _arrow_list_ints(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat int values, int64 offsets) for a list<int> Arrow array."""
+    """(flat int values, int64 offsets) for a list<int> Arrow array. A
+    null row is an empty list, and a null item inside a list is dropped
+    from its row, as a null element is never folded."""
     lengths = pa.compute.list_value_length(arr).to_numpy(zero_copy_only=False)
     lengths = np.nan_to_num(lengths, nan=0).astype(np.int64)
+    values = arr.flatten()
+    if values.null_count:
+        valid = values.is_valid()
+        row = np.repeat(np.arange(len(arr)), lengths)
+        lengths = np.bincount(row[valid.to_numpy(zero_copy_only=False)],
+                              minlength=len(arr))
+        values = values.filter(valid)
     offsets = np.concatenate(([0], np.cumsum(lengths)))
-    values = arr.flatten().to_numpy(zero_copy_only=False)
-    return values, offsets
+    return values.to_numpy(zero_copy_only=False), offsets
 
 
 def extract_hashes(arr: pa.Array, element: str, algo: str):
@@ -394,24 +402,29 @@ def _partial_key(df: DataFrame, jobs: list[_Job]):
 
 
 def _build_partials(df: DataFrame, jobs: list[_Job],
-                    skip_partitions: frozenset[int] = frozenset()
-                    ) -> DataFrame:
+                    skip_partitions: Container[int] = frozenset(),
+                    checkpoint=None) -> DataFrame:
     """Phase 1: one scan folds every job; one partial row per (input
-    partition, job, key)."""
+    partition, job, key). A partition in ``skip_partitions`` reads
+    nothing and emits nothing. ``checkpoint`` (see ``checkpoint.py``)
+    publishes each task's partial rows with its ``publish(table)``
+    before the task emits them."""
     head, key_values = _partial_key(df, jobs)
     out_schema = StructType(head + [
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
         StructField("partition_id", IntegerType(), False),
         StructField("rows_consumed", LongType(), False)])
+    arrow_schema = _to_arrow_schema(out_schema)
     cols = sorted({c for j in jobs
                    for c in (j.value_col, j.key_col, j.weight_col) if c})
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = _partition_id()
         if pid in skip_partitions:
-            # resume path: this partition's partial is already checkpointed
-            # (real deployments prune at the source/manifest level instead)
+            # resume path: this partition's partial is already checkpointed,
+            # or a test hook dropped it (real deployments prune at the
+            # source/manifest level instead)
             return
         accs: dict = {}
         rows: dict = {}
@@ -435,8 +448,10 @@ def _build_partials(df: DataFrame, jobs: list[_Job],
                         "n_items": n_items, "partition_id": pid,
                         "rows_consumed": rows[(i, key)]})
         if out:
-            yield from pa.Table.from_pylist(
-                out, schema=_to_arrow_schema(out_schema)).to_batches()
+            table = pa.Table.from_pylist(out, schema=arrow_schema)
+            if checkpoint is not None:
+                checkpoint.publish(table)
+            yield from table.to_batches()
 
     return df.select(*cols).mapInArrow(fn, out_schema)
 

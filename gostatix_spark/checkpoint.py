@@ -6,54 +6,198 @@ persisted outside the worker so a build can be reconstructed. Here the
 persisted unit is the **phase-1 partial state row** — exactly the
 natural unit of recovery in a distributed build:
 
-``(sketch_kind, key?, partition_id, snapshot_id, rows_consumed,
-n_items, state)``
+``(key?, state, n_items, partition_id, rows_consumed, sketch_kind,
+snapshot_id)``
 
-written as parquet. Resume reads the checkpoint, determines which input
-partitions already contributed (lineage = ``partition_id`` +
-``rows_consumed``), re-runs phase 1 **only on the missing partitions**
-(via ``rdd.mapPartitionsWithIndex`` partition pruning — no data shuffle,
-the surviving partials are never recomputed), then merges old + new
-partials. Merge associativity/commutativity (tested) makes the
-two-source fold equal to the uninterrupted build. The read-back names
-the schema it wrote (``snapshot_id`` is always bigint), so no job reads
-a parquet footer to infer it. A partition
-checkpointed twice is merged once: the merge sorts by (key,
+stored as parquet, ``snapshot_id`` always bigint, so
+``spark.read.parquet(path)`` reads a checkpoint directory as a table.
+
+**Write path: one file per phase-1 task.** A checkpointed build is one
+``sketch_agg``-shaped query. Each phase-1 task writes its own partial
+rows as one parquet file, named by (kind, ``snapshot_id``,
+``partition_id``), first under a hidden temp name (``.<name>.<uuid>.tmp``)
+in the checkpoint directory and then published by a rename; then it
+emits the same rows into the merge's exchange. There is no Spark write
+job, no job commit and no read-back: the merge folds the stream. A
+retried or speculative attempt of a task replaces only its own file.
+Only when earlier builds published partials does the query also read
+them, and union them into the merge.
+
+**Resume.** :func:`completed_partitions` lists the partitions this kind
+already has a published partial for (lineage = ``partition_id`` +
+``rows_consumed``). Phase 1 skips them (they read nothing, so the
+surviving partials are never recomputed) and the merge takes their
+checkpointed partials instead. Merge associativity/commutativity
+(tested) makes the two-source fold equal to the uninterrupted build. A
+partition checkpointed twice is merged once: the merge sorts by (key,
 ``partition_id``) and drops the repeat as it streams past.
 
+**Filesystems.** The path is resolved once, in the driver, with
+``pyarrow.fs.FileSystem.from_uri``, and the resolved filesystem ships to
+the tasks: plain and ``file:`` local paths, and ``s3://``, ``gs://`` or
+``hdfs://`` where pyarrow is built with that support (HDFS also needs
+libhdfs). Anything else (``s3a://``, say) raises
+:class:`CheckpointPathError` naming the path, before any job runs. The
+rename is atomic on local disks and HDFS. On an object store it is a
+copy and a delete, and a reader still sees a published file whole or
+not at all, as one object upload is atomic.
+
+**What a failed job leaves.** Every task that published before the
+failure keeps its file: a resume recomputes only the other partitions.
+A task that dies while writing leaves at most a hidden temp file, which
+no reader lists (Spark skips names starting with ``.`` or ``_``), so a
+half-written partial is never merged.
+
 At 100 TB: partials are O(num_partitions × num_keys) sketch-sized rows
-(KB each), so checkpointing is a trivially small parquet write compared
-to the scan, and resume skips re-reading completed input splits.
+(KB each), so checkpointing is a small write beside the scan, and
+resume skips re-reading completed input splits.
 """
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
+from typing import NamedTuple
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
 
-__all__ = ["checkpointed_sketch_agg", "write_partials"]
+__all__ = ["CheckpointPathError", "checkpointed_sketch_agg",
+           "completed_partitions", "write_partials"]
 
 
-def _with_lineage(partials: DataFrame, kind: str,
-                  snapshot_id: int) -> DataFrame:
-    """The rows a checkpoint holds: partials plus ``sketch_kind`` and a
-    bigint ``snapshot_id`` (small explicit ids and time-based ones share
-    one schema)."""
-    return (partials.withColumn("sketch_kind", F.lit(kind))
-            .withColumn("snapshot_id", F.lit(snapshot_id).cast("bigint")))
+class CheckpointPathError(ValueError):
+    """A checkpoint path that pyarrow cannot open as a filesystem."""
+
+
+class _Target(NamedTuple):
+    """A checkpoint directory, resolved: its pyarrow filesystem, the
+    directory within it, the URI Spark reads it by, and the lineage the
+    files a build publishes carry."""
+
+    fs: pafs.FileSystem
+    root: str
+    uri: str
+    kind: str | None
+    snapshot_id: int
+
+    def publish(self, table: pa.Table) -> None:
+        """Write ``table``'s partial rows with their lineage columns, one
+        parquet file per ``partition_id``: each under a hidden temp name,
+        then renamed into place."""
+        n = table.num_rows
+        table = (table.append_column(pa.field("sketch_kind", pa.string(), False),
+                                     pa.repeat(pa.scalar(self.kind), n))
+                 .append_column(pa.field("snapshot_id", pa.int64(), False),
+                                pa.repeat(pa.scalar(self.snapshot_id,
+                                                    pa.int64()), n)))
+        pids = pc.unique(table["partition_id"]).to_pylist()
+        for pid in pids:
+            part = table if len(pids) == 1 else table.filter(
+                pc.equal(table["partition_id"], pid))
+            self._write(part, pid)
+
+    def _write(self, table: pa.Table, pid: int) -> None:
+        name = f"{self.kind}-{self.snapshot_id}-part-{pid:05d}.parquet"
+        tmp = f"{self.root}/.{name}.{uuid.uuid4().hex}.tmp"
+        self.fs.create_dir(self.root, recursive=True)
+        try:
+            with self.fs.open_output_stream(tmp) as out:
+                pq.write_table(table, out)
+            self.fs.move(tmp, f"{self.root}/{name}")
+        except BaseException:
+            try:
+                self.fs.delete_file(tmp)
+            except OSError:
+                pass
+            raise
+
+    def published(self) -> bool:
+        """Whether the directory holds a file a reader lists."""
+        infos = self.fs.get_file_info(
+            pafs.FileSelector(self.root, allow_not_found=True))
+        return any(i.type == pafs.FileType.File
+                   and not i.base_name.startswith((".", "_")) for i in infos)
+
+
+def _target(path: str, kind: str | None = None,
+            snapshot_id: int | None = None) -> _Target:
+    """Resolve ``path`` with ``pyarrow.fs.FileSystem.from_uri``; a path
+    without a scheme is a local path, relative to the working
+    directory."""
+    uri = path if urlparse(path).scheme else os.path.abspath(path)
+    try:
+        fs, root = pafs.FileSystem.from_uri(uri)
+    except (pa.ArrowException, OSError) as exc:
+        raise CheckpointPathError(
+            f"checkpoint path {path!r}: pyarrow cannot open it ({exc})"
+        ) from exc
+    root = root.rstrip("/") or "/"
+    if isinstance(fs, pafs.LocalFileSystem):
+        uri = "file://" + root  # what Spark reads is what the tasks wrote
+    if snapshot_id is None:
+        snapshot_id = int(time.time() * 1000)
+    return _Target(fs, root, uri, kind, int(snapshot_id))
+
+
+def _lineage_schema(partials: StructType) -> StructType:
+    """The columns of a checkpoint file: the partial's, then
+    ``sketch_kind`` and a bigint ``snapshot_id`` (small explicit ids and
+    time-based ones share one schema)."""
+    return StructType(partials.fields + [
+        StructField("sketch_kind", StringType(), False),
+        StructField("snapshot_id", LongType(), False)])
+
+
+class _Skipped(NamedTuple):
+    """The phase-1 partitions a checkpointed build does not run: those
+    already checkpointed, and, under the ``fail_after_partition`` test
+    hook, every partition past ``last``."""
+
+    done: frozenset
+    last: int | None
+
+    def __contains__(self, pid: object) -> bool:
+        return pid in self.done or (self.last is not None and pid > self.last)
 
 
 def write_partials(partials: DataFrame, path: str, kind: str,
                    snapshot_id: int | None = None) -> int:
-    """Persist phase-1 partials with lineage columns. Returns snapshot id."""
-    if snapshot_id is None:
-        snapshot_id = int(time.time() * 1000)
-    _with_lineage(partials, kind, snapshot_id).write.mode("append").parquet(
-        path)
-    return snapshot_id
+    """Persist phase-1 partials with lineage columns, through the same
+    per-task writer as a checkpointed build. The rows are first
+    partitioned by ``partition_id``, so each partition's partial lands
+    in one file. Returns the snapshot id."""
+    target = _target(path, kind, snapshot_id)
+
+    def write(batches):
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            target.publish(pa.Table.from_batches(batches))
+        return iter(())
+
+    (partials.repartition("partition_id")
+     .mapInArrow(write, "partition_id int").collect())
+    return target.snapshot_id
+
+
+def _completed(spark: SparkSession, target: _Target,
+               kind: str | None) -> list[int]:
+    if not target.published():
+        return []
+    cp = (spark.read.schema("partition_id int, sketch_kind string")
+          .parquet(target.uri))
+    if kind is not None:
+        cp = cp.where(F.col("sketch_kind") == kind)
+    return [r["partition_id"] for r in
+            cp.select("partition_id").distinct().collect()]
 
 
 def completed_partitions(spark: SparkSession, path: str,
@@ -62,16 +206,10 @@ def completed_partitions(spark: SparkSession, path: str,
     kind**. A checkpoint path may hold partials of several kinds (the
     persisted ``sketch_kind`` column exists exactly for that); counting
     another kind's partitions as done would silently skip phase 1 for
-    the new kind and return an empty build. A missing path is the only
-    "no checkpoint": an unreadable one raises."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
-        return []
-    cp = spark.read.parquet(path)
-    if kind is not None:
-        cp = cp.where(F.col("sketch_kind") == kind)
-    return [r["partition_id"] for r in
-            cp.select("partition_id").distinct().collect()]
+    the new kind and return an empty build. A path with no published
+    file (missing, empty, or holding only hidden temp files) is "no
+    checkpoint" and launches no job; an unreadable one raises."""
+    return _completed(spark, _target(path), kind)
 
 
 def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
@@ -83,28 +221,27 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     """``sketch_agg`` with phase-1 checkpointing + resume.
 
     If ``checkpoint_path`` already holds partials for some partitions,
-    only the missing input partitions are recomputed.
+    only the missing input partitions are recomputed. The partials are
+    written when the returned DataFrame runs: each phase-1 task
+    publishes its own (see the module docstring).
     ``fail_after_partition`` is a test hook: phase-1 tasks for
-    partition ids > the given value raise, simulating executor loss
-    mid-build (FIXTURES.md F4 ``resume_sim``).
+    partition ids > the given value write and emit nothing, simulating
+    executor loss mid-build (FIXTURES.md F4 ``resume_sim``).
     """
     spark = df.sparkSession
+    target = _target(checkpoint_path, kind)
     job = _sketch_job(df, kind, value_col, key_col, element, sketch_params)
-    done = frozenset(completed_partitions(spark, checkpoint_path, kind))
-    partials = _build_partials(df, [job], skip_partitions=done)
-    if fail_after_partition is not None:
-        # test hook: pretend every partition after the limit was lost
-        partials = partials.where(
-            F.col("partition_id") <= int(fail_after_partition))
-
-    write_partials(partials, checkpoint_path, kind)
-
-    # the schema just written: no footer-reading job to infer it
-    all_partials = (spark.read.schema(_with_lineage(partials, kind, 0).schema)
-                    .parquet(checkpoint_path)
-                    .where(F.col("sketch_kind") == kind)
-                    .drop("sketch_kind", "snapshot_id"))
-    # one contribution per partition (idempotent re-runs may append
-    # dupes): the merge's sorted stream drops the repeats
-    return _merge_partials(all_partials, [key_col] if key_col else [],
+    done = frozenset(_completed(spark, target, kind))
+    partials = _build_partials(df, [job], _Skipped(done, fail_after_partition),
+                               checkpoint=target)
+    if done:
+        # the schema the files hold: no footer-reading job to infer it
+        earlier = (spark.read.schema(_lineage_schema(partials.schema))
+                   .parquet(target.uri)
+                   .where(F.col("sketch_kind") == kind)
+                   .drop("sketch_kind", "snapshot_id"))
+        partials = partials.unionByName(earlier)
+    # one contribution per partition (a path may hold a partition under
+    # two snapshots): the merge's sorted stream drops the repeats
+    return _merge_partials(partials, [key_col] if key_col else [],
                            tree_fanout, dedup=True)

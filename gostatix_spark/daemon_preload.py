@@ -46,6 +46,8 @@ PRELOAD = (
     "numpy",
     "pandas",
     "pyarrow",
+    # checkpointed builds write their partials from the task
+    "pyarrow.parquet",
     "pyspark.sql.pandas.serializers",
     "pyspark.sql.pandas.types",
     # this library's numpy kernels — referenced by cloudpickled UDFs,

@@ -16,7 +16,9 @@ Settings rationale (100 TB design, tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
 
 # glibc's mmap and trim thresholds for the JVM and the Python workers.
@@ -32,6 +34,38 @@ from pyspark.sql import SparkSession
 # value already in the environment wins.
 _MALLOC_ENV = {"MALLOC_MMAP_THRESHOLD_": str(512 * 1024 * 1024),
                "MALLOC_TRIM_THRESHOLD_": str(512 * 1024 * 1024)}
+
+
+def _executor_pythonpath(pkg_root: str, *paths: str | None) -> str:
+    """``pkg_root``, then the entries of each of ``paths`` in order, each
+    entry once. An unset or empty path adds nothing."""
+    entries = [pkg_root]
+    for path in paths:
+        entries += (path or "").split(os.pathsep)
+    return os.pathsep.join(dict.fromkeys(e for e in entries if e))
+
+
+def _spark_default(key: str) -> str | None:
+    """``key``'s value in the ``spark-defaults.conf`` that spark-submit
+    loads (``SPARK_CONF_DIR``, else ``SPARK_HOME/conf``), or None. Lines
+    are ``key value``, ``key=value`` or ``key: value``; ``#`` and ``!``
+    start comments."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME")
+        or os.path.dirname(os.path.abspath(pyspark.__file__)), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    value = None
+    for line in lines:
+        line = line.strip()
+        if line and line[0] not in "#!":
+            k, v = (re.split(r"\s*[=:]\s*|\s+", line, maxsplit=1) + [""])[:2]
+            if k == key:
+                value = v
+    return value
 
 
 def get_spark(app: str = "gostatix-spark", cores: int | None = None,
@@ -98,11 +132,13 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
         # by the daemon process itself (workers get sys.path from the
         # worker-startup protocol, the daemon does not).
         .config("spark.python.daemon.module", "gostatix_spark.daemon_preload")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.pathsep.join(
-                    [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
-                    + ([os.environ["PYTHONPATH"]]
-                       if os.environ.get("PYTHONPATH") else [])))
+        # A user's value (spark-defaults.conf) is kept behind the
+        # package root. On a cluster the root is a driver-local path:
+        # ship the package with --py-files or a wheel there.
+        .config("spark.executorEnv.PYTHONPATH", _executor_pythonpath(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            _spark_default("spark.executorEnv.PYTHONPATH"),
+            os.environ.get("PYTHONPATH")))
         .config("spark.ui.enabled", "false")
         # Python workers talk to the JVM over a Unix domain socket: over
         # loopback TCP each task waited ~40 ms (Linux's delayed-ACK

@@ -2,6 +2,7 @@
 error-bound gates, partition invariance, global fold invariant)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -888,6 +889,30 @@ class TestNullElements:
         est = {r["k"]: r["est_distinct"] for r in hll_estimate(
             sketch_agg(df, "hll", "v", key_col="k", m=64)).collect()}
         assert est == {"x": 1, "y": 0}
+
+    @pytest.mark.parametrize("kind,params", [
+        ("hll", {"m": 64}), ("cms", {"d": 3, "w": 64}),
+        ("bloom", {"m": 512, "k": 3}), ("topk", {"k": 2})])
+    def test_build_skips_null_items_in_token_lists(self, spark, kind,
+                                                   params):
+        """A null item inside a ``tokens`` list is dropped from its row,
+        as a null element is: [[1, None, 3]] builds the bytes of
+        [[1, 3]]. It was folded as INT64_MIN."""
+        def build(rows):
+            df = spark.createDataFrame(rows, "t array<int>").coalesce(1)
+            return [(bytes(r["state"]), r["n_items"]) for r in
+                    sketch_agg(df, kind, "t", **params).collect()]
+
+        got = build([([1, None, 3],)])
+        assert got == build([([1, 3],)])
+        assert got[0][1] == 2
+
+    def test_list_ints_drop_null_items(self):
+        from gostatix_spark.agg import _arrow_list_ints
+        values, offsets = _arrow_list_ints(pa.array(
+            [[1, None, 3], None, [None], [4], []], pa.list_(pa.int32())))
+        assert values.tolist() == [1, 3, 4]
+        assert offsets.tolist() == [0, 2, 2, 2, 3, 3]
 
     @pytest.mark.parametrize("sharded_kind", ["cuckoo", "bloom"])
     def test_sharded_builds_skip_null_elements(self, spark, sharded_kind):

@@ -26,14 +26,15 @@ def test_workers_inherit_preloaded_modules(spark):
     def probe(_x):
         import sys
         return ",".join(sorted(
-            m for m in ("pandas", "pyarrow", "numpy",
+            m for m in ("pandas", "pyarrow", "pyarrow.parquet", "numpy",
                         "gostatix_spark.kernels.hll")
             if m in sys.modules))
 
     got = spark.range(1).select(probe(F.col("id"))).collect()[0][0]
     # the probe UDF itself imports nothing but sys — anything present
     # arrived through the daemon fork
-    assert got == "gostatix_spark.kernels.hll,numpy,pandas,pyarrow", got
+    assert got == ("gostatix_spark.kernels.hll,numpy,pandas,pyarrow,"
+                   "pyarrow.parquet"), got
 
 
 def test_daemon_preload_module_importable_standalone(monkeypatch):
@@ -209,3 +210,34 @@ def test_daemon_keeps_a_user_openblas_setting(user, want):
          " print(os.environ['OPENBLAS_NUM_THREADS'])"],
         env=env, capture_output=True, text=True, check=True)
     assert out.stdout.strip() == want
+
+
+@pytest.mark.parametrize("paths, want", [
+    ((None, None), ["/pkg"]),
+    (("", "/env"), ["/pkg", "/env"]),
+    (("/user/a:/user/b", None), ["/pkg", "/user/a", "/user/b"]),
+    (("/user/a:/pkg", "/env:/user/a"), ["/pkg", "/user/a", "/env"]),
+])
+def test_executor_pythonpath_keeps_user_entries(paths, want):
+    """The package root goes in front of a user's executor PYTHONPATH
+    and the driver's; nothing is dropped, and nothing is listed twice."""
+    import os
+
+    from gostatix_spark.session import _executor_pythonpath
+    paths = tuple(p and p.replace(":", os.pathsep) for p in paths)
+    assert _executor_pythonpath("/pkg", *paths).split(os.pathsep) == want
+
+
+def test_spark_default_reads_defaults_file(tmp_path, monkeypatch):
+    from gostatix_spark.session import _spark_default
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert _spark_default("spark.executorEnv.PYTHONPATH") is None
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# spark.executorEnv.PYTHONPATH /commented\n"
+        "spark.master   local[2]\n"
+        "spark.executorEnv.PYTHONPATH  /opt/libs:/opt/more\n"
+        "spark.executorEnv.OTHER=/x\n")
+    assert _spark_default("spark.executorEnv.PYTHONPATH") \
+        == "/opt/libs:/opt/more"
+    assert _spark_default("spark.executorEnv.OTHER") == "/x"
+    assert _spark_default("spark.missing") is None

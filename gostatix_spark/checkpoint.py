@@ -30,7 +30,11 @@ surviving partials are never recomputed) and the merge takes their
 checkpointed partials instead. Merge associativity/commutativity
 (tested) makes the two-source fold equal to the uninterrupted build. A
 partition checkpointed twice is merged once: the merge sorts by (key,
-``partition_id``) and drops the repeat as it streams past.
+``partition_id``) and drops the repeat as it streams past. Before
+phase 1, a resume reads the parameters in the published partials'
+frame headers (HLL ``m``; CMS ``d``, ``w``; ...) in the same job that
+lists their partitions: when they differ from the new build's, it
+raises :class:`CheckpointParamsError` and publishes nothing.
 
 **Filesystems.** The path is resolved once, in the driver, with
 ``pyarrow.fs.FileSystem.from_uri``, and the resolved filesystem ships to
@@ -56,6 +60,7 @@ resume skips re-reading completed input splits.
 from __future__ import annotations
 
 import os
+import struct
 import time
 import uuid
 from typing import NamedTuple
@@ -69,13 +74,26 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
+from gostatix_spark.state import FRAMES, MAGIC
 
-__all__ = ["CheckpointPathError", "checkpointed_sketch_agg",
-           "completed_partitions", "write_partials"]
+__all__ = ["CheckpointParamsError", "CheckpointPathError",
+           "checkpointed_sketch_agg", "completed_partitions",
+           "write_partials"]
 
 
 class CheckpointPathError(ValueError):
     """A checkpoint path that pyarrow cannot open as a filesystem."""
+
+
+class CheckpointParamsError(ValueError):
+    """A resume whose sketch parameters differ from those of the
+    partials its checkpoint path already holds."""
+
+
+# how many header fields, after the version, a kind's build parameters
+# fix; the fields after them describe the partial's input
+_PARAM_FIELDS = {"hll": 1, "cms": 2, "bloom": 2, "topk": 3, "tdigest": 1,
+                 "kll": 1}
 
 
 class _Target(NamedTuple):
@@ -188,16 +206,38 @@ def write_partials(partials: DataFrame, path: str, kind: str,
     return target.snapshot_id
 
 
-def _completed(spark: SparkSession, target: _Target,
-               kind: str | None) -> list[int]:
+def _completed(spark: SparkSession, target: _Target, kind: str | None,
+               spec=None) -> list[int]:
+    """The partitions with a published partial of ``kind``. Given the
+    new build's ``spec``, the same job reads each partial's parameters
+    from its frame header, and any that differ from the spec's raise
+    :class:`CheckpointParamsError`."""
     if not target.published():
         return []
-    cp = (spark.read.schema("partition_id int, sketch_kind string")
-          .parquet(target.uri))
+    cp = (spark.read.schema("partition_id int, sketch_kind string, "
+                            "state binary").parquet(target.uri))
     if kind is not None:
         cp = cp.where(F.col("sketch_kind") == kind)
-    return [r["partition_id"] for r in
-            cp.select("partition_id").distinct().collect()]
+    if spec is None:
+        return [r["partition_id"] for r in
+                cp.select("partition_id").distinct().collect()]
+    lay, n = FRAMES[kind], _PARAM_FIELDS[kind]
+    at = len(lay.lead) + 4 * lay.lead.startswith(MAGIC) + 1  # past version
+    fields = struct.Struct("<" + lay.structs[1].format[2:2 + n])
+    found = (cp.groupBy(F.substring("state", at + 1, fields.size).alias("p"))
+             .agg(F.collect_set("partition_id").alias("pids")).collect())
+    names = lay.header._fields[1:1 + n]
+    want = dict(zip(names, fields.unpack_from(
+        spec.finalize(spec.init())[0], at)))
+    for r in found:
+        held = dict(zip(names, fields.unpack(bytes(r["p"]))))
+        if held != want:
+            raise CheckpointParamsError(
+                f"checkpoint path {target.uri} holds {kind} partials of "
+                f"partitions {sorted(r['pids'])} built with {held}; this "
+                f"build has {want}. Resume with the same parameters, or "
+                "build into a fresh path.")
+    return [pid for r in found for pid in r["pids"]]
 
 
 def completed_partitions(spark: SparkSession, path: str,
@@ -231,7 +271,7 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     spark = df.sparkSession
     target = _target(checkpoint_path, kind)
     job = _sketch_job(df, kind, value_col, key_col, element, sketch_params)
-    done = frozenset(_completed(spark, target, kind))
+    done = frozenset(_completed(spark, target, kind, job.spec))
     partials = _build_partials(df, [job], _Skipped(done, fail_after_partition),
                                checkpoint=target)
     if done:

@@ -24,7 +24,8 @@ same vectorized murmur3 the sketches use.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
@@ -84,7 +85,21 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str,
             )
 
 
-def _shingle_hashes_flat(texts: pd.Series, k: int
+def _by_text(fn):
+    """The Arrow UDF body that maps a text column's non-null values, as
+    Python strings, through ``fn`` to an Arrow array of their rows; a
+    null text reads as a null row."""
+    def body(texts: pa.Array) -> pa.Array:
+        if not texts.null_count:
+            return fn(texts.to_pylist())
+        valid = texts.is_valid().to_numpy(zero_copy_only=False)
+        return fn(texts.drop_null().to_pylist()).take(
+            pa.array(np.cumsum(valid) - 1, mask=~valid))
+    body.__name__ = fn.__name__  # the UDF's name in plans
+    return body
+
+
+def _shingle_hashes_flat(texts: list, k: int
                          ) -> tuple[np.ndarray, np.ndarray]:
     """(flat murmur3-h1 hashes of every k-char shingle, (n+1,) doc
     offsets) — one batch-wide byte-matrix gather + one hash kernel
@@ -109,14 +124,6 @@ def _shingle_hashes_flat(texts: pd.Series, k: int
     return h1, np.concatenate(([0], np.cumsum(n_shingles)))
 
 
-def _shingle_hashes(texts: pd.Series, k: int) -> list[np.ndarray]:
-    """Per-doc array of DISTINCT murmur3-h1 shingle hashes (the
-    exact-verify representation; ``np.unique`` per doc slice)."""
-    h1, offs = _shingle_hashes_flat(texts, k)
-    return [np.unique(h1[offs[i]:offs[i + 1]])
-            for i in range(len(offs) - 1)]
-
-
 def _concat_aranges(counts: np.ndarray) -> np.ndarray:
     """[arange(c) for c in counts] concatenated, vectorized."""
     total = int(counts.sum())
@@ -135,14 +142,15 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     Permutations are the standard universal-hash family
     ``(a·h + b) mod p`` (p = 2^61−1) over the shingle's 64-bit murmur
     hash; min per permutation. One numpy matmul-shaped min-reduce per
-    doc, Arrow-batched.
+    doc, Arrow-batched. A null text gets a null signature.
     """
     rng = np.random.default_rng(seed)
     a = rng.integers(1, _MERSENNE, size=num_perm).astype(np.uint64)
     b = rng.integers(0, _MERSENNE, size=num_perm).astype(np.uint64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(LongType()))
+    @_by_text
+    def sig(docs: list) -> pa.Array:
         # fully vectorized across the batch: one permutation row at a
         # time over ALL docs' shingle hashes (the per-doc temp stays
         # ~8 B/shingle, cache-friendly), then one minimum.reduceat per
@@ -150,16 +158,16 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
         # equals min over distinct ones, so no per-doc np.unique; the
         # old per-doc python loop (unique + (64, n_i) perm matrix per
         # doc) dominated the signature stage.
-        if not len(texts):
-            return pd.Series([], dtype=object)
-        h1, offs = _shingle_hashes_flat(texts, shingle_k)
-        h = _red61(h1)
-        starts = offs[:-1]
-        out = np.empty((num_perm, len(texts)), dtype=np.uint64)
-        for j in range(num_perm):
-            row = _red61(_mulmod61(a[j], h) + b[j])
-            out[j] = np.minimum.reduceat(row, starts)
-        return pd.Series(out.T.astype(np.int64).tolist())
+        out = np.empty((num_perm, len(docs)), dtype=np.uint64)
+        if docs:
+            h1, offs = _shingle_hashes_flat(docs, shingle_k)
+            h = _red61(h1)
+            for j in range(num_perm):
+                row = _red61(_mulmod61(a[j], h) + b[j])
+                out[j] = np.minimum.reduceat(row, offs[:-1])
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(docs) + 1, dtype=np.int32) * num_perm),
+            pa.array(out.T.astype(np.int64).ravel()))
 
     return df.select(F.col(id_col).alias("id"),
                      sig(F.col(text_col)).alias("sig"))
@@ -267,10 +275,16 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str, id_col: str,
                 .unionByName(cands.select(F.col("id_b").alias("id")))
                 .distinct())
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def sh_hashes(texts: pd.Series) -> pd.Series:
-        return pd.Series([h.astype(np.int64).tolist()
-                          for h in _shingle_hashes(texts, shingle_k)])
+    @F.arrow_udf(ArrayType(LongType()))
+    @_by_text
+    def sh_hashes(docs: list) -> pa.Array:
+        # each doc's DISTINCT shingle hashes: |A∩B| = size(array_intersect)
+        h1, offs = _shingle_hashes_flat(docs, shingle_k)
+        hs = [np.unique(h1[offs[i]:offs[i + 1]]) for i in range(len(docs))]
+        return pa.ListArray.from_arrays(
+            pa.array(np.cumsum([0, *map(len, hs)], dtype=np.int32)),
+            pa.array(np.concatenate([np.zeros(0, np.uint64), *hs])
+                     .astype(np.int64)))
 
     texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     cand_hashes = (texts.join(F.broadcast(cand_ids), "id")
@@ -299,14 +313,15 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """[id, simhash long] — 64-bit SimHash over whitespace words:
     sign of the count-weighted ±1 sum per bit of each word's murmur3
     hash. Vectorized: all words of an Arrow batch hashed at once,
-    per-doc bit sums via ``np.add.reduceat``."""
-    @F.pandas_udf(LongType())
-    def sh(texts: pd.Series) -> pd.Series:
+    per-doc bit sums via ``np.add.reduceat``. A null text reads null."""
+    @F.arrow_udf(LongType())
+    @_by_text
+    def sh(texts: list) -> pa.Array:
         words_per_doc = [t.lower().split() for t in texts]
         counts = [len(w) for w in words_per_doc]
         flat = [w.encode("utf-8") for ws in words_per_doc for w in ws]
         if not flat:
-            return pd.Series([0] * len(texts), dtype="int64")
+            return pa.array(np.zeros(len(texts), dtype=np.int64))
         h1, _ = hashing.hash_bytes_batch(flat, "murmur3")
         bits = ((h1[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
                 & np.uint64(1)).astype(np.int64) * 2 - 1
@@ -321,7 +336,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         vals = np.zeros(len(texts), dtype=np.uint64)
         for j in range(64):
             vals |= sig[:, j] << np.uint64(j)
-        return pd.Series(vals.astype(np.int64))
+        return pa.array(vals.astype(np.int64))
 
     return df.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("simhash"))
 
@@ -636,7 +651,6 @@ def _exact_pairs_blocked(emb: DataFrame, id_col: str, vec_col: str,
     unit-vector dot product (summation order differs from a left-fold
     by O(ulp) — callers thresholding near-ties should keep the margin
     analysis of their oracle, as q:embedding_dedup does)."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     id_type = emb.schema[id_col].dataType
@@ -661,16 +675,17 @@ def _exact_pairs_blocked(emb: DataFrame, id_col: str, vec_col: str,
           .repartition(nb * (nb + 1) // 2, "_ba", "_bb"))
     thr = float(threshold)
 
-    def _unit(rows) -> tuple[np.ndarray, np.ndarray]:
-        ids = np.asarray([r["_id"] for r in rows])
-        X = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in rows])
+    def _unit(rows: pa.ListScalar) -> tuple[np.ndarray, np.ndarray]:
+        ids = rows.values.field("_id").to_numpy(zero_copy_only=False)
+        X = np.stack(rows.values.field("_v").to_numpy(zero_copy_only=False))
         norms = np.linalg.norm(X, axis=1, keepdims=True)
         return ids, X / norms
 
-    def score(pdfs):
-        for pdf in pdfs:
-            for ra, rb, same in zip(pdf["_ra"], pdf["_rb"],
-                                    (pdf["_ba"] == pdf["_bb"]).tolist()):
+    def score(batches):
+        for batch in batches:
+            id_t = batch["_ra"].type.value_type.field("_id").type
+            for ra, rb, same in zip(batch["_ra"], batch["_rb"], pc.equal(
+                    batch["_ba"], batch["_bb"]).to_pylist()):
                 if len(ra) == 0 or len(rb) == 0:
                     continue
                 ia, A = _unit(ra)
@@ -689,10 +704,11 @@ def _exact_pairs_blocked(emb: DataFrame, id_col: str, vec_col: str,
                     ii, jj = np.nonzero(S >= thr)
                     lo = np.minimum(ia[ii], ib[jj])
                     hi = np.maximum(ia[ii], ib[jj])
-                yield pd.DataFrame({"id_a": lo, "id_b": hi,
-                                    "cosine": S[ii, jj]})
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(lo, id_t), pa.array(hi, id_t),
+                     pa.array(S[ii, jj])], ["id_a", "id_b", "cosine"])
 
-    return bp.mapInPandas(score, out_schema) \
+    return bp.mapInArrow(score, out_schema) \
         .select("id_a", "id_b", "cosine")
 
 

@@ -23,6 +23,11 @@ Divergences (documented per SURVEY.md §1.6):
   global ``math/rand`` — §1.6.8); the victim-slot distribution covers
   all slots uniformly instead of the reference's ceil(rand·(len−1))
   which can never evict slot 0;
+* an element whose h1 has fewer than ``fp_len`` decimal digits (``""``
+  hashes to h1 = 0) cannot be inserted: ``getPositions`` returns an
+  error for it (SURVEY.md row C2), raised here as
+  :class:`FingerprintLengthError`. A lookup of it reads False: it can
+  never have been inserted;
 * the builder API rounds ``size`` up to a power of two so the XOR
   partner map is involutive (§1.6.5); the kernel itself accepts any
   size and applies the reference's exact ``% size`` formula.
@@ -49,6 +54,12 @@ class FilterFullError(RuntimeError):
     cuckoofilter is full`` (``cuckoo_filter.go:111``)."""
 
 
+class FingerprintLengthError(ValueError):
+    """An element's h1 has fewer decimal digits than the fingerprint
+    length, where ``getPositions`` returns its error
+    (``base_cuckoo_filter.go:77-88``)."""
+
+
 def fingerprints_and_indices(h1: np.ndarray, fp_len: int, size: int):
     """Vectorized ``getPositions`` (``base_cuckoo_filter.go:77-88``).
 
@@ -59,9 +70,12 @@ def fingerprints_and_indices(h1: np.ndarray, fp_len: int, size: int):
     """
     # exact digit count via uint64 threshold comparisons (no float)
     nd = (h1[:, None] >= _POW10[None, 1:]).sum(axis=1) + 1  # 1..20
-    if (nd < fp_len).any():
-        raise ValueError(
-            f"fingerprint length {fp_len} is higher than the hash length")
+    short = nd < fp_len
+    if short.any():
+        raise FingerprintLengthError(
+            f"fingerprint length {fp_len} is higher than the hash length of "
+            f"{int(short.sum())} element(s); the first has h1 "
+            f"{int(h1[short][0])}")
     prefix = h1 // _POW10[nd - fp_len]
     # ASCII digit matrix of the prefix (exactly fp_len chars)
     digits = np.empty((len(h1), fp_len), dtype=np.uint8)
@@ -147,8 +161,8 @@ class CuckooFilter:
         raise FilterFullError("cannot insert element, cuckoofilter is full")
 
     def lookup(self, data: bytes) -> bool:
-        fp, i1, i2 = self._positions(data)
-        return bool((self.buckets[i1] == fp).any() or (self.buckets[i2] == fp).any())
+        h1, _ = hashing.murmur3_128(data, 0)
+        return bool(self.lookup_hashes(np.array([h1], dtype=U64))[0])
 
     def remove(self, data: bytes) -> bool:
         fp, i1, i2 = self._positions(data)
@@ -226,7 +240,14 @@ class CuckooFilter:
         return removed
 
     def lookup_hashes(self, h1: np.ndarray) -> np.ndarray:
-        """Vectorized membership for a batch of pre-hashed elements."""
+        """Vectorized membership for a batch of pre-hashed elements. One
+        whose h1 is too short for a fingerprint reads False: it can
+        never have been inserted."""
+        short = h1 < _POW10[self.fp_len - 1]
+        if short.any():
+            hit = np.zeros(len(h1), dtype=bool)
+            hit[~short] = self.lookup_hashes(h1[~short])
+            return hit
         fp, i1, i2 = fingerprints_and_indices(h1, self.fp_len, self.size)
         a = (self.buckets[i1.astype(np.int64)] == fp[:, None]).any(axis=1)
         b = (self.buckets[i2.astype(np.int64)] == fp[:, None]).any(axis=1)

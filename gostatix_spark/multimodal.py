@@ -21,8 +21,8 @@ signatures) is real and tested. Decoding has two tiers:
   torchaudio / pyav changes one entry in :data:`DECODERS`, not the
   pipeline.
 
-Pattern: ``mapInPandas`` so one Python worker sees an iterator of
-row-batches and can bound its own memory (media rows are big — pair
+Pattern: ``mapInArrow`` so one Python worker sees an iterator of Arrow
+record batches and can bound its own memory (media rows are big — pair
 this with a small ``spark.sql.execution.arrow.maxRecordsPerBatch`` or
 ``maxBytesPerBatch`` when payloads are MBs).
 """
@@ -32,9 +32,10 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
                                LongType, MapType, StringType, StructField,
                                StructType)
@@ -105,8 +106,6 @@ def make_assets(spark, n: int, seed: int = 42, payload_bytes: int = 256,
                     meta = {"codec": "fake", "kind": kind}
                 rows.append({"asset_id": int(i), "kind": kind,
                              "media": media, "meta": meta})
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
             yield from pa.Table.from_pylist(
                 rows, schema=to_arrow_schema(ASSET_SCHEMA)).to_batches()
 
@@ -125,11 +124,14 @@ def text_assets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     source column byte-for-byte, which puts all three real codec paths
     (WAV container parse, zlib inflate, PGM header parse) under a
     DuckDB oracle (``__spark_entry__.q_multimodal_roundtrip``)."""
-    def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    schema = to_arrow_schema(ASSET_SCHEMA)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import zlib
-        for pdf in pdfs:
+        for batch in batches:
             rows = []
-            for aid, t in zip(pdf[id_col], pdf[text_col]):
+            for aid, t in zip(batch.column(id_col).to_pylist(),
+                              batch.column(text_col).to_pylist()):
                 b = t.encode("utf-8")
                 route = int(aid) % 3 if b else 1  # P5/WAV need ≥1 sample
                 meta = {"n_samples": str(len(b))}
@@ -147,9 +149,9 @@ def text_assets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                 meta.update({"codec": codec, "kind": kind})
                 rows.append({"asset_id": int(aid), "kind": kind,
                              "media": media, "meta": meta})
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return df.select(id_col, text_col).mapInPandas(fn, ASSET_SCHEMA)
+    return df.select(id_col, text_col).mapInArrow(fn, ASSET_SCHEMA)
 
 
 def decode_payloads(df: DataFrame) -> DataFrame:
@@ -164,21 +166,21 @@ def decode_payloads(df: DataFrame) -> DataFrame:
         StructField("n_samples", LongType(), False),
         StructField("payload", BinaryType(), False),
     ])
+    schema = to_arrow_schema(out_schema)
 
-    def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for aid, kind, media, meta in zip(pdf["asset_id"], pdf["kind"],
-                                              pdf["media"], pdf["meta"]):
-                raw = _raw_decode(media, meta)
+            for r in batch.to_pylist():
+                raw = _raw_decode(r["media"], dict(r["meta"]))
                 # .size, not len(): image decodes are (h, w) grids and
                 # len() would report h, not the sample count
-                rows.append({"asset_id": aid, "kind": kind,
+                rows.append({"asset_id": r["asset_id"], "kind": r["kind"],
                              "n_samples": int(raw.size),
                              "payload": raw.tobytes()})
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return df.mapInPandas(fn, out_schema)
+    return df.mapInArrow(fn, out_schema)
 
 
 def _pool_features(arr: np.ndarray, out_dim: int) -> np.ndarray:
@@ -329,23 +331,26 @@ DECODERS = {"zraw": _real_decode, "wav": _real_decode,
 
 def decode_features(df: DataFrame, out_dim: int = 16) -> DataFrame:
     """[asset_id, kind, features array<float>] — batched decode +
-    feature extraction via mapInPandas (memory-bounded iterator);
+    feature extraction via mapInArrow (memory-bounded iterator);
     decoder dispatched per row on ``meta['codec']``."""
     out_schema = StructType([
         StructField("asset_id", LongType(), False),
         StructField("kind", StringType(), False),
         StructField("features", ArrayType(FloatType()), False),
     ])
+    schema = to_arrow_schema(out_schema)
 
-    def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            feats = [
-                DECODERS[_codec(meta)](m, meta, out_dim).tolist()
-                for meta, m in zip(pdf["meta"], pdf["media"])]
-            yield pd.DataFrame({"asset_id": pdf["asset_id"],
-                                "kind": pdf["kind"], "features": feats})
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            feats = [DECODERS[_codec(meta)](m, meta, out_dim)
+                     for meta, m in zip(map(dict, batch["meta"].to_pylist()),
+                                        batch["media"].to_pylist())]
+            yield pa.RecordBatch.from_arrays(
+                [batch["asset_id"], batch["kind"],
+                 pa.array(feats, schema.field("features").type)],
+                schema=schema)
 
-    return df.mapInPandas(fn, out_schema)
+    return df.mapInArrow(fn, out_schema)
 
 
 def frame_sample(df: DataFrame, every_n: int = 4, frame_bytes: int = 32) -> DataFrame:
@@ -354,18 +359,19 @@ def frame_sample(df: DataFrame, every_n: int = 4, frame_bytes: int = 32) -> Data
     codecs (`zraw`/`wav`/`pgm`) are decoded first, so frames are
     sample data, not compressed bytes; the declared ``fake`` codec
     frames its opaque payload directly. Demonstrates the 1→many row
-    expansion pattern (mapInPandas yielding more rows than it got)."""
+    expansion pattern (mapInArrow yielding more rows than it got)."""
     out_schema = StructType([
         StructField("asset_id", LongType(), False),
         StructField("frame_no", IntegerType(), False),
         StructField("frame", BinaryType(), False),
     ])
+    schema = to_arrow_schema(out_schema)
 
-    def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for aid, media, meta in zip(pdf["asset_id"], pdf["media"],
-                                        pdf["meta"]):
+            for r in batch.to_pylist():
+                aid, media, meta = r["asset_id"], r["media"], dict(r["meta"])
                 if _codec(meta) in RAW_DECODERS:
                     stream = _raw_decode(media, meta).ravel().tobytes()
                 else:
@@ -376,6 +382,6 @@ def frame_sample(df: DataFrame, every_n: int = 4, frame_bytes: int = 32) -> Data
                                  "frame": stream[fno * frame_bytes:
                                                  (fno + 1) * frame_bytes]})
             if rows:
-                yield pd.DataFrame(rows)
+                yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return df.where(F.col("kind") == "video").mapInPandas(fn, out_schema)
+    return df.where(F.col("kind") == "video").mapInArrow(fn, out_schema)

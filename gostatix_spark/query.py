@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -33,9 +32,9 @@ from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
 from gostatix_spark import hashing
 from gostatix_spark.agg import (_run_pieces, _tagged_union, _to_arrow_schema,
                                 extract_hashes, infer_element)
-from gostatix_spark.kernels import hll, topk
-from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup
-from gostatix_spark.state import BloomState, CMSState, HLLState, TopKState
+from gostatix_spark.kernels import topk
+from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup, merge_runs
+from gostatix_spark.state import BloomState, CMSState, TopKState
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
            "topk_values", "bloom_contains", "bloom_cardinality",
@@ -50,13 +49,21 @@ __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
 # ---------------------------------------------------------------------------
 
 
-def _per_state(states: DataFrame, udf, fields: list[str],
+def _per_state(states: DataFrame, result_t, value,
                explode: bool = True) -> DataFrame:
-    """``[key?, state, ...]`` → ``[key?, *fields]`` from a UDF over the
-    state column; ``explode`` gives one row per element it returns."""
+    """``[key?, state, ...]`` → ``[key?, *fields]``: an Arrow UDF maps
+    each serialized state to ``value(state)``, a struct of ``result_t``,
+    or with ``explode`` an array of them, one row per element."""
     key_cols = [c for c in states.columns
                 if c not in ("state", "n_items", "n_partials")]
-    col = udf(F.col("state"))
+    arrow_t = to_arrow_type(result_t)
+
+    def per_state(blobs: pa.Array) -> pa.Array:  # a NaN reads null
+        return pa.array([value(b) for b in blobs.to_pylist()], arrow_t,
+                        from_pandas=True)
+    per_state.__name__ = value.__name__  # the UDF's name in plans
+    col = F.arrow_udf(per_state, result_t)(F.col("state"))
+    fields = (result_t.elementType if explode else result_t).fieldNames()
     return (states.withColumn("_s", F.explode(col) if explode else col)
             .select(*key_cols, *(f"_s.{f}" for f in fields)))
 
@@ -103,8 +110,9 @@ def hll_intersect_pairs(states: DataFrame, key_col: str,
     missing keys are visible to the caller instead of silently
     dropped.
 
-    Register math is vectorized per Arrow batch (stacked registers →
-    one ``np.maximum`` + one ``hll.count_many`` pass per term)."""
+    Per Arrow batch, ``HLL.count_frames`` estimates each side's states,
+    and ``sketches.merge_runs`` merges each pair's two states as one run
+    for the union."""
     a = states.select(F.col(key_col).alias("key_a"),
                       F.col("state").alias("_sa"))
     b = states.select(F.col(key_col).alias("key_b"),
@@ -114,31 +122,24 @@ def hll_intersect_pairs(states: DataFrame, key_col: str,
                         StructField("est_union", LongType()),
                         StructField("est_intersect", LongType())])
 
-    @F.pandas_udf(out_t)
-    def est(sa: pd.Series, sb: pd.Series) -> pd.DataFrame:
-        cols = ["est_a", "est_b", "est_union", "est_intersect"]
-        if not len(sa):
-            return pd.DataFrame(columns=cols, dtype="int64")
+    @F.arrow_udf(out_t)
+    def est(sa: pa.Array, sb: pa.Array) -> pa.Array:
         # a requested pair whose key had no sketch arrives with a null
-        # state (LEFT join) — score the valid rows, emit nulls for the
-        # rest so the caller sees one row per requested pair
-        valid = (~sa.isna() & ~sb.isna()).to_numpy()
-        out = pd.DataFrame(index=range(len(sa)), columns=cols,
-                           dtype="Int64")
-        if valid.any():
-            ra = np.stack([HLLState.from_bytes(x).registers
-                           for x in sa[valid]])
-            rb = np.stack([HLLState.from_bytes(y).registers
-                           for y in sb[valid]])
-            na = hll.count_many(ra, linear_counting=linear_counting)
-            nb = hll.count_many(rb, linear_counting=linear_counting)
-            nu = hll.count_many(np.maximum(ra, rb),
-                                linear_counting=linear_counting)
-            out.loc[valid, "est_a"] = na
-            out.loc[valid, "est_b"] = nb
-            out.loc[valid, "est_union"] = nu
-            out.loc[valid, "est_intersect"] = na + nb - nu
-        return out
+        # state (LEFT join): score the others, and give it null estimates
+        valid = pc.and_(sa.is_valid(), sb.is_valid())
+        sa, sb = sa.filter(valid), sb.filter(valid)
+        na = HLL.count_frames(sa, linear_counting)
+        nb = HLL.count_frames(sb, linear_counting)
+        # each pair's two states interleaved as one run, merged by max
+        order = np.arange(2 * len(sa)).reshape(2, -1).T.ravel()
+        union, _ = merge_runs(pa.concat_arrays([sa, sb]).take(order),
+                              np.arange(0, 2 * len(sa), 2))
+        nu = HLL.count_frames(union, linear_counting)
+        rows = valid.to_numpy(zero_copy_only=False)
+        out = np.zeros((4, len(rows)), np.int64)
+        out[:, rows] = na, nb, nu, na + nb - nu
+        return pa.StructArray.from_arrays(
+            [pa.array(col, mask=~rows) for col in out], out_t.fieldNames())
 
     if pairs is not None:
         joined = pairs.select("key_a", "key_b").join(a, "key_a", "left") \
@@ -177,25 +178,21 @@ def topk_values(states: DataFrame, out_elem: str = "element",
         StructField("rank", LongType()), StructField(out_elem, elem_type),
         StructField(out_count, LongType())]))
 
-    @F.pandas_udf(result_t)
-    def vals(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in blobs:
-            st = TopKState.from_bytes(b)
-            if exact and st.capped:
-                raise ValueError(
-                    "topk_values(exact=True) on a capped (max_distinct) "
-                    "build: compaction flushed count tails into the CMS, "
-                    "so exact candidate sums undercount flushed-then-"
-                    "reappearing elements; read with exact=False (CMS "
-                    "re-estimation, the reference semantics)")
-            rows = topk.final_values(st.cms.matrix, st.candidates, st.k,
-                                     exact=exact)
-            out.append([{"rank": i + 1, out_elem: dec(e), out_count: c}
-                        for i, (e, c) in enumerate(rows)])
-        return pd.Series(out)
+    def vals(b: bytes) -> list[dict]:
+        st = TopKState.from_bytes(b)
+        if exact and st.capped:
+            raise ValueError(
+                "topk_values(exact=True) on a capped (max_distinct) "
+                "build: compaction flushed count tails into the CMS, "
+                "so exact candidate sums undercount flushed-then-"
+                "reappearing elements; read with exact=False (CMS "
+                "re-estimation, the reference semantics)")
+        rows = topk.final_values(st.cms.matrix, st.candidates, st.k,
+                                 exact=exact)
+        return [{"rank": i + 1, out_elem: dec(e), out_count: c}
+                for i, (e, c) in enumerate(rows)]
 
-    return _per_state(states, vals, ["rank", out_elem, out_count])
+    return _per_state(states, result_t, vals)
 
 
 def cms_counts(states: DataFrame, items: list, element: str = "string",
@@ -209,16 +206,11 @@ def cms_counts(states: DataFrame, items: list, element: str = "string",
     h1, h2, shard = _probe_hashes(pa.array(items, to_arrow_type(item_type)),
                                   element, CMS.algo, 1)
 
-    @F.arrow_udf(result_t)
-    def q(blobs: pa.Array) -> pa.Array:
-        out = []
-        for b in blobs.to_pylist():
-            est = np.where(shard < 0, 0, CMS.probe(CMS.decode(b), h1, h2))
-            out.append([{"item": it, out_col: c}
-                        for it, c in zip(items, est.tolist())])
-        return pa.array(out, to_arrow_type(result_t))
+    def q(b: bytes) -> list[dict]:
+        est = np.where(shard < 0, 0, CMS.probe(CMS.decode(b), h1, h2))
+        return [{"item": it, out_col: c} for it, c in zip(items, est.tolist())]
 
-    return _per_state(states, q, ["item", out_col])
+    return _per_state(states, result_t, q)
 
 
 def cms_inner_product(states_a: DataFrame, states_b: DataFrame,
@@ -236,10 +228,10 @@ def cms_inner_product(states_a: DataFrame, states_b: DataFrame,
     a = states_a.select(F.col("state").alias("_sa"))
     b = states_b.select(F.col("state").alias("_sb"))
 
-    @F.pandas_udf(LongType())
-    def est(sa: pd.Series, sb: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def est(sa: pa.Array, sb: pa.Array) -> pa.Array:
         vals = []
-        for x, y in zip(sa, sb):
+        for x, y in zip(sa.to_pylist(), sb.to_pylist()):
             ma, mb = CMSState.from_bytes(x), CMSState.from_bytes(y)
             if (ma.d, ma.w) != (mb.d, mb.w):
                 raise ValueError(
@@ -247,7 +239,7 @@ def cms_inner_product(states_a: DataFrame, states_b: DataFrame,
             prod = (ma.matrix.astype(np.float64)
                     * mb.matrix.astype(np.float64)).sum(axis=1)
             vals.append(int(prod.min()))
-        return pd.Series(vals, dtype="int64")
+        return pa.array(vals, pa.int64())
 
     return a.crossJoin(b).select(est("_sa", "_sb").alias(out_col))
 
@@ -260,10 +252,10 @@ def bloom_cardinality(states: DataFrame,
     filters whose item counts overlap (n_items would double-count
     shared elements; the fill does not). Saturated filters (X = m)
     return −1: the estimate diverges there by construction."""
-    @F.pandas_udf(LongType())
-    def est(blobs: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def est(blobs: pa.Array) -> pa.Array:
         vals = []
-        for b in blobs:
+        for b in blobs.to_pylist():
             st = BloomState.from_bytes(b)
             # bits ≥ m are never set (positions are mod m), so a full
             # popcount of the backing words IS the fill count X
@@ -273,7 +265,7 @@ def bloom_cardinality(states: DataFrame,
             else:
                 vals.append(round(-(st.m / st.k)
                                   * np.log1p(-x / st.m)))
-        return pd.Series(vals, dtype="int64")
+        return pa.array(vals, pa.int64())
 
     return states.withColumn(out_col, est(F.col("state")))
 
@@ -291,17 +283,13 @@ def sketch_info(states: DataFrame) -> DataFrame:
         StructField("accuracy", DoubleType()),
     ])
 
-    @F.pandas_udf(info_t)
-    def info(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in map(bytes, blobs):
-            sk = lookup(b)
-            p, fill, accuracy = sk.info(sk.decode(b))
-            rows.append({"kind": sk.kind, "params": json.dumps(p),
-                         "fill_metric": fill, "accuracy": accuracy})
-        return pd.DataFrame(rows)
+    def info(b: bytes) -> dict:
+        sk = lookup(b)
+        p, fill, accuracy = sk.info(sk.decode(b))
+        return {"kind": sk.kind, "params": json.dumps(p),
+                "fill_metric": fill, "accuracy": accuracy}
 
-    return _per_state(states, info, info_t.fieldNames(), explode=False)
+    return _per_state(states, info_t, info, explode=False)
 
 
 def quantiles(states: DataFrame, qs: list[float],
@@ -311,17 +299,12 @@ def quantiles(states: DataFrame, qs: list[float],
     result_t = ArrayType(StructType([
         StructField("q", DoubleType()), StructField(out_col, DoubleType())]))
 
-    @F.pandas_udf(result_t)
-    def qf(blobs: pd.Series) -> pd.Series:
-        out = []
-        for b in map(bytes, blobs):
-            sk = lookup(b)
-            vals = sk.quantile(sk.decode(b), qs)
-            out.append([{"q": float(q), out_col: float(v)}
-                        for q, v in zip(qs, vals)])
-        return pd.Series(out)
+    def qf(b: bytes) -> list[dict]:
+        sk = lookup(b)
+        vals = sk.quantile(sk.decode(b), qs)
+        return [{"q": float(q), out_col: float(v)} for q, v in zip(qs, vals)]
 
-    return _per_state(states, qf, ["q", out_col])
+    return _per_state(states, result_t, qf)
 
 
 # ---------------------------------------------------------------------------

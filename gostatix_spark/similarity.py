@@ -20,7 +20,7 @@ costs a full scan; the LSH index turns that into a bucket-pruned scan
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
@@ -112,14 +112,14 @@ def hyperplane_signature(df: DataFrame, vec_col: str, dim: int | None = None,
                               .astype(np.float32))
         return plane_cache[d]
 
-    @F.pandas_udf(LongType())
-    def sig(vs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
+    @F.arrow_udf(LongType())
+    def sig(vs: pa.Array) -> pa.Array:
+        mat = np.stack(vs.to_numpy(zero_copy_only=False)).astype(np.float32)
         bits = (mat @ planes_for(mat.shape[1])) > 0
         vals = np.zeros(len(vs), dtype=np.int64)
         for j in range(n_bits):
             vals |= bits[:, j].astype(np.int64) << j
-        return pd.Series(vals)
+        return pa.array(vals)
 
     return df.withColumn(out_col, sig(F.col(vec_col)))
 
@@ -222,17 +222,19 @@ def _ivf_assign_udf(centroids: np.ndarray, nprobe: int = 1):
     from pyspark.sql.types import ArrayType, IntegerType
     C = centroids  # captured; shipped once per task via closure pickle
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def assign(vs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def assign(vs: pa.Array) -> pa.Array:
+        X = np.stack(vs.to_numpy(zero_copy_only=False)).astype(np.float32)
         X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
         sims = X @ C.T
         p = min(nprobe, C.shape[0])
         part = np.argpartition(-sims, p - 1, axis=1)[:, :p]
         row_sims = np.take_along_axis(sims, part, axis=1)
         order = np.argsort(-row_sims, axis=1)
-        top = np.take_along_axis(part, order, axis=1)
-        return pd.Series([row.tolist() for row in top.astype(np.int32)])
+        top = np.take_along_axis(part, order, axis=1).astype(np.int32)
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(top) + 1, dtype=np.int32) * p),
+            pa.array(top.ravel()))
 
     return assign
 

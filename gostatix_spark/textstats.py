@@ -14,12 +14,13 @@ regex dialects so every query here has a bit-identical DuckDB oracle
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from gostatix_spark import hashing
+from gostatix_spark.dedup import _by_text
 
 __all__ = ["quality_features", "repetition_features", "language_id",
            "token_stats", "content_fingerprint", "winnowing_fingerprints",
@@ -187,14 +188,15 @@ def winnowing_fingerprints(df: DataFrame, text_col: str, id_col: str,
     """Winnowing document fingerprints (Schleimer et al., SIGMOD '03):
     rolling k-gram hashes → per-window minimum → distinct selected
     hashes. Not SQL-expressible; vectorized numpy per Arrow batch
-    (sliding-window minimum via stride tricks)."""
-    @F.pandas_udf(ArrayType(LongType()))
-    def fp(texts: pd.Series) -> pd.Series:
+    (sliding-window minimum via stride tricks). A null text reads null."""
+    @F.arrow_udf(ArrayType(LongType()))
+    @_by_text
+    def fp(texts: list) -> pa.Array:
         out = []
         for t in texts:
             b = t.lower().encode("utf-8")
             if len(b) < k:
-                out.append([])
+                out.append(np.zeros(0, np.int64))
                 continue
             arr = np.frombuffer(b, dtype=np.uint8)
             n = len(arr) - k + 1
@@ -205,8 +207,10 @@ def winnowing_fingerprints(df: DataFrame, text_col: str, id_col: str,
             else:
                 wins = np.lib.stride_tricks.sliding_window_view(h1, window)
                 sel = np.unique(wins.min(axis=1))
-            out.append(np.sort(sel).astype(np.int64).tolist())
-        return pd.Series(out)
+            out.append(np.sort(sel).astype(np.int64))
+        return pa.ListArray.from_arrays(
+            pa.array(np.cumsum([0, *map(len, out)], dtype=np.int32)),
+            pa.array(np.concatenate([np.zeros(0, np.int64), *out])))
 
     return df.select(F.col(id_col), fp(F.col(text_col)).alias("fingerprints"))
 

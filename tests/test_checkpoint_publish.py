@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gostatix_spark.agg import sketch_agg
-from gostatix_spark.checkpoint import (CheckpointPathError,
+from gostatix_spark.checkpoint import (CheckpointParamsError,
+                                       CheckpointPathError,
                                        checkpointed_sketch_agg,
                                        completed_partitions, write_partials)
 from gostatix_spark.corpus import corpus_df
@@ -125,3 +126,29 @@ def test_unsupported_uri_raises_before_any_job(spark, corpus, call):
             action()
 
     assert _jobs_run(spark, run) == 0
+
+
+def test_resume_with_other_parameters_is_refused(spark, corpus):
+    """A resume whose parameters differ from the published partials'
+    raises before phase 1, naming the path and both parameter sets, and
+    publishes nothing; with the original parameters it still resumes."""
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/ckpt"
+        checkpointed_sketch_agg(corpus, "cms", "tokens", checkpoint_path=path,
+                                key_col="source", fail_after_partition=3,
+                                **CMS).collect()
+        before = sorted(os.listdir(path))
+        with pytest.raises(CheckpointParamsError,
+                           match=r"ckpt holds cms partials of partitions "
+                                 r"\[0, 1, 2, 3\] built with \{'d': 3, "
+                                 r"'w': 500\}; this build has \{'d': 3, "
+                                 r"'w': 64\}"):
+            checkpointed_sketch_agg(corpus, "cms", "tokens",
+                                    checkpoint_path=path, key_col="source",
+                                    d=3, w=64)
+        assert sorted(os.listdir(path)) == before
+        got = _states(checkpointed_sketch_agg(
+            corpus, "cms", "tokens", checkpoint_path=path, key_col="source",
+            **CMS))
+    assert got == _states(sketch_agg(corpus, "cms", "tokens",
+                                     key_col="source", **CMS))

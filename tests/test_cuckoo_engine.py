@@ -218,3 +218,28 @@ def test_probe_join_without_a_shard_reads_false(spark):
     for v, hit in got.items():
         assert hit == (want[v] and shard[v] != 1), v
     assert any(shard[v] == 1 and want[v] for v in want)
+
+
+def test_an_element_too_short_for_a_fingerprint_fails_the_build(spark):
+    """``""`` hashes to h1 = 0, one decimal digit: ``getPositions``
+    errors for it, so the build raises the typed error, which counts the
+    offending elements and names the first h1."""
+    df = spark.createDataFrame([("",), ("a",)], "v string")
+    with pytest.raises(Exception, match=r"FingerprintLengthError: "
+                       r"fingerprint length \d+ .* of 1 element\(s\); "
+                       r"the first has h1 0"):
+        _build(df).collect()
+
+
+def test_an_element_too_short_for_a_fingerprint_is_never_found(spark):
+    df = _docs(spark)
+    states = {r["shard"]: bytes(r["state"]) for r in _build(df).collect()}
+    probes = spark.createDataFrame([("",), ("doc_1",), ("miss",)], "v string")
+    got = {r["v"]: r["hit"] for r in probes.withColumn(
+        "hit", cuckoo_contains(spark, states, F.col("v"), "string",
+                               n_shards=N_SHARDS)).collect()}
+    assert got[""] is False and got["doc_1"] is True
+    joined = {r["v"]: r["contained"] for r in cuckoo_contains_join(
+        _build(df), probes, "v", n_shards=N_SHARDS,
+        element="string").collect()}
+    assert joined == got

@@ -235,8 +235,9 @@ def q_topk_partkeys_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K heavy hitters over a STRING element (words of
     documents.text) — the canonical URL/domain-style workload; phase 1
-    counts each Arrow batch with one C++ value_counts call
-    (kernels/topk.py BytesCounts), no per-element Python. The word
+    counts each Arrow batch with one C++ value_counts call and keeps
+    the counts as Arrow arrays (kernels/topk.py BytesCounts), so Python
+    touches only each partial's k·slack candidates. The word
     vocabulary (~31) is far below k·slack=160, so every partition's
     candidate set contains ALL distinct words and exact mode is
     guaranteed exact — the GROUP BY is a true oracle."""
@@ -254,7 +255,7 @@ def q_topk_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~14.7k distinct elements (10 planted heavy hitters over a
     near-unique tail) against ``max_distinct=4096``, so every
     partition's phase-1 accumulator COMPACTS several times
-    (``kernels/topk.py CappedCounts._compact`` — tail counts spill to
+    (``kernels/topk.py Counts.update_counts`` — tail counts spill to
     the partial's CMS, memory stays O(cap) regardless of column
     cardinality). Read back in CMS-estimate mode (the capped contract;
     exact=True raises on the capped state).

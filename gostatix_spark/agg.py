@@ -25,8 +25,12 @@ every per-kind step is a lookup into the registry in ``sketches.py``.
   costs one batch plus one open state whatever its key count, and
   order-sensitive merges (t-digest, KLL, Top-K) always fold in
   partition order. For very wide fan-in, ``tree_fanout``
-  first merges per (key, ``partition_id % tree_fanout``) — merge
-  associativity makes the tree shape irrelevant to the result.
+  first merges per (key, ``partition_id % tree_fanout``). The tree
+  shape changes the fold order: HLL, CMS and Bloom (elementwise max,
+  add, OR) still give the flat merge's bytes; Top-K gives the same
+  candidate counts and CMS, its candidates perhaps in another order;
+  t-digest and KLL (whose compaction coin follows a counter the frame
+  does not store) give other bytes within the same rank error.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`. It runs on the
@@ -42,7 +46,8 @@ shards build and probe in parallel.
 
 Element extraction is Arrow-native: list columns are flattened via
 offset arithmetic (zero-copy), strings/binaries hashed through
-length-grouped fixed-width matrices. No per-row Python anywhere.
+length-grouped fixed-width matrices, and ``token_array`` rows become
+one binary array of their encodings. No per-row Python anywhere.
 Integer elements (``tokens``/``int32``) feeding HLL, CMS, Bloom or
 Top-K are reduced per batch to distinct (key, value) pairs with counts
 first, so hashing and folding cost O(distinct), not O(elements).
@@ -128,9 +133,10 @@ def extract_hashes(arr: pa.Array, element: str, algo: str):
 
 def element_values(arr: pa.Array, element: str):
     """Raw element values for exact counting (Top-K candidates) and the
-    quantile sketches: a flat int numpy array for int-like kinds
-    (vectorized ``np.unique`` counting), float64 values, the Arrow array
-    for strings/binaries, else the canonical per-row byte encodings."""
+    quantile sketches: a flat int numpy array for int-like kinds,
+    float64 values, else an Arrow array that ``topk.BytesCounts``
+    counts in C++: strings and binaries as they are, ``token_array``
+    rows as one binary array of their canonical encodings."""
     if element == "tokens":
         values, _ = _arrow_list_ints(arr)
         return values.astype(np.int64)
@@ -139,38 +145,22 @@ def element_values(arr: pa.Array, element: str):
     if element == "float64":
         return arr.to_numpy(zero_copy_only=False).astype(np.float64)
     if element in ("string", "binary"):
-        # returned as the Arrow array itself: BytesCounts counts it with
-        # one C++ value_counts call per batch — no per-element Python
         return arr
     if element == "token_array":  # each row's array as big-endian u32s
         values, offsets = _arrow_list_ints(arr)
-        b = values.astype(">u4").tobytes()
-        return [b[offsets[i] * 4:offsets[i + 1] * 4] for i in range(len(arr))]
+        return binary_array(values.astype(">u4"), offsets * 4)
     raise ValueError(f"unknown element kind {element!r}")
-
-
-def encode_candidate(key, element: str) -> bytes:
-    """Canonical byte encoding of a counted candidate — must match the
-    hashing encodings so merged-CMS re-queries hit the same cells."""
-    if element in ("tokens", "int32"):
-        return (int(key) & 0xFFFFFFFF).to_bytes(4, "big")
-    if element == "int64":
-        return int(key).to_bytes(8, "big", signed=True)
-    return key  # already bytes
 
 
 def _take(elems, sel: np.ndarray | None):
     """Group-select from hashes or whatever :func:`element_values`
-    returned: numpy fancy-index, Arrow take (string/binary — stays in
-    C++), or a Python-list gather (token_array rows). ``None`` (nothing
-    to select from, or select everything) passes ``elems`` through."""
+    returned: numpy fancy-index or Arrow take. ``None`` (nothing to
+    select from, or select everything) passes ``elems`` through."""
     if elems is None or sel is None:
         return elems
     if isinstance(elems, np.ndarray):
         return elems[sel]
-    if isinstance(elems, (pa.Array, pa.ChunkedArray)):
-        return elems.take(pa.array(sel, type=pa.int64()))
-    return [elems[i] for i in sel]
+    return elems.take(pa.array(sel, type=pa.int64()))
 
 
 def infer_element(df: DataFrame, value_col: str, element: str | None) -> str:
@@ -213,6 +203,9 @@ def _sketch_job(df: DataFrame, kind: str, value_col: str, key_col: str | None,
                 weight_col: str | None = None) -> _Job:
     spec = _Spec.make(kind, **params)
     spec.element = infer_element(df, value_col, element)
+    if spec.element not in spec.element_kinds:
+        raise ValueError(f"{kind} sketches cannot fold {spec.element!r}"
+                         f" elements (column {value_col!r})")
     return _Job(name, spec, value_col, key_col, weight_col)
 
 
@@ -662,7 +655,9 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     partition for near-unique element columns (URLs/doc ids at 10⁹
     rows) — when a partition tracks more than N distinct elements the
     count tail is compacted into the partial's CMS (see
-    ``kernels.topk.CappedCounts``). Capped builds must be read with
+    ``kernels.topk.Counts``), whatever the element kind. A build fails
+    at the call when its element kind is one the sketch cannot fold
+    (``Sketch.element_kinds``). Capped builds must be read with
     ``topk_values(exact=False)`` (the reference's CMS-estimate
     semantics); the ``exact=True`` fast path assumes uncapped counts.
 

@@ -460,11 +460,6 @@ def hash_int64s(vals: np.ndarray, algo: str = "metro", seed: int | None = None):
     return _VEC[algo](int64s_to_bytes_matrix(vals), seed)
 
 
-def hash_strings(strs, algo: str = "metro", seed: int | None = None):
-    """Hash a sequence/Series of python strings (UTF-8 canonical encoding)."""
-    return hash_bytes_batch([s.encode("utf-8") for s in strs], algo, seed)
-
-
 def mix64(h: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer (public domain, Steele et al.) over a uint64
     array. Used to derive SHARD routing from an element hash: the raw

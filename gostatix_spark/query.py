@@ -33,7 +33,7 @@ from gostatix_spark import hashing
 from gostatix_spark.agg import (_run_pieces, _tagged_union, _to_arrow_schema,
                                 extract_hashes, infer_element)
 from gostatix_spark.kernels import topk
-from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup, merge_runs
+from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup
 from gostatix_spark.state import BloomState, CMSState, TopKState
 
 __all__ = ["hll_estimate", "hll_intersect_pairs", "cms_counts",
@@ -111,8 +111,8 @@ def hll_intersect_pairs(states: DataFrame, key_col: str,
     dropped.
 
     Per Arrow batch, ``HLL.count_frames`` estimates each side's states,
-    and ``sketches.merge_runs`` merges each pair's two states as one run
-    for the union."""
+    and ``HLL.count_runs`` the union, each pair's two states read as
+    one run."""
     a = states.select(F.col(key_col).alias("key_a"),
                       F.col("state").alias("_sa"))
     b = states.select(F.col(key_col).alias("key_b"),
@@ -132,9 +132,8 @@ def hll_intersect_pairs(states: DataFrame, key_col: str,
         nb = HLL.count_frames(sb, linear_counting)
         # each pair's two states interleaved as one run, merged by max
         order = np.arange(2 * len(sa)).reshape(2, -1).T.ravel()
-        union, _ = merge_runs(pa.concat_arrays([sa, sb]).take(order),
-                              np.arange(0, 2 * len(sa), 2))
-        nu = HLL.count_frames(union, linear_counting)
+        nu = HLL.count_runs(pa.concat_arrays([sa, sb]).take(order),
+                            np.arange(0, 2 * len(sa), 2), linear_counting)
         rows = valid.to_numpy(zero_copy_only=False)
         out = np.zeros((4, len(rows)), np.int64)
         out[:, rows] = na, nb, nu, na + nb - nu

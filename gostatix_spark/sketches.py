@@ -35,7 +35,6 @@ Adding a sketch kind is adding one subclass to :data:`REGISTRY`.
 from __future__ import annotations
 
 import math
-from collections import Counter
 from functools import reduce
 
 import numpy as np
@@ -64,6 +63,9 @@ class Sketch:
     kind = ""
     algo = "metro"
     element = "string"
+    # the element kinds this kind folds (a build checks its job's first)
+    element_kinds = ("tokens", "token_array", "int32", "int64", "string",
+                     "binary")
     # folds raw values (Top-K counts, quantile sketches): nothing is hashed
     needs_elements = False
     # idempotent (max, OR) or linear in counts (add): a batch may fold as
@@ -193,18 +195,26 @@ class HLL(ArrayMerge):
         return [hll.new_state(self.p["m"]), 0]
 
     @classmethod
-    def count_frames(cls, states, linear_counting: bool = True) -> np.ndarray:
-        """The estimate of every HLL state in an Arrow binary array:
-        its frames read as one batch of one-row runs, then one
-        ``hll.count_many`` per block of register stacks (at most
-        ``hll.COUNT_BLOCK`` registers, so memory stays flat in m)."""
+    def count_runs(cls, states, starts: np.ndarray,
+                   linear_counting: bool = True) -> np.ndarray:
+        """The estimate of each run ``[starts[i], starts[i+1])`` of the
+        HLL states in an Arrow binary array, merged by max: the frames
+        read as one batch, then one ``hll.count_many`` per block of
+        merged registers (at most ``hll.COUNT_BLOCK`` registers, so
+        memory stays flat in m). No merged frame is written."""
         data, off = binary_buffers(states)
-        rows = np.arange(len(states))
-        out = np.empty(len(states), np.int64)
-        for runs, _, regs, _ in cls.reduce_runs(data, off[:-1], off[1:],
-                                                rows, rows, hll.COUNT_BLOCK):
+        out = np.empty(len(starts), np.int64)
+        for runs, _, regs, _ in cls.reduce_runs(
+                data, off[:-1], off[1:], starts, np.arange(len(states)),
+                hll.COUNT_BLOCK):
             out[runs] = hll.count_many(regs, linear_counting=linear_counting)
         return out
+
+    @classmethod
+    def count_frames(cls, states, linear_counting: bool = True) -> np.ndarray:
+        """The estimate of every HLL state in an Arrow binary array:
+        :meth:`count_runs` over runs of one."""
+        return cls.count_runs(states, np.arange(len(states)), linear_counting)
 
     def update(self, acc, h1, h2, elems, weights):
         hll.update_batch(acc[0], h1)  # max: repeats change nothing
@@ -310,45 +320,29 @@ class TopK(Sketch):
 
     def init(self):
         p = self.p
-        if self.element in ("tokens", "int32", "int64"):
-            inner = topk.IntCounts()
-        elif self.element in ("string", "binary"):
-            inner = topk.BytesCounts()
-        else:
-            return [Counter(), 0]  # token_array rows (vocab-sized)
-        if p["max_distinct"]:
-            # near-unique columns: bound phase-1 memory to O(cap) per
-            # partition — tail counts spill into the CMS
-            inner = topk.CappedCounts(inner, p["max_distinct"],
-                                      self.element, p["d"], p["w"])
-        return [inner, 0]
+        counts = (topk.IntCounts if self.element in ("tokens", "int32", "int64")
+                  else topk.BytesCounts)
+        # max_distinct bounds phase-1 memory to O(cap) per partition for
+        # near-unique columns: tail counts spill into the CMS
+        return [counts(self.element, p["max_distinct"] or None, p["d"],
+                       p["w"]), 0]
 
     def update(self, acc, h1, h2, elems, weights):
         if weights is None:
-            acc[0].update(elems)  # IntCounts (vectorized) or Counter
+            acc[0].update(elems)
         else:
-            acc[0].update_counts(elems, weights)  # IntCounts / Capped
+            acc[0].update_counts(elems, weights)
         acc[1] += _count(elems, weights)
 
     def finalize(self, acc):
         p, counts = self.p, acc[0]
-        capped = False
-        if isinstance(counts, topk.CappedCounts):
-            mat, total, cand = counts.finalize(p["k"], p["slack"], p["d"],
-                                               p["w"])
-            # only a partial that actually compacted carries inexact
-            # candidate counts; a cap that never fired leaves the
-            # exact=True read path valid
-            capped = counts.compactions > 0
-        elif isinstance(counts, topk.IntCounts):
-            mat, total, cand = topk.partial_from_int_counts(
-                counts, self.element, p["k"], p["slack"], p["d"], p["w"])
-        else:
-            mat, total, cand = topk.partial_from_counter(
-                counts, p["k"], p["slack"], p["d"], p["w"])
+        mat, total, cand = counts.finalize(p["k"], p["slack"], p["d"], p["w"])
+        # only a partial that actually compacted carries inexact
+        # candidate counts; a cap that never fired leaves the exact=True
+        # read path valid
         st = TopKState(p["k"], p["eps"], p["fail_prob"],
                        CMSState(p["d"], p["w"], mat, total), cand,
-                       capped=capped)
+                       capped=counts.compactions > 0)
         return st.to_bytes(), acc[1]
 
     @staticmethod
@@ -372,6 +366,7 @@ class TDigest(Sketch):
 
     kind = "tdigest"
     needs_elements = True
+    element_kinds = ("tokens", "int32", "int64", "float64")
     decode = staticmethod(tdigest.from_bytes)
 
     def __init__(self, delta=200.0, **_):
@@ -415,6 +410,7 @@ class KLL(Sketch):
 
     kind = "kll"
     needs_elements = True
+    element_kinds = TDigest.element_kinds
     decode = staticmethod(kll.KLL.from_bytes)
 
     def __init__(self, k=200, seed=42, **_):

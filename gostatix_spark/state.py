@@ -217,10 +217,12 @@ def check_rows(ok: np.ndarray, rows: np.ndarray, what: str) -> None:
 def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     """(flat uint8 values, int64 offsets) for a string/binary Arrow array."""
     import pyarrow as pa
-    if not pa.types.is_binary(arr.type):
+    large = pa.types.is_large_binary(arr.type)
+    if not (large or pa.types.is_binary(arr.type)):
         arr = arr.cast(pa.binary())
     # null-free assumption: sketch inputs are filtered upstream
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+    offsets = np.frombuffer(arr.buffers()[1],
+                            dtype=np.int64 if large else np.int32)[
         arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
     data_buf = arr.buffers()[2]
     values = (np.frombuffer(data_buf, dtype=np.uint8)
@@ -565,7 +567,7 @@ class TopKState:
     cms: CMSState
     candidates: dict[bytes, int] = field(default_factory=dict)
     # True when any contributing partial compacted under a max_distinct
-    # cap (kernels.topk.CappedCounts): candidate counts for flushed-
+    # cap (kernels.topk.Counts): candidate counts for flushed-
     # then-reappearing elements are then partial sums, so the
     # exact=True read path is invalid and readers must re-estimate
     # through the CMS (which holds every flushed count).

@@ -533,6 +533,60 @@ class TestElementKinds:
             "hit", bloom_contains(spark, blob, F.col("tokens"), "token_array"))
         assert probes.where(~F.col("hit")).count() == 0
 
+    def test_token_array_topk_counts_whole_arrays(self, spark):
+        """Top-K over ``token_array`` counts each row's whole array by
+        its big-endian encoding; equal counts rank by that encoding."""
+        rows = [[1, 2]] * 3 + [[2, 1]] * 3 + [[7]] * 2 + [[]] * 5 + [[0]]
+        df = spark.createDataFrame([(r,) for r in rows], "t array<int>")
+        states = sketch_agg(df.repartition(3), "topk", "t",
+                            element="token_array", k=3, eps=0.01, slack=4)
+        st = sketch_from_bytes(bytes(states.collect()[0]["state"]))
+        enc = {b"": 5, b"\0\0\0\1\0\0\0\2": 3, b"\0\0\0\2\0\0\0\1": 3,
+               b"\0\0\0\7": 2, b"\0\0\0\0": 1}
+        assert st.candidates == enc
+        from gostatix_spark.kernels import topk
+        assert topk.final_values(st.cms.matrix, st.candidates, 3) == [
+            (b"", 5), (b"\0\0\0\1\0\0\0\2", 3), (b"\0\0\0\2\0\0\0\1", 3)]
+
+    def test_every_accepted_element_builds(self, spark):
+        """Each registry kind builds over every element kind it lists,
+        all in one scan."""
+        from gostatix_spark.agg import multi_sketch_agg
+        df = spark.createDataFrame(
+            [([1, 2], 3, 4, "a", bytearray(b"b"), 1.5),
+             ([2], 5, 6, "c", bytearray(b"d"), 2.5)],
+            "toks array<int>, i32 int, i64 bigint, s string, b binary,"
+            " f double")
+        cols = {"tokens": "toks", "token_array": "toks", "int32": "i32",
+                "int64": "i64", "string": "s", "binary": "b",
+                "float64": "f"}
+        small = {"bloom": {"n": 100}, "topk": {"eps": 0.01}}
+        jobs = [{"name": f"{kind}/{el}", "kind": kind, "value_col": cols[el],
+                 "element": el, "params": small.get(kind, {})}
+                for kind, sk in sketches.REGISTRY.items() if kind != "cuckoo"
+                for el in sk.element_kinds]
+        assert len(jobs) == 4 * 6 + 2 * 4
+        got = {r["sketch_name"]: r for r in multi_sketch_agg(df, jobs).collect()}
+        assert got.keys() == {j["name"] for j in jobs}
+        for name, r in got.items():
+            assert sketches.lookup(r["state"]).kind == name.split("/")[0]
+            assert r["n_items"] == (3 if name.endswith("/tokens") else 2)
+
+    @pytest.mark.parametrize("kind,col,element", [
+        ("hll", "x", "float64"), ("cms", "x", "float64"),
+        ("bloom", "x", "float64"), ("topk", "x", "float64"),
+        ("tdigest", "s", "string"), ("kll", "s", "string")])
+    def test_unfoldable_element_raises_at_the_call(self, spark, kind, col,
+                                                   element):
+        """An element kind a sketch cannot fold fails in the driver,
+        before any job runs, naming the kind, the column and the
+        element (a double column infers ``float64``)."""
+        df = spark.createDataFrame([(1.5, "a")], "x double, s string")
+        p = {"n": 100} if kind == "bloom" else {}
+        with pytest.raises(ValueError, match=f"{kind} sketches cannot fold"
+                           f" '{element}' elements \\(column '{col}'\\)"):
+            sketch_agg(df, kind, col, **p)
+
     def test_cms_count_col_probe(self, spark, corpus):
         states = sketch_agg(corpus, "cms", "source", element="string",
                             d=5, w=2719)
@@ -992,7 +1046,7 @@ class TestDistinctFoldBytewise:
         """{key: (state bytes, n_items, n_partials, {pid: rows})} from a
         per-element fold of every value of the key."""
         from gostatix_spark import hashing
-        from gostatix_spark.agg import _Spec, encode_candidate
+        from gostatix_spark.agg import _Spec
         from gostatix_spark.kernels import bloom, cms, topk
         from gostatix_spark.state import (BloomState, CMSState, HLLState,
                                           TopKState)
@@ -1035,10 +1089,9 @@ class TestDistinctFoldBytewise:
                 else:  # top k·slack exact local counts per partition
                     cand: dict = {}
                     for v in by_pid.values():
-                        ic = topk.IntCounts()
+                        ic = topk.IntCounts(element)
                         ic.update(v)
                         for e, c in ic.top(p["k"] * p["slack"]):
-                            e = encode_candidate(e, element)
                             cand[e] = cand.get(e, 0) + c
                     blob = TopKState(p["k"], p["eps"], p["fail_prob"],
                                      cstate, cand).to_bytes()

@@ -103,6 +103,29 @@ def test_cms_and_bloom_merge_equal_reference():
         assert sketches.merge(blobs) == reference_merge(blobs)
 
 
+@pytest.mark.parametrize("lc", [True, False])
+def test_count_runs_equals_count_of_merged_registers(lc):
+    """``HLL.count_runs`` estimates each run of states as the count of
+    its registerwise max, without writing a merged frame; runs of one
+    are ``count_frames``."""
+    rng = np.random.default_rng(9)
+    blobs, starts, want = [], [], []
+    for r in range(40):
+        m = (64, 1024)[r % 2]
+        sts = [_hll(rng, m, int(rng.integers(0, m)))
+               for _ in range(int(rng.integers(1, 5)))]
+        starts.append(len(blobs))
+        blobs += [s.to_bytes(sparse=bool(rng.integers(2))) for s in sts]
+        want.append(hll.count(reduce(hll.merge, (s.registers for s in sts)),
+                              linear_counting=lc))
+    arr = pa.array(blobs, pa.binary())
+    got = sketches.HLL.count_runs(arr, np.array(starts), lc)
+    assert got.tolist() == want
+    assert sketches.HLL.count_frames(arr, lc).tolist() == [
+        hll.count(HLLState.from_bytes(b).registers, linear_counting=lc)
+        for b in blobs]
+
+
 def test_merge_runs_between_other_kinds():
     """Array-merge runs of several kinds and sizes sit between Top-K,
     t-digest and KLL runs; each gets its reference frame, and the other
@@ -293,6 +316,48 @@ def test_keyless_and_tree_builds_match_reference(spark, skewed,
                                                  tiny_batches, kind, p):
     _check_build(skewed, kind, p, None)
     _check_build(skewed, kind, p, "key", tree_fanout=3)
+
+
+def test_tree_topk_matches_flat_in_content(spark, skewed, tiny_batches):
+    """A Top-K tree merge (``tree_fanout=3``) folds the partials in
+    another order than the flat merge: its candidates may come out in
+    another order, so it is compared decoded — the candidate counts as
+    a dict, and the CMS — not byte for byte."""
+    p = {"k": 5, "eps": 0.01, "slack": 4}
+    flat = merged_rows(sketch_agg(skewed, "topk", "v", key_col="key", **p),
+                       ["key"])
+    tree = merged_rows(sketch_agg(skewed, "topk", "v", key_col="key",
+                                  tree_fanout=3, **p), ["key"])
+    assert flat.keys() == tree.keys()
+    for key, (blob, n, parts) in flat.items():
+        a, b = TopKState.from_bytes(blob), TopKState.from_bytes(tree[key][0])
+        assert (n, parts) == tree[key][1:]
+        assert a.candidates == b.candidates and a.cms.equals(b.cms), key
+
+
+@pytest.mark.parametrize("kind,p", [("tdigest", {"delta": 100.0}),
+                                    ("kll", {"k": 200})])
+def test_tree_quantiles_match_flat_within_rank_error(spark, skewed,
+                                                     tiny_batches, kind, p):
+    """t-digest and KLL merges are not bytewise tree-invariant (KLL's
+    compaction coin depends on the merge order); flat and tree builds
+    must both answer quantiles within 0.02 in rank."""
+    values = {}
+    for key, v in skewed.collect():
+        values.setdefault(key, []).append(v)
+    qs = np.linspace(0.05, 0.95, 19)
+    for fanout in (None, 3):
+        got = merged_rows(sketch_agg(skewed, kind, "v", key_col="key",
+                                     tree_fanout=fanout, **p), ["key"])
+        for (key,), (blob, n, _) in got.items():
+            exact = np.sort(values[key])
+            if len(exact) < 100:  # ranks of a few rows move in 1/n steps
+                continue
+            sk = sketches.lookup(blob)
+            est = sk.quantile(sk.decode(blob), qs)
+            rank = np.searchsorted(exact, est, side="right") / len(exact)
+            assert n == len(exact)
+            assert np.abs(rank - qs).max() <= 0.02, (kind, fanout, key)
 
 
 @pytest.mark.parametrize("kind,p", [BUILDS[0], BUILDS[2], BUILDS[4]])

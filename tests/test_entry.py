@@ -70,7 +70,7 @@ def test_rows_only_queries_run(spark, name):
 
 
 def test_topk_capped_actually_compacts(spark):
-    """q_topk_capped must keep exercising CappedCounts._compact: the
+    """q_topk_capped must keep exercising the Top-K compaction: the
     driver-path build's serialized state carries the capped flag (set
     only when a compaction fired), and the exact=True fast path is
     refused on it."""

@@ -112,6 +112,10 @@ def test_int64_and_string_paths():
     s1, _ = H.hash_bytes_batch([(42).to_bytes(8, "big"),
                                 (-42).to_bytes(8, "big", signed=True)])
     assert np.array_equal(h1, s1)
-    h1, _ = H.hash_strings(["héllo", ""])
-    s1, _ = H.hash_bytes_batch(["héllo".encode(), b""])
-    assert np.array_equal(h1, s1)
+    # strings hash as their UTF-8 bytes, straight from the Arrow buffers
+    import pyarrow as pa
+    from gostatix_spark.state import binary_buffers
+    for typ in (pa.string(), pa.large_binary()):
+        h1, _ = H.hash_var_bytes(*binary_buffers(pa.array(["héllo", ""], typ)))
+        s1, _ = H.hash_bytes_batch(["héllo".encode(), b""])
+        assert np.array_equal(h1, s1)

@@ -76,7 +76,10 @@ class Counts:
     """Exact counts of one partition's elements, as a phase-1 partial
     needs them: the distinct values and their counts held in arrays
     (:class:`IntCounts` numpy, :class:`BytesCounts` Arrow), so Python
-    touches only the k·slack candidates a partial ships.
+    touches only the k·slack candidates a partial ships. A subclass
+    holds the arrays behind ``count`` (a batch's distinct values and
+    counts), ``items`` (all of them), ``top`` (the byte-encoded top n)
+    and ``_add``, ``_n_distinct``, ``_flush`` and ``_hash``.
 
     ``cap`` (``max_distinct``) bounds memory for near-unique columns
     (URLs, doc ids at 10⁹ rows): whenever the distinct count after an

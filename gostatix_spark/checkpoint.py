@@ -74,7 +74,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gostatix_spark.agg import _build_partials, _merge_partials, _sketch_job
-from gostatix_spark.state import FRAMES, MAGIC
+from gostatix_spark.state import FRAMES
 
 __all__ = ["CheckpointParamsError", "CheckpointPathError",
            "checkpointed_sketch_agg", "completed_partitions",
@@ -88,12 +88,6 @@ class CheckpointPathError(ValueError):
 class CheckpointParamsError(ValueError):
     """A resume whose sketch parameters differ from those of the
     partials its checkpoint path already holds."""
-
-
-# how many header fields, after the version, a kind's build parameters
-# fix; the fields after them describe the partial's input
-_PARAM_FIELDS = {"hll": 1, "cms": 2, "bloom": 2, "topk": 3, "tdigest": 1,
-                 "kll": 1}
 
 
 class _Target(NamedTuple):
@@ -221,8 +215,8 @@ def _completed(spark: SparkSession, target: _Target, kind: str | None,
     if spec is None:
         return [r["partition_id"] for r in
                 cp.select("partition_id").distinct().collect()]
-    lay, n = FRAMES[kind], _PARAM_FIELDS[kind]
-    at = len(lay.lead) + 4 * lay.lead.startswith(MAGIC) + 1  # past version
+    lay = FRAMES[kind]
+    at, n = lay.version_at + 1, lay.params  # the parameters follow it
     fields = struct.Struct("<" + lay.structs[1].format[2:2 + n])
     found = (cp.groupBy(F.substring("state", at + 1, fields.size).alias("p"))
              .agg(F.collect_set("partition_id").alias("pids")).collect())

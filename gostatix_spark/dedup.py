@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all Spark-first:
+Five families, all Spark-first:
 
 * **exact** — hash-groupBy on a normalized content digest (built-in
   ``sha2``/``md5``, pure JVM, one shuffle on the digest).
@@ -9,10 +9,18 @@ Four families, all Spark-first:
   verification. The classic near-dup pipeline (Broder '97; used by most
   LLM data pipelines).
 * **SimHash** — 64-bit sign-of-weighted-sum fingerprint; near-dup
-  candidates via chunk-equality buckets (pigeonhole on hamming ≤ 3).
+  candidates via chunk-equality buckets (pigeonhole on hamming ≤ 3) or
+  Manku's block-subset tables for larger radii.
 * **exact n-gram Jaccard** — explode + self-join + group count; fully
   relational (and therefore DuckDB-oracle-checkable), used as the
   ground-truth oracle for the approximate families.
+* **embedding-cosine** — blocked-matmul all pairs, or hyperplane-LSH
+  chunk buckets with an exact cosine re-check.
+
+MinHash bands, SimHash chunks and block subsets, and the embedding
+chunks are all bucket keys of one candidate join (:func:`_bucket_pairs`):
+rows explode into (band, key) rows, an optional broadcast anti-join
+drops hot buckets, and ONE self-join on (band, key) pairs them.
 
 Scale notes: every pipeline here shuffles only (id, bucket/shingle)
 pairs, never full texts, until the final small candidate join; bucket
@@ -189,13 +197,45 @@ def _band_bucket_cols(num_perm: int, bands: int) -> list:
     return cols
 
 
+def _bucket_pairs(rows: DataFrame, keys: list,
+                  max_bucket_size: int | None = None,
+                  carry: tuple = ()) -> DataFrame:
+    """The candidate join of every near-dup family: each row of
+    ``rows`` lands in one bucket per key column, ``(band, key)`` with
+    ``band`` the key's position in ``keys``, and ONE self-join on
+    ``(band, key)`` with ``a.id < b.id`` pairs the rows that share a
+    bucket. One shuffle of (id, band, key) rows, never one join per
+    key. Output ``[id_a, id_b]`` plus ``<c>_a`` and ``<c>_b`` for each
+    ``carry`` column; a pair sharing several buckets repeats, so
+    callers dedup.
+
+    ``max_bucket_size`` drops the buckets holding more rows than that
+    (a cheap count + broadcast anti-join): a bucket of B rows adds B²
+    join rows, so one hot key at corpus scale is a quadratic block. A
+    pair is lost only if EVERY bucket it shares is hot."""
+    banded = rows.select("id", *carry,
+                         F.posexplode(F.array(*keys)).alias("band", "key"))
+    if max_bucket_size:
+        hot = (banded.groupBy("band", "key").count()
+               .where(F.col("count") > max_bucket_size)
+               .select("band", "key"))
+        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    a, b = banded.alias("a"), banded.alias("b")
+    return (a.join(b, [F.col("a.band") == F.col("b.band"),
+                       F.col("a.key") == F.col("b.key"),
+                       F.col("a.id") < F.col("b.id")])
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                    *(F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                      for c in carry for s in "ab")))
+
+
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 32,
                         num_perm: int | None = None) -> DataFrame:
     """Band the signatures and emit candidate pairs that share ≥1 band
     bucket. Relational core: per-band bucket = ``F.hash(F.slice(sig,
     ...))`` (order-deterministic, narrow — no shuffle before the join)
-    → self-join on (band, bucket) → distinct (a < b) pairs. Shuffles
-    only (id, band, bucket-hash) rows.
+    → :func:`_bucket_pairs` self-join on (band, bucket) → distinct
+    (a < b) pairs. Shuffles only (id, band, bucket-hash) rows.
 
     ``num_perm`` is required (callers know their signature length; a
     driver-side ``.first()`` sniff would add a hidden job).
@@ -206,16 +246,7 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 32,
     signature order by construction and drops the extra Exchange.)"""
     if num_perm is None:
         raise ValueError("num_perm is required (signature length)")
-    band_buckets = F.array(*_band_bucket_cols(num_perm, bands))
-    banded = sigs.select(
-        "id", F.posexplode(band_buckets).alias("band", "bucket"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (a.join(b, [F.col("a.band") == F.col("b.band"),
-                       F.col("a.bucket") == F.col("b.bucket"),
-                       F.col("a.id") < F.col("b.id")])
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct())
+    return _bucket_pairs(sigs, _band_bucket_cols(num_perm, bands)).distinct()
 
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -341,15 +372,50 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("simhash"))
 
 
+def _hamming_pairs(sims: DataFrame, keys: list, max_hamming: int,
+                   max_bucket_size: int | None, eager: bool) -> DataFrame:
+    """The SimHash verify tail: candidate pairs sharing a bucket of
+    ``keys`` (:func:`_bucket_pairs`, carrying ``simhash``), the exact
+    hamming distance (``bit_count(xor)``, JVM-side) kept when ≤
+    ``max_hamming`` — BEFORE the distinct: the survivors are few, and
+    duplicates across buckets drop on that small set. Output:
+    [id_a, id_b, hamming].
+
+    ``eager``: the signature table is cached for the join (both sides
+    and the optional hot-bucket count read it, so an upstream UDF runs
+    once, not once per consumer), the verified pair set materialized,
+    and the cache RELEASED before returning — repeated calls in one
+    session don't accumulate pinned signature tables (the same
+    lifecycle as ``minhash_dedup_pairs``). ``eager=False`` returns the
+    fully lazy plan and does NOT persist: for plan inspection or
+    composition into a larger lazy pipeline, with the caller owning any
+    caching of ``sims``."""
+    if eager:
+        sims = sims.persist()
+    out = (_bucket_pairs(sims, keys, max_bucket_size, carry=("simhash",))
+           .withColumn("hamming", F.bit_count(
+               F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
+           .where(F.col("hamming") <= max_hamming)
+           .select("id_a", "id_b", "hamming")
+           .distinct())
+    if eager:
+        out = out.localCheckpoint(eager=True)
+        sims.unpersist()
+    return out
+
+
 def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3,
                        n_chunks: int | None = None,
                        max_bucket_size: int | None = None,
                        eager: bool = True) -> DataFrame:
     """Near-dup candidates by pigeonhole: split the 64-bit simhash into
     ``n_chunks`` (default ``max_hamming + 1``) bit ranges; hamming ≤
-    max_hamming ⇒ at least one chunk matches exactly, so one equi-join
-    per chunk finds ALL such pairs (no recall loss). Exact hamming is
-    re-checked JVM-side (``bit_count(xor)``). Output:
+    max_hamming ⇒ at least one chunk matches exactly, so pairs sharing
+    a (chunk, value) bucket are ALL such pairs (no recall loss). Each
+    row is exploded into its ``n_chunks`` chunk values and ONE
+    equi-join on (chunk, value) finds them — the Manku scheme of
+    :func:`simhash_manku_pairs` with single-block tables. Exact hamming
+    is re-checked JVM-side (``bit_count(xor)``). Output:
     [id_a, id_b, hamming].
 
     Cost/selectivity trade-off: more chunks → complete for larger
@@ -358,59 +424,24 @@ def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3,
     ``max_bucket_size`` bounds the candidate volume at extreme scale:
     a chunk value shared by B docs contributes O(B²) join rows, so one
     hot 16-bit value at 10⁹ docs is a quadratic block. With the cap,
-    chunk-i buckets larger than the cap are excluded from chunk i's
-    join (a cheap per-chunk count + broadcast anti-join). Recall
-    trade, like ``ngram_jaccard_pairs(max_gram_df=...)``: a pair is
-    lost only if EVERY chunk where it matches is hot — pairs matching
-    in any cold chunk are still found. Default off for pigeonhole
-    completeness.
+    chunk-i buckets larger than the cap are excluded from the join
+    (a cheap count + broadcast anti-join). Recall trade, like
+    ``ngram_jaccard_pairs(max_gram_df=...)``: a pair is lost only if
+    EVERY chunk where it matches is hot — pairs matching in any cold
+    chunk are still found. Default off for pigeonhole completeness.
 
-    ``eager`` (default): the signature table is cached for the joins,
-    the (small) verified pair set materialized, and the cache RELEASED
-    before returning — repeated calls don't accumulate pinned memory.
-    ``eager=False`` returns the fully lazy plan and does NOT persist:
-    for plan inspection or composition into a larger lazy pipeline,
-    with the caller owning any caching of ``sims``.
+    ``eager`` (default) caches the signature table for the join,
+    materializes the (small) verified pair set and releases the cache
+    before returning; ``eager=False`` returns the fully lazy plan and
+    persists nothing (see :func:`_hamming_pairs`).
     """
     if n_chunks is None:
         n_chunks = min(16, max_hamming + 1)
-    if eager:
-        sims = sims.persist()  # reused by both sides of n_chunks joins
     bounds = np.linspace(0, 64, n_chunks + 1).astype(int)
-    chunk_cols = []
-    for i in range(n_chunks):
-        lo, hi = int(bounds[i]), int(bounds[i + 1])
-        mask = (1 << (hi - lo)) - 1
-        chunk_cols.append(F.shiftrightunsigned(F.col("simhash"), lo)
-                          .bitwiseAND(F.lit(mask)).alias(f"c{i}"))
-    chunks = sims.select("id", "simhash", *chunk_cols)
-    pairs = None
-    for i in range(n_chunks):
-        side = chunks
-        if max_bucket_size:
-            hot = (chunks.groupBy(f"c{i}").count()
-                   .where(F.col("count") > max_bucket_size)
-                   .select(f"c{i}"))
-            side = chunks.join(F.broadcast(hot), f"c{i}", "left_anti")
-        a = side.alias("a")
-        b = side.alias("b")
-        p = (a.join(b, [F.col(f"a.c{i}") == F.col(f"b.c{i}"),
-                        F.col("a.id") < F.col("b.id")])
-             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                     F.col("a.simhash").alias("sa"), F.col("b.simhash").alias("sb")))
-        pairs = p if pairs is None else pairs.unionByName(p)
-    out = (pairs.distinct()
-           .withColumn("hamming", F.bit_count(
-               F.col("sa").bitwiseXOR(F.col("sb"))))
-           .where(F.col("hamming") <= max_hamming)
-           .select("id_a", "id_b", "hamming"))
-    if eager:
-        # the surviving pair set is small — materialize it so the cached
-        # signature table can be released now instead of pinning executor
-        # memory for the caller's session (same lifecycle as minhash_pairs)
-        out = out.localCheckpoint(eager=True)
-        sims.unpersist()
-    return out
+    chunks = [F.shiftrightunsigned(F.col("simhash"), int(lo))
+              .bitwiseAND(F.lit((1 << int(hi - lo)) - 1))
+              for lo, hi in zip(bounds[:-1], bounds[1:])]
+    return _hamming_pairs(sims, chunks, max_hamming, max_bucket_size, eager)
 
 
 def simhash_manku_pairs(sims: DataFrame, max_hamming: int = 6,
@@ -433,69 +464,30 @@ def simhash_manku_pairs(sims: DataFrame, max_hamming: int = 6,
     Execution shape (the 100-TB consideration): rather than
     C(n_blocks, n_blocks−k) separate self-joins, each row is EXPLODED
     into its C table keys — (id, tbl, key) rows — and ONE equi-join on
-    (tbl, key) produces all candidates: a single shuffle whose input
-    is C× the signature table (k=6 ⇒ 28×64-bit keys per doc, still
-    ≪ the text), never C plan-duplicated scans. ``max_bucket_size``
-    caps hot (tbl, key) buckets exactly like
+    (tbl, key) produces all candidates (:func:`_bucket_pairs`): a
+    single shuffle whose input is C× the signature table (k=6 ⇒
+    28×64-bit keys per doc, still ≪ the text), never C plan-duplicated
+    scans. ``max_bucket_size`` caps hot (tbl, key) buckets exactly like
     :func:`simhash_near_pairs`. Output: [id_a, id_b, hamming].
 
-    ``eager`` semantics as in :func:`simhash_near_pairs`: default
-    caches the signatures for the join, materializes the pair set and
-    releases the cache; ``eager=False`` = fully lazy, caller-owned
-    caching.
+    ``eager`` semantics as in :func:`simhash_near_pairs`.
     """
     from itertools import combinations
     if 64 % n_blocks:
         raise ValueError("n_blocks must divide 64")
     if not 0 < max_hamming < n_blocks:
         raise ValueError("need 0 < max_hamming < n_blocks")
-    if eager:
-        # both join sides (and the optional hot-bucket count) consume
-        # the signature subtree — persist so an upstream UDF (simhash)
-        # runs once, not once per consumer
-        sims = sims.persist()
     w = 64 // n_blocks
     m = n_blocks - max_hamming  # blocks that must match exactly
     blocks = [F.shiftrightunsigned(F.col("simhash"), i * w)
               .bitwiseAND(F.lit((1 << w) - 1)) for i in range(n_blocks)]
-    combos = list(combinations(range(n_blocks), m))
     keys = []
-    for t, combo in enumerate(combos):
+    for combo in combinations(range(n_blocks), m):
         key = F.lit(0).cast("long")
         for i in combo:
             key = F.shiftleft(key, w).bitwiseOR(blocks[i])
-        keys.append(F.struct(F.lit(t).alias("tbl"), key.alias("key")))
-    ex = (sims.select("id", "simhash",
-                      F.explode(F.array(*keys)).alias("_tk"))
-          .select("id", "simhash", "_tk.tbl", "_tk.key"))
-    if max_bucket_size:
-        hot = (ex.groupBy("tbl", "key").count()
-               .where(F.col("count") > max_bucket_size)
-               .select("tbl", "key"))
-        ex = ex.join(F.broadcast(hot), ["tbl", "key"], "left_anti")
-    a, b = ex.alias("a"), ex.alias("b")
-    out = (a.join(b, [F.col("a.tbl") == F.col("b.tbl"),
-                      F.col("a.key") == F.col("b.key"),
-                      F.col("a.id") < F.col("b.id")])
-           .select(F.col("a.id").alias("id_a"),
-                   F.col("b.id").alias("id_b"),
-                   F.col("a.simhash").alias("sa"),
-                   F.col("b.simhash").alias("sb"))
-           .withColumn("hamming", F.bit_count(
-               F.col("sa").bitwiseXOR(F.col("sb"))))
-           .where(F.col("hamming") <= max_hamming)  # before distinct:
-           # candidates surviving the radius check are few; duplicates
-           # across tables are dropped on the small verified set
-           .select("id_a", "id_b", "hamming")
-           .distinct())
-    if eager:
-        # materialize the (small) verified pair set, then release the
-        # cached signatures — repeated calls in one session must not
-        # accumulate pinned signature tables (same lifecycle as
-        # minhash_pairs / simhash_near_pairs)
-        out = out.localCheckpoint(eager=True)
-        sims.unpersist()
-    return out
+        keys.append(key)
+    return _hamming_pairs(sims, keys, max_hamming, max_bucket_size, eager)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -521,23 +513,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     only drop pairs sitting exactly at the threshold — planted-dup
     recall is tested in tests/test_pipeline_ops.py.
     """
-    words = F.split(F.lower(F.col(text_col)), " ")
-    grams = (df.select(F.col(id_col).alias("id"),
-                       *([F.col(block_col).alias("_blk")] if block_col else []),
-                       words.alias("w"))
-             .where(F.size("w") >= n)
-             .select("id", *(["_blk"] if block_col else []),
-                     F.explode(F.expr(
-                         f"transform(sequence(0, size(w)-{n}), "
-                         f"i -> concat_ws(' ', slice(w, i+1, {n})))"))
-                     .alias("gram"))
-             .distinct()
-             # three consumers (sizes + both self-join sides) and
-             # Catalyst does not dedup common subtrees: checkpoint so
-             # the corpus-scale explode+distinct (and its shuffle) runs
-             # once, not three times (same pattern as
-             # cross_doc_dup_fraction)
-             .localCheckpoint(eager=False))
+    # three consumers (sizes + both self-join sides) and Catalyst does
+    # not dedup common subtrees: checkpoint so the corpus-scale
+    # explode+distinct (and its shuffle) runs once, not three times
+    # (same pattern as cross_doc_dup_fraction)
+    grams = _word_grams(df, text_col, id_col, n,
+                        block_col=block_col).localCheckpoint(eager=False)
     sizes = grams.groupBy("id").agg(F.count("*").alias("n_grams"))
     join_grams = grams
     if max_gram_df is not None:
@@ -590,8 +571,9 @@ def embedding_dedup_pairs(emb: DataFrame, id_col: str = "vec_id",
 
     ``method='lsh'`` (the 100 TB path): random-hyperplane signature
     (one matmul per Arrow batch, :func:`similarity.hyperplane_signature`)
-    → candidate pairs from ``n_chunks`` chunk equi-joins (the SimHash
-    pigeonhole machinery — complete for signature hamming ≤ n_chunks−1,
+    → candidate pairs from ONE equi-join on (chunk, value) over the
+    ``n_chunks`` chunk values (the SimHash pigeonhole machinery,
+    :func:`_bucket_pairs` — complete for signature hamming ≤ n_chunks−1,
     which at threshold t covers expected hamming n_bits·arccos(t)/π;
     ``max_bucket_size`` bounds hot buckets) → EXACT cosine re-check on
     candidates only. Precision is exact by construction; recall < 1
@@ -605,30 +587,15 @@ def embedding_dedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                                     exact_blocks)
     if method != "lsh":
         raise ValueError(f"unknown method {method!r} (exact | lsh)")
-    # band-style single join (the minhash LSH shape, ONE shuffle of
-    # (id, band, value) rows) rather than n_chunks separate self-joins:
-    # a pair matching on any chunk is a candidate — pigeonhole-complete
-    # for signature hamming ≤ n_chunks−1
+    # one band-style join over the chunk values (_bucket_pairs): a pair
+    # matching on any chunk is a candidate — pigeonhole-complete for
+    # signature hamming ≤ n_chunks−1
     sigs = (similarity.hyperplane_signature(emb, vec_col, None, n_bits, seed)
             .select(F.col(id_col).alias("id"), "lsh_sig"))
     width = max(1, n_bits // n_chunks)
-    mask = (1 << width) - 1
-    chunk_vals = F.array(*[
-        F.shiftrightunsigned("lsh_sig", i * width).bitwiseAND(F.lit(mask))
-        for i in range(n_chunks)])
-    banded = sigs.select("id", F.posexplode(chunk_vals).alias("band", "val"))
-    if max_bucket_size:
-        hot = (banded.groupBy("band", "val").count()
-               .where(F.col("count") > max_bucket_size)
-               .select("band", "val"))
-        banded = banded.join(F.broadcast(hot), ["band", "val"], "left_anti")
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (a.join(b, [F.col("a.band") == F.col("b.band"),
-                        F.col("a.val") == F.col("b.val"),
-                        F.col("a.id") < F.col("b.id")])
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
+    chunks = [F.shiftrightunsigned("lsh_sig", i * width)
+              .bitwiseAND(F.lit((1 << width) - 1)) for i in range(n_chunks)]
+    cands = _bucket_pairs(sigs, chunks, max_bucket_size).distinct()
     unit = similarity.unit_vector_col(F.col(vec_col))
     va_side = emb.select(F.col(id_col).alias("id_a"), unit.alias("_va"))
     vb_side = emb.select(F.col(id_col).alias("id_b"), unit.alias("_vb"))
@@ -829,20 +796,24 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
 
 
 def _word_grams(df: DataFrame, text_col: str, id_col: str,
-                n: int, distinct: bool = True) -> DataFrame:
+                n: int, distinct: bool = True,
+                block_col: str | None = None) -> DataFrame:
     """[id, gram] — DISTINCT lower-cased word ``n``-grams per document
     (split on single spaces, matching the DuckDB-oracle convention used
     across this module). Pure JVM expressions: split → sequence →
     transform(slice → concat_ws) → explode; no Python in the path.
+    ``block_col`` is carried through as ``_blk`` (between id and gram).
 
     ``distinct=False`` skips the (id, gram) dedup shuffle — for callers
     that filter the exploded grams first and dedup the (far smaller)
     survivor set themselves; a row-wise gram predicate commutes with
     the dedup, so the result is identical."""
     words = F.split(F.lower(F.col(text_col)), " ")
-    out = (df.select(F.col(id_col).alias("id"), words.alias("w"))
+    out = (df.select(F.col(id_col).alias("id"),
+                     *([F.col(block_col).alias("_blk")] if block_col else []),
+                     words.alias("w"))
            .where(F.size("w") >= n)
-           .select("id",
+           .select("id", *(["_blk"] if block_col else []),
                    F.explode(F.expr(
                        f"transform(sequence(0, size(w)-{n}), "
                        f"i -> concat_ws(' ', slice(w, i+1, {n})))"))

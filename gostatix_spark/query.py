@@ -32,7 +32,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
 from gostatix_spark import hashing
 from gostatix_spark.agg import (_run_pieces, _tagged_union, _to_arrow_schema,
                                 extract_hashes, infer_element)
-from gostatix_spark.kernels import topk
+from gostatix_spark.kernels import bloom, topk
 from gostatix_spark.sketches import CMS, HLL, REGISTRY, lookup
 from gostatix_spark.state import BloomState, CMSState, TopKState
 
@@ -258,7 +258,7 @@ def bloom_cardinality(states: DataFrame,
             st = BloomState.from_bytes(b)
             # bits ≥ m are never set (positions are mod m), so a full
             # popcount of the backing words IS the fill count X
-            x = int(np.unpackbits(st.words.view(np.uint8)).sum())
+            x = bloom.bit_count(st.words)
             if x >= st.m:
                 vals.append(-1)
             else:

@@ -9,7 +9,17 @@
   bucket prefix (multi-probe over all prefix buckets), exact cosine
   re-rank within candidates. Recall < 1 by design; probes trade
   recall/cost.
-* :func:`embedding_norms` / :func:`cosine_col` — shared pieces.
+* :func:`build_lsh_index` / :func:`lsh_topk_indexed` — the same LSH
+  buckets persisted as a bucket-partitioned table, probed with static
+  partition pruning.
+* :func:`build_ivf_index` / :func:`ivf_topk` — an IVF index: a
+  spherical-k-means quantizer, the table partitioned by centroid,
+  queries probing their ``nprobe`` nearest lists.
+* :func:`cosine_col` / :func:`unit_vector_col` /
+  :func:`hyperplane_signature` — shared pieces.
+
+Every search ends in the same exact re-rank (:func:`_top_k_by_cosine`):
+cosine per (query, candidate), ranked per query, the first k.
 
 At 100 TB: brute force is a single scan per query batch (no shuffle —
 broadcast join + per-row expression), so it parallelizes perfectly but
@@ -78,14 +88,42 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     Plan shape: broadcast(queries) nested-loop join → codegen'd cosine
     → window rank per query → filter ≤ k. Output:
     [q_id, rank, vec_id, cosine]."""
-    joined = emb.crossJoin(F.broadcast(queries))
-    scored = joined.select(
+    return _top_k_by_cosine(emb.crossJoin(F.broadcast(queries)), k,
+                            id_col, vec_col, q_id_col, q_vec_col)
+
+
+def _top_k_by_cosine(cands: DataFrame, k: int, id_col: str, vec_col: str,
+                     q_id_col: str, q_vec_col: str) -> DataFrame:
+    """The exact re-rank every search path ends in: the cosine of each
+    (query, candidate) row of ``cands``, ranked per query by cosine
+    descending (ties by id), the first ``k``. Output:
+    [q_id, rank, id, cosine]."""
+    scored = cands.select(
         F.col(q_id_col), F.col(id_col),
         cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"))
     w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select(q_id_col, "rank", id_col, "cosine"))
+
+
+def _probe_index(spark, path: str, sidecar: str, part_col: str, probes,
+                 k: int, q_id_col: str, q_vec_col: str) -> DataFrame:
+    """The query step of a persisted index: read its ``sidecar``
+    parameters ``p``; ``probes(p)`` is the query batch with the
+    ``part_col`` partition each query probes (a row per probe);
+    collect the probed values over that (tiny) batch, scan only those
+    partitions (a static ``part_col IN (...)`` filter: Catalyst prunes
+    every other directory before listing files), broadcast-join the
+    queries and re-rank exactly."""
+    import json
+    with open(_local_sidecar_path(path, sidecar)) as f:
+        p = json.load(f)
+    q = probes(p).select(q_id_col, q_vec_col, part_col)
+    probed = [r[part_col] for r in q.select(part_col).distinct().collect()]
+    emb = spark.read.parquet(path).where(F.col(part_col).isin(probed))
+    return _top_k_by_cosine(emb.join(F.broadcast(q), part_col), k,
+                            p["id_col"], p["vec_col"], q_id_col, q_vec_col)
 
 
 def hyperplane_signature(df: DataFrame, vec_col: str, dim: int | None = None,
@@ -164,25 +202,14 @@ def lsh_topk_indexed(spark, path: str, queries: DataFrame, k: int = 10, *,
     O(probed buckets), not O(index). Results are identical to
     :func:`lsh_topk` with the same parameters (same seed ⇒ same
     hyperplanes ⇒ same buckets ⇒ same exact re-rank)."""
-    import json
-    with open(_local_sidecar_path(path, "_lsh_index.json")) as f:
-        p = json.load(f)
-    shift = p["n_bits"] - p["prefix_bits"]
-    q = hyperplane_signature(queries, q_vec_col, None, p["n_bits"],
-                             p["seed"]) \
-        .withColumn("bkt", F.shiftrightunsigned("lsh_sig", shift).cast("int"))
-    q = q.select(q_id_col, q_vec_col, "bkt")
-    probed = [r["bkt"] for r in q.select("bkt").distinct().collect()]
-    emb = spark.read.parquet(path).where(F.col("bkt").isin(probed))
-    cands = emb.join(F.broadcast(q), "bkt")
-    scored = cands.select(
-        F.col(q_id_col), F.col(p["id_col"]),
-        cosine_col(F.col(p["vec_col"]), F.col(q_vec_col)).alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"),
-                                             F.asc(p["id_col"]))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(q_id_col, "rank", p["id_col"], "cosine"))
+    def probes(p: dict) -> DataFrame:
+        return hyperplane_signature(
+            queries, q_vec_col, None, p["n_bits"], p["seed"]).withColumn(
+            "bkt", F.shiftrightunsigned(
+                "lsh_sig", p["n_bits"] - p["prefix_bits"]).cast("int"))
+
+    return _probe_index(spark, path, "_lsh_index.json", "bkt", probes, k,
+                        q_id_col, q_vec_col)
 
 
 def _spherical_kmeans(X: np.ndarray, k: int, iters: int = 12,
@@ -293,24 +320,13 @@ def ivf_topk(spark, path: str, queries: DataFrame, k: int = 10, *,
     :func:`brute_force_topk` exactly (every list probed); smaller
     ``nprobe`` trades recall for scan cost. Output:
     [q_id, rank, id, cosine]."""
-    import json
-    with open(_local_sidecar_path(path, "_ivf_index.json")) as f:
-        p = json.load(f)
-    C = np.asarray(p["centroids"], dtype=np.float32)
-    assign = _ivf_assign_udf(C, nprobe=min(nprobe, p["n_centroids"]))
-    q = (queries.withColumn("cid", F.explode(assign(F.col(q_vec_col))))
-         .select(q_id_col, q_vec_col, "cid"))
-    probed = [r["cid"] for r in q.select("cid").distinct().collect()]
-    emb = spark.read.parquet(path).where(F.col("cid").isin(probed))
-    cands = emb.join(F.broadcast(q), "cid")
-    scored = cands.select(
-        F.col(q_id_col), F.col(p["id_col"]),
-        cosine_col(F.col(p["vec_col"]), F.col(q_vec_col)).alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"),
-                                             F.asc(p["id_col"]))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(q_id_col, "rank", p["id_col"], "cosine"))
+    def probes(p: dict) -> DataFrame:
+        assign = _ivf_assign_udf(np.asarray(p["centroids"], dtype=np.float32),
+                                 nprobe=min(nprobe, p["n_centroids"]))
+        return queries.withColumn("cid", F.explode(assign(F.col(q_vec_col))))
+
+    return _probe_index(spark, path, "_ivf_index.json", "cid", probes, k,
+                        q_id_col, q_vec_col)
 
 
 def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10, *,
@@ -327,10 +343,4 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10, *,
     q = hyperplane_signature(queries, q_vec_col, dim, n_bits, seed) \
         .withColumn("_bkt", F.shiftrightunsigned("lsh_sig", shift))
     cands = e.join(F.broadcast(q.select(q_id_col, q_vec_col, "_bkt")), "_bkt")
-    scored = cands.select(
-        F.col(q_id_col), F.col(id_col),
-        cosine_col(F.col(vec_col), F.col(q_vec_col)).alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(q_id_col, "rank", id_col, "cosine"))
+    return _top_k_by_cosine(cands, k, id_col, vec_col, q_id_col, q_vec_col)

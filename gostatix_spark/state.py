@@ -68,43 +68,54 @@ class Layout(NamedTuple):
     lead: bytes  # GSK1 and the kind byte, or the kind's own magic
     header: type  # the header fields as a namedtuple, version first
     structs: dict  # version byte → header struct
+    # how many header fields after the version a build's parameters
+    # fix; the fields after them describe the state's input
+    params: int
     dtype: np.dtype | None = None  # a one-array payload: its elements,
     width: Callable | None = None  # and their number, from the header
 
+    @property
+    def version_at(self) -> int:
+        """The offset of the version byte: past the leading bytes and,
+        in a GSK1 frame, the u32 header length."""
+        return len(self.lead) + 4 * self.lead.startswith(MAGIC)
 
-def _layout(lead: bytes, fields: str, *formats: str, dtype=None,
-            width=None) -> Layout:
+
+def _layout(lead: bytes, fields: str, *formats: str, params: int,
+            dtype=None, width=None) -> Layout:
     """Versions 1, 2, … with the header fields ``formats`` after the
-    version byte; a field that a version lacks reads 0."""
+    version byte, the first ``params`` of them build parameters; a
+    field that a version lacks reads 0."""
     names = ["version", *fields.split()]
     header = namedtuple("Header", names,
                         defaults=[0] * (len(names) - 1 - len(formats[0])))
     return Layout(lead, header, {v: struct.Struct("<B" + f)
                                  for v, f in enumerate(formats, 1)},
-                  dtype and np.dtype(dtype), width)
+                  params, dtype and np.dtype(dtype), width)
 
 
 FRAMES = {
-    "bloom": _layout(MAGIC + b"\x01", "m k n_items", "QQQ", dtype="<u8",
-                     width=lambda h: (h.m + 63) // 64),
+    "bloom": _layout(MAGIC + b"\x01", "m k n_items", "QQQ", params=2,
+                     dtype="<u8", width=lambda h: (h.m + 63) // 64),
     # version 2 (sparse): u32 indices, then u8 values, of the non-zero
     # registers, in ascending index order
-    "hll": _layout(MAGIC + b"\x02", "m n_items", "QQ", "QQ", dtype="u1",
-                   width=lambda h: h.m),
-    "cms": _layout(MAGIC + b"\x03", "d w all_sum", "QQQ", dtype="<u8",
-                   width=lambda h: h.d * h.w),
+    "hll": _layout(MAGIC + b"\x02", "m n_items", "QQ", "QQ", params=1,
+                   dtype="u1", width=lambda h: h.m),
+    "cms": _layout(MAGIC + b"\x03", "d w all_sum", "QQQ", params=2,
+                   dtype="<u8", width=lambda h: h.d * h.w),
     # a CMS frame of cms_len bytes, then n_cand × (_CANDIDATE, element)
     "topk": _layout(MAGIC + b"\x04",
                     "k error_rate accuracy cms_len n_cand capped",
-                    "QddII", "QddIIB"),
+                    "QddII", "QddIIB", params=3),
     "cuckoo": _layout(MAGIC + b"\x05",
                       "size bucket_size fp_len retries length", "QQQQQ",
-                      dtype="<u8", width=lambda h: h.size * h.bucket_size),
+                      params=4, dtype="<u8",
+                      width=lambda h: h.size * h.bucket_size),
     # n means, then n weights
-    "tdigest": _layout(b"GSKQ", "delta n_items n", "dQI", dtype="<f8",
-                       width=lambda h: 2 * h.n),
+    "tdigest": _layout(b"GSKQ", "delta n_items n", "dQI", params=1,
+                       dtype="<f8", width=lambda h: 2 * h.n),
     # n_levels × (u32 length, that many f64 items)
-    "kll": _layout(b"GSKL", "k n seed n_levels", "IQqI"),
+    "kll": _layout(b"GSKL", "k n seed n_levels", "IQqI", params=1),
 }
 _CANDIDATE = struct.Struct("<IQ")  # a Top-K element's length and count
 _BE_U64 = struct.Struct(">Q")  # the reference streams' length and count
@@ -182,7 +193,7 @@ def read_frame(buf, kind: str | None = None) -> tuple[tuple, Payload]:
         raise SketchFormatError(f"expected a {kind} frame, found {found}")
     lay = FRAMES[found]
     sized = lay.lead.startswith(MAGIC)  # GSK1: the header length follows
-    pos = len(lay.lead) + 4 * sized
+    pos = lay.version_at
     # a frame that ends before its version byte is short of version 1's
     st = lay.structs.get(buf[pos] if len(buf) > pos else 1)
     if st is None:
@@ -285,7 +296,7 @@ def _batch_layout(kind: str) -> tuple[np.dtype, np.ndarray]:
     fields after the version are all u64 (HLL, CMS, Bloom): its leading
     bytes and header length, the version, the parameters and the count
     (the last field); and the 9 bytes every such frame starts with."""
-    n = len(FRAMES[kind].header._fields) - 2
+    n = FRAMES[kind].params
     dt = np.dtype([("lead", "u1", (9,)), ("version", "u1"),
                    ("params", "<u8", (n,)), ("count", "<u8")])
     return dt, np.frombuffer(frame(kind, 1, *[0] * (n + 1))[:9], np.uint8)

@@ -174,17 +174,39 @@ def test_hll_intersect_explicit_pairs_no_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" in plan_default
 
 
-def test_simhash_manku_single_join(spark):
-    """The Manku scheme must be ONE self-join over exploded table keys,
-    not C(8,2)=28 unioned plan-duplicated joins: exactly one join node
-    and no Union in the physical plan."""
+def _near_dup_plan(spark, family: str):
+    """The lazy plan of one near-dup family over a small input."""
     from gostatix_spark import dedup
     sims = spark.createDataFrame(
         [(i, i * 2654435761 % (1 << 63)) for i in range(50)],
         "id long, simhash long")
-    plan = _plan(dedup.simhash_manku_pairs(sims, max_hamming=6,
-                                           eager=False))
+    if family == "simhash_manku":
+        return dedup.simhash_manku_pairs(sims, max_hamming=6, eager=False)
+    if family == "simhash_near":
+        return dedup.simhash_near_pairs(sims, max_hamming=3, eager=False)
+    if family == "minhash_lsh":
+        sigs = spark.createDataFrame(
+            [(i, [i * j % 97 for j in range(8)]) for i in range(50)],
+            "id long, sig array<long>")
+        return dedup.lsh_candidate_pairs(sigs, bands=4, num_perm=8)
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(50)],
+        "vec_id long, embedding array<float>")
+    return dedup.embedding_dedup_pairs(emb, method="lsh")
+
+
+@pytest.mark.parametrize("family", ["simhash_manku", "simhash_near",
+                                    "minhash_lsh", "embedding_lsh"])
+def test_simhash_manku_single_join(spark, family):
+    """Every near-dup family's candidate step must be ONE self-join over
+    rows exploded into their (band, key) buckets, not one join per
+    band, chunk or table unioned (the Manku scheme at k=6 would be
+    C(8,2)=28 plan-duplicated joins): exactly one candidate join node
+    and no Union in the physical plan."""
+    plan = _plan(_near_dup_plan(spark, family))
     assert "Union" not in plan, plan
-    n_joins = sum(plan.count(j) for j in
-                  ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
-    assert n_joins == 1, plan
+    joins = sum(plan.count(j) for j in
+                ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
+    # embedding_dedup_pairs adds two joins after its candidate join: the
+    # unit vectors of each side, for the exact cosine check
+    assert joins == (3 if family == "embedding_lsh" else 1), plan

@@ -17,20 +17,24 @@ every per-kind step is a lookup into the registry in ``sketches.py``.
   ``partition_id``), and one ``mapInArrow`` call per shuffle partition
   folds each run of equal keys with the sketch's merge law (max for
   HLL, add for CMS, OR for Bloom; proven associative/commutative in
-  tests). HLL, CMS and Bloom runs merge a whole Arrow batch at a time,
-  straight from the serialized partials (``sketches.merge_runs``: no
-  per-partial decode, a few elementwise passes over the batch); Top-K,
-  t-digest and KLL runs decode and fold run by run. A run's merged
-  state carries across Arrow batches until the key changes, so a call
-  costs one batch plus one open state whatever its key count, and
-  order-sensitive merges (t-digest, KLL, Top-K) always fold in
-  partition order. For very wide fan-in, ``tree_fanout``
-  first merges per (key, ``partition_id % tree_fanout``). The tree
-  shape changes the fold order: HLL, CMS and Bloom (elementwise max,
-  add, OR) still give the flat merge's bytes; Top-K gives the same
-  candidate counts and CMS, its candidates perhaps in another order;
-  t-digest and KLL (whose compaction coin follows a counter the frame
-  does not store) give other bytes within the same rank error.
+  tests). ``sketches.merge_runs`` merges every run of an Arrow batch:
+  HLL, CMS and Bloom runs straight from the serialized partials (no
+  per-partial decode, a few elementwise passes over the batch), Top-K,
+  t-digest and KLL runs decoded and folded run by run. The last run
+  stays open and carries into the next batch until the key changes, so
+  a call costs one batch plus one open state whatever its key count,
+  and order-sensitive merges (t-digest, KLL, Top-K) always fold in
+  partition order. For very wide fan-in,
+  ``tree_fanout`` first merges per (key, ``partition_id %
+  tree_fanout``). The tree shape changes the fold order: HLL, CMS and
+  Bloom (elementwise max, add, OR) still give the flat merge's bytes;
+  Top-K gives the same candidate counts and CMS, its candidates perhaps
+  in another order; t-digest and KLL (whose compaction coin follows a
+  counter the frame does not store) give other bytes within the same
+  rank error. Phase 1 is not batch-invariant for those two either: each
+  Arrow batch compresses (t-digest) or compacts (KLL) on its own, so
+  their partials, and the merged bytes, depend on
+  ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`. It runs on the
@@ -483,13 +487,11 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
     partitioned by ``group_cols``, sorted within each shuffle partition
     by ``run_cols`` and then by ``partition_id`` (or ``_salt``) where
     present, and streamed through one ``mapInArrow`` call per shuffle
-    partition. The HLL, CMS and Bloom runs of a batch merge together,
-    straight from its state column (``sketches.merge_runs``); Top-K,
-    t-digest and KLL runs fold through the registry in that order. A
-    run's open state carries across Arrow batches until the key
-    changes. ``dedup`` drops a row whose run and ``partition_id`` equal
-    the previous row's. ``n_items`` adds up; ``n_partials`` adds up the
-    incoming ``n_partials``, or counts rows when there are none."""
+    partition, whose fold cuts each batch into runs, drops a row whose
+    run and ``partition_id`` equal the previous row's (``dedup``), adds
+    up ``n_items`` and ``n_partials`` (or counts rows when there are
+    none) and carries the open run that ``sketches.merge_runs``, which
+    merges every run, returns until the key changes."""
     schema = StructType([partials.schema[c] for c in run_cols] + [
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
@@ -500,9 +502,13 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
     order = [c for c in ("partition_id", "_salt")
              if c in partials.columns and c not in run_cols][:1]
 
+    def closed(run: list) -> pa.RecordBatch:
+        """The open run as one output row."""
+        return _runs_batch([[k] for k in run[0]], [sketches.close(run[1])],
+                           [run[2]], [run[3]], arrow_schema)
+
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # open run: [key, sketch entry, state, n_items, n_partials]; an
-        # HLL/CMS/Bloom run has no entry and holds its merged frame
+        # open run: [key, sketches.merge_runs' open run, n_items, n_in]
         run = None
         last_pid = None
         for batch in batches:
@@ -521,79 +527,36 @@ def _merge_runs(partials: DataFrame, run_cols: list[str],
                 if batch.num_rows == 0:
                     continue
             if new[0] and run is not None:
-                yield _runs_batch([[k] for k in run[0]], [_encoded(run)],
-                                  [run[3]], [run[4]], arrow_schema)
+                yield closed(run)
                 run = None
-            # segments: row 0 and each run start open one
+            # runs: row 0 and each run start open one
             ends = np.append(np.flatnonzero(new[1:]) + 1, batch.num_rows)
             starts = np.insert(ends[:-1], 0, 0)
             n_items = np.add.reduceat(batch.column("n_items").to_numpy(),
                                       starts)
             n_in = (np.add.reduceat(batch.column(fan_in).to_numpy(), starts)
                     if fan_in else ends - starts)
-            if run is not None:  # segment 0 continues the open run
-                n_items[0] += run[3]
-                n_in[0] += run[4]
-            closed, tail = _merge_segments(batch.column("state"), starts,
-                                           ends, run and run[1:3])
+            if run is not None:  # run 0 continues the open run
+                n_items[0] += run[2]
+                n_in[0] += run[3]
+            frames, tail = sketches.merge_runs(batch.column("state"), starts,
+                                               run and run[1])
             if len(starts) > 1:
                 yield _runs_batch(
                     [batch.column(c).take(pa.array(starts[:-1]))
                      for c in run_cols],
-                    closed, n_items[:-1], n_in[:-1], arrow_schema)
+                    frames, n_items[:-1], n_in[:-1], arrow_schema)
             run = [tuple(batch.column(c)[int(starts[-1])].as_py()
                          for c in run_cols),
-                   *tail, int(n_items[-1]), int(n_in[-1])]
+                   tail, int(n_items[-1]), int(n_in[-1])]
         if run is not None:
-            yield _runs_batch([[k] for k in run[0]], [_encoded(run)],
-                              [run[3]], [run[4]], arrow_schema)
+            yield closed(run)
 
     parts = (partials.repartition(*group_cols) if group_cols
              else partials.repartition(1))
     if run_cols + order:
         parts = parts.sortWithinPartitions(*run_cols, *order)
     return parts.mapInArrow(fold, schema)
-
-
-def _merge_segments(col: pa.Array, starts: np.ndarray, ends: np.ndarray,
-                    carry: list | None) -> tuple[pa.Array, list]:
-    """Merge each segment ``[starts[i], ends[i])`` of a batch's state
-    column, segment 0 after ``carry`` (the open run's ``[sketch entry,
-    state]``) when given. HLL, CMS and Bloom segments merge at once
-    through ``sketches.merge_runs``; the others fold one by one through
-    the registry. Returns the frames of every segment but the last, in
-    order, and ``[sketch entry, state]`` of the last (no entry: a
-    frame)."""
-    frames, merged = sketches.merge_runs(col, starts)
-    if carry and merged.size and merged[0] == 0:
-        frames = pa.concat_arrays([pa.array([sketches.merge(
-            [carry[1], frames[0].as_py()])], pa.binary()), frames.slice(1)])
-    last = len(starts) - 1
-    pos = np.empty(len(starts), np.int64)
-    pos[merged] = np.arange(merged.size)
-    if merged.size and merged[-1] == last:
-        tail = [None, frames[int(pos[last])].as_py()]
-    encoded = []
-    for g in np.setdiff1d(np.arange(len(starts)), merged).tolist():
-        blobs = col.slice(starts[g], ends[g] - starts[g]).to_pylist()
-        sk = sketches.lookup(blobs[0])
-        states = [sk.decode(b) for b in blobs]
-        if g == 0 and carry:
-            states.insert(0, carry[1])
-        st = sk.merge(states)
-        if g == last:
-            tail = [sk, st]
-        else:
-            pos[g] = merged.size + len(encoded)
-            encoded.append(sk.encode(st))
-    if encoded:
-        frames = pa.concat_arrays([frames, pa.array(encoded, pa.binary())])
-    return frames.take(pa.array(pos[:-1])), tail
-
-
-def _encoded(run: list) -> bytes:
-    """An open run's merged state as a frame."""
-    return run[2] if run[1] is None else run[1].encode(run[2])
 
 
 def _runs_batch(keys: list, states, n_items, n_partials,

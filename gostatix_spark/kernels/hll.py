@@ -81,7 +81,7 @@ class KeyedHLL:
         self.m = m
         self.slots: dict = {}
         self.mat = np.zeros((0, m), dtype=np.uint8)
-        self.n_items: dict = {}
+        self.counts = np.zeros(0, np.int64)  # items folded per slot
 
     def _slot(self, key) -> int:
         s = self.slots.get(key)
@@ -92,6 +92,7 @@ class KeyedHLL:
                 grow = max(64, len(self.mat))
                 self.mat = np.vstack(
                     [self.mat, np.zeros((grow, self.m), np.uint8)])
+                self.counts = np.append(self.counts, np.zeros(grow, np.int64))
         return s
 
     def update(self, keys_unique, codes: np.ndarray, h1: np.ndarray) -> None:
@@ -104,16 +105,18 @@ class KeyedHLL:
         for s in range(0, len(h1), _CHUNK):
             e = s + _CHUNK
             np.maximum.at(flat, slots[s:e] * self.m + idx[s:e], rank[s:e])
-        uniq, cnt = np.unique(slots, return_counts=True)
-        inv_slot = {v: k for k, v in self.slots.items()}
-        for u, c in zip(uniq.tolist(), cnt.tolist()):
-            k = inv_slot[u]
-            self.n_items[k] = self.n_items.get(k, 0) + c
+        self.counts += np.bincount(slots, minlength=len(self.mat))
+
+    @property
+    def n_items(self) -> dict:
+        """Items folded per key, for the keys that folded any."""
+        return {k: int(self.counts[s]) for k, s in self.slots.items()
+                if self.counts[s]}
 
     def states(self):
         """Yields (key, registers_copy, n_items)."""
         for k, s in self.slots.items():
-            yield k, self.mat[s].copy(), self.n_items.get(k, 0)
+            yield k, self.mat[s].copy(), int(self.counts[s])
 
 
 def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:

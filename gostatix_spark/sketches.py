@@ -9,15 +9,16 @@ Each kind is one :class:`Sketch` subclass:
 * ``decode`` reads a serialized state, ``merge`` folds decoded states
   left to right with the kind's merge law into a decoded state, and
   ``encode`` serializes one;
-* HLL, CMS and Bloom (:class:`ArrayMerge`: one fixed-width array merged
-  elementwise by max, add or OR) merge serialized partials instead,
-  a whole Arrow batch at a time (:func:`merge_runs`): the frames are
-  read straight from the batch's binary buffers (``state.read_frames``,
-  which validates every one), sparse HLL frames scatter their (index,
-  value) pairs, dense frames are copied once as (rows × width) rows
-  and each run's rows fold in ⌈log₂ run length⌉ elementwise passes
-  (:func:`_fold_runs`). Top-K, t-digest and KLL keep the
-  decode-and-fold ``merge``; :func:`merge` serves both;
+* :func:`merge_runs` merges every run of an Arrow batch of serialized
+  states, after the open run it returned for the previous batch. HLL,
+  CMS and Bloom (:class:`ArrayMerge`: one fixed-width array merged
+  elementwise by max, add or OR) merge a whole kind at a time: the
+  frames are read straight from the batch's binary buffers
+  (``state.read_frames``, which validates every one), sparse HLL frames
+  scatter their (index, value) pairs, dense frames are copied once as
+  (rows × width) rows and each run's rows fold in ⌈log₂ run length⌉
+  elementwise passes (:func:`_fold_runs`). Top-K, t-digest and KLL runs
+  decode and fold through ``merge``; :func:`merge` is one run;
 * ``info`` reports a decoded state's parameters, fill and accuracy
   (``query.sketch_info``);
 * ``algo`` names the hash an element is folded or probed under, and
@@ -482,53 +483,64 @@ def decode(blob):
 _ARRAY_KINDS = [s for s in REGISTRY.values() if issubclass(s, ArrayMerge)]
 
 
-def _merged_frames(sk: type[ArrayMerge], data, lo, hi, starts, rows):
-    """One dense merged frame per run, as ``(runs, bytes, offsets)`` per
-    parameter set of the runs."""
-    for runs, p, payload, count in sk.reduce_runs(data, lo, hi, starts, rows):
-        yield (runs, *write_frames(sk.kind, p, count, payload))
-
-
-def merge_runs(states, starts: np.ndarray):
-    """Merge every run of HLL, CMS or Bloom partials in a batch's state
-    column (an Arrow binary array; run i is rows ``[starts[i],
-    starts[i+1])``), a whole kind at a time. A run's kind is its first
-    frame's. Returns ``(frames, runs)``: one merged frame per such run
-    as an Arrow binary array, and those runs' indices, ascending. The
-    other runs (Top-K, t-digest, KLL) are left to a per-run fold."""
+def merge_runs(states, starts: np.ndarray, carry: list | None = None):
+    """Merge every run of a batch's state column (an Arrow binary array;
+    run i is rows ``[starts[i], starts[i+1])``; its kind is its first
+    frame's), run 0 after ``carry``, the open run this returned for the
+    previous batch. Returns the merged frames of every run but the
+    last, in order, as an Arrow binary array, and the last run's open
+    ``[sketch entry, state]``: a frame with no entry for HLL, CMS and
+    Bloom, a decoded state for the others (KLL's compaction counter is
+    not in its frame)."""
     import pyarrow as pa
     data, off = binary_buffers(states)
     ends = np.append(starts[1:], len(states))
     first = lead_kinds(data, off[starts], off[starts + 1])
-    parts = []
+    # the merged runs' indices and frames, one part per kind and set
+    runs, frames = [np.zeros(0, np.int64)], [pa.array([], pa.binary())]
     for sk in _ARRAY_KINDS:
-        runs = np.flatnonzero(first == sk.kind)
-        if not runs.size:
-            continue
-        lens = ends[runs] - starts[runs]
+        idx = np.flatnonzero(first == sk.kind)
+        lens = ends[idx] - starts[idx]
         local = np.cumsum(lens) - lens
-        rows = np.arange(lens.sum()) + np.repeat(starts[runs] - local, lens)
-        for sub, buf, offs in _merged_frames(sk, data, off[rows],
-                                             off[rows + 1], local, rows):
-            parts.append((runs[sub], binary_array(buf, offs)))
-    if not parts:
-        return pa.array([], pa.binary()), np.zeros(0, np.int64)
-    runs = np.concatenate([r for r, _ in parts])
-    order = np.argsort(runs)
-    return (pa.concat_arrays([a for _, a in parts]).take(pa.array(order)),
-            runs[order])
+        rows = np.arange(lens.sum()) + np.repeat(starts[idx] - local, lens)
+        for sub, p, payload, count in sk.reduce_runs(
+                data, off[rows], off[rows + 1], local, rows):
+            runs.append(idx[sub])
+            frames.append(binary_array(*write_frames(sk.kind, p, count,
+                                                     payload)))
+    last, tail, encoded = len(starts) - 1, None, []
+    folded = np.setdiff1d(np.arange(len(starts)), np.concatenate(runs))
+    for g in folded.tolist():
+        blobs = states.slice(starts[g], ends[g] - starts[g]).to_pylist()
+        sk = lookup(blobs[0])
+        sts = [sk.decode(b) for b in blobs]
+        if g == 0 and carry:
+            sts.insert(0, carry[1])
+        st = sk.merge(sts)
+        if g == last:
+            tail = [sk, st]
+        else:
+            encoded.append(sk.encode(st))
+    runs.append(folded[:len(encoded)])  # all but an open last run
+    frames.append(pa.array(encoded, pa.binary()))
+    merged = pa.concat_arrays(frames).take(
+        pa.array(np.argsort(np.concatenate(runs))))
+    if carry and carry[0] is None:  # a carried frame: merged into run 0's
+        merged = pa.concat_arrays([pa.array(
+            [merge([carry[1], merged[0].as_py()])], pa.binary()),
+            merged.slice(1)])
+    return merged.slice(0, last), tail or [None, merged[last].as_py()]
+
+
+def close(run: list) -> bytes:
+    """An open run of :func:`merge_runs` as its merged frame."""
+    sk, st = run
+    return st if sk is None else sk.encode(st)
 
 
 def merge(blobs) -> bytes:
-    """Fold serialized states of one kind with its merge law, in order."""
-    blobs = [bytes(b) for b in blobs]
-    sk = lookup(blobs[0])
-    if issubclass(sk, ArrayMerge):
-        lens = np.array([len(b) for b in blobs], np.int64)
-        off = np.concatenate(([0], np.cumsum(lens)))
-        data = np.frombuffer(b"".join(blobs), np.uint8)
-        (_, buf, _), = _merged_frames(sk, data, off[:-1], off[1:],
-                                      np.zeros(1, np.int64),
-                                      np.arange(len(blobs)))
-        return buf.tobytes()
-    return sk.encode(sk.merge([sk.decode(b) for b in blobs]))
+    """Fold serialized states of one kind with its merge law, in order:
+    :func:`merge_runs` over one run."""
+    import pyarrow as pa
+    return close(merge_runs(pa.array([bytes(b) for b in blobs], pa.binary()),
+                            np.zeros(1, np.int64))[1])

@@ -1,9 +1,12 @@
-"""The batch merge of HLL, CMS and Bloom partials (``sketches.merge_runs``)
-against the per-partial reference: decode every partial, fold the kernel
-merge left to right, encode. States, ``n_items`` and ``n_partials`` must
-match byte for byte, whatever the frame versions, register counts, batch
-cuts and neighbouring kinds. Corrupt frames must raise ``ValueError``
-naming the row, and ``hll_estimate`` must equal ``hll.count`` per state."""
+"""The one phase-2 merge (``sketches.merge_runs``) against the
+per-partial reference: decode every partial, fold the kernel merge (HLL,
+CMS, Bloom) or the registry merge (Top-K, t-digest, KLL) left to right,
+encode. Every run of a batch merges there, whatever its kind, and the
+open last run carries into the next batch, so states, ``n_items`` and
+``n_partials`` must match byte for byte whatever the frame versions,
+register counts, batch cuts and neighbouring kinds. Corrupt frames must
+raise ``ValueError`` naming the row, and ``hll_estimate`` must equal
+``hll.count`` per state."""
 
 import glob
 import tempfile
@@ -128,8 +131,10 @@ def test_count_runs_equals_count_of_merged_registers(lc):
 
 def test_merge_runs_between_other_kinds():
     """Array-merge runs of several kinds and sizes sit between Top-K,
-    t-digest and KLL runs; each gets its reference frame, and the other
-    runs are left out."""
+    t-digest and KLL runs; every run gets its reference frame, the last
+    one through its open ``[entry, state]``. A batch cut inside a run
+    and resumed through ``carry`` gives the uncut frame, whatever the
+    kind."""
     rng = np.random.default_rng(3)
 
     def tdigest_blob():
@@ -160,18 +165,25 @@ def test_merge_runs_between_other_kinds():
         lambda: _hll(rng, 4096, int(rng.integers(0, 900))).to_bytes(
             sparse=bool(rng.integers(2))),
     ]
-    blobs, starts, want = [], [], {}
+    blobs, starts, want = [], [], []
     for run in range(21):
         make = makers[run % len(makers)]
         starts.append(len(blobs))
-        blobs += [make() for _ in range(int(rng.integers(1, 6)))]
-        if sketches.lookup(blobs[-1]).kind in KERNEL_MERGE:
-            want[run] = reference_merge(blobs[starts[-1]:])
-    frames, runs = sketches.merge_runs(pa.array(blobs, pa.binary()),
+        blobs += [make() for _ in range(int(rng.integers(2, 6)))]
+        want.append(reference_merge(blobs[starts[-1]:]))
+    frames, last = sketches.merge_runs(pa.array(blobs, pa.binary()),
                                        np.array(starts))
-    assert runs.tolist() == sorted(want)
-    assert {r: frames[i].as_py() for i, r in enumerate(runs.tolist())} == want
-
+    assert frames.to_pylist() + [sketches.close(last)] == want
+    for run, lo in enumerate(starts[:len(makers)]):
+        hi = starts[run + 1]
+        for cut in range(lo + 1, hi):
+            _, head = sketches.merge_runs(
+                pa.array(blobs[lo:cut], pa.binary()), np.zeros(1, np.int64))
+            frames, last = sketches.merge_runs(
+                pa.array(blobs[cut:hi + 2], pa.binary()),
+                np.array([0, hi - cut]), head)
+            assert frames.to_pylist() == [want[run]]
+            assert sketches.close(last) == reference_merge(blobs[hi:hi + 2])
 
 
 def test_merged_frames_past_int32_offsets_raise(monkeypatch):
@@ -182,10 +194,12 @@ def test_merged_frames_past_int32_offsets_raise(monkeypatch):
     rng = np.random.default_rng(4)
     blobs = pa.array([_hll(rng, 256, 20).to_bytes() for _ in range(4)],
                      pa.binary())
-    assert len(sketches.merge_runs(blobs, np.arange(4))[0]) == 4
+    frames, last = sketches.merge_runs(blobs, np.arange(4))
+    assert len(frames) == 3 and last[0] is None  # and one open frame
     monkeypatch.setattr(state, "_MAX_BINARY", 1000)
     with pytest.raises(ValueError, match="exceed one Arrow binary array"):
         sketches.merge_runs(blobs, np.arange(4))
+
 
 def test_saturated_hll_reads_minus_one(spark):
     """A raw estimate at or past 2³² is outside the large-range
@@ -396,6 +410,37 @@ def test_resume_after_small_snapshot_id_matches_direct_build(spark, skewed):
         assert len(files) > 1
         assert {str(pq.read_schema(f).field("snapshot_id").type)
                 for f in files} == {"int64"}
+
+
+@pytest.mark.parametrize("kind,p", [("tdigest", {"delta": 100.0}),
+                                    ("kll", {"k": 64}), ("topk", {"k": 5}),
+                                    ("hll", {"m": 256})])
+def test_open_run_carries_across_batch_cuts(spark, skewed, kind, p):
+    """Phase 2 does not depend on where the Arrow batches cut the runs:
+    partials built once merge, keyed and keyless, to the same bytes at
+    the session's batch rows and at 3 and 2 rows per batch. t-digest and
+    KLL carry their open run as a decoded state; Top-K and HLL are
+    controls. The partials are built once and cached because t-digest
+    and KLL *phase-1* partials do depend on the batch size (each batch
+    compresses or compacts on its own), so a build rerun at another
+    batch size, as in ``test_merge_stream.py``'s
+    ``test_runs_across_batch_boundaries``, changes them before phase 2
+    runs."""
+    for key_col in ("key", None):
+        cols = [key_col] if key_col else []
+        partials = _build_partials(skewed, [_sketch_job(
+            skewed, kind, "v", key_col, None, p)]).cache()
+        partials.count()
+        old, got = spark.conf.get(BATCH), []
+        try:
+            for rows in (old, "3", "2"):
+                spark.conf.set(BATCH, rows)
+                got.append(merged_rows(_merge_partials(partials, cols), cols))
+        finally:
+            spark.conf.set(BATCH, old)
+        partials.unpersist()
+        assert max(n for _, _, n in got[0].values()) == 8  # runs span batches
+        assert got[0] == got[1] == got[2], key_col
 
 
 def test_multi_sketch_partition_mixes_kinds(spark, skewed, tiny_batches):

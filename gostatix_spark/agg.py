@@ -1,8 +1,9 @@
 """Two-phase distributed sketch aggregation — the heart of the library.
 
 Topology (SURVEY.md §3, §4.2). One engine serves :func:`sketch_agg`,
-:func:`multi_sketch_agg`, checkpointed builds and the streaming sink;
-every per-kind step is a lookup into the registry in ``sketches.py``.
+:func:`multi_sketch_agg`, :func:`bloom_build_sharded` (keyed by shard),
+checkpointed builds and the streaming sink; every per-kind step is a
+lookup into the registry in ``sketches.py``.
 
 * **Phase 1 (partial)** — ``DataFrame.mapInArrow``: each input partition
   streams through as Arrow record batches; each batch is folded into
@@ -52,9 +53,10 @@ Element extraction is Arrow-native: list columns are flattened via
 offset arithmetic (zero-copy), strings/binaries hashed through
 length-grouped fixed-width matrices, and ``token_array`` rows become
 one binary array of their encodings. No per-row Python anywhere.
-Integer elements (``tokens``/``int32``) feeding HLL, CMS, Bloom or
-Top-K are reduced per batch to distinct (key, value) pairs with counts
-first, so hashing and folding cost O(distinct), not O(elements).
+Integer elements (``tokens``/``int32``) feeding HLL, CMS, Bloom (sharded
+Bloom too) or Top-K are reduced per batch to distinct (key, value) pairs
+with counts first, so hashing and folding cost O(distinct), not
+O(elements).
 """
 
 from __future__ import annotations
@@ -71,11 +73,10 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from gostatix_spark import hashing, params, sketches
-from gostatix_spark.kernels import bloom, cuckoo, hll, topk
+from gostatix_spark.kernels import cuckoo, hll, topk
 from gostatix_spark.sketches import Sketch as _Spec
 from gostatix_spark.sketches import merge as merge_sketch_states
-from gostatix_spark.state import (BloomState, CuckooState, binary_array,
-                                  binary_buffers)
+from gostatix_spark.state import CuckooState, binary_array, binary_buffers
 
 __all__ = ["sketch_agg", "multi_sketch_agg", "cuckoo_build",
            "cuckoo_apply_removals", "bloom_build_sharded",
@@ -193,24 +194,28 @@ def infer_element(df: DataFrame, value_col: str, element: str | None) -> str:
 
 class _Job(NamedTuple):
     """One sketch to build. ``name`` is None for :func:`sketch_agg`'s
-    single job, whose partials keep the typed key column."""
+    single job, whose partials keep the typed key column. A job with
+    ``n_shards`` (only :func:`bloom_build_sharded`'s) is keyed by shard:
+    its keys are ``range(n_shards)`` and each element's key is
+    ``hashing.shard_of(h1, n_shards)``."""
 
     name: str | None
     spec: _Spec
     value_col: str
     key_col: str | None
     weight_col: str | None = None
+    n_shards: int = 0
 
 
 def _sketch_job(df: DataFrame, kind: str, value_col: str, key_col: str | None,
                 element: str | None, params: dict, name: str | None = None,
-                weight_col: str | None = None) -> _Job:
+                weight_col: str | None = None, n_shards: int = 0) -> _Job:
     spec = _Spec.make(kind, **params)
     spec.element = infer_element(df, value_col, element)
     if spec.element not in spec.element_kinds:
         raise ValueError(f"{kind} sketches cannot fold {spec.element!r}"
                          f" elements (column {value_col!r})")
-    return _Job(name, spec, value_col, key_col, weight_col)
+    return _Job(name, spec, value_col, key_col, weight_col, n_shards)
 
 
 class _Batch:
@@ -318,19 +323,25 @@ def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
                 keyed: hll.KeyedHLL | None) -> None:
     """Fold one batch into job ``i``'s per-key accumulators
     ``accs[(i, key)]`` and add each key's input rows to ``rows[(i,
-    key)]``; rows with a null key are dropped. The batch picks the path:
+    key)]``; rows with a null key are dropped, and every shard of a
+    sharded job counts all of the batch's rows. The batch picks the
+    path:
 
     * the distinct-first fold, when the job folds counts (see
       :meth:`Sketch.folds_distinct`) and the batch's (key, value) grid
       is dense;
     * else ``keyed``, the job's :class:`kernels.hll.KeyedHLL` when it is
       a keyed HLL: one vectorized update for all keys;
-    * else per element, one update per key.
+    * else per element.
 
+    Both the distinct-first and the per-element path end in one update
+    per key; a sharded job groups either path's hashes by shard.
     Null elements are skipped after their rows are counted; a key whose
     elements are all null still gets a state, an empty one."""
     spec, vcol, kcol = job.spec, job.value_col, job.key_col
-    if kcol is None:
+    if job.n_shards:
+        keys, row_counts = range(job.n_shards), [b.num_rows] * job.n_shards
+    elif kcol is None:
         keys, row_counts = [None], [b.num_rows]
     else:
         _, keys, row_counts = b.keys(kcol)
@@ -342,43 +353,46 @@ def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
         b = b.valid(vcol)
         if not b.num_rows:
             return
-        keys = [None] if kcol is None else b.keys(kcol)[1]
+        if kcol is not None:
+            keys = b.keys(kcol)[1]
     dist = None
     if job.weight_col is None and spec.folds_distinct():
         dist = b.distinct(kcol, vcol, spec.element, spec.algo)
     if dist is not None:
-        bounds, vals, counts, h1, h2 = dist
-        for g, key in enumerate(keys):
-            s = slice(bounds[g], bounds[g + 1])
-            spec.update(accs.setdefault((i, key), spec.init()), h1[s], h2[s],
-                        vals[s], counts[s])
-        return
-    if spec.needs_elements:
-        # Top-K counts exact values and t-digest/KLL take raw values:
-        # nothing is hashed here
-        h1 = h2 = None
-        elems = b.elements(vcol, spec.element)
-        rowmap = b.rowmap(vcol) if spec.element == "tokens" else None
+        bounds, elems, welems, h1, h2 = dist  # counts weigh the values
+        sels = [slice(lo, hi) for lo, hi in zip(bounds[:-1], bounds[1:])]
     else:
-        h1, h2, rowmap = b.hashes(vcol, spec.element, spec.algo)
-        elems = None
-    if keyed is not None:
-        codes = b.keys(kcol)[0]
-        ecodes = codes if rowmap is None else codes[rowmap]
-        keep = ecodes >= 0
-        keyed.update(keys, ecodes[keep], h1[keep])
-        return
-    welems = None
-    if job.weight_col is not None:
-        wvals = b.batch.column(job.weight_col) \
-            .to_numpy(zero_copy_only=False).astype(np.float64)
-        # tokens explode per row: each token carries its row's weight
-        welems = wvals if rowmap is None else wvals[rowmap]
-    if kcol is None:
-        sels = [None]
-    else:
-        order, bounds = b.groups(kcol, vcol, rowmap)
-        sels = [order[bounds[g]:bounds[g + 1]] for g in range(len(keys))]
+        if spec.needs_elements:
+            # Top-K counts exact values and t-digest/KLL take raw values:
+            # nothing is hashed here
+            h1 = h2 = None
+            elems = b.elements(vcol, spec.element)
+            rowmap = b.rowmap(vcol) if spec.element == "tokens" else None
+        else:
+            h1, h2, rowmap = b.hashes(vcol, spec.element, spec.algo)
+            elems = None
+        if keyed is not None:
+            codes = b.keys(kcol)[0]
+            ecodes = codes if rowmap is None else codes[rowmap]
+            keep = ecodes >= 0
+            keyed.update(keys, ecodes[keep], h1[keep])
+            return
+        welems = None
+        if job.weight_col is not None:
+            wvals = b.batch.column(job.weight_col) \
+                .to_numpy(zero_copy_only=False).astype(np.float64)
+            # tokens explode per row: each token carries its row's weight
+            welems = wvals if rowmap is None else wvals[rowmap]
+        if kcol is None:
+            sels = [None]
+        else:
+            order, bounds = b.groups(kcol, vcol, rowmap)
+            sels = [order[bounds[g]:bounds[g + 1]] for g in range(len(keys))]
+    if job.n_shards:  # keyless: route the elements by shard
+        shard = hashing.shard_of(h1, job.n_shards)
+        order = np.argsort(shard, kind="stable")
+        bounds = np.searchsorted(shard[order], np.arange(job.n_shards + 1))
+        sels = [order[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
     for key, sel in zip(keys, sels):
         spec.update(accs.setdefault((i, key), spec.init()), _take(h1, sel),
                     _take(h2, sel), _take(elems, sel), _take(welems, sel))
@@ -386,9 +400,13 @@ def _fold_batch(b: _Batch, i: int, job: _Job, accs: dict, rows: dict,
 
 def _partial_key(df: DataFrame, jobs: list[_Job]):
     """The leading partial columns and a (job, key) → their values map:
-    :func:`sketch_agg`'s typed key column, or :func:`multi_sketch_agg`'s
-    ``sketch_name`` and stringified ``key``."""
+    :func:`sketch_agg`'s typed key column, :func:`bloom_build_sharded`'s
+    int ``shard``, or :func:`multi_sketch_agg`'s ``sketch_name`` and
+    stringified ``key``."""
     kc = jobs[0].key_col
+    if jobs[0].n_shards:
+        return [StructField("shard", IntegerType(), False)], \
+            lambda job, key: {"shard": key}
     if jobs[0].name is None:
         return ([df.schema[kc]] if kc else []), \
             lambda job, key: {kc: key} if kc else {}
@@ -402,10 +420,11 @@ def _build_partials(df: DataFrame, jobs: list[_Job],
                     skip_partitions: Container[int] = frozenset(),
                     checkpoint=None) -> DataFrame:
     """Phase 1: one scan folds every job; one partial row per (input
-    partition, job, key). A partition in ``skip_partitions`` reads
-    nothing and emits nothing. ``checkpoint`` (see ``checkpoint.py``)
-    publishes each task's partial rows with its ``publish(table)``
-    before the task emits them."""
+    partition, job, key), and one per shard of a sharded job even when
+    the partition holds none of its elements. A partition in
+    ``skip_partitions`` reads nothing and emits nothing. ``checkpoint``
+    (see ``checkpoint.py``) publishes each task's partial rows with its
+    ``publish(table)`` before the task emits them."""
     head, key_values = _partial_key(df, jobs)
     out_schema = StructType(head + [
         StructField("state", BinaryType(), False),
@@ -423,8 +442,10 @@ def _build_partials(df: DataFrame, jobs: list[_Job],
             # or a test hook dropped it (real deployments prune at the
             # source/manifest level instead)
             return
-        accs: dict = {}
-        rows: dict = {}
+        # every shard of a sharded job is open from the start
+        accs = {(i, s): j.spec.init() for i, j in enumerate(jobs)
+                for s in range(j.n_shards)}
+        rows = dict.fromkeys(accs, 0)
         keyed = {i: hll.KeyedHLL(j.spec.p["m"]) for i, j in enumerate(jobs)
                  if j.key_col and j.spec.kind == "hll"}
         for batch in batches:
@@ -837,6 +858,11 @@ def _tagged_union(states: DataFrame, other: DataFrame,
             .sortWithinPartitions(*group_cols, "_side", *order))
 
 
+def _check_shards(n_shards: int) -> None:
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be at least 1, got {n_shards}")
+
+
 def cuckoo_shard_size(n_rows: int, n_shards: int, bucket_size: int = 4) -> int:
     """Per-shard bucket count for ``n_rows`` split across ``n_shards``
     at the reference's 0.955 design load (``base_cuckoo_filter.go``
@@ -887,6 +913,7 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
 
     Returns ``DataFrame[key?, shard int, state binary, n_items]``.
     """
+    _check_shards(n_shards)
     element = infer_element(df, value_col, element)
     if size is None:
         size = params.next_power_of_two(
@@ -948,6 +975,7 @@ def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
     (``n_items`` decremented by the count actually removed — absent
     elements are no-ops, as in the reference). Removals routed to a
     (key?, shard) with no state row change nothing and emit nothing."""
+    _check_shards(n_shards)
     element = infer_element(removals, value_col, element)
     run_cols = ([key_col] if key_col else []) + ["shard"]
     hashes = _hash_partials(removals, value_col, key_col, element, n_shards,
@@ -985,59 +1013,21 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
     is ~1.2 GB). Each element belongs to shard ``shard_of(h1)``; each
     shard is an independent Bloom sized for ``n / n_shards`` expected
     elements at the same ``eps`` (total bits identical to the unsharded
-    filter, same FPR). Phase 1 stays ONE pass with map-side combine:
-    every input partition folds its elements into ``n_shards`` small
-    word arrays, emitting one partial row per (partition, shard); phase
-    2 ORs per shard. Probe via
+    filter, same FPR). It runs on the shared two-phase engine, keyed by
+    shard: phase 1 is ONE pass with map-side combine, the same fold as
+    :func:`sketch_agg` (distinct-first over dense ``tokens``/``int32``
+    batches), and every input partition emits one partial row per
+    shard; phase 2 ORs per shard. Probe via
     :func:`gostatix_spark.query.bloom_contains_sharded`, which routes by
     the same rule — still no false negatives.
 
     Returns ``DataFrame[shard int, state, n_items, n_partials]``.
     """
-    element = infer_element(df, value_col, element)
+    _check_shards(n_shards)
     n_per = max(1, -(-n // n_shards))
     m = params.bloom_filter_size(n_per, eps)
     k = params.bloom_num_hashes(m, n_per)
-
-    out_schema = StructType([
-        StructField("shard", IntegerType(), False),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_consumed", LongType(), False)])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = _partition_id()
-        words = [bloom.new_state(m) for _ in range(n_shards)]
-        items = np.zeros(n_shards, dtype=np.int64)
-        rows = 0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            rows += batch.num_rows
-            col = batch.column(value_col)
-            if col.null_count:  # a null element is never inserted
-                col = col.filter(col.is_valid())
-            h1, h2, _ = extract_hashes(col, element, sketches.Bloom.algo)
-            shard = hashing.shard_of(h1, n_shards)
-            order = np.argsort(shard, kind="stable")
-            counts = np.bincount(shard, minlength=n_shards)
-            off = 0
-            for s in range(n_shards):
-                c = int(counts[s])
-                if c:
-                    sel = order[off:off + c]
-                    bloom.insert_batch(words[s], h1[sel], h2[sel], k, m)
-                    items[s] += c
-                off += c
-        out = [{"shard": s,
-                "state": BloomState(m, k, words[s], int(items[s])).to_bytes(),
-                "n_items": int(items[s]), "partition_id": pid,
-                "rows_consumed": rows}
-               for s in range(n_shards)]
-        if out:
-            yield from pa.Table.from_pylist(
-                out, schema=_to_arrow_schema(out_schema)).to_batches()
-
-    partials = df.select(value_col).mapInArrow(fn, out_schema)
-    return _merge_partials(partials, ["shard"], tree_fanout)
+    job = _sketch_job(df, "bloom", value_col, None, element,
+                      {"m": m, "k": k}, n_shards=n_shards)
+    return _merge_partials(_build_partials(df, [job]), ["shard"],
+                           tree_fanout)

@@ -823,8 +823,7 @@ def _word_grams(df: DataFrame, text_col: str, id_col: str,
 
 def ngram_decontaminate(train: DataFrame, eval_df: DataFrame,
                         text_col: str, id_col: str, *, n: int = 13,
-                        use_bloom: bool = True, n_shards: int = 4,
-                        eps: float = 1e-3) -> DataFrame:
+                        n_shards: int = 4, eps: float = 1e-3) -> DataFrame:
     """Benchmark decontamination: find training documents sharing at
     least one word ``n``-gram with an evaluation/benchmark set — the
     GPT-3-style overlap rule (Brown et al. 2020 used 13-grams; the
@@ -846,9 +845,6 @@ def ngram_decontaminate(train: DataFrame, eval_df: DataFrame,
     collected: the two driver actions here (eval-gram count for Bloom
     sizing, shard-blob collect) touch only the small side.
 
-    ``use_bloom=False`` skips the prefilter (plain broadcast semi
-    join) — the equivalence of the two paths is pytest-gated.
-
     The eval-gram DataFrame stays persisted until the returned plan is
     consumed (it feeds both the Bloom build and the verify join);
     Spark evicts it LRU, or the caller may ``spark.catalog.clearCache()``
@@ -866,7 +862,7 @@ def ngram_decontaminate(train: DataFrame, eval_df: DataFrame,
     # survivor distinct, where the old shape paid a full (id, gram)
     # dedup shuffle of every training gram before filtering any.
     tr = _word_grams(train, text_col, id_col, n, distinct=False)
-    if n_ev and use_bloom:
+    if n_ev:
         spark = train.sparkSession
         states = bloom_build_sharded(ev, "gram", n=n_ev, eps=eps,
                                      element="string", n_shards=n_shards)

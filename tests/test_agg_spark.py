@@ -701,6 +701,34 @@ class TestBloomSharded:
         assert abs(total_sharded_bits - st1.m) / st1.m < 0.01
 
 
+@pytest.mark.parametrize("n_shards", [0, -2])
+@pytest.mark.parametrize("build", ["bloom_build_sharded", "cuckoo_build",
+                                   "cuckoo_apply_removals"])
+def test_n_shards_below_one_rejected_before_any_job(spark, build, n_shards):
+    """A shard count below one raises ``ValueError`` at the call: no job
+    runs (``cuckoo_build`` without ``size`` would count the input
+    first), and no build silently returns nothing."""
+    from gostatix_spark import agg
+    df = spark.createDataFrame([("a",), ("b",)], "v string")
+    calls = {
+        "bloom_build_sharded": lambda: agg.bloom_build_sharded(
+            df, "v", n=2, n_shards=n_shards),
+        "cuckoo_build": lambda: agg.cuckoo_build(df, "v", n_shards=n_shards),
+        "cuckoo_apply_removals": lambda: agg.cuckoo_apply_removals(
+            agg.cuckoo_build(df, "v", n_shards=2, size=64), df, "v",
+            n_shards=n_shards),
+    }
+    sc = spark.sparkContext
+    group = f"n-shards-{build}-{n_shards}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="n_shards"):
+            calls[build]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 class TestJoinProbes:
     def test_cuckoo_contains_join(self, spark, corpus):
         """Broadcast-free probe path: states never collected; results
@@ -1042,14 +1070,24 @@ class TestDistinctFoldBytewise:
             return st.to_bytes()
         return blob
 
+    @staticmethod
+    def _bloom_bytes(h1, h2, m, k) -> bytes:
+        """A Bloom state of every (h1, h2), set bit by bit."""
+        from gostatix_spark.kernels import bloom
+        from gostatix_spark.state import BloomState
+        words = bloom.new_state(m)
+        idx = bloom.indices(h1, h2, k, m)
+        np.bitwise_or.at(words, idx >> 6,
+                         np.uint64(1) << (idx & 63).astype(np.uint64))
+        return BloomState(m, k, words, len(h1)).to_bytes()
+
     def _reference(self, rows, kind, vcol, kcol, element):
         """{key: (state bytes, n_items, n_partials, {pid: rows})} from a
         per-element fold of every value of the key."""
         from gostatix_spark import hashing
         from gostatix_spark.agg import _Spec
-        from gostatix_spark.kernels import bloom, cms, topk
-        from gostatix_spark.state import (BloomState, CMSState, HLLState,
-                                          TopKState)
+        from gostatix_spark.kernels import cms, topk
+        from gostatix_spark.state import CMSState, HLLState, TopKState
         spec = _Spec.make(kind, **self.PARAMS[kind])
         p = spec.p
         parts: dict = {}
@@ -1073,11 +1111,7 @@ class TestDistinctFoldBytewise:
                 np.maximum.at(regs, *hll_kernel.index_and_rank(h1, p["m"]))
                 blob = HLLState(p["m"], regs, n).to_bytes()
             elif kind == "bloom":
-                words = bloom.new_state(p["m"])
-                idx = bloom.indices(h1, h2, p["k"], p["m"])
-                np.bitwise_or.at(words, idx >> 6,
-                                 np.uint64(1) << (idx & 63).astype(np.uint64))
-                blob = BloomState(p["m"], p["k"], words, n).to_bytes()
+                blob = self._bloom_bytes(h1, h2, p["m"], p["k"])
             else:
                 mat = cms.new_state(p["d"], p["w"])
                 pos = cms.positions(h1, h2, p["d"], p["w"])
@@ -1172,3 +1206,58 @@ class TestDistinctFoldBytewise:
             blob, n_items, n_partials, _ = ref[r[kcol] if kcol else None]
             assert self._canonical(bytes(r["state"])) == blob
             assert (r["n_items"], r["n_partials"]) == (n_items, n_partials)
+
+    @pytest.mark.parametrize("vcol,element,empty_partition", [
+        ("tokens", "tokens", False),  # dense grid: distinct-first
+        ("wide32", "int32", False),  # wide grid: per element
+        ("src", "string", False),  # a quarter null values
+        ("src", "string", True),
+    ])
+    def test_bloom_build_sharded_matches_per_element_reference(
+            self, spark, data, small_batches, vcol, element,
+            empty_partition):
+        """``bloom_build_sharded`` folds through the same engine, keyed
+        by shard: each shard's state, ``n_items`` and ``n_partials``
+        equal a per-element numpy fold that routes each element by
+        ``shard_of(h1)``, and every partition, an empty one too, emits
+        one partial per shard that counts all of its rows."""
+        from collections import Counter
+
+        from gostatix_spark import hashing
+        from gostatix_spark.agg import (_build_partials, _sketch_job,
+                                        bloom_build_sharded)
+        df, rows = data
+        if empty_partition:  # two langs fill at most two of five
+            df = df.repartition(5, "lang")
+            rows = [(r["pid"], r) for r in df.withColumn(
+                "pid", F.spark_partition_id()).collect()]
+        n_parts = df.rdd.getNumPartitions()
+        rows_per_pid = Counter(pid for pid, _ in rows)
+        assert (len(rows_per_pid) < n_parts) == empty_partition
+        shards, n, eps = 4, 3000, 0.02
+        n_per = -(-n // shards)
+        m = params.bloom_filter_size(n_per, eps)
+        k = params.bloom_num_hashes(m, n_per)
+
+        vals = [v for _, r in rows
+                for v in (r[vcol] if element == "tokens" else [r[vcol]])
+                if v is not None]
+        if element == "string":
+            h1, h2 = hashing.hash_bytes_batch([v.encode() for v in vals])
+        else:
+            h1, h2 = hashing.hash_tokens(np.array(vals, np.int64), "metro")
+        shard = hashing.shard_of(h1, shards)
+        want = {s: (self._bloom_bytes(h1[shard == s], h2[shard == s], m, k),
+                    int((shard == s).sum()), n_parts)
+                for s in range(shards)}
+        got = bloom_build_sharded(df, vcol, n=n, eps=eps, element=element,
+                                  n_shards=shards).collect()
+        assert {r["shard"]: (bytes(r["state"]), r["n_items"],
+                             r["n_partials"]) for r in got} == want
+
+        job = _sketch_job(df, "bloom", vcol, None, element,
+                          {"m": m, "k": k}, n_shards=shards)
+        consumed = {(r["shard"], r["partition_id"]): r["rows_consumed"]
+                    for r in _build_partials(df, [job]).collect()}
+        assert consumed == {(s, pid): rows_per_pid[pid]
+                            for s in range(shards) for pid in range(n_parts)}

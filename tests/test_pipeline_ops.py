@@ -790,18 +790,35 @@ class TestNgramDecontaminate:
         assert got == want
 
     def test_bloom_and_plain_paths_agree(self, spark, docs):
+        """At eps=0.05 the sharded Bloom prefilter lets false positives
+        through; the exact semi join after it drops them, so the result
+        equals a plain broadcast semi join of the train grams on the
+        eval grams."""
+        from gostatix_spark.agg import bloom_build_sharded
+        from gostatix_spark.query import bloom_contains_sharded
         train = docs.where(F.col("doc_id") % 11 != 0)
         ev = docs.where(F.col("doc_id") % 11 == 0)
-        a = {(r["id"], r["n_hit_grams"])
-             for r in dedup.ngram_decontaminate(train, ev, "text", "doc_id",
-                                                n=3, use_bloom=True,
-                                                eps=0.05).collect()}
-        b = {(r["id"], r["n_hit_grams"])
-             for r in dedup.ngram_decontaminate(train, ev, "text", "doc_id",
-                                                n=3,
-                                                use_bloom=False).collect()}
-        assert a == b
-        assert len(a) > 0
+        got = {(r["id"], r["n_hit_grams"])
+               for r in dedup.ngram_decontaminate(train, ev, "text", "doc_id",
+                                                  n=3, eps=0.05).collect()}
+        tr_grams = dedup._word_grams(train, "text", "doc_id", 3,
+                                     distinct=False)
+        ev_grams = dedup._word_grams(ev, "text", "doc_id", 3,
+                                     distinct=False).select("gram").distinct()
+        want = {(r["id"], r["n_hit_grams"]) for r in (
+            tr_grams.join(F.broadcast(ev_grams), "gram", "left_semi")
+            .distinct().groupBy("id")
+            .agg(F.count("*").alias("n_hit_grams")).collect())}
+        assert got == want
+        assert len(got) > 0
+        # the prefilter alone passes train grams the eval set lacks
+        states = bloom_build_sharded(ev_grams, "gram", n=ev_grams.count(),
+                                     eps=0.05, element="string", n_shards=4)
+        shard_map = {r["shard"]: bytes(r["state"]) for r in states.collect()}
+        passed = tr_grams.join(ev_grams, "gram", "left_anti").where(
+            bloom_contains_sharded(spark, shard_map, F.col("gram"), "string",
+                                   n_shards=4))
+        assert passed.count() > 0
 
     def test_empty_eval_returns_nothing(self, spark, docs):
         train = docs.limit(20)
